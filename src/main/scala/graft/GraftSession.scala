@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
-import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
 /** Session factory with the engine's scale-oriented defaults.
   *
@@ -89,50 +89,29 @@ object GraftSession {
     else df
   }
 
-  /** path -> (freshness stamp, inferred schema). SCHEMA METADATA only —
+  /** Parquet schema memo for [[readParquet]]. SCHEMA METADATA only —
     * never rows, never results: every query still computes from the
     * parquet bytes. Plain `spark.read.parquet(p)` re-reads footers for
     * schema inference on EVERY DataFrame construction (~100 ms per call
-    * measured on this host vs ~20 ms schema-supplied —
-    * tools/ReadOverheadProbe); for the bench's sub-second tail that
-    * inference IS a visible share of the wall (guide §1.2 step 3 /
-    * VERDICT r16 item 6: fixed per-query overhead). The stamp covers the
-    * file's (or directory's children's) names, mtimes and lengths, so a
-    * regenerated table re-infers — and because inference happens under
-    * the SAME session confs that shape it (nanosAsLong etc., pinned by
-    * this builder), the memoized schema is exactly what inference would
-    * return. */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, org.apache.spark.sql.types.StructType)]()
-
-  private def stampOf(path: String): String = {
-    val f = new java.io.File(path)
-    val base = s"${f.lastModified}:${f.length}"
-    if (f.isDirectory) {
-      val kids = Option(f.listFiles()).getOrElse(Array.empty)
-        .map(k => s"${k.getName}:${k.lastModified}:${k.length}")
-        .sorted.mkString("|")
-      s"$base#${kids.length}:${kids.hashCode}"
-    } else base
-  }
+    * vs ~20 ms schema-supplied, measured by tools/ReadOverheadProbe);
+    * for the bench's sub-second tail that inference IS a visible share
+    * of the wall (guide §1.2 step 3 / VERDICT r16 item 6: fixed
+    * per-query overhead). Because inference
+    * happens under the SAME session confs that shape it (nanosAsLong
+    * etc., pinned by this builder), the memoized schema is exactly what
+    * inference would return. */
+  private val schemaMemo = new SchemaMemo(1024)
 
   /** Schema-memoized parquet read of a stable table path (the `table()`
     * entry point and any other fixed-layout read). Multi-path reads key
     * the memo on the full path list + stamps (the iceberg delete-file
-    * group shape: one schema across the group's files). */
+    * group shape: one schema across the group's files). FLAT layouts
+    * only: the stamp sees a directory's direct children, so a change
+    * inside a nested (e.g. partition) subdirectory would serve the old
+    * schema — read partitioned trees with `spark.read` directly. */
   def readParquet(spark: SparkSession, path: String, more: String*): DataFrame = {
     val paths = path +: more
-    val key = paths.mkString("")
-    val stamp = paths.map(stampOf).mkString("")
-    val cached = schemaMemo.get(key)
-    val schema =
-      if (cached != null && cached._1 == stamp) cached._2
-      else {
-        val s = spark.read.parquet(paths: _*).schema
-        schemaMemo.put(key, (stamp, s))
-        s
-      }
+    val schema = schemaMemo.schema(paths)(spark.read.parquet(paths: _*).schema)
     spark.read.schema(schema).parquet(paths: _*)
   }
 
@@ -145,4 +124,54 @@ object GraftSession {
     * core (measured 43 s -> 4.5 s at sf0.1). */
   def balanced(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
+}
+
+/** Bounded LRU memo of inferred schemas keyed by a path list. Each entry
+  * carries a freshness stamp of its paths — every file's (or every
+  * directory's DIRECT children's) names, mtimes and lengths, in full —
+  * so a regenerated table re-infers. Key and stamps join their parts with
+  * '\u0000', which no path holds, so distinct path lists never alias
+  * (`["/a", "/b"]` vs `["/a/b"]`). The least recently used entry goes
+  * once `max` are held; re-inference costs ~100 ms, so eviction only
+  * costs time. Inference runs outside the lock, so concurrent readers
+  * never wait on each other's footers. */
+private[graft] final class SchemaMemo(max: Int) {
+  private val entries =
+    new java.util.LinkedHashMap[String, (String, StructType)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, (String, StructType)]): Boolean =
+        size() > max
+    }
+
+  def schema(paths: Seq[String])(infer: => StructType): StructType = {
+    val key = SchemaMemo.key(paths)
+    val stamp = paths.map(SchemaMemo.stampOf).mkString("\u0000")
+    entries.synchronized(Option(entries.get(key))) match {
+      case Some((st, s)) if st == stamp => s
+      case _ =>
+        val s = infer
+        entries.synchronized(entries.put(key, (stamp, s)))
+        s
+    }
+  }
+
+  def size: Int = entries.synchronized(entries.size)
+  def contains(paths: Seq[String]): Boolean =
+    entries.synchronized(entries.containsKey(SchemaMemo.key(paths)))
+}
+
+private[graft] object SchemaMemo {
+  def key(paths: Seq[String]): String = paths.mkString("\u0000")
+
+  private def stampOf(path: String): String = {
+    val f = new java.io.File(path)
+    val base = s"${f.lastModified}:${f.length}"
+    if (f.isDirectory) {
+      // '/' cannot occur in a file name, so the joined list is unambiguous
+      val kids = Option(f.listFiles()).getOrElse(Array.empty)
+        .map(k => s"${k.getName}:${k.lastModified}:${k.length}")
+        .sorted.mkString("/")
+      s"$base#$kids"
+    } else base
+  }
 }

@@ -202,10 +202,7 @@ object Dedup {
     val lenPre = threshold > 0 &&
       sys.props.getOrElse("graft.minhash.lenfilter", "on") != "off"
     def candCond(extra: Column): Column =
-      if (lenPre) extra &&
-        least(col("a.len"), col("b.len")).cast("double") >=
-          lit(threshold) * greatest(col("a.len"), col("b.len"))
-      else extra
+      if (lenPre) extra && lenRatioOk(threshold) else extra
     if (!collapseExactDups) {
       // Lean path: band all docs directly — for corpora with few exact
       // copies, where the collapse machinery (4 extra exchanges + 2
@@ -345,11 +342,7 @@ object Dedup {
     val ba = bandedIdsFrom(ta, numHashes, bands, maxBucket, carryLen = lenPre)
     val bb = bandedIdsFrom(tb, numHashes, bands, maxBucket, carryLen = lenPre)
     val baseCond = col("a.band") === col("b.band")
-    val cond =
-      if (lenPre) baseCond &&
-        least(col("a.len"), col("b.len")).cast("double") >=
-          lit(threshold) * greatest(col("a.len"), col("b.len"))
-      else baseCond
+    val cond = if (lenPre) baseCond && lenRatioOk(threshold) else baseCond
     val cand = ba.as("a").join(bb.as("b"), cond)
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_bands"))
@@ -812,6 +805,16 @@ object Dedup {
     * number is reproducible in any SQL engine without unsigned types). */
   def md5Hash60(e: Column): Column =
     conv(substring(md5(e), 1, 15), 16, 10).cast("long")
+
+  /** The exact length-ratio bound `least(len)/greatest(len) >= t` on a
+    * candidate join's `a`/`b` sides. Spelled as the division, not as
+    * `least >= t * greatest`: for a nested pair, jaccard_sim computes the
+    * very same `|A|/|B|` double, so a pair AT the threshold passes both
+    * (at 29/35 the product form rounds `t * 35` above 29 and would drop
+    * it). */
+  private def lenRatioOk(threshold: Double): Column =
+    least(col("a.len"), col("b.len")).cast("double") /
+      greatest(col("a.len"), col("b.len")) >= lit(threshold)
 
   /** Exact Jaccard over the token sets of candidate pairs (native
     * jaccard_sim kernel). The threshold filter uses the UNROUNDED value

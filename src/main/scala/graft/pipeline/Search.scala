@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Lexical relevance scoring over a document corpus: TF-IDF and BM25 —
   * the retrieval half of a training-data pipeline (mining domain
@@ -18,15 +21,6 @@ import org.apache.spark.sql.functions._
   * order, so a SQL oracle reproduces them bit-for-bit.
   */
 object Search {
-
-  /** Largest `dim` for which the classifiers inline their weight
-    * vectors as literal arrays (one plan node, no join); above it each
-    * iteration's dot products take the general broadcast-weight-table
-    * join instead — a 10^5-literal expression tree per class is plan
-    * bloat and a codegen blowup (r16 verdict #3). Overridable only for
-    * the equivalence spec (same results either side of the gate). */
-  private[pipeline] def literalDimMax: Int =
-    sys.props.getOrElse("graft.clf.literalDimMax", "4096").toInt
 
   /** normalize → whitespace split with the empty-string phantom dropped:
     * split("") yields [""], and a blank document must contribute ZERO
@@ -267,112 +261,147 @@ object Search {
       .na.fill(0.0, Seq("weight"))
   }
 
+  /** One row of the classifiers' training frame: a distinct doc_id (null
+    * is one group, as in SQL GROUP BY), its md5-bucketed token counts
+    * merged over every input row carrying it (`js` ascending with their
+    * counts `xs` — the oracles' `feats` CTE; empty for the null doc_id,
+    * which no feature join matches) and the label of every input row
+    * carrying it (`ys`, one entry per row, null labels dropped). */
+  private final case class Doc(id: Any, js: Array[Int], xs: Array[Long], ys: Seq[Any])
+
+  /** The training frame, `j = md5_32(prefix + token) mod dim`: ONE
+    * groupBy(doc_id) over per-row bucket arrays — no (doc_id, j)-keyed
+    * exchange, no label join — persisted by the caller. */
+  private def docFrame(docs: DataFrame, idCol: String, textCol: String,
+                       prefix: String, dim: Int, label: Column): RDD[Doc] = {
+    val js = transform(toksOf(col(textCol)), t =>
+      pmod(Dedup.md5Hash32(concat(lit(prefix), t)), lit(dim.toLong)).cast("int"))
+    docs.select(col(idCol).as("doc_id"), label.as("y"),
+        when(col(idCol).isNotNull, js).as("js"))
+      .groupBy("doc_id")
+      .agg(flatten(collect_list("js")), collect_list("y"))
+      .rdd.map { r =>
+        val (js, xs) = r.getSeq[Int](1).groupMapReduce(identity)(_ => 1L)(_ + _)
+          .toArray.sorted.unzip
+        Doc(r.get(0), js, xs, r.getSeq[Any](2))
+      }
+  }
+
+  /** Materializes the persisted frame and returns (n, distinct labels):
+    * `n` counts the labeled input rows. */
+  private def labelStats(frame: RDD[Doc]): (Double, Set[Any]) = {
+    val (n, labels) = frame.aggregate((0L, Set.empty[Any]))(
+      (a, d) => (a._1 + d.ys.size, a._2 ++ d.ys),
+      (a, b) => (a._1 + b._1, a._2 ++ b._2))
+    (n.toDouble, labels)
+  }
+
+  /** A doc's K class probabilities: `link` applied to the per-class dot
+    * products `z_i = Σ_j w(i·dim + j) · x_j` (ascending j). */
+  private def probs(d: Doc, w: Array[Double], k: Int, dim: Int,
+                    link: Array[Double] => Array[Double]): Array[Double] = {
+    val z = new Array[Double](k)
+    for (i <- 0 until k; t <- d.js.indices) z(i) += w(i * dim + d.js(t)) * d.xs(t)
+    link(z)
+  }
+
+  /** Batch gradient descent over the persisted frame: `iters` steps of
+    * `w -= lr · (g / n)` with `g_(i,j) = Σ (p_i - target(y, i)) · x_j`
+    * over every (label, feature) pair of every doc — the oracles'
+    * per-term products, summed in another order. Each iteration is ONE
+    * Spark job: a treeAggregate of dense K×dim partial sums over the
+    * cached frame, combined in a tree (MLlib's logistic-regression
+    * shape; K×dim doubles per task) — no query plan, no shuffle, no
+    * join. The K×dim weights have one spelling at every dim: an array
+    * in the task closure, which Spark ships once per job in the
+    * broadcast task binary (8 bytes a weight; nothing in any plan).
+    * Iteration 1 takes the closed form: w = 0 makes p exactly `link(0)`
+    * (0.5 or 1/K), so no dot product runs. Returns the weights, class i
+    * at offset i·dim. */
+  private def train(frame: RDD[Doc], n: Double, k: Int, dim: Int,
+                    iters: Int, lr: Double, link: Array[Double] => Array[Double],
+                    target: (Any, Int) => Double): Array[Double] = {
+    var w = new Array[Double](k * dim)
+    val p0 = link(new Array[Double](k))
+    for (it <- 1 to iters) {
+      val cur = w
+      val g = frame.treeAggregate(new Array[Double](k * dim))(
+        (acc, d) => {
+          val p = if (it == 1) p0 else probs(d, cur, k, dim, link)
+          for (y <- d.ys; i <- 0 until k) {
+            val e = p(i) - target(y, i)
+            for (t <- d.js.indices) acc(i * dim + d.js(t)) += e * d.xs(t)
+          }
+          acc
+        },
+        (a, b) => { for (i <- a.indices) a(i) += b(i); a })
+      w = Array.tabulate(k * dim)(i => cur(i) - lr * (g(i) / n))
+    }
+    w
+  }
+
+  /** The scored rows as a DataFrame, PERSISTED and materialized — the
+    * classifiers' caller-unpersist contract: evaluated while the
+    * training frame is still cached. Materialized by a pass over every
+    * partition: count() would add an exchange, one more job under AQE. */
+  private def materialized(spark: SparkSession, rows: RDD[Row],
+                           schema: StructType): DataFrame = {
+    val p = spark.createDataFrame(rows, schema).persist()
+    p.foreachPartition((it: Iterator[Row]) => it.foreach(_ => ()))
+    p
+  }
+
   /** fastText-style QUALITY CLASSIFIER scoring — the CCNet/GPT-3 recipe
     * for quality filtering: a linear classifier over hashed token
     * features, trained to separate a high-quality reference slice
-    * (`isTarget`) from the rest of the crawl, then scoring every
-    * document with `sigmoid(w·x)`. Training is batch logistic
-    * regression with a FIXED, deterministic iteration count: each
-    * iteration is ONE distributed aggregation (per-doc dot products →
-    * errors → per-feature gradient), the `dim`-row weight vector
-    * broadcasts back — the DSIR plan family (model is metadata-scale,
-    * corpus never leaves executors, no collect beyond `dim` rows).
+    * (`isTarget`; null counts as false) from the rest of the crawl, then
+    * scoring every document with `sigmoid(w·x)`. Training is batch
+    * logistic regression with a FIXED, deterministic iteration count.
+    *
+    * Plan: one groupBy(doc_id) builds the per-doc training frame
+    * ([[docFrame]]), persisted; one pass materializes it and returns `n`
+    * (every input row counts); each iteration is one Spark job over the
+    * frame ([[train]]); scoring is one more pass. No join, no broadcast
+    * join, no plan that grows with `dim`.
     *
     * Features are md5-bucketed token counts (portable hash, SURVEY §5),
     * so a SQL oracle re-derives the exact weights by unrolling the same
-    * iterations; all float expressions keep one evaluation order
-    * (sum first, divide after) for cross-engine reproducibility.
+    * iterations; every float expression keeps the oracle's operations
+    * (`1/(1+exp(-z))`, sums divided by n after summing) for cross-engine
+    * reproducibility up to summation order.
     *
-    * Returns (doc_id, quality_score) for EVERY document; a doc with no
-    * tokens scores sigmoid(0) = 0.5 (no evidence either way).
+    * Returns (doc_id, quality_score), one row per INPUT row: a duplicated
+    * doc_id scores from its merged features once per row, and a doc with
+    * no tokens scores sigmoid(0) = 0.5 (no evidence either way).
     *
-    * Caching contract: the feature/label frames are persisted ONLY for
-    * the training iterations and released before return. The returned
-    * frame is the scored result PERSISTED and materialized while the
-    * feature cache is still live, so the call costs ONE corpus pass
-    * (feature build) no matter when or how often the caller evaluates
-    * it — `unpersist()` the returned frame when done (the Dedup
-    * contract). Persist, not localCheckpoint: checkpoint blocks are
-    * unreplicated and lineage-cut, so one lost executor would make the
-    * frame permanently unevaluable; a persisted frame falls back to
+    * Caching contract: the frame is persisted ONLY for training and
+    * scoring and released before return. The returned frame is the
+    * scored result PERSISTED and materialized while the frame is still
+    * cached, so the call costs ONE corpus pass no matter when or how
+    * often the caller evaluates it — `unpersist()` it when done (the
+    * Dedup contract). Persist, not localCheckpoint: checkpoint blocks
+    * are unreplicated and lineage-cut, so one lost executor would make
+    * the result permanently unevaluable; a persisted frame falls back to
     * recompute. */
   def qualityClassifier(docs: DataFrame, idCol: String, textCol: String,
                         isTarget: Column, dim: Int = 64, iters: Int = 3,
                         lr: Double = 0.5): DataFrame = {
     require(dim > 0 && iters > 0, "qualityClassifier: dim and iters must be positive")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val lab = docs.select(col(idCol).as("doc_id"),
-      when(coalesce(isTarget, lit(false)), 1.0).otherwise(0.0).as("y"))
-      .persist()
-    // hashed-ngram features: j = md5_32("qc:" + token) mod dim, x = count
-    val feats = docs
-      .select(col(idCol).as("doc_id"), explode(toksOf(col(textCol))).as("tok"))
-      .select(col("doc_id"),
-        pmod(Dedup.md5Hash32(concat(lit("qc:"), col("tok"))),
-          lit(dim.toLong)).as("j"))
-      .groupBy("doc_id", "j").agg(count(lit(1)).as("x"))
-      .persist()
+    val frame = docFrame(docs, idCol, textCol, "qc:", dim,
+      when(coalesce(isTarget, lit(false)), 1.0).otherwise(0.0))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = lab.count().toDouble
-      // w·x per doc as ONE groupBy(doc_id): at metadata-scale dim the
-      // weight vector rides as a literal array indexed by j instead of a
-      // per-iteration broadcast-table join — same products, same per-doc
-      // sum, one plan node instead of a join subtree. GATED on dim
-      // (r16 verdict #3): a user-supplied dim of 10^5-10^6 would make
-      // the literal a 10^5-node expression tree (plan/codegen blowup),
-      // so above the threshold the general broadcast-weight-table join
-      // takes over — identical per-(j, doc) products and per-doc sums.
-      def dots(w: Array[Double]) =
-        if (dim <= Search.literalDimMax) {
-          val arr = array(w.map(lit(_)): _*)
-          feats.groupBy("doc_id")
-            .agg(sum(element_at(arr, col("j").cast("int") + 1) * col("x"))
-              .as("z"))
-        } else {
-          val wdf = w.toIndexedSeq.zipWithIndex
-            .map { case (v, j) => (j.toLong, v) }.toDF("j", "__wv")
-          feats.join(broadcast(wdf), "j")
-            .groupBy("doc_id").agg(sum(col("__wv") * col("x")).as("z"))
-        }
-      def sig(zc: Column) =
-        lit(1.0) / (lit(1.0) + exp(-coalesce(zc, lit(0.0))))
-      // error-attach join strategy, scale-gated on the KNOWN label count
-      // AND row width (r16 advisor: the explicit broadcast hint bypasses
-      // autoBroadcastJoinThreshold, so the cap must count columns too —
-      // here e is 2 narrow columns, k+1 with k=1): below the cap the
-      // error frame broadcasts (feats never shuffles); above it, a
-      // shuffled-hash hint keeps the join sort-free without asking the
-      // driver to hold a corpus-sized frame
-      def attach(e: DataFrame) =
-        if (n * 2 <= 4e6) broadcast(e) else e.hint("shuffle_hash")
-      var w = Array.fill(dim)(0.0)
-      for (it <- 1 to iters) {
-        // iteration 1 takes the closed form: w0 = 0 makes every z zero
-        // and sigmoid(0) EXACTLY 0.5 on any engine, so the whole
-        // dot-product pass is skipped — the languageClassifier (and the
-        // unrolled SQL oracle's e1) do the same
-        val err =
-          if (it == 1) lab.select(col("doc_id"), (lit(0.5) - col("y")).as("e"))
-          else lab.join(attach(dots(w)), Seq("doc_id"), "left")
-            .select(col("doc_id"), (sig(col("z")) - col("y")).as("e"))
-        val grad = feats.join(attach(err), "doc_id")
-          .groupBy("j")
-          .agg((sum(col("e") * col("x")) / lit(n)).as("g"))
-          .collect().map(r => r.getLong(0).toInt -> r.getDouble(1)).toMap
-        w = w.zipWithIndex.map { case (v, j) => v - lr * grad.getOrElse(j, 0.0) }
+      val (n, _) = labelStats(frame)
+      val sigmoid = (z: Array[Double]) => Array(1.0 / (1.0 + StrictMath.exp(-z(0))))
+      val w = train(frame, n, 1, dim, iters, lr, sigmoid,
+        (y, _) => y.asInstanceOf[Double])
+      val scored = frame.flatMap { d =>
+        val p = probs(d, w, 1, dim, sigmoid)(0)
+        d.ys.map(_ => Row(d.id, p))
       }
-      // score from the final weights, persisted and materialized
-      // EAGERLY while feats/lab are still cached — otherwise the
-      // caller's first evaluation would land after the unpersist below
-      // and silently re-derive the whole feature lineage (one extra
-      // corpus pass per evaluation at scale)
-      val scored = lab.join(attach(dots(w)), Seq("doc_id"), "left")
-        .select(col("doc_id"), sig(col("z")).as("quality_score"))
-        .persist()
-      scored.count()
-      scored
-    } finally { lab.unpersist(); feats.unpersist() }
+      materialized(docs.sparkSession, scored, new StructType()
+        .add("doc_id", docs.schema(idCol).dataType).add("quality_score", DoubleType))
+    } finally frame.unpersist()
   }
 
   /** Multi-class LANGUAGE classifier — the trainable upgrade of the
@@ -381,13 +410,12 @@ object Search {
     * deterministic iteration count, trained on the rows whose
     * `labelCol` is non-null and scoring EVERY document.
     *
-    * [[qualityClassifier]]'s plan family generalized to K classes: each
-    * iteration is one distributed pass (per-(doc,class) dot products →
-    * stable softmax → per-(class,feature) gradient), only the
-    * K×`dim`-row gradient crosses the driver, and the K×`dim` weight
-    * table broadcasts back — the corpus never leaves executors. The
-    * class list is `labelCol`'s sorted distinct values (a label
-    * enumeration — metadata-scale by definition).
+    * [[qualityClassifier]]'s plan with K classes: the frame's
+    * materializing pass returns both `n` (the labeled rows) and the
+    * class list (`labelCol`'s sorted distinct values — a label
+    * enumeration, metadata-scale by definition); each iteration is one
+    * Spark job whose partial sums are K×dim doubles. Unlabeled docs sit
+    * in the frame with no labels and add nothing to any gradient.
     *
     * Softmax is the max-subtracted stable form `exp(z-m)/Σexp(z-m)`
     * (`m` is an exact per-doc max, so cross-engine reproducibility
@@ -397,161 +425,43 @@ object Search {
     * the q_quality_clf posture.
     *
     * Returns (doc_id, lang, p): the FULL per-class probability row set
-    * for every document — K rows per doc. Probabilities, not argmax,
-    * because a discrete prediction is float-tie-unstable across engines
-    * and because thresholding/abstention policies (CCNet keeps a doc
-    * only above a confidence floor) are caller decisions; argmax is a
-    * one-line `max_by(lang, p)` downstream. A doc with no tokens (or
-    * none seen in training) scores the uniform 1/K — no evidence either
-    * way. Training iterations run over the LABELED slice of the feature
-    * table only (the semi-supervised case pays label-slice-sized
-    * iterations, not corpus-sized — only the final scoring pass touches
-    * every doc). Like [[qualityClassifier]], the result is persisted
-    * and materialized while the feature cache is live: one corpus pass
-    * total; `unpersist()` it when done. */
+    * for every distinct doc_id — K rows per doc. Probabilities, not
+    * argmax, because a discrete prediction is float-tie-unstable across
+    * engines and because thresholding/abstention policies (CCNet keeps
+    * a doc only above a confidence floor) are caller decisions; argmax
+    * is a one-line `max_by(lang, p)` downstream. A doc with no tokens
+    * (or none seen in training) scores the uniform 1/K — no evidence
+    * either way. Like [[qualityClassifier]], the result is persisted and
+    * materialized while the frame is cached: one corpus pass total;
+    * `unpersist()` it when done. */
   def languageClassifier(docs: DataFrame, idCol: String, textCol: String,
                          labelCol: String, dim: Int = 64, iters: Int = 3,
                          lr: Double = 0.5): DataFrame = {
     require(dim > 0 && iters > 0,
       "languageClassifier: dim and iters must be positive")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val labels = docs.select(col(labelCol).cast("string").as("lang"))
-      .na.drop().distinct().as[String].collect().sorted
-    require(labels.length >= 2,
-      s"languageClassifier needs >= 2 classes (got ${labels.toSeq})")
-    val k = labels.length
-    val lab = docs.select(col(idCol).as("doc_id"),
-        col(labelCol).cast("string").as("y_lang"))
-      .filter(col("y_lang").isNotNull).persist()
-    // hashed-token features: j = md5_32("lc:" + token) mod dim, x = count
-    val feats = docs
-      .select(col(idCol).as("doc_id"), explode(toksOf(col(textCol))).as("tok"))
-      .select(col("doc_id"),
-        pmod(Dedup.md5Hash32(concat(lit("lc:"), col("tok"))),
-          lit(dim.toLong)).as("j"))
-      .groupBy("doc_id", "j").agg(count(lit(1)).as("x"))
-      .persist()
-    // gradients only involve LABELED docs — iterating over the full
-    // feature table would pay a corpus-sized join + softmax per
-    // iteration and then discard the unlabeled rows at the lab join
-    // (ruinous when 1% of a crawl is labeled); the final scoring pass
-    // is the one full-corpus computation
-    val trainFeats = feats.join(lab.select("doc_id"), "doc_id").persist()
+    val frame = docFrame(docs, idCol, textCol, "lc:", dim,
+      col(labelCol).cast("string")).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = lab.count().toDouble
-      require(n > 0, "languageClassifier: no labeled rows to train on")
-      // error-attach join strategy, scale-gated on the KNOWN label count
-      // AND row width (the qualityClassifier rule; r16 advisor — e is
-      // k+1 columns per labeled doc, so the broadcast cap shrinks with
-      // K): small label slices broadcast so the feature table never
-      // shuffles; big ones take a sort-free shuffled-hash join instead
-      // of asking the driver to hold them
-      def attach(e: DataFrame) =
-        if (n * (k + 1) <= 4e6) broadcast(e) else e.hint("shuffle_hash")
-      // z_{d,l} = Σ_j w_{l,j} x_{d,j} for ALL K classes in ONE
-      // groupBy(doc_id) pass: the weights are metadata-scale (K×dim
-      // doubles), so each class's dot product rides a literal weight
-      // ARRAY indexed by j — no K-way row fan-out through a dense
-      // weight-table join, no (doc, class)-keyed exchange. The previous
-      // spelling shuffled feats×K rows per iteration and then paid a
-      // window (exchange + sort) for the softmax; this one shuffles the
-      // feature rows once and the softmax below is row-local column
-      // arithmetic over the K z columns (same max-subtracted stable
-      // form, same values — only the row layout changed). GATED on dim
-      // (r16 verdict #3, the qualityClassifier rule): above the
-      // threshold the K literal arrays would be K 10^5-node expression
-      // trees, so the dots ride ONE broadcast weight table (j, __w0..
-      // __wK-1) joined on j — identical products and per-doc sums.
-      def zCols(w: Map[(String, Int), Double], f: DataFrame) =
-        if (dim <= Search.literalDimMax) {
-          val aggs = labels.zipWithIndex.map { case (l, i) =>
-            val arr = array((0 until dim).map(j =>
-              lit(w.getOrElse((l, j), 0.0))): _*)
-            sum(element_at(arr, col("j").cast("int") + 1) * col("x"))
-              .as(s"__z$i")
-          }
-          f.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-        } else {
-          import org.apache.spark.sql.Row
-          import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-          import scala.jdk.CollectionConverters._
-          val schema = StructType(StructField("j", LongType) +:
-            labels.indices.map(i => StructField(s"__w$i", DoubleType)))
-          val rows = (0 until dim).map { j =>
-            Row.fromSeq(j.toLong +: labels.map(l => w.getOrElse((l, j), 0.0)))
-          }
-          val wdf = spark.createDataFrame(rows.asJava, schema)
-          val aggs = labels.indices.map(i =>
-            sum(col(s"__w$i") * col("x")).as(s"__z$i"))
-          f.join(broadcast(wdf), "j")
-            .groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-        }
-      // (doc_id, __p0..__pK-1): exp(z-m)/Σexp(z-m) over the z columns
-      def probCols(zd: DataFrame) = {
-        val zs = labels.indices.map(i => col(s"__z$i"))
-        val m = greatest(zs: _*) // exact per-doc max; k >= 2 guaranteed
-        val withEz = zd.select(col("doc_id") +:
-          labels.indices.map(i => exp(zs(i) - m).as(s"__ez$i")): _*)
-        val tot = labels.indices.map(i => col(s"__ez$i")).reduce(_ + _)
-        withEz.select(col("doc_id") +:
-          labels.indices.map(i => (col(s"__ez$i") / tot).as(s"__p$i")): _*)
+      val (n, classes) = labelStats(frame)
+      val labels = classes.toSeq.map(_.toString).sorted
+      require(labels.length >= 2,
+        s"languageClassifier needs >= 2 classes (got $labels)")
+      val k = labels.length
+      val softmax = (z: Array[Double]) => {
+        val m = z.max // exact per-doc max
+        val ez = z.map(v => StrictMath.exp(v - m))
+        val tot = ez.sum
+        ez.map(_ / tot)
       }
-      var w = Map.empty[(String, Int), Double]
-      for (it <- 1 to iters) {
-        // e_{d,l} = p_{d,l} - 1[label_d = l] over labeled docs, carried
-        // as K COLUMNS per doc; a labeled doc with zero features
-        // contributes a zero gradient by definition (no x terms) — the
-        // grad join below drops it. Iteration 1 takes the closed form:
-        // w0 = 0 makes p EXACTLY 1/K (exp(0)/K on both engines), so the
-        // whole dot-product/softmax round is skipped — the unrolled SQL
-        // oracle's e1 does the same
-        val e =
-          if (it == 1)
-            lab.select(col("doc_id") +: labels.zipWithIndex.map {
-              case (l, i) => (lit(1.0 / k) -
-                when(col("y_lang") === l, 1.0).otherwise(0.0)).as(s"__e$i")
-            }: _*)
-          else lab.join(attach(probCols(zCols(w, trainFeats))), "doc_id")
-            .select(col("doc_id") +: labels.zipWithIndex.map {
-              case (l, i) => (col(s"__p$i") -
-                when(col("y_lang") === l, 1.0).otherwise(0.0)).as(s"__e$i")
-            }: _*)
-        // grad: one broadcast join (e is one row per labeled doc) + one
-        // groupBy(j) whose partial aggregation reduces map-side to
-        // dim rows × K sums — only K×dim doubles cross the driver
-        val gAggs = labels.indices.map(i =>
-          (sum(col(s"__e$i") * col("x")) / lit(n)).as(s"__g$i"))
-        val gradRows = trainFeats.join(attach(e), "doc_id")
-          .groupBy("j").agg(gAggs.head, gAggs.tail: _*)
-          .collect()
-        val grad = (for (r <- gradRows; (l, i) <- labels.zipWithIndex)
-          yield (l, r.getLong(0).toInt) -> r.getDouble(1 + i)).toMap
-        w = (for (l <- labels; j <- 0 until dim) yield {
-          (l, j) -> (w.getOrElse((l, j), 0.0) - lr * grad.getOrElse((l, j), 0.0))
-        }).toMap
+      val w = train(frame, n, k, dim, iters, lr, softmax,
+        (y, i) => if (y == labels(i)) 1.0 else 0.0)
+      val scored = frame.flatMap { d =>
+        labels.zip(probs(d, w, k, dim, softmax)).map { case (l, p) => Row(d.id, l, p) }
       }
-      // score every doc (the ONE full-corpus pass); feature-less docs
-      // fill the uniform 1/K row set via the coalesce below. The K
-      // probability columns unpivot to (doc_id, lang, p) rows with a
-      // narrow explode — no class cross-join, no (doc, lang)-keyed
-      // shuffle. Persisted and materialized while the feature cache is
-      // live — caller-unpersist contract; persist, not localCheckpoint,
-      // so a lost executor recomputes instead of permanently losing
-      // blocks
-      val pairs = array(labels.zipWithIndex.map { case (l, i) =>
-        struct(lit(l).as("lang"),
-          coalesce(col(s"__p$i"), lit(1.0 / k)).as("p"))
-      }: _*)
-      val out = docs.select(col(idCol).as("doc_id")).distinct()
-        .join(probCols(zCols(w, feats)), Seq("doc_id"), "left")
-        .select(col("doc_id"), explode(pairs).as("__lp"))
-        .select(col("doc_id"), col("__lp.lang").as("lang"),
-          col("__lp.p").as("p"))
-        .persist()
-      out.count()
-      out
-    } finally { lab.unpersist(); feats.unpersist(); trainFeats.unpersist() }
+      materialized(docs.sparkSession, scored, new StructType()
+        .add("doc_id", docs.schema(idCol).dataType).add("lang", StringType)
+        .add("p", DoubleType))
+    } finally frame.unpersist()
   }
 
   /** Classic TF-IDF weight per (doc, term) for the given terms:

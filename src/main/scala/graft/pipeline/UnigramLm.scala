@@ -144,7 +144,22 @@ object UnigramLm {
 
   /** Induce the vocabulary: seed counts, then `iterations` rounds of
     * Viterbi re-segmentation + re-count. Returns (piece, cnt), the top
-    * vocabSize by (cnt desc, piece asc). */
+    * vocabSize by (cnt desc, piece asc).
+    *
+    * Driver bound: the whole candidate inventory is collected to the
+    * driver (and broadcast back as the cost table) before any
+    * `vocabSize` cut. Its size is the number of distinct substrings of
+    * length <= maxPieceLen with corpus count >= minCount, plus the single
+    * chars: at most min(distinct words x Σ_{l<=maxPieceLen}
+    * (maxWordLen - l + 1), alphabet^maxPieceLen) — 42 per distinct word
+    * at the defaults, and ~2.6M for a 40-letter alphabet, but far more
+    * for a large-alphabet (CJK) corpus or a raised maxPieceLen. A
+    * collected row is a few tens of bytes, so tens of millions of
+    * candidates exceed `spark.driver.maxResultSize` (1 GB by default)
+    * and the job aborts with a SparkException; below that, a driver
+    * heap too small for the map and its broadcast copy fails with
+    * OutOfMemoryError. Raise minCount (or lower maxPieceLen) to shrink
+    * the inventory. */
   def induce(docs: DataFrame, textCol: String,
              p: Params = Params()): DataFrame = {
     val spark = docs.sparkSession
@@ -153,7 +168,8 @@ object UnigramLm {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // vocab-scale collect (bounded by minCount; the k-means-centroid
-      // contract — the inventory IS the model being trained)
+      // contract — the inventory IS the model being trained). Size bound
+      // and failure mode: see the docstring above
       var inv: Map[String, Long] = seedCounts(words, p)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       var iter = 0

@@ -112,6 +112,27 @@ class DedupSpec extends AnyFunSuite {
     assert(on.exists(p => p._1 == 1L && p._2 == 2L)) // sanity: dups found
   }
 
+  test("length-ratio prefilter keeps a nested pair AT the threshold") {
+    import spark.implicits._
+    // 29 of 35 distinct tokens nested: jaccard_sim gives exactly 29/35 ==
+    // t, while t * 35 rounds ABOVE 29 in doubles — a product-form bound
+    // would drop the pair the verify filter keeps
+    val t = 29.0 / 35
+    assert(t * 35 > 29.0 && 29.0 / 35 >= t)
+    def text(n: Int) = (1 to n).map(i => s"tok$i").mkString(" ")
+    val d = Seq((1L, text(29)), (2L, text(35))).toDF("doc_id", "text")
+    for (collapse <- Seq(true, false)) {
+      val pairs = Dedup.minhashNearDups(d, "doc_id", "text", threshold = t,
+          collapseExactDups = collapse)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(pairs == Seq((1L, 2L)), s"collapse=$collapse: $pairs")
+    }
+    val cross = Dedup.crossNearDups(d.filter($"doc_id" === 1L),
+        d.filter($"doc_id" === 2L), "doc_id", "text", threshold = t)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(cross == Seq((1L, 2L)), s"cross: $cross")
+  }
+
   test("minhashBucketStats surfaces rows a small cap would drop") {
     val dropped = Dedup.minhashBucketStats(docs, "doc_id", "text",
       numHashes = 128, bands = 32, maxBucket = 1)

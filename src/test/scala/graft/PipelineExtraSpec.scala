@@ -663,38 +663,169 @@ class PipelineExtraSpec extends AnyFunSuite {
       math.abs(again((id, l)) - p) < 1e-9 })
   }
 
-  test("classifier weight spelling is dim-gated: broadcast-table join " +
-      "above the gate, value-identical to the literal-array path") {
+  /** 40 docs, two disjoint vocabularies, three classes. */
+  private def clfFixture = {
     import spark.implicits._
-    val docs = ((1L to 20L).map(i =>
-        (i, s"curated encyclopedia reference article number$i", "a")) ++
-      (21L to 40L).map(i =>
-        (i, s"spam casino pills clickbait garbage number$i", "b")))
+    ((1L to 20L).map(i =>
+        (i: java.lang.Long, s"curated encyclopedia reference article number$i", "a")) ++
+      (21L to 40L).map(i => (i: java.lang.Long,
+        s"spam casino pills clickbait garbage number$i", if (i <= 30) "b" else "c")))
       .toDF("doc_id", "text", "lang")
-    def runQ() = graft.pipeline.Search.qualityClassifier(
-        docs, "doc_id", "text", col("lang") === "a", dim = 300, iters = 2)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    def runL() = graft.pipeline.Search.languageClassifier(
-        docs, "doc_id", "text", "lang", dim = 300, iters = 2)
-      .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getDouble(2)).toMap
-    val (qLit, lLit) = (runQ(), runL()) // dim 300 <= default gate: literal arrays
-    val prev = sys.props.put("graft.clf.literalDimMax", "100")
-    try {
-      val (qJoin, lJoin) = (runQ(), runL()) // forced broadcast-table path
-      assert(qLit.keySet == qJoin.keySet &&
-        qLit.forall { case (k, v) => math.abs(qJoin(k) - v) < 1e-9 })
-      assert(lLit.keySet == lJoin.keySet &&
-        lLit.forall { case (k, v) => math.abs(lJoin(k) - v) < 1e-9 })
-    } finally prev match {
-      case Some(v) => sys.props.put("graft.clf.literalDimMax", v)
-      case None => sys.props.remove("graft.clf.literalDimMax")
+  }
+
+  /** Plain-Scala batch gradient descent with the SQL oracles' semantics,
+    * over rows collected as (doc_id, K-class target or None = unlabeled,
+    * bucket ids): features merge per non-null doc_id, every labeled row
+    * adds its own error, `n` counts the labeled rows, and iteration 1
+    * starts from w = 0. Returns the trained per-doc probabilities. */
+  private def referenceClf(rows: Seq[(Option[Long], Option[Array[Double]], Seq[Int])],
+                           k: Int, dim: Int, iters: Int,
+                           link: Array[Double] => Array[Double]): Option[Long] => Array[Double] = {
+    val feats = rows.collect { case (Some(id), _, js) => id -> js }
+      .groupMapReduce(_._1)(_._2)(_ ++ _)
+      .map { case (id, js) => id -> js.groupMapReduce(identity)(_ => 1L)(_ + _) }
+    def f(id: Option[Long]) = id.flatMap(feats.get).getOrElse(Map.empty[Int, Long])
+    val labeled = rows.collect { case (id, Some(t), _) => (id, t) }
+    val w = Array.ofDim[Double](k, dim)
+    def probs(id: Option[Long]) =
+      link(Array.tabulate(k)(i => f(id).map { case (j, x) => w(i)(j) * x }.sum))
+    for (_ <- 1 to iters) {
+      val g = Array.ofDim[Double](k, dim)
+      for ((id, t) <- labeled; p = probs(id); (j, x) <- f(id); i <- 0 until k)
+        g(i)(j) += (p(i) - t(i)) * x
+      for (i <- 0 until k; j <- 0 until dim) w(i)(j) -= 0.5 * (g(i)(j) / labeled.size)
     }
-    // dim far above the gate must complete without a 10^5-literal
-    // expression tree (the literal path would melt planning/codegen here)
-    val big = graft.pipeline.Search.qualityClassifier(
-      docs, "doc_id", "text", col("lang") === "a", dim = 100000, iters = 1)
-    assert(big.count() == 40)
-    big.unpersist()
+    probs
+  }
+
+  /** Both classifiers against [[referenceClf]] within 1e-9: quality
+    * scores one row per input row, language K rows per distinct doc_id. */
+  private def assertMatchesReference(docs: org.apache.spark.sql.DataFrame,
+                                     dim: Int, iters: Int): Unit = {
+    def rows(prefix: String) = docs.select(col("doc_id"), col("lang"),
+        transform(filter(split(graft.pipeline.TextAnalysis.normalize(col("text")), " "),
+          t => length(t) > 0), t =>
+          pmod(Dedup.md5Hash32(concat(lit(prefix), t)), lit(dim.toLong)).cast("int")))
+      .collect().toSeq
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), Option(r.getString(1)),
+        Option(r.getSeq[Int](2)).getOrElse(Nil)))
+    def close(got: Seq[(Option[Long], String, Double)],
+              want: Seq[(Option[Long], String, Double)]) = {
+      val (g, e) = (got.sortBy(r => (r._1, r._2)), want.sortBy(r => (r._1, r._2)))
+      assert(g.map(r => (r._1, r._2)) == e.map(r => (r._1, r._2)))
+      g.zip(e).foreach { case (a, b) =>
+        assert(math.abs(a._3 - b._3) < 1e-9, s"dim $dim: $a vs reference $b") }
+    }
+
+    val qRows = rows("qc:")
+    val qRef = referenceClf(qRows.map { case (id, l, js) =>
+        (id, Some(Array(if (l.contains("a")) 1.0 else 0.0)), js) }, 1, dim, iters,
+      z => z.map(v => 1.0 / (1.0 + math.exp(-v))))
+    val q = Search.qualityClassifier(docs, "doc_id", "text", col("lang") === "a",
+      dim = dim, iters = iters)
+    close(q.collect().toSeq.map(r =>
+        (Option(r.get(0)).map(_.asInstanceOf[Long]), "", r.getDouble(1))),
+      qRows.map { case (id, _, _) => (id, "", qRef(id)(0)) })
+    q.unpersist()
+
+    val lRows = rows("lc:")
+    val classes = lRows.flatMap(_._2).distinct.sorted
+    val lRef = referenceClf(lRows.map { case (id, l, js) =>
+        (id, l.map(c => classes.map(x => if (x == c) 1.0 else 0.0).toArray), js) },
+      classes.size, dim, iters, { z =>
+        val ez = z.map(v => math.exp(v - z.max)); ez.map(_ / ez.sum) })
+    val l = Search.languageClassifier(docs, "doc_id", "text", "lang",
+      dim = dim, iters = iters)
+    close(l.collect().toSeq.map(r =>
+        (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1), r.getDouble(2))),
+      lRows.map(_._1).distinct.flatMap(id =>
+        classes.zip(lRef(id)).map { case (c, p) => (id, c, p) }))
+    l.unpersist()
+  }
+
+  test("classifiers match a plain-Scala gradient-descent reference on " +
+      "both sides of the old 4096-dim literal gate") {
+    Seq(300, 5000).foreach(dim => assertMatchesReference(clfFixture, dim, iters = 3))
+  }
+
+  test("classifiers keep the oracle semantics for duplicated doc_ids, " +
+      "null labels and a null doc_id") {
+    import spark.implicits._
+    // doc 5 appears twice with different labels (features merge, each row
+    // keeps its label and its output row), doc 7 again with a null label,
+    // doc 41 is unlabeled, the null doc_id matches no features, doc 42 is
+    // empty
+    val extra = Seq[(java.lang.Long, String, String)](
+      (5L, "casino reference garbage", "b"), (7L, "curated pills", null),
+      (41L, "encyclopedia clickbait article", null),
+      (null, "spam casino reference", "a"), (42L, "", "c"))
+      .toDF("doc_id", "text", "lang")
+    assertMatchesReference(clfFixture.union(extra), dim = 64, iters = 3)
+  }
+
+  test("a 10^5-dim model keeps the posted plan descriptions small") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    // the single weight spelling at every dim must neither print 10^5
+    // weights into the plan description posted per query nor become an
+    // expression tree (an array literal prints them all: 7.2M chars)
+    val longest = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          longest.accumulateAndGet(s.physicalPlanDescription.length, math.max)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      val big = Search.qualityClassifier(clfFixture, "doc_id", "text",
+        col("lang") === "a", dim = 100000, iters = 2)
+      assert(big.count() == 40)
+      big.unpersist()
+      val lang = Search.languageClassifier(clfFixture, "doc_id", "text", "lang",
+        dim = 100000, iters = 2)
+      assert(lang.count() == 120)
+      lang.unpersist()
+    } finally {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(l)
+    }
+    assert(longest.get > 0 && longest.get < 100000,
+      s"plan description of ${longest.get} chars")
+  }
+
+  test("classifier iterations cost at most 2 Spark jobs each") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    def jobs(run: => org.apache.spark.sql.DataFrame): Int = {
+      val tag = s"clf-jobs-${System.nanoTime}"
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null &&
+              e.properties.getProperty("spark.jobGroup.id") == tag) n.incrementAndGet()
+      }
+      sc.addSparkListener(l)
+      sc.setJobGroup(tag, "classifier job count")
+      try run.unpersist()
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.ListenerBusDrain(sc)
+        sc.removeSparkListener(l)
+      }
+      n.get
+    }
+    def quality(iters: Int) = jobs(Search.qualityClassifier(clfFixture, "doc_id",
+      "text", col("lang") === "a", iters = iters))
+    def language(iters: Int) = jobs(Search.languageClassifier(clfFixture, "doc_id",
+      "text", "lang", iters = iters))
+    for ((name, run) <- Seq("quality" -> quality _, "language" -> language _)) {
+      val (two, four) = (run(2), run(4))
+      assert(two > 0 && four > two, s"$name: $two jobs at iters 2, $four at 4")
+      assert(four - two <= 4, s"$name: ${four - two} jobs for 2 more iterations")
+    }
   }
 
   test("canonicalizeUrl: query-only authority and lookalike utm params") {
