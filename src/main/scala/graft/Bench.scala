@@ -275,10 +275,11 @@ object Bench {
 
   /** Deterministic 10x-scaled corpus derived from sfDir (cached across
     * runs): documents get copy 0 verbatim + 9 copies with ~60% of
-    * tokens perturbed per (token, doc) hash — the MinhashScaleDemo
-    * recipe, one dense shard + nine sparse shards, the web-corpus
-    * operating mix; orders/lineitem replicate with orderkey offsets
-    * (join keys stay consistent); dimension-ish tables copy verbatim. */
+    * tokens perturbed per (token, doc) hash (the corpus BASELINE.md's
+    * sf1 minhash numbers were measured on), one dense shard + nine
+    * sparse shards, the web-corpus operating mix; orders/lineitem
+    * replicate with orderkey offsets (join keys stay consistent);
+    * dimension-ish tables copy verbatim. */
   private def ensureSf1(spark: SparkSession, sfDir: String): String = {
     import org.apache.spark.sql.functions._
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")

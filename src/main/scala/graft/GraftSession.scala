@@ -93,7 +93,7 @@ object GraftSession {
     * never rows, never results: every query still computes from the
     * parquet bytes. Plain `spark.read.parquet(p)` re-reads footers for
     * schema inference on EVERY DataFrame construction (~100 ms per call
-    * vs ~20 ms schema-supplied, measured by tools/ReadOverheadProbe);
+    * vs ~20 ms schema-supplied, measured in OPTIMIZATION_r17.md);
     * for the bench's sub-second tail that inference IS a visible share
     * of the wall (guide §1.2 step 3 / VERDICT r16 item 6: fixed
     * per-query overhead). Because inference

@@ -197,10 +197,8 @@ object Dedup {
     // attach joins. Costs one int riding the band explode; removes no
     // true pair (the bound is implied by the threshold filter), so
     // declared results are unchanged. Measured at sf1: 53.8M -> 41.2M
-    // join rows, 19.4M -> 12.8M verify pairs (r17 MinhashBucketDist).
-    // Switchable only for the A/B probe.
-    val lenPre = threshold > 0 &&
-      sys.props.getOrElse("graft.minhash.lenfilter", "on") != "off"
+    // join rows, 19.4M -> 12.8M verify pairs (OPTIMIZATION_r17.md).
+    val lenPre = threshold > 0
     def candCond(extra: Column): Column =
       if (lenPre) extra && lenRatioOk(threshold) else extra
     if (!collapseExactDups) {
@@ -245,41 +243,28 @@ object Dedup {
     val members = keyed.select("setkey", "id")
     // reps = one (setkey, min id, th) row per distinct token set, with
     // FIXED-WIDTH aggregation state (r16 verdict item 1, settled by the
-    // r17 MinhashRepsProbe A/B): group on setkey alone — min(long) under
-    // a long key is the map-side-combinable HashAggregate with an 8-byte
-    // buffer — and re-attach th by joining `keyed` back on setkey (both
-    // sides partition by setkey, so the aggregation's exchange is
+    // r17 A/B in OPTIMIZATION_r17.md): group on setkey alone — min(long)
+    // under a long key is the map-side-combinable HashAggregate with an
+    // 8-byte buffer — and re-attach th by joining `keyed` back on setkey
+    // (both sides partition by setkey, so the aggregation's exchange is
     // shared; the build side is the aggregated (setkey, mid) pair
     // table, 16 bytes/row). The r16 spelling carried th as a GROUPING
     // key (groupBy(setkey, th)): that removed the pre-r16 first(array)
     // SortAggregates but made every hash-map key carry the doc's whole
-    // token array — probe, alternating in one JVM: sf1 cpu 139.5/131.6/
+    // token array — A/B alternating in one JVM: sf1 cpu 139.5/131.6/
     // 123.9 s and wall 7.28/7.69/6.92 s for widekey/first/join — the
     // join spelling wins on both, at both SFs. (Equal ids on two rows
     // of one set group would emit duplicate reps — doc ids are unique
-    // by the contract every op in this file shares.) The widekey/first
-    // arms stay reachable via graft.minhash.reps for the probe only.
-    val reps = sys.props.getOrElse("graft.minhash.reps",
-        sys.env.getOrElse("GRAFT_MINHASH_REPS", "join")) match {
-      case "widekey" => graft.GraftSession.balanced(
-        keyed.groupBy("setkey", "th").agg(min("id").as("id"))
-          .select("setkey", "id", "th"))
-      case "first" =>
-        graft.GraftSession.balanced(
-          keyed.groupBy("setkey")
-            .agg(min("id").as("id"), first("th").as("th"))
-            .select("setkey", "id", "th"))
-      case _ =>
-        // no shuffle_hash hint: the session's AQE
-        // maxShuffledHashJoinLocalMapThreshold makes the SMJ->SHJ
-        // rewrite at runtime from measured partition sizes (spill-safe
-        // at 100 TB where a hint would pin an unspillable build)
-        val repIds = keyed.groupBy("setkey").agg(min("id").as("__mid"))
-        graft.GraftSession.balanced(
-          keyed.join(repIds, "setkey")
-            .filter(col("id") === col("__mid"))
-            .select("setkey", "id", "th"))
-    }
+    // by the contract every op in this file shares.)
+    // No shuffle_hash hint: the session's AQE
+    // maxShuffledHashJoinLocalMapThreshold makes the SMJ->SHJ rewrite at
+    // runtime from measured partition sizes (spill-safe at 100 TB where a
+    // hint would pin an unspillable build).
+    val repIds = keyed.groupBy("setkey").agg(min("id").as("__mid"))
+    val reps = graft.GraftSession.balanced(
+      keyed.join(repIds, "setkey")
+        .filter(col("id") === col("__mid"))
+        .select("setkey", "id", "th"))
     // (A first-band-wins inline filter was tried here to avoid this agg
     // exchange — carrying both band-key arrays through the join and
     // zip_with-matching per emitted row cost MORE than the exchange; the
@@ -337,8 +322,7 @@ object Dedup {
     // whose distinct-token counts differ beyond the threshold ratio
     // cannot verify — dropped inside the band join, before the
     // pair-dedup exchange and both token-array attach joins
-    val lenPre = threshold > 0 &&
-      sys.props.getOrElse("graft.minhash.lenfilter", "on") != "off"
+    val lenPre = threshold > 0
     val ba = bandedIdsFrom(ta, numHashes, bands, maxBucket, carryLen = lenPre)
     val bb = bandedIdsFrom(tb, numHashes, bands, maxBucket, carryLen = lenPre)
     val baseCond = col("a.band") === col("b.band")
@@ -1204,11 +1188,11 @@ object Dedup {
     val nEdges = bi.count()
     val defaultParts = spark.sessionState.conf.numShufflePartitions
     // 500k edges/partition (r17; was 125k): the loop's tables are 16-byte
-    // rows, so a task still holds only ~8 MB — and the r17 CcRddProbe
-    // A/B showed the doubling loop 1.5-2x faster at 8 partitions than 24
-    // on the sf1 shape (per-round wall is task/stage overhead, not
-    // compute). defaultParts still caps it, so cluster-scale inputs keep
-    // the session's parallelism.
+    // rows, so a task still holds only ~8 MB — and the r17 A/B
+    // (OPTIMIZATION_r17.md) showed the doubling loop 1.5-2x faster at 8
+    // partitions than 24 on the sf1 shape (per-round wall is task/stage
+    // overhead, not compute). defaultParts still caps it, so
+    // cluster-scale inputs keep the session's parallelism.
     def partsFor(n: Long): Int = math.max(1, math.min(defaultParts,
       math.ceil(n / 500000.0).toInt))
     val nParts = partsFor(nEdges)
@@ -1248,7 +1232,7 @@ object Dedup {
     // OPTIMIZATION_r16.md). A shuffled-hash hint drops the sorts. The
     // hint is gated on bounded per-partition build size so a future
     // billion-node run with a small session parallelism degrades to the
-    // spill-safe SMJ instead of OOMing the build: partsFor targets 125k
+    // spill-safe SMJ instead of OOMing the build: partsFor targets 500k
     // edges/partition until defaultParts caps it, so the build side only
     // outgrows memory when nodes/defaultParts does — the 8M-row bound is
     // ~128 MB of packed longs per task, inside any sane executor.
@@ -1279,22 +1263,17 @@ object Dedup {
       // PLANNING melts the driver in BigInteger math.
       def contractMap(e: DataFrame, n: Long): DataFrame = {
         import org.apache.spark.sql.graftshim.PlanShim.freshStats
-        val dbg = sys.props.contains("graft.cc.debug")
         val parts = partsFor(n)
         // e is BIDIRECTIONAL, so every node appears as dst — the node
         // set needs no separate distinct() and no join: the one
         // partial-aggregating groupBy yields the full closed-nbhd min
-        var t = System.nanoTime()
         var m = freshStats(e
           .groupBy(col("dst").as("id")).agg(min(col("src")).as("nmin"))
           .select(col("id"), least(col("nmin"), col("id")).as("label"))
           .localCheckpoint())
-        if (dbg) System.err.println(
-          f"[cc]   nbhd-min ${(System.nanoTime() - t) / 1e9}%.3fs")
         var changed = 1L
         var doublings = 0
         while (changed > 0 && doublings < 64) {
-          t = System.nanoTime()
           // LAZY checkpoint: the changed-count below is the materializing
           // job (persist is storage-level-lazy — the first pass stores the
           // blocks), so each doubling runs ONE job instead of an eager
@@ -1307,9 +1286,6 @@ object Dedup {
               coalesce(col("y.llabel"), col("x.label")).as("label"))
             .localCheckpoint(eager = false))
           changed = jumped.filter(col("label") =!= col("old")).count()
-          if (dbg) System.err.println(
-            f"[cc]   doubling ${doublings + 1} " +
-              f"join+count=${(System.nanoTime() - t) / 1e9}%.3fs changed=$changed")
           PlanShim.unpersistCheckpoint(m) // jumped is materialized
           m = jumped.select("id", "label")
           doublings += 1
@@ -1346,8 +1322,6 @@ object Dedup {
       val m1 = contractMap(bi, nEdges)   // the one full-size round
       var live = remap(bi, m1, nEdges)
       var liveEdges = live.count()
-      if (sys.props.contains("graft.cc.debug"))
-        System.err.println(s"[cc] round=1 liveEdges=$liveEdges (nEdges=$nEdges)")
       round = 1
       wall += (System.nanoTime() - t0) / 1e9
       // composition of rounds 2.. on the representative space (small and
@@ -1389,8 +1363,6 @@ object Dedup {
         // error on any input needing >1 contraction round
         if (!(comp eq m)) PlanShim.unpersistCheckpoint(m)
         live = nextLive
-        if (sys.props.contains("graft.cc.debug"))
-          System.err.println(s"[cc] round=$round liveEdges=$liveEdges")
         round += 1
         wall += (System.nanoTime() - t0) / 1e9
       }

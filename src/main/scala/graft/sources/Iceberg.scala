@@ -688,7 +688,7 @@ object IcebergTable {
           // (paths, mtimes): a changelog call re-reads the same delete
           // files once per pair side, and each bare read.parquet was a
           // full footer schema-inference job (~100 ms of the
-          // q_iceberg_changelog wall per call — r17 JobTraceProbe)
+          // q_iceberg_changelog wall per call — OPTIMIZATION_r17.md)
           val delRows = graft.GraftSession.readParquet(spark,
               dels.head.path, dels.tail.map(_.path): _*)
             .withColumn("__g_dfp", normPath(col("_metadata.file_path")))

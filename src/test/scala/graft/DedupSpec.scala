@@ -87,29 +87,38 @@ class DedupSpec extends AnyFunSuite {
     import spark.implicits._
     // lengths from 2 to ~40 distinct tokens, planted near-dups at both
     // extremes, plus cross-length band-collision bait (shared common
-    // tokens) — the prefilter must drop only pairs that the threshold
-    // filter would drop anyway
+    // tokens) — the always-on prefilter must drop only pairs that the
+    // threshold filter would drop anyway, so every spelling equals the
+    // exact inverted-index Jaccard reference
     val d = (Seq(
       (1L, "alpha beta"), (2L, "alpha beta"), (3L, "alpha gamma"),
       (4L, (1 to 40).map(i => s"tok$i").mkString(" ")),
       (5L, ((1 to 38).map(i => s"tok$i") ++ Seq("x1", "x2")).mkString(" ")),
       (6L, ("alpha beta " + (1 to 20).map(i => s"tok$i").mkString(" ")))
     )).toDF("doc_id", "text")
-    def run(lf: String) = {
-      val prev = sys.props.put("graft.minhash.lenfilter", lf)
-      try graft.pipeline.Dedup
-        .minhashNearDups(d, "doc_id", "text", threshold = 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSet
-      finally prev match {
-        case Some(v) => sys.props.put("graft.minhash.lenfilter", v)
-        case None => sys.props.remove("graft.minhash.lenfilter")
-      }
+    // every op rounds jaccard to 6 dp itself: ids and jaccard compare as-is
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b", "jaccard").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val exact = rows(Dedup.ngramJaccardPairs(d, "doc_id", "text",
+      n = 1, threshold = 0.5))
+    assert(exact.exists(p => p._1 == 1L && p._2 == 2L)) // sanity: dups found
+    for (collapse <- Seq(true, false)) {
+      val got = rows(Dedup.minhashNearDups(d, "doc_id", "text",
+        threshold = 0.5, maxBucket = Int.MaxValue,
+        collapseExactDups = collapse))
+      assert(got == exact, s"collapse=$collapse: $got vs exact $exact")
     }
-    val on = run("on")
-    val off = run("off")
-    assert(on == off, s"prefilter changed results: on=$on off=$off")
-    assert(on.exists(p => p._1 == 1L && p._2 == 2L)) // sanity: dups found
+    // bipartite: odd ids against even ids, pairs oriented (corpus, ref)
+    val (corpus, ref) = (d.filter($"doc_id" % 2 === 1),
+      d.filter($"doc_id" % 2 === 0))
+    val crossExact = exact.collect {
+      case (a, b, j) if a % 2 != b % 2 => if (a % 2 == 1) (a, b, j) else (b, a, j)
+    }
+    val cross = rows(Dedup.crossNearDups(corpus, ref, "doc_id", "text",
+      threshold = 0.5, maxBucket = Int.MaxValue))
+    assert(crossExact.nonEmpty)
+    assert(cross == crossExact, s"cross: $cross vs exact $crossExact")
   }
 
   test("length-ratio prefilter keeps a nested pair AT the threshold") {

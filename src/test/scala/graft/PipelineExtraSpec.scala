@@ -157,6 +157,23 @@ class PipelineExtraSpec extends AnyFunSuite {
       s"${leaked.size} persistent RDDs leaked from dupComponents: $leaked")
   }
 
+  test("dupComponents: contraction rounds do not grow with chain length " +
+      "(pointer doubling collapses an in-order path inside one round)") {
+    def rounds(n: Long): Int = {
+      val edges = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val comp = Dedup.dupComponents(edges)
+      val byComp = comp.groupBy("component").agg(count(lit(1)).as("n"))
+        .as[(Long, Long)].collect()
+      assert(byComp.toSeq == Seq((1L, n)), s"path of $n nodes: $byComp")
+      Dedup.lastCcStats.get.rounds
+    }
+    // 1 is what the 64-node path takes; a 64x longer chain must not add
+    // a round (without the doubling, a round trims only a constant number
+    // of nodes off each chain end)
+    assert(rounds(64L) == 1)
+    assert(rounds(4096L) == 1)
+  }
+
   test("lineDedup: cross-corpus keep-first by (id, idx), blanks pass " +
       "through, all-dropped docs come back empty, order preserved") {
     val docs = Seq(
