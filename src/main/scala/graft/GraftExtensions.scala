@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types.IntegerType
-import graft.functions.{CosineSimilarity, JaccardSimExpr, Md5Hash32Expr, MinhashSignatureExpr, PhoneticExpr, Phonetics, SimhashAgg, SimhashText64Expr, SimhashTextExpr, StringEntropyExpr}
+import graft.functions.{CosineSimilarity, JaccardSimExpr, Md5Hash32Expr, MinhashSignatureExpr, PhoneticExpr, Phonetics, SimhashAgg, SimhashText64Expr, SimhashTextExpr, StringEntropyExpr, WordNgramsExpr}
 
 /** Session extensions: registers graft's native Catalyst expressions into
   * the function registry, so they resolve from SQL (`cosine_sim(a, b)`)
@@ -78,6 +78,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 2,
           s"minhash_sig expects exactly 2 arguments, got ${children.length}")
         MinhashSignatureExpr(children.head, children(1))
+      }))
+    ext.injectFunction((
+      new FunctionIdentifier("word_ngrams"),
+      new ExpressionInfo(classOf[WordNgramsExpr].getName, "word_ngrams"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2,
+          s"word_ngrams expects exactly 2 arguments, got ${children.length}")
+        WordNgramsExpr(children.head, children(1))
       }))
     ext.injectFunction((
       new FunctionIdentifier("jaccard_sim"),

@@ -883,8 +883,9 @@ object QueriesPipeline {
     "q_dedup_simhash" -> SIMHASH_ORACLE,
     "q_simhash_incremental" -> SIMHASH_ORACLE,
     "q_dedup_simhash_capped" -> SIMHASH_ORACLE,
-    // joins on the raw 5-gram STRINGS where the Spark side joins on their
-    // 60-bit md5-prefix hashes — a hash false-positive would fail the gate
+    // joins on the raw 5-gram STRINGS where the Spark side joins on
+    // 64-bit xxhash64 keys over each gram's 5 words — a hash
+    // false-positive would fail the gate
     "q_ngram_decontam" -> s"""
       WITH t AS (SELECT doc_id, string_split($NORM, ' ') AS w FROM documents),
       g AS (SELECT doc_id, unnest(list_distinct(list_transform(

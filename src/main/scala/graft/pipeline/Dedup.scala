@@ -703,6 +703,46 @@ object Dedup {
     corpus.join(contaminated, Seq(idCol), "left_anti")
   }
 
+  /** (doc_id, gh): each doc's DISTINCT n-gram 64-bit hashes — the one
+    * definition both the boolean and the scored decontamination share
+    * (they must never diverge on tokenization or hash width). The hash
+    * is xxhash64 over the n token columns directly: no n-gram STRING is
+    * ever materialized (the previous form built every gram with
+    * slice+array_join, re-split it to validate its width, and md5'd it —
+    * three string passes per position, measured ~2x this whole
+    * operator's CPU), and the 64-bit keyspace strictly tightens the old
+    * 60-bit md5-prefix collision odds. The join downstream is
+    * hash-on-hash either way; the gate's oracle re-derives from gram
+    * strings, so a collision would fail the gate, not hide. Docs with
+    * fewer than n tokens emit nothing (the oracle's len(w) >= n guard),
+    * and an EMPTY/NULL doc emits nothing at ANY n: split("") yields the
+    * phantom [""] token, which the first-token length guard drops (the
+    * same invariant the old length(gram) > 0 filter enforced at n = 1).
+    *
+    * The word array is projected as a COLUMN (`__w`) before the explode,
+    * so the per-position lambda reads an attribute. Higher-order-function
+    * lambdas are interpreted and get no subexpression elimination: with
+    * split(normalize(text)) inlined there, every doc was re-normalized n
+    * times per position — 5 x (L-4) whole-document passes at n = 5, the
+    * costliest step of the benchmark's curate pass (2.2 of 5.1 executor
+    * cpu-s, 4-core host, local[2]). (`__w` is read more than once, so
+    * CollapseProject keeps the projection; PlanGuardSpec holds it.) */
+  private def gramHashes(df: DataFrame, idCol: String, textCol: String,
+                         n: Int): DataFrame = {
+    val words = col("__w")
+    val cnt = size(words)
+    val ghs = when(cnt >= n && length(element_at(words, 1)) > 0,
+      array_distinct(transform(sequence(lit(0), cnt - n),
+        i => xxhash64((0 until n).map(k =>
+          element_at(words, i + lit(k + 1))): _*))))
+      .otherwise(expr("array()").cast("array<bigint>"))
+    graft.GraftSession.balanced( // fan-out stage: never run on one split
+        df.select(col(idCol).as("doc_id"), col(textCol).as("text")))
+      .select(col("doc_id"),
+        split(TextAnalysis.normalize(col("text")), " ").as("__w"))
+      .select(col("doc_id"), explode(ghs).as("gh"))
+  }
+
   /** EXACT n-gram overlap decontamination (the published eval-hygiene
     * recipe: flag a training doc if any length-n token window also
     * appears anywhere in the reference/benchmark set — the GPT-3
@@ -719,35 +759,6 @@ object Dedup {
     * it: the join is hash-on-hash either way). At 2^64 keyspace a false
     * hash hit needs ~10^9 distinct n-grams before it has noticeable
     * odds. */
-  /** (doc_id, gh): each doc's DISTINCT n-gram 64-bit hashes — the one
-    * definition both the boolean and the scored decontamination share
-    * (they must never diverge on tokenization or hash width). The hash
-    * is xxhash64 over the n token columns directly: no n-gram STRING is
-    * ever materialized (the previous form built every gram with
-    * slice+array_join, re-split it to validate its width, and md5'd it —
-    * three string passes per position, measured ~2x this whole
-    * operator's CPU), and the 64-bit keyspace strictly tightens the old
-    * 60-bit md5-prefix collision odds. The join downstream is
-    * hash-on-hash either way; the gate's oracle re-derives from gram
-    * strings, so a collision would fail the gate, not hide. Docs with
-    * fewer than n tokens emit nothing (the oracle's len(w) >= n guard),
-    * and an EMPTY/NULL doc emits nothing at ANY n: split("") yields the
-    * phantom [""] token, which the first-token length guard drops (the
-    * same invariant the old length(gram) > 0 filter enforced at n = 1). */
-  private def gramHashes(df: DataFrame, idCol: String, textCol: String,
-                         n: Int): DataFrame = {
-    val words = split(TextAnalysis.normalize(col("text")), " ")
-    val cnt = size(words)
-    val ghs = when(cnt >= n && length(element_at(words, 1)) > 0,
-      array_distinct(transform(sequence(lit(0), cnt - n),
-        i => xxhash64((0 until n).map(k =>
-          element_at(words, i + lit(k + 1))): _*))))
-      .otherwise(expr("array()").cast("array<bigint>"))
-    graft.GraftSession.balanced( // fan-out stage: never run on one split
-        df.select(col(idCol).as("doc_id"), col(textCol).as("text")))
-      .select(col("doc_id"), explode(ghs).as("gh"))
-  }
-
   def ngramDecontaminate(corpus: DataFrame, reference: DataFrame,
                          idCol: String, textCol: String,
                          n: Int = 5): DataFrame = {
@@ -1072,14 +1083,10 @@ object Dedup {
                         maxDocFreq: Int = Int.MaxValue): DataFrame = {
     val toks = graft.GraftSession.balanced(
         docs.select(col(idCol).as("id"), col(textCol).as("text")))
-      // drop wordNgrams' phantom whole-doc pseudo-gram (docs shorter than
-      // n words, and the "" gram of empty docs): without the filter all
-      // empty docs share one posting and the self-join emits E*(E-1)/2
-      // bogus jaccard-1.0 pairs — and `sizes` overcounted |A| by 1 for
-      // every short doc. Same guard gramHashes applies.
-      .select(col("id"), array_distinct(
-        filter(TextAnalysis.wordNgrams(col("text"), n),
-          g => length(g) > 0 && size(split(g, " ")) === n)).as("g"))
+      // docs shorter than n words (empty ones included) have no grams,
+      // so they share no posting: blank docs never pair at jaccard 1.0
+      .select(col("id"),
+        array_distinct(TextAnalysis.wordNgrams(col("text"), n)).as("g"))
     val sizes = toks.select(col("id"), size(col("g")).as("sz"))
     val inv0 = toks.select(col("id"), explode(col("g")).as("g"))
     // Document-frequency cap: postings for ubiquitous shingles (stopwords)

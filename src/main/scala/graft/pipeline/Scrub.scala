@@ -41,12 +41,18 @@ object Scrub {
   /** Fraction of duplicated word n-grams within the document, in basis
     * points (integer — engine-portable): 0 means all n-grams distinct,
     * 10000 means one n-gram repeated throughout. The canonical
-    * boilerplate/repetition quality signal. */
+    * boilerplate/repetition quality signal.
+    *
+    * No CASE guards the division: subexpression elimination looks only
+    * at a CASE's first condition, so `grams` inside a when() branch would
+    * be cut again there. nullif keeps every `grams` use unconditional
+    * (one evaluation per row) and still never divides by zero. */
   def repetitionBp(text: Column, n: Int = 3): Column = {
     val grams = TextAnalysis.wordNgrams(text, n)
     val total = size(grams)
     val dups = total - size(array_distinct(grams))
-    when(total > 0, floor(dups * lit(10000L) / total)).otherwise(0L).cast("long")
+    coalesce(floor(dups * lit(10000L) / nullif(total, lit(0))), lit(0L))
+      .cast("long")
   }
 
   /** Explode a document into fixed-size token chunks (the unit most
@@ -62,11 +68,14 @@ object Scrub {
     // otherwise counts 1 "word" and (at chunkTokens=1) emits an
     // empty-string chunk — every blank doc then collapses onto md5("")
     // as one giant phantom duplicate group in chunkDupStats
-    val words = filter(
-      split(TextAnalysis.normalize(coalesce(col(textCol), lit(""))), " "),
-      t => length(t) > 0)
+    // (projected as a column first: read inside the per-chunk lambda, the
+    // split would re-tokenize the whole doc once per chunk)
+    val words = col("__w")
     val nChunks = floor(size(words) / chunkTokens).cast("int")
-    docs.select(col(idCol).as("doc_id"),
+    docs.select(col(idCol).as("doc_id"), filter(
+        split(TextAnalysis.normalize(coalesce(col(textCol), lit(""))), " "),
+        t => length(t) > 0).as("__w"))
+      .select(col("doc_id"),
         posexplode(
           when(nChunks > 0, transform(sequence(lit(0), nChunks - 1),
             i => array_join(slice(words, i * chunkTokens + 1, lit(chunkTokens)), " ")))

@@ -85,20 +85,34 @@ object Similarity {
       round(col("cs_raw"), 6).as("cos_sim"))
   }
 
-  /** Unit-normalize an embedding column — ONE definition shared by the
-    * PQ quantizer and the kmeans trainer (they must agree on the vector
-    * space; two private copies had to be kept in sync by hand). */
-  private def normed(c: Column): Column = {
-    val n = sqrt(aggregate(c, lit(0.0),
-      (a, x) => a + x.cast("double") * x.cast("double")))
+  /** `df` projected to `keep` plus `vec` unit-normalized as `out` — ONE
+    * definition shared by the PQ quantizer and the kmeans trainer (they
+    * must agree on the vector space; two private copies had to be kept in
+    * sync by hand).
+    *
+    * The vector (`__v`) and its norm (`__n`) are projected as COLUMNS
+    * before the per-element transform, so the lambda reads an attribute:
+    * HOF lambdas are interpreted with no subexpression elimination, and a
+    * norm spelled inside `x => x / n` was re-aggregated for every element
+    * — O(dim^2) per vector. Each alias is read twice downstream, so
+    * CollapseProject keeps the projections (it inlines a non-cheap alias
+    * only when it is read once). */
+  private def normed(df: DataFrame, keep: Seq[Column], vec: Column,
+                     out: String): DataFrame = {
+    val kept = df.select(keep :+ vec.as("__v"): _*)
+    val names = kept.columns.init.toSeq.map(col)
+    val n = col("__n")
     // zero-norm guard: an all-zero embedding (padding/empty-doc artifact)
     // divided by 0 is a NaN vector, and NaN sorts GREATEST in Spark —
     // one such vector poisoned a kmeans centroid to all-NaN and then
     // absorbed the whole corpus into that cluster. A zero vector stays
     // zero (cosine 0 to everything — neutral), mirroring quantizeInt8's
     // explicit zero-vector handling.
-    when(n === 0.0, transform(c, x => lit(0.0)))
-      .otherwise(transform(c, x => x.cast("double") / n))
+    kept.select(names ++ Seq(col("__v"), sqrt(aggregate(col("__v"), lit(0.0),
+        (a, x) => a + x.cast("double") * x.cast("double"))).as("__n")): _*)
+      .select(names :+
+        when(n === 0.0, transform(col("__v"), x => lit(0.0)))
+          .otherwise(transform(col("__v"), x => x.cast("double") / n)).as(out): _*)
   }
 
   /** Random-hyperplane signature: `bits` sign bits packed into a long.
@@ -303,9 +317,9 @@ object Similarity {
     // the cells and codes aggregations, and the exact rerank — persist
     // for the call (kmeans caches the identical shape for this reason)
     val c0 = graft.GraftSession.balanced(
-      corpus.select(col(idCol).as("cid"), normed(col(vecCol)).as("cvec")))
+      normed(corpus, Seq(col(idCol).as("cid")), col(vecCol), "cvec"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val q0 = queries.select(col(idCol).as("qid"), normed(col(vecCol)).as("qvec"))
+    val q0 = normed(queries, Seq(col(idCol).as("qid")), col(vecCol), "qvec")
 
     // coarse quantizer (kmeans-trained when provided) + PQ codebooks:
     // deterministic hash-samples otherwise
@@ -432,7 +446,7 @@ object Similarity {
     // for the iterations instead of re-scanning + re-normalizing;
     // N × dim doubles, spills to disk when bigger than memory
     val c0 = graft.GraftSession.balanced(
-      corpus.select(col(idCol).as("id"), normed(col(vecCol)).as("v")))
+      normed(corpus, Seq(col(idCol).as("id")), col(vecCol), "v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // centroids live driver-side between iterations — k × dim doubles,
     // metadata-scale by definition (every k-means driver does this); the
@@ -463,13 +477,13 @@ object Similarity {
     while (it < iters) {
       // new centroid = normalized mean of members; empty clusters keep
       // their previous centroid
-      val means = assigned
+      val dm = assigned
         .select(col("cluster"), posexplode(col("v")).as(Seq("d", "x")))
         .groupBy("cluster", "d").agg(avg("x").as("mx"))
         .groupBy("cluster")
         .agg(sort_array(collect_list(struct(col("d"), col("mx")))).as("dm"))
-        .select(col("cluster"),
-          normed(transform(col("dm"), e => e.getField("mx"))).as("cvec"))
+      val means = normed(dm, Seq(col("cluster")),
+          transform(col("dm"), e => e.getField("mx")), "cvec")
         .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
       centRows = centRows.map { case (c, prev) => (c, means.getOrElse(c, prev)) }
       assigned = assign()

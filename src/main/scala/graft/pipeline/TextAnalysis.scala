@@ -93,13 +93,18 @@ object TextAnalysis {
     * (Karp-Rabin rolling hash variant in RollingHash.scala for windows.) */
   def fingerprint(text: Column): Column = md5(normalize(text))
 
-  /** Word n-grams as an array column (shingles for dedup). */
-  def wordNgrams(text: Column, n: Int): Column = {
-    val words = split(normalize(text), " ")
-    val cnt = size(words)
-    when(cnt >= n,
-      transform(sequence(lit(0), cnt - n),
-        i => array_join(slice(words, i + 1, lit(n)), " ")))
-      .otherwise(array(array_join(words, " ")))
-  }
+  /** Word n-grams as an array column (shingles for dedup): each gram is
+    * n consecutive words of the normalized text joined by one space. A
+    * doc with fewer than n words (empty and whitespace-only docs
+    * included) has no grams; NULL text gives NULL.
+    *
+    * The text is normalized ONCE and cut by the native `word_ngrams`
+    * kernel (graft.functions.WordNgramsExpr), not by a transform over
+    * positions slicing split(normalize(text)): higher-order-function
+    * lambdas are interpreted and get no subexpression elimination, so a
+    * split referenced in the lambda body runs once per position. Every
+    * lambda-invariant expression a lambda needs must reach it as a
+    * projected column or as a HOF argument, never inside the body. */
+  def wordNgrams(text: Column, n: Int): Column =
+    call_function("word_ngrams", normalize(text), lit(n))
 }

@@ -64,8 +64,9 @@ class PipelineExtraSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val hits = Dedup.ngramDecontaminate(corpus, ref, "doc_id", "text", n = 5)
       .as[(Long, Long)].collect().toMap
-    // doc 1 shares exactly 2 distinct 5-grams (a b g d e, b g d e z is absent
-    // — suffix differs, so just windows fully inside the shared span)
+    // doc 1 shares exactly 1 distinct 5-gram: the only window lying fully
+    // inside the shared span (its neighbours take "words" or "suffix",
+    // which the reference lacks)
     assert(hits.keySet === Set(1L))
     assert(hits(1L) === 1L) // "alpha beta gamma delta epsilon" only
   }

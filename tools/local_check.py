@@ -7,11 +7,14 @@ import duckdb, glob, json, math, os, subprocess, sys
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 SKIP_RUN = os.environ.get("SKIP_RUN") == "1"
+# the checkout this script belongs to (tools/..), so a copy of the repo
+# verifies its own sources rather than whichever tree a fixed path names
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 if not SKIP_RUN:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT}'],
-        cwd="/root/repo", capture_output=True, text=True, timeout=3600)
+        cwd=ROOT, capture_output=True, text=True, timeout=3600)
     sys.stdout.write("\n".join(l for l in r.stdout.splitlines()
                                if "[verify]" in l or "error" in l.lower()) + "\n")
     if r.returncode != 0:
