@@ -87,46 +87,77 @@ object Dedup {
   /** LSH band keys as LONGs: signature split into `bands` rows of
     * `rowsPerBand`, each band hashed (band index mixed in) to one 64-bit
     * bucket key — long join/agg keys beat string keys on the candidate
-    * join, which processes ~10x the pair count. */
+    * join, which processes ~10x the pair count. One hash expression per
+    * band, no lambda: codegen evaluates them, where a `transform` lambda
+    * is interpreted and re-evaluates anything row-invariant inside it
+    * once per band. Every key reads `sig`, so pass a projected column
+    * ([[selectBandKeys]] does). minhashIndexAppend persists these keys, so
+    * their values are pinned by a golden spec. */
   def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      xxhash64(b, slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))))
+    array((0 until bands).map(b =>
+      xxhash64(lit(b), slice(sig, b * rowsPerBand + 1, rowsPerBand))): _*)
 
-  /** (id, th): the doc as a SORTED array of 32-bit-in-long token hashes.
-    * Token strings are hashed HERE and never used again — banding derives
-    * signatures from `th` and the verify join intersects `th` pairs with
-    * the long-array jaccard kernel (two-pointer merge over the pre-sorted
-    * arrays). Nothing string-typed ever shuffles: a hashed token costs 8
-    * bytes on the wire vs ~20 for the avg word string, and the verify
-    * kernel runs allocation-free. (Hash collisions folding two tokens:
+  /** Selects `cols(keys)` from `df`, where `keys` is the `bands` LSH band
+    * keys of the sorted token-hash set `th`. The signature is projected
+    * as its own column first, so the 128-hash kernel runs once per doc,
+    * not once per band. Explode `keys` itself, not a column holding it:
+    * for an exploded ATTRIBUTE Spark infers a `size(..) > 0` filter and
+    * pushes it below the projections, where it re-runs the tokenizer and
+    * the kernel once per band. The one place the banding parameters are
+    * checked: bands > numHashes would make rowsPerBand 0 (every band one
+    * global bucket: an N^2 join), and a non-divisor silently ignores
+    * trailing signature entries and changes the documented recall math. */
+  private[graft] def selectBandKeys(df: DataFrame, th: Column, numHashes: Int,
+                                    bands: Int)(cols: Column => Seq[Column]): DataFrame = {
+    require(bands >= 1 && bands <= numHashes && numHashes % bands == 0,
+      s"bands ($bands) must divide numHashes ($numHashes)")
+    df.withColumn("__sig", minhashSignatureFromHashes(th, numHashes))
+      .select(cols(lshBandKeys(col("__sig"), bands, numHashes / bands)): _*)
+      .drop("__sig")
+  }
+
+  /** The per-bucket skew cap of every banded and blocked operator: keep
+    * the `maxBucket` lowest-id rows of each `key` bucket. Rows past the
+    * cap are invisible to the bucket self-join (audit with
+    * minhashBucketStats / simhashBucketStats). The row_number window
+    * costs an exchange+sort on `key` AND flips the self-join to
+    * sort-merge, so it is only planned when a cap is set. */
+  private def capBuckets(rows: DataFrame, key: String, maxBucket: Int): DataFrame =
+    if (maxBucket == Int.MaxValue) rows // cap off: the self-join stays broadcastable
+    else rows.withColumn("__bn", row_number().over(
+        Window.partitionBy(key).orderBy("id")))
+      .filter(col("__bn") <= maxBucket).drop("__bn")
+
+  /** A document's token SET as a SORTED array of 32-bit-in-long token
+    * hashes: normalize, split, distinct, drop the empty token, hash, sort
+    * — the one spelling every MinHash operator tokenizes with (batch,
+    * incremental index and streaming). Token strings are hashed HERE and
+    * never used again — banding derives signatures from it and
+    * verification intersects two of them with the long-array jaccard
+    * kernel (two-pointer merge over the pre-sorted distinct arrays; a
+    * repeated token would score below the true set-Jaccard). Nothing
+    * string-typed ever shuffles: a hashed token costs 8 bytes on the wire
+    * vs ~20 for the avg word string. (Hash collisions folding two tokens:
     * ~1e-8 at 1M distinct tokens in a 64-bit-hash world — the gate would
-    * catch any 6dp jaccard shift.) */
+    * catch any 6dp jaccard shift.) length>0: split("") yields [""] —
+    * without the filter an empty/whitespace-only doc carries the phantom
+    * set {hash("")} instead of {}, pairing blank docs at jaccard 1.0 (the
+    * same phantom Search.toksOf filters). NULL text gives NULL. */
+  private[graft] def tokenSet(text: Column): Column =
+    array_sort(tokenHashes(
+      filter(array_distinct(split(TextAnalysis.normalize(text), " ")),
+        t => length(t) > 0)))
+
+  /** (id, th): each doc's [[tokenSet]]. */
   private def tokenized(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     graft.GraftSession.balanced(docs.select(col(idCol).as("id"), col(textCol).as("text")))
-      .select(col("id"), array_sort(tokenHashes(
-        // length>0: split("") yields [""] — without the filter an
-        // empty/whitespace-only/null doc carries the phantom token set
-        // {hash("")} instead of {}, pairing blank docs at jaccard 1.0
-        // (and decontaminate would drop every blank corpus doc on one
-        // blank reference doc). Same phantom Search.toksOf filters.
-        filter(array_distinct(split(TextAnalysis.normalize(col("text")), " ")),
-          t => length(t) > 0))).as("th"))
+      .select(col("id"), tokenSet(col("text")).as("th"))
 
   /** (band, id) relation after banding + the per-band skew cap. Shuffles
     * only (band, id) pairs — token-hash arrays never ride the band explode. */
-  private def bandedIds(docs: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int, bands: Int, maxBucket: Int): DataFrame =
-    bandedIdsFrom(tokenized(docs, idCol, textCol), numHashes, bands, maxBucket)
-
   private def bandedIdsFrom(toks: DataFrame, numHashes: Int, bands: Int,
                             maxBucket: Int,
                             carryLen: Boolean = false): DataFrame = {
-    // bands > numHashes would make rowsPerBand 0 (every band one global
-    // bucket: an N^2 join); a non-divisor silently ignores trailing
-    // signature entries and changes the documented recall math
-    require(bands >= 1 && bands <= numHashes && numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes)")
-    val rowsPerBand = numHashes / bands
     // emit ONLY (band, id): every consumer selects exactly that pair, and
     // carrying the full band-key array through the explode (and the
     // capped path's row_number exchange) duplicated O(bands) longs per
@@ -134,24 +165,10 @@ object Dedup {
     // (carryLen adds ONE int — the distinct-token count — so the
     // candidate join can run the exact length-ratio prefilter; see
     // minhashNearDups.)
-    val outCols =
-      if (carryLen) Seq("band", "id", "len") else Seq("band", "id")
-    val banded = toks
-      .withColumn("sig", minhashSignatureFromHashes(col("th"), numHashes))
-      .select(Seq(col("id")) ++
-        (if (carryLen) Seq(size(col("th")).as("len")) else Nil) :+
-        explode(lshBandKeys(col("sig"), bands, rowsPerBand)).as("band"): _*)
-      .select(outCols.head, outCols.tail: _*)
-    if (maxBucket == Int.MaxValue) banded // cap off: keep the band self-join broadcastable
-    else {
-      // skew guard — audit via minhashBucketStats. The row_number window
-      // costs an exchange+sort on band AND flips the self-join to
-      // sort-merge, so it is only planned when a cap is actually set.
-      val bucketW = Window.partitionBy("band").orderBy("id")
-      banded.withColumn("bn", row_number().over(bucketW))
-        .filter(col("bn") <= maxBucket)
-        .select(outCols.head, outCols.tail: _*)
-    }
+    val len = if (carryLen) Seq(size(col("th")).as("len")) else Nil
+    capBuckets(selectBandKeys(toks, col("th"), numHashes, bands)(keys =>
+        Seq(explode(keys).as("band"), col("id")) ++ len),
+      "band", maxBucket)
   }
 
   /** Per-band bucket audit for the skew cap: rows dropped by `maxBucket`
@@ -161,8 +178,7 @@ object Dedup {
   def minhashBucketStats(docs: DataFrame, idCol: String, textCol: String,
                          numHashes: Int = 128, bands: Int = 32,
                          maxBucket: Int = 4096): DataFrame =
-    bandedIds(docs, idCol, textCol, numHashes, bands, Int.MaxValue)
-      .select("band", "id")
+    bandedIdsFrom(tokenized(docs, idCol, textCol), numHashes, bands, Int.MaxValue)
       .groupBy("band").agg(count(lit(1)).as("bucket_size"))
       .withColumn("dropped", greatest(col("bucket_size") - maxBucket, lit(0)))
       .filter(col("dropped") > 0)
@@ -237,7 +253,7 @@ object Dedup {
     // The balanced() wrappers are exchange-reuse points: keyed feeds four
     // references and reps two -- each computes once, not once per branch.
     // (setkey = hash of the sorted token-hash array -- same token SET <=>
-    // same key, modulo the 64-bit collision odds documented on tokenized)
+    // same key, modulo the 64-bit collision odds documented on tokenSet)
     val keyed = graft.GraftSession.balanced(
       toks.withColumn("setkey", xxhash64(col("th"))))
     val members = keyed.select("setkey", "id")
@@ -419,12 +435,7 @@ object Dedup {
       spark.read.parquet(committed.map(b => s"$indexDir/bands/$b"): _*)
         .withColumn("is_new", lit(false)).unionByName(newMarked)
     else newMarked
-    val bAll = (if (maxBucket == Int.MaxValue) bAll0 else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("band").orderBy("id")
-      bAll0.withColumn("bn", row_number().over(w))
-        .filter(col("bn") <= maxBucket).drop("bn")
-    }).localCheckpoint()
+    val bAll = capBuckets(bAll0, "band", maxBucket).localCheckpoint()
     // candidates: (capped new side) x (capped accumulated) — work is
     // new x total band density; pairs normalized (least, greatest) so
     // orientation matches the batch path, distinct dedups the double
@@ -821,18 +832,6 @@ object Dedup {
       .filter(col("jac_raw") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jac_raw"), 6).as("jaccard"))
 
-  /** 64-bit SimHash over word tokens: sign-sum of per-token hash bits as
-    * ONE custom aggregate (simhash_agg via GraftExtensions) — one shuffle
-    * on doc id, map-side combinable vote vectors. */
-  def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    graft.GraftSession.balanced(
-        docs.select(col(idCol).as("id"), col(textCol).as("text")))
-      .select(col("id"),
-        explode(split(TextAnalysis.normalize(col("text")), " ")).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-      .groupBy("id")
-      .agg(call_function("simhash_agg", col("h"), lit(64)).as("simhash"))
-
   /** Engine-portable 32-bit token hash: the first 8 hex chars of md5,
     * parsed positionally — chosen because any SQL oracle (DuckDB,
     * Trino, ...) can reproduce it exactly, unlike xxhash64. Resolves to
@@ -895,46 +894,6 @@ object Dedup {
     agg.select(col("id"), sig.as("sig"))
   }
 
-  /** Near-dup pairs on the portable 32-bit simhash, blocked on 4 x 8-bit
-    * sub-keys (pigeonhole: hamming<=3 pairs share >=1 intact block),
-    * verified with the true hamming distance.
-    *
-    * SMALL-CORPUS variant: 8-bit blocks give at most 4*256 = 1,024
-    * buckets, so the block self-join does ~4N^2/256 comparisons —
-    * quadratic with a small constant. Use [[simhashNearDups64]] (16-bit
-    * blocks over a 64-bit signature, 262,144 buckets, skew cap) for
-    * anything beyond ~10^5 docs. */
-  def simhashPortableNearDups(docs: DataFrame, idCol: String, textCol: String,
-                              maxHamming: Int = 3,
-                              maxBucket: Int = Int.MaxValue): DataFrame = {
-    // pigeonhole bound of 4-block blocking: a pair differing in all four
-    // blocks (hamming >= 4) may never share a bucket — silently lost
-    // recall, so refuse like simhashNearDups64 does
-    require(maxHamming <= 3,
-      s"4-block simhash blocking guarantees recall only for maxHamming <= 3, got $maxHamming")
-    // balanced(): AQE coalesces the tiny-bytes signature agg to ONE
-    // partition, serializing the (much larger) block join + hamming
-    // verification behind it; an explicit round-robin keeps 32-way.
-    val sigs = graft.GraftSession.balanced(simhashPortable32(docs, idCol, textCol))
-    // per-block skew cap — see simhashNearDups
-    val blocks0 = sigs.withColumn("blk", explode(array(
-      (0 until 4).map(i => concat_ws("_", lit(i),
-        shiftright(col("sig"), i * 8).bitwiseAND(0xFFL))): _*)))
-    val blocks =
-      if (maxBucket == Int.MaxValue) blocks0
-      else blocks0.withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("blk").orderBy("id")))
-        .filter(col("__rn") <= maxBucket).drop("__rn")
-    val pairs = blocks.as("a").join(blocks.as("b"),
-        col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(first(col("a.sig")).as("sh_a"), first(col("b.sig")).as("sh_b"))
-    pairs.withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
-
   /** 64-bit portable SimHash as two 32-bit halves (sig_lo, sig_hi), both
     * parsed from ONE md5 digest per token inside the one-pass
     * simhash_text64 kernel. Two halves rather than a packed signed long
@@ -986,7 +945,7 @@ object Dedup {
     * blocks: a pair within hamming <= 3 leaves >= 1 block untouched, so
     * recall at maxHamming <= 3 is exact. 16-bit blocks give 4 * 65,536 =
     * 262,144 buckets — bucket population tracks signature entropy, where
-    * the 32-bit form's 8-bit blocks cap at 1,024 buckets and force
+    * 8-bit blocks over a 32-bit signature cap at 1,024 buckets and force
     * ~N^2/256 comparisons at scale. */
   private def simhashBlocks64(sigs: DataFrame, maxBucket: Int): DataFrame = {
     val blocks = sigs.withColumn("blk", explode(array(
@@ -994,15 +953,7 @@ object Dedup {
         val half = if (i < 2) col("sig_lo") else col("sig_hi")
         shiftright(half, (i % 2) * 16).bitwiseAND(lit(0xFFFFL)) + lit(i.toLong << 16)
       }: _*)))
-    if (maxBucket == Int.MaxValue) blocks // cap off: block self-join stays broadcastable
-    else {
-      // skew guard, mirroring the minhash banding cap (Dedup.scala
-      // bandedIdsFrom): rows past the cap are invisible to the join —
-      // audit with simhashBucketStats. Only planned when a cap is set.
-      val w = Window.partitionBy("blk").orderBy("id")
-      blocks.withColumn("bn", row_number().over(w))
-        .filter(col("bn") <= maxBucket).drop("bn")
-    }
+    capBuckets(blocks, "blk", maxBucket)
   }
 
   /** SCALE variant of simhash near-dup: 64-bit two-half signature,
@@ -1040,40 +991,6 @@ object Dedup {
       .groupBy("blk").agg(count(lit(1)).as("bucket_size"))
       .withColumn("dropped", greatest(col("bucket_size") - maxBucket, lit(0)))
       .filter(col("dropped") > 0)
-
-  /** SimHash near-dup pairs: block on the 4 x 16-bit sub-keys (a pair
-    * within hamming distance <=3 shares at least one sub-key), then verify
-    * true hamming distance <= maxHamming. */
-  def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 3,
-                      maxBucket: Int = Int.MaxValue): DataFrame = {
-    // pigeonhole bound of 4-block blocking: a pair differing in all four
-    // blocks (hamming >= 4) may never share a bucket — silently lost
-    // recall, so refuse like simhashNearDups64 does
-    require(maxHamming <= 3,
-      s"4-block simhash blocking guarantees recall only for maxHamming <= 3, got $maxHamming")
-    val sigs = graft.GraftSession.balanced(simhash(docs, idCol, textCol))
-    // per-block skew cap (the simhashNearDups64 invariant): a mass
-    // duplicate — including blank docs, whose identical signature shares
-    // all 4 block keys — must not make the block self-join quadratic
-    val blocks0 = sigs.withColumn("blk", explode(array(
-      (0 until 4).map(i => concat_ws("_", lit(i),
-        shiftright(col("simhash"), i * 16).bitwiseAND(0xFFFFL))): _*)))
-    val blocks =
-      if (maxBucket == Int.MaxValue) blocks0
-      else blocks0.withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("blk").orderBy("id")))
-        .filter(col("__rn") <= maxBucket).drop("__rn")
-    val pairs = blocks.as("a").join(blocks.as("b"),
-        col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(first(col("a.simhash")).as("sh_a"),
-        first(col("b.simhash")).as("sh_b"))
-    pairs.withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
 
   /** Exact n-gram (word) Jaccard for all pairs sharing >=1 shingle, via an
     * inverted-index join — the scalable form of "all-pairs similarity":

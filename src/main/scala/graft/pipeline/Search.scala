@@ -186,7 +186,7 @@ object Search {
     * than strings (unigram = xxhash64(tok), bigram = xxhash64(tok, nxt)):
     * counts, ratios and therefore weights are identical to the
     * string-keyed form unless two realized grams collide in a 2^64
-    * keyspace (~1e-8 at 10^9 distinct grams — the [[Dedup.tokenized]]
+    * keyspace (~1e-8 at 10^9 distinct grams — the [[Dedup.tokenSet]]
     * posture, and the 6dp gate would catch a hit), while the two
     * vocabulary shuffles and the ratio join move 8-byte longs instead of
     * gram strings and never sort. Plan: two gram aggregations + a

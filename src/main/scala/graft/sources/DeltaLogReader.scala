@@ -563,8 +563,7 @@ object DeltaLogReader {
     * `spark.newSession()` if that semantic is unwanted session-wide.
     *
     * Partitioned tables have two plan shapes, chosen by DISTINCT
-    * partition-tuple count (the decontaminateStream size-switch
-    * pattern):
+    * partition-tuple count:
     *  - at most `maxLiteralPartitions` tuples: one scan per tuple with
     *    the partition values as LITERAL columns — a filter on a
     *    partition column constant-folds non-matching scans out of the

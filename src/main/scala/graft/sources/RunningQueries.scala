@@ -163,19 +163,11 @@ object RunningQueries {
           (null: Gate, () => 0)
         else {
           val threshold = confLong(spark, "graft.queue.threshold", 10485760L)
-          val est = estimate()
-          val big = est >= threshold
+          val big = estimate() >= threshold
           info.tier = if (big) "large" else "small"
           val lim: () => Int =
             if (big) () => confLong(spark, "graft.queue.large", 2L).toInt
             else () => confLong(spark, "graft.queue.small", 10L).toInt
-          // operator-facing admission trace (graft.queue.debug = true):
-          // which tier a query landed in and why — the estimate, the
-          // threshold, the live loads
-          if (confBool(spark, "graft.queue.debug"))
-            System.err.println(s"[queue] id=$id user=$user est=$est " +
-              s"threshold=$threshold tier=${info.tier} limit=${lim()} " +
-              s"load=${(smallGate.load, largeGate.load)} sql=${sql.take(60)}")
           (if (big) largeGate else smallGate, lim)
         }
       if (gate != null)

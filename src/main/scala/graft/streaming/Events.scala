@@ -119,90 +119,36 @@ object Events {
   /** Streaming decontamination: drop stream rows that near-duplicate a
     * STATIC reference corpus (eval/benchmark content) at ingest,
     * STATELESSLY — no watermark, no join state, so it runs at ingest rate
-    * forever. A row survives iff NO reference doc shares an LSH band and
-    * verifies at `threshold` (exact hashed-token Jaccard, computed only
-    * on band collisions thanks to the arrays_overlap short-circuit).
-    *
-    * Two stateless physical shapes, chosen by reference SIZE:
-    *  - at most `maxRefLiteral` docs: the banded reference embeds in the
-    *    plan as a literal — zero join machinery, pure codegen filter.
-    *    Plans (and their codegen + serialized form) grow with literal
-    *    size, so this path is bounded, not the default for everything.
-    *  - larger: the same predicate runs as a broadcast stream-static
-    *    LEFT ANTI join — the reference rides the broadcast channel
-    *    (GB-scale) instead of the query plan (KB-scale), still no
-    *    streaming state. Per-row work is identical.
-    * The batch twin for big-vs-big corpora remains Dedup.decontaminate
-    * (bipartite banded join), which beats both shapes once the reference
-    * itself needs to shuffle. */
+    * forever. One shape at every reference size: a broadcast stream-static
+    * LEFT ANTI join. A row survives iff no reference doc shares an LSH
+    * band with it and verifies at `threshold` exact hashed-token Jaccard
+    * (the jaccard kernel runs only on band collisions). Token sets and
+    * band keys are the batch family's own ([[graft.pipeline.Dedup]]'s
+    * tokenSet and selectBandKeys), and blank/NULL reference docs drop out
+    * the way Dedup.crossNearDups drops them, so the kept rows are the
+    * corpus minus what Dedup.decontaminate drops, as long as no band
+    * bucket outgrows that operator's maxBucket cap (spec-asserted). The
+    * reference rides the broadcast channel, never the query plan;
+    * Dedup.decontaminate (bipartite banded join) remains the batch twin
+    * for big-vs-big corpora, where the reference itself needs to
+    * shuffle. */
   def decontaminateStream(stream: DataFrame, reference: DataFrame,
                           textCol: String,
                           numHashes: Int = 128, bands: Int = 32,
-                          threshold: Double = 0.8,
-                          maxRefLiteral: Int = 4096): DataFrame = {
-    import graft.pipeline.{Dedup, TextAnalysis}
-    // the batch family's banding invariant (Dedup.bandedIdsFrom): a
-    // non-divisor silently ignored trailing signature entries, and
-    // bands > numHashes made rowsPerBand 0 — every doc then shared ONE
-    // empty band key and the filter degraded to a full N x M scan
-    require(bands >= 1 && bands <= numHashes && numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes)")
-    val rowsPerBand = numHashes / bands
-    // array_distinct is LOAD-BEARING: the two-pointer Jaccard kernel
-    // requires sorted DISTINCT arrays (Dedup.tokenized applies it) — a
-    // stream doc with repeated tokens otherwise scored BELOW its true
-    // set-Jaccard and contamination leaked past the live filter while
-    // the batch backfill dropped it
-    // length>0 filter matches Dedup.tokenized (blank docs get {} not
-    // {hash("")}); coalesce makes NULL text behave like "" in BOTH
-    // physical branches — the literal path's filter(!exists) dropped
-    // null-text rows while the broadcast anti-join kept them, so output
-    // depended on reference SIZE
-    def thOf(c: Column): Column =
-      coalesce(array_sort(Dedup.tokenHashes(
-        filter(array_distinct(split(TextAnalysis.normalize(c), " ")),
-          t => length(t) > 0))),
-        array().cast("array<bigint>"))
-    def bandsOf(th: Column): Column =
-      Dedup.lshBandKeys(Dedup.minhashSignatureFromHashes(th, numHashes),
-        bands, rowsPerBand)
-
-    // ref_th stages as a column FIRST (HOF lambdas get no subexpression
-    // elimination — computing thOf twice doubled the reference
-    // tokenize+hash cost this function's own stream side avoids)
-    val refBanded = reference
-      .select(thOf(col(textCol)).as("ref_th"))
-      .select(bandsOf(col("ref_th")).as("ref_bands"), col("ref_th"))
-
-    // ONE limit-bounded collect decides the branch AND supplies the
-    // literal rows — a separate count() ran the tokenize + 128-hash
-    // reference pipeline twice, and counted ALL of a large reference
-    // just to learn it was over the bound
-    val refProbe = refBanded.limit(maxRefLiteral + 1).collect()
-    if (refProbe.length <= maxRefLiteral) {
-      val refRows: Seq[(Seq[Long], Seq[Long])] = refProbe
-        .map(r => (r.getSeq[Long](0), r.getSeq[Long](1))).toSeq
-      val refLit = typedlit(refRows)
-      // __th/__bands materialize as COLUMNS first: HOF lambdas are
-      // interpreted with no subexpression elimination, so computing them
-      // inside exists() re-ran the tokenize + 128-hash signature once
-      // per reference entry per row
-      val contaminated = exists(refLit, r =>
-        arrays_overlap(col("__bands"), r.getField("_1")) &&
-          call_function("jaccard_sim", col("__th"), r.getField("_2")) >= threshold)
-      stream.withColumn("__th", thOf(col(textCol)))
-        .withColumn("__bands", bandsOf(col("__th")))
-        .filter(!contaminated)
-        .drop("__th", "__bands")
-    } else {
-      stream.withColumn("__th", thOf(col(textCol)))
-        .withColumn("__bands", bandsOf(col("__th")))
-        .join(broadcast(refBanded),
-          arrays_overlap(col("__bands"), col("ref_bands")) &&
-            call_function("jaccard_sim", col("__th"), col("ref_th")) >= threshold,
-          "left_anti")
-        .drop("__th", "__bands")
-    }
+                          threshold: Double = 0.8): DataFrame = {
+    import graft.pipeline.Dedup
+    val ref = Dedup.selectBandKeys(
+        reference.select(Dedup.tokenSet(col(textCol)).as("ref_th"))
+          .filter(size(col("ref_th")) > 0),
+        col("ref_th"), numHashes, bands)(keys =>
+      Seq(col("ref_th"), keys.as("ref_bands")))
+    Dedup.selectBandKeys(stream.withColumn("__th", Dedup.tokenSet(col(textCol))),
+        col("__th"), numHashes, bands)(keys => Seq(col("*"), keys.as("__bands")))
+      .join(broadcast(ref),
+        arrays_overlap(col("__bands"), col("ref_bands")) &&
+          call_function("jaccard_sim", col("__th"), col("ref_th")) >= threshold,
+        "left_anti")
+      .drop("__th", "__bands")
   }
 
   /** Streaming ingest into a Delta table: each micro-batch commits
@@ -417,9 +363,7 @@ object Events {
                       voteWindowSec: Int = 30,
                       maxPerBand: Int = 4096): DataFrame = {
     import spark.implicits._
-    import graft.pipeline.{Dedup, TextAnalysis}
-    require(bands >= 1 && bands <= numHashes && numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes)")
+    import graft.pipeline.Dedup
     require(!spark.conf.get(
       "spark.sql.streaming.statefulOperator.checkCorrectness.enabled",
       "true").toBoolean,
@@ -428,22 +372,15 @@ object Events {
         "below the watermark), which Spark's static checker cannot prove. " +
         "Set spark.sql.streaming.statefulOperator.checkCorrectness.enabled" +
         "=false for this session to run it.")
-    val rowsPerBand = numHashes / bands
-    val withBands = tsAsTimestamp(docs)
+    val docSets = tsAsTimestamp(docs)
       .withWatermark("ts", s"$watermarkDelaySec seconds")
       .select(col("doc_id").cast("long"), col("ts"),
-        // same token pipeline as Dedup.tokenized (length>0: no phantom
-        // {hash("")} for blank docs) + coalesce so a NULL-text doc still
-        // emits band rows and is ADMITTED (batch keeps it; without this
-        // it produced zero votes and vanished from the output)
-        coalesce(array_sort(Dedup.tokenHashes(
-          filter(array_distinct(split(TextAnalysis.normalize(col("text")), " ")),
-            t => length(t) > 0))),
-          array().cast("array<bigint>")).as("th"))
-      .withColumn("band", explode(Dedup.lshBandKeys(
-        Dedup.minhashSignatureFromHashes(col("th"), numHashes),
-        bands, rowsPerBand)))
-      .select(col("band"), col("doc_id"), col("ts"), col("th"))
+        // Dedup's token set; NULL text gets the blank doc's empty set, so
+        // it still emits band rows and is ADMITTED (batch keeps it;
+        // without this it produced zero votes and vanished from the output)
+        coalesce(Dedup.tokenSet(col("text")), array().cast("array<bigint>")).as("th"))
+    val withBands = Dedup.selectBandKeys(docSets, col("th"), numHashes, bands)(keys =>
+        Seq(explode(keys).as("band"), col("doc_id"), col("ts"), col("th")))
       .as[(Long, Long, java.sql.Timestamp, Seq[Long])]
     val votes = withBands.groupByKey(_._1)
       .flatMapGroupsWithState[BandDocs, (Long, java.sql.Timestamp, Boolean)](

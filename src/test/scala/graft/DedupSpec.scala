@@ -213,6 +213,35 @@ class DedupSpec extends AnyFunSuite {
     assert(diff == 0)
   }
 
+  test("lshBandKeys golden values: persisted band keys never change") {
+    import spark.implicits._
+    // minhashIndexAppend stores band keys on disk: a changed key would
+    // silently stop old index batches from colliding with new ones
+    val sig = Seq.tabulate(128)(i => (i.toLong * 2654435761L + 97L) % 4294967311L)
+    val sigs = Seq(Tuple1(sig)).toDF("sig").repartition(1)
+    def keys(bands: Int, rows: Int): Seq[Long] =
+      sigs.select(Dedup.lshBandKeys(col("sig"), bands, rows)).head().getSeq[Long](0)
+    assert(keys(32, 4) == Seq(
+      263035662763922152L, 2395798814657840836L, -465373687105264999L,
+      868106138086931296L, -8065882954360487267L, 3554655324549497882L,
+      -620864656038080684L, -1984987908073170564L, -1509557042210681019L,
+      -8631989852928928419L, 3467369422295964739L, -5932395127687816854L,
+      -4223345106263484466L, -2792043029763381040L, -2046128609464809945L,
+      -1549039587545144901L, -8019904818155044929L, -807800160318989698L,
+      1458331005344854434L, -8324146600980093156L, 7895680967980331114L,
+      -2878659967517063L, 2225677351907268903L, -8642364497351377212L,
+      3946443928636942157L, 3245651073189159611L, -4146052578972374277L,
+      -483588098650953091L, -58944962386683851L, 4630056219476931835L,
+      7398730349622016559L, -6709127116442637086L))
+    assert(keys(16, 8) == Seq(
+      3435670478666112800L, 4282875154736048486L, 5143234687989521605L,
+      -445042276567309620L, -111006251354641353L, 122302429735422261L,
+      -5524597690629689876L, 3693118904524566473L, 7924013229520178058L,
+      -8164265378269953695L, 6042957467938352324L, 8270592858633538973L,
+      1319523313409301158L, -8163391726503261007L, 8693381549263212276L,
+      4492166934718747849L))
+  }
+
   test("native md5_hash32 equals the built-ins-only formulation") {
     val toks = docs.select(explode(split(col("text"), " ")).as("t"))
     val diff = toks.select(
@@ -241,14 +270,14 @@ class DedupSpec extends AnyFunSuite {
     val base = (1 to 200).map(i => s"w$i").mkString(" ")
     val longDocs = Seq((1L, base), (2L, base.replace("w100 ", "x100 ")),
       (3L, (1 to 200).map(i => s"z$i").mkString(" "))).toDF("doc_id", "text")
-    val pairs = Dedup.simhashPortableNearDups(longDocs, "doc_id", "text",
+    val pairs = Dedup.simhashNearDups64(longDocs, "doc_id", "text",
         maxHamming = 3)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)), pairs)
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
     // the guard itself
     val e = intercept[IllegalArgumentException](
-      Dedup.simhashPortableNearDups(longDocs, "doc_id", "text", maxHamming = 8))
+      Dedup.simhashNearDups64(longDocs, "doc_id", "text", maxHamming = 8))
     assert(e.getMessage.contains("maxHamming"), e.getMessage)
   }
 

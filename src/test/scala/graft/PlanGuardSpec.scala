@@ -1,28 +1,37 @@
 package graft
 
+import java.sql.Timestamp
+
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction, LambdaFunction, Lower, NamedLambdaVariable, RegExpReplace, StringSplit}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, HigherOrderFunction, LambdaFunction, NamedLambdaVariable}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{Dedup, Scrub, Similarity}
+import graft.streaming.Events
 
 /** Higher-order-function lambdas are interpreted and get no subexpression
   * elimination, so an expression inside a lambda body runs once per array
   * element. These specs walk every LambdaFunction body of the optimized
   * plans a pipeline operator runs (the plan it returns, every query it
-  * executes on the way, and the cached plans those read) and fail when a
-  * body re-tokenizes text (regexp_replace / split / lower) or holds a
+  * executes on the way, the cached plans those read, and a streaming
+  * query's last micro-batch) and fail when a body holds a subexpression
+  * that reads no lambda variable and is neither an attribute nor a
+  * constant (a tokenizer, a kernel call such as minhash_sig), or a
   * higher-order function over a lambda-invariant array — both are
-  * per-document work repeated per element. */
+  * per-document work repeated per element. They also fail when a
+  * minhash_sig call reads an inlined token set rather than a projected
+  * one: a predicate pushed below the projections re-runs the tokenizer
+  * and the kernel in each copy. */
 class PlanGuardSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -42,18 +51,35 @@ class PlanGuardSpec extends AnyFunSuite {
     plan.expressions ++ nested.flatMap(expressionsOf)
   }
 
-  /** What is wrong with each lambda body of `plan` (empty when nothing). */
-  private def faults(plan: QueryPlan[_]): Seq[String] =
-    expressionsOf(plan).flatMap(_.collect { case l: LambdaFunction => l.function })
+  /** The largest subexpressions of a lambda body that read no lambda
+    * variable and are neither an attribute nor a constant. */
+  private def invariant(e: Expression): Seq[Expression] = e match {
+    case _: NamedLambdaVariable | _: Attribute => Nil
+    case _ if e.foldable => Nil
+    case _ if e.find(_.isInstanceOf[NamedLambdaVariable]).isEmpty => Seq(e)
+    case _ => e.children.flatMap(invariant)
+  }
+
+  /** What is wrong with each lambda body of `plan`, and each minhash_sig
+    * call that re-derives its token set instead of reading a projected
+    * one (empty when nothing). */
+  private def faults(plan: QueryPlan[_]): Seq[String] = {
+    val exprs = expressionsOf(plan)
+    val lambdaFaults = exprs.flatMap(_.collect { case l: LambdaFunction => l.function })
       .flatMap { body =>
+        invariant(body).map(e => s"lambda-invariant ${e.prettyName} inside a lambda: $body") ++
         body.collect {
-          case e @ (_: RegExpReplace | _: StringSplit | _: Lower) =>
-            s"${e.prettyName} inside a lambda: $body"
           case h: HigherOrderFunction if h.arguments.exists(a =>
               a.find(_.isInstanceOf[NamedLambdaVariable]).isEmpty) =>
             s"lambda-invariant ${h.prettyName} inside a lambda: $body"
         }
-      }.distinct
+      }
+    val inlinedSig = exprs.flatMap(_.collect {
+      case e if e.prettyName == "minhash_sig" && !e.children.head.isInstanceOf[Attribute] =>
+        s"minhash_sig over an inlined token set: ${e.toString.take(300)}"
+    })
+    (lambdaFaults ++ inlinedSig).distinct
+  }
 
   /** Runs `op`, then checks the optimized plan of every query it executed
     * plus the optimized plan of each frame it returns. */
@@ -74,6 +100,25 @@ class PlanGuardSpec extends AnyFunSuite {
     val plans = outs.map(_.queryExecution) ++ seen.synchronized(seen.toList)
     val found = plans.flatMap(qe => faults(qe.optimizedPlan)).distinct
     assert(found.isEmpty, s"$what:\n" + found.mkString("\n"))
+  }
+
+  /** Runs the streaming frame `build` makes from a (doc_id, ts, text)
+    * source over one micro-batch of [[docs]]' rows, then checks the
+    * optimized plan of that micro-batch. */
+  private def guardStream(what: String)(build: DataFrame => DataFrame): Unit = {
+    implicit val ctx = spark.sqlContext
+    val input = MemoryStream[(Long, Timestamp, String)]
+    val q = build(input.toDF().toDF("doc_id", "ts", "text"))
+      .writeStream.format("noop").outputMode("append").start()
+    try {
+      input.addData(docs.collect().toSeq.map(r =>
+        (r.getLong(0), new Timestamp(100000L), r.getString(1))): _*)
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.optimizedPlan
+      val found = faults(plan)
+      assert(found.isEmpty, s"$what:\n" + found.mkString("\n"))
+    } finally q.stop()
   }
 
   // repartitioned: a projection straight over a local relation is
@@ -123,6 +168,30 @@ class PlanGuardSpec extends AnyFunSuite {
     }
   }
 
+  test("decontaminateStream (3 reference docs): no lambda tokenizes or minhashes") {
+    val refs = Seq((100L, "gamma delta epsilon zeta eta"),
+      (101L, "the cat sat on the mat"), (102L, "unrelated words here"))
+      .toDF("doc_id", "text").repartition(2)
+    guardStream("decontaminateStream, 3 reference docs")(
+      Events.decontaminateStream(_, refs, "text", threshold = 0.3))
+  }
+
+  test("decontaminateStream (4,097 reference docs): no lambda tokenizes or minhashes") {
+    val refs = spark.range(4097).select(col("id").as("doc_id"),
+      concat_ws(" ", lit("ref"), col("id").cast("string"), lit("words")).as("text"))
+    guardStream("decontaminateStream, 4,097 reference docs")(
+      Events.decontaminateStream(_, refs, "text", threshold = 0.3))
+  }
+
+  test("nearDedupStream: no lambda tokenizes or minhashes") {
+    val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
+    spark.conf.set(key, "false")
+    try guardStream("nearDedupStream")(
+      Events.nearDedupStream(spark, _, threshold = 0.3, watermarkDelaySec = 10,
+        voteWindowSec = 5))
+    finally spark.conf.set(key, "true")
+  }
+
   test("kmeans: no lambda recomputes a vector's norm per element") {
     val vecs = (1 to 12).map(i =>
       (i.toLong, Seq.tabulate(4)(d => if (d == i % 4) 1.0 + i else 0.1 * d)))
@@ -142,5 +211,26 @@ class PlanGuardSpec extends AnyFunSuite {
     val n = sqrt(aggregate(col("v"), lit(0.0), (a, x) => a + x * x))
     assert(faults(v.select(transform(col("v"), x => x / n))
       .queryExecution.optimizedPlan).nonEmpty)
+  }
+
+  test("the guard flags a row-invariant kernel call inside a lambda") {
+    // minhash_sig once per band: the banding shape the guard must catch
+    val th = docs.select(Dedup.tokenSet(col("text")).as("th")).repartition(2)
+    val perBand = th.select(transform(sequence(lit(0), lit(31)), b =>
+      xxhash64(b, slice(Dedup.minhashSignatureFromHashes(col("th"), 128),
+        b * 4 + 1, lit(4)))).as("bands"))
+    assert(faults(perBand.queryExecution.optimizedPlan)
+      .exists(_.contains("minhash_sig")))
+  }
+
+  test("the guard flags a token set inlined into a pushed-down filter") {
+    // exploding a band-key COLUMN makes Spark infer size(bands) > 0 and
+    // push it below the projections, inlining tokenizer and kernel there
+    val banded = docs.select(Dedup.tokenSet(col("text")).as("th"))
+      .withColumn("sig", Dedup.minhashSignatureFromHashes(col("th"), 128))
+      .withColumn("bands", Dedup.lshBandKeys(col("sig"), 32, 4))
+      .select(explode(col("bands")).as("band"))
+    assert(faults(banded.queryExecution.optimizedPlan)
+      .exists(_.contains("inlined token set")))
   }
 }

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+import graft.pipeline.Dedup
 import graft.streaming.Events
 
 /** Structured Streaming paths (SURVEY rows 84/85) driven through
@@ -158,43 +159,49 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("decontaminateStream picks literal under the bound, anti-join past it; same rows") {
+  test("decontaminateStream keeps exactly what Dedup.decontaminate keeps " +
+      "(3 and 4,097 reference docs, blank and NULL docs, thresholds 0.8 and 0.0)") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val reference = Seq(
+    val blanks = Seq("", " \t  ", null)
+    val corpus: Seq[(Long, String)] = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog"),     // == ref 1
+      (11L, "an entirely original training document"),
+      (12L, "benchmark question about spark engines and scale"), // ~ ref 2
+      (13L, "the quick brown fox leaps over a sleepy dog today"), // partial
+      (14L, "a third evaluation prompt about things")) ++         // ~ ref 3
+      blanks.zipWithIndex.map { case (t, i) => (20L + i, t) }
+    val small = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "benchmark question about spark engines and scaling"),
       (3L, "a third evaluation prompt about unrelated things"))
-      .toDF("doc_id", "text")
-    def run(maxRefLiteral: Int): (Set[Long], String) = {
+    // 3 and 4,097 content docs: a tiny reference and one past 4,096
+    // rows — what is kept must not depend on the reference size
+    val large = small ++ (4L to 4097L).map(i =>
+      (i, (0 until 8).map(j => s"r${i}w$j").mkString(" ")))
+    for (refDocs <- Seq(small, large); threshold <- Seq(0.8, 0.0)) {
+      val reference = (refDocs ++ blanks.zipWithIndex.map { case (t, i) =>
+          (90000L + i, t) }).toDF("doc_id", "text").repartition(2)
+      val batchKept = Dedup.decontaminate(corpus.toDF("doc_id", "text"),
+          reference, "doc_id", "text", threshold = threshold)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
       val input = MemoryStream[(Long, String)]
-      val clean = Events.decontaminateStream(
-        input.toDF().toDF("doc_id", "text"), reference, "text",
-        threshold = 0.7, maxRefLiteral = maxRefLiteral)
-      // plan-shape check: literal path has no join; fallback is LeftAnti
-      val planStr = clean.queryExecution.analyzed.toString
-      val name = s"decon_bound_$maxRefLiteral"
-      val q = clean.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        input.addData(
-          (10L, "the quick brown fox jumps over the lazy dog"),
-          (11L, "an entirely original training document"),
-          (12L, "benchmark question about spark engines and scale"))
+      val name = s"decon_equiv_${refDocs.size}_${(threshold * 10).toInt}"
+      val q = Events.decontaminateStream(input.toDF().toDF("doc_id", "text"),
+          reference, "text", threshold = threshold)
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      val streamKept = try {
+        input.addData(corpus: _*)
         q.processAllAvailable()
-        // either way: stateless (no streaming state operators)
-        assert(!q.lastProgress.toString.contains("stateOperators\" : [ {"))
-        (spark.table(name).select("doc_id").collect().map(_.getLong(0)).toSet,
-          planStr)
+        spark.table(name).select("doc_id").collect().map(_.getLong(0)).toSet
       } finally q.stop()
+      val what = s"${refDocs.size} reference docs, threshold $threshold"
+      assert(streamKept == batchKept, what)
+      // blank and NULL docs carry no content: never contaminated, even at
+      // threshold 0.0 against blank reference docs
+      assert(Set(20L, 21L, 22L).subsetOf(streamKept), what)
+      if (threshold == 0.8) assert(!streamKept(10L) && streamKept(11L), what)
     }
-    val (literalIds, literalPlan) = run(maxRefLiteral = 10) // 3 <= 10: literal
-    val (joinIds, joinPlan) = run(maxRefLiteral = 2)        // 3 > 2: anti-join
-    assert(literalIds == Set(11L) && joinIds == Set(11L))
-    assert(!literalPlan.contains("Join LeftAnti"),
-      "under the bound the reference must embed as a plan literal, no join")
-    assert(joinPlan.contains("Join LeftAnti"),
-      "past the bound the reference must ride a broadcast anti-join")
   }
 
   test("sessionizeStream: a straggler >gap before session start becomes its own session") {

@@ -1,11 +1,15 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: run graft.Verify at a
 given SF, then run each oracle SQL in DuckDB over the same parquet tables
-and compare (columns sorted by name, rows sorted, values exact)."""
+and compare (columns sorted by name, rows sorted, values exact).
+
+usage: local_check.py [sfDir] [outDir] [q1,q2,...]
+The optional third argument runs and compares only the named queries."""
 import duckdb, glob, json, math, os, subprocess, sys
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+ONLY = sys.argv[3].split(",") if len(sys.argv) > 3 else None
 SKIP_RUN = os.environ.get("SKIP_RUN") == "1"
 # the checkout this script belongs to (tools/..), so a copy of the repo
 # verifies its own sources rather than whichever tree a fixed path names
@@ -13,7 +17,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 if not SKIP_RUN:
     r = subprocess.run(
-        ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT}'],
+        ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT}' +
+         (f' {",".join(ONLY)}' if ONLY else "")],
         cwd=ROOT, capture_output=True, text=True, timeout=3600)
     sys.stdout.write("\n".join(l for l in r.stdout.splitlines()
                                if "[verify]" in l or "error" in l.lower()) + "\n")
@@ -26,6 +31,11 @@ for p in glob.glob(f"{SF_DIR}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
 
 oracles = json.load(open(f"{OUT}/oracle_sql.json"))
+if ONLY:
+    unknown = sorted(set(ONLY) - set(oracles))
+    if unknown:
+        print(f"no oracle for: {', '.join(unknown)}"); sys.exit(1)
+    oracles = {n: oracles[n] for n in ONLY}
 
 def canon(v):
     if v is None: return None
