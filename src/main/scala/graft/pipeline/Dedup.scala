@@ -148,10 +148,21 @@ object Dedup {
       filter(array_distinct(split(TextAnalysis.normalize(text), " ")),
         t => length(t) > 0)))
 
-  /** (id, th): each doc's [[tokenSet]]. */
+  /** (id, th): each doc's [[tokenSet]], for the docs where it is
+    * non-empty — the one relation every MinHash operator bands (and
+    * [[minhashBucketStats]] audits). Empty/NULL token sets can never
+    * truthfully near-dup (no content evidence) and must not reach pair
+    * generation: every empty set shares the kernel's sentinel signature
+    * and every NULL set each band's bare xxhash64(b) key, so blanks would
+    * collide in ALL bands (at threshold 0.0 even emitting pairs), and the
+    * collapse path's setkey would glue every blank and null-text doc into
+    * one "identical set" group (xxhash64 of a null array equals xxhash64
+    * of an empty one). size(null) is null, so the filter drops null-th
+    * docs too. */
   private def tokenized(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     graft.GraftSession.balanced(docs.select(col(idCol).as("id"), col(textCol).as("text")))
       .select(col("id"), tokenSet(col("text")).as("th"))
+      .filter(size(col("th")) > 0)
 
   /** (band, id) relation after banding + the per-band skew cap. Shuffles
     * only (band, id) pairs — token-hash arrays never ride the band explode. */
@@ -174,7 +185,11 @@ object Dedup {
   /** Per-band bucket audit for the skew cap: rows dropped by `maxBucket`
     * are invisible to minhashNearDups, so surface them here — any row in
     * this result means recall loss that must be tuned away (bigger cap) or
-    * accepted explicitly. */
+    * accepted explicitly. Audits the docs minhashNearDups bands (blank and
+    * NULL docs never are), one row per doc: minhashNearDups with
+    * `collapseExactDups` (its default) bands one row per distinct token
+    * set, so a bucket of exact copies can still report drops that never
+    * happen there. */
   def minhashBucketStats(docs: DataFrame, idCol: String, textCol: String,
                          numHashes: Int = 128, bands: Int = 32,
                          maxBucket: Int = 4096): DataFrame =
@@ -197,13 +212,7 @@ object Dedup {
                       threshold: Double = 0.8,
                       maxBucket: Int = 4096,
                       collapseExactDups: Boolean = true): DataFrame = {
-    // Empty/NULL token sets can never truthfully near-dup (no content
-    // evidence) and must not reach pair generation: the collapse path's
-    // setkey would otherwise glue every blank AND null-text doc into one
-    // "identical set" group (xxhash64 of a null array equals xxhash64 of
-    // an empty one) and emit them all as jaccard-1 pairs. size(null) is
-    // null, so the filter drops null-th docs too.
-    val toks = tokenized(docs, idCol, textCol).filter(size(col("th")) > 0)
+    val toks = tokenized(docs, idCol, textCol)
     // EXACT length-ratio prefilter on candidate pairs (guide §3.2 —
     // reduce the join's output before the expensive downstream):
     // jaccard(A, B) = |A∩B|/|A∪B| <= min(|A|,|B|)/max(|A|,|B|), so a
@@ -326,14 +335,8 @@ object Dedup {
                     numHashes: Int = 128, bands: Int = 32,
                     threshold: Double = 0.8,
                     maxBucket: Int = 4096): DataFrame = {
-    // blank/null token sets must not reach pair generation (the
-    // minhashNearDups invariant): every empty th shares the kernel's
-    // sentinel signature and every NULL th shares each band's bare
-    // xxhash64(b) key, so unfiltered blanks collide corpus x reference
-    // in ALL bands — wasted candidate joins, and at threshold 0.0 even
-    // emitted pairs the batch op would never produce
-    val ta = tokenized(corpus, idCol, textCol).filter(size(col("th")) > 0)
-    val tb = tokenized(reference, idCol, textCol).filter(size(col("th")) > 0)
+    val ta = tokenized(corpus, idCol, textCol)
+    val tb = tokenized(reference, idCol, textCol)
     // same EXACT length-ratio prefilter as minhashNearDups: a candidate
     // whose distinct-token counts differ beyond the threshold ratio
     // cannot verify — dropped inside the band join, before the
@@ -411,12 +414,9 @@ object Dedup {
     }
     val exists = fs.exists(paramsPath)
     if (exists) validatePin()
-    // blank/null token sets stay OUT of the index (the minhashNearDups
-    // invariant): stored junk (band,id) rows would re-join every future
-    // batch's blanks forever, and at threshold 0.0 break the index's
-    // spec-asserted equivalence with the batch op
-    val toksNew = tokenized(docs, idCol, textCol)
-      .filter(size(col("th")) > 0).localCheckpoint()
+    // blank/null token sets stay OUT of the index too: stored junk
+    // (band, id) rows would re-join every future batch's blanks forever
+    val toksNew = tokenized(docs, idCol, textCol).localCheckpoint()
     // the index stores UNCAPPED (band, id) rows; the per-band skew cap
     // is applied at query time over the ACCUMULATED table (old ∪ new,
     // row_number by id — the identical window the batch path plans), so

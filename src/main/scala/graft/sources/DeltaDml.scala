@@ -5,7 +5,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, StructType}
+import org.apache.spark.sql.types.StructType
+
+import graft.sources.DmlClauses.{assign, nullIsFalse, validateSet}
 
 /** Batch DML on a Delta table — DELETE / UPDATE / MERGE as COPY-ON-WRITE
   * commits, the delta-spark semantics re-expressed Spark-first (reference
@@ -29,10 +31,6 @@ import org.apache.spark.sql.types.{BooleanType, StructType}
   * mapping (rewritten files would need physical-name headers).
   */
 object DeltaDml {
-
-  /** (version, rowsUpdated, rowsDeleted, rowsInserted) of one DML commit. */
-  case class DmlStats(version: Long, updated: Long, deleted: Long,
-                      inserted: Long)
 
   private val PhysKey = "delta.columnMapping.physicalName"
 
@@ -256,7 +254,7 @@ object DeltaDml {
     val aff = spark.read.schema(schema)
       .parquet(affected.map(absolute(tablePath, _)): _*).persist()
     try { // finally-unpersist: a stage/commit failure must not leak the cache
-      val hit = coalesce(condition.cast(BooleanType), lit(false))
+      val hit = nullIsFalse(condition)
       val deleted = aff.filter(hit).count()
       val version = current + 1
       val adds = stageAdds(aff.filter(!hit), tablePath, version,
@@ -305,10 +303,8 @@ object DeltaDml {
     * O(affected file bytes) — [[update]]'s COW rewrite cost. Returns
     * (version, rows updated). */
   def updateDv(spark: SparkSession, tablePath: String, condition: Column,
-               set: Map[String, Column]): (Long, Long) = {
-    require(set.nonEmpty, "UPDATE: empty SET clause")
+               set: Map[String, Column]): (Long, Long) =
     dvDml(spark, tablePath, condition, Some(set))
-  }
 
   /** The shared DV DML engine: kill the visible matched rows under
     * merged replacement DVs; with `set`, also append the rewritten
@@ -318,10 +314,7 @@ object DeltaDml {
                     set: Option[Map[String, Column]]): (Long, Long) = {
     import spark.implicits._
     val (schema, partCols, files) = DeltaLogReader.activeStateDv(spark, tablePath)
-    set.foreach { s =>
-      val bad = s.keySet.filterNot(schema.fieldNames.contains)
-      require(bad.isEmpty, s"UPDATE: unknown column(s) ${bad.mkString(", ")}")
-    }
+    set.foreach(validateSet(schema, _))
     require(partCols.isEmpty,
       s"DML on partitioned Delta table not supported: $tablePath")
     require(schema.fields.forall(f => !f.metadata.contains(PhysKey)),
@@ -353,7 +346,7 @@ object DeltaDml {
     // visible matched rows: condition TRUE, not already dead under a DV
     val scan = spark.read.schema(schema)
       .parquet(files.map(f => absolute(tablePath, f._1)): _*)
-    val hit = coalesce(condition.cast(BooleanType), lit(false))
+    val hit = nullIsFalse(condition)
     val relLookup = broadcast(relOf.toSeq.toDF("__g_file", "__g_rel"))
     var matched = scan.filter(hit)
       .withColumn("__g_file", fileCol)
@@ -404,12 +397,7 @@ object DeltaDml {
       }
       // UPDATE: the rewritten row versions append as new data files
       def rewritten(s: Map[String, Column]): DataFrame =
-        matched.select(schema.fields.toSeq.map { f =>
-          s.get(f.name) match {
-            case Some(e) => e.cast(f.dataType).as(f.name)
-            case None    => col(f.name).as(f.name)
-          }
-        }: _*)
+        matched.select(assign(schema, Seq(None -> s)): _*)
       val updAdds = set match {
         case Some(s) => stageAdds(rewritten(s), tablePath, version, dataChange = true)
         case None    => Nil
@@ -467,9 +455,7 @@ object DeltaDml {
   def update(spark: SparkSession, tablePath: String, condition: Column,
              set: Map[String, Column]): (Long, Long) = {
     val (schema, files, current, tableConf) = dmlState(spark, tablePath)
-    val bad = set.keySet.filterNot(schema.fieldNames.contains)
-    require(bad.isEmpty, s"UPDATE: unknown column(s) ${bad.mkString(", ")}")
-    require(set.nonEmpty, "UPDATE: empty SET clause")
+    validateSet(schema, set)
     if (files.isEmpty) return (current, 0L)
     val scan = spark.read.schema(schema).parquet(files.map(_._2): _*)
     val affected = affectedOf(
@@ -481,26 +467,16 @@ object DeltaDml {
     val aff = spark.read.schema(schema)
       .parquet(affected.map(absolute(tablePath, _)): _*).persist()
     try { // finally-unpersist: a stage/commit failure must not leak the cache
-      val hit = coalesce(condition.cast(BooleanType), lit(false))
+      val hit = nullIsFalse(condition)
       val updated = aff.filter(hit).count()
-      val rewritten = aff.select(schema.fields.toSeq.map { f =>
-        set.get(f.name) match {
-          case Some(e) =>
-            when(hit, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }: _*)
+      val rewritten = aff.select(assign(schema, Seq(Some(hit) -> set)): _*)
       val version = current + 1
       val adds = stageAdds(rewritten, tablePath, version, dataChange = true)
       val cdc =
         if (cdfEnabled(spark, tableConf)) {
           val pre = typed(aff.filter(hit), "update_preimage")
-          val post = typed(aff.filter(hit).select(schema.fields.toSeq.map { f =>
-            set.get(f.name) match {
-              case Some(e) => e.cast(f.dataType).as(f.name)
-              case None    => col(f.name)
-            }
-          }: _*), "update_postimage")
+          val post = typed(aff.filter(hit).select(assign(schema, Seq(None -> set)): _*),
+            "update_postimage")
           stageCdc(pre.unionByName(post), tablePath, version)
         } else Nil
       DeltaLogReader.writeCommit(spark, tablePath, version,
@@ -670,246 +646,84 @@ object DeltaDml {
     (version, adds.size.toLong, removes.size.toLong)
   }
 
-  /** MERGE INTO target USING source ON `on` — the three-clause form:
+  /** MERGE INTO target USING source ON `on` with [[MergeClauses]],
+    * executed copy-on-write: matched and by-source clauses rewrite the
+    * files that hold their rows, NOT MATCHED inserts append.
     *
-    *  - `matchedDelete`: WHEN MATCHED [AND cond] THEN DELETE — SQL
-    *    condition over `tAlias`/`sAlias` columns ("true" = every match).
-    *    Evaluated BEFORE the update clause (the common
-    *    delete-then-update clause order).
-    *  - `matchedUpdate`: WHEN MATCHED THEN UPDATE SET — target column ->
-    *    SQL expression over `tAlias`/`sAlias`.
-    *  - `notMatchedInsert`: WHEN NOT MATCHED THEN INSERT — target
-    *    column -> SQL expression over `sAlias`; unlisted columns insert
-    *    NULL.
-    *
-    * Matching rows can only live in files the ON-join touches, so the
-    * NOT MATCHED anti-join runs against affected-file rows, not the
-    * whole table — at 100 TB the source joins against the slice it can
-    * match, never the full scan twice. When a matched clause is present
-    * the ambiguity check errors if any target row matches more than one
-    * source row (the delta-spark `DELTA_MULTIPLE_SOURCE_ROW_MATCHING...`
-    * contract — applying two updates to one row is nondeterministic).
+    * Matching rows can only live in files the ON-join touches, so only
+    * those files are rewritten, and the NOT MATCHED anti-join runs
+    * against their rows, not the whole table — at 100 TB the source
+    * joins against the slice it can match, never the full scan twice.
     * An insert-only merge (no matched clause) rewrites nothing: it
     * appends the anti-joined source rows as a plain add-only commit.
-    *
-    * `bySourceDelete`/`bySourceUpdate` are delta-spark's `WHEN NOT
-    * MATCHED BY SOURCE` clauses (CDC reconciliation: target rows whose
-    * key vanished from the source get deleted or flagged). A by-source
-    * clause inherently touches EVERY file — any file can hold a row
-    * with no source match — so the pruning scan is skipped and the
-    * whole table rewrites, which is what delta-spark does too. */
+    * A by-source clause inherently touches EVERY file — any file can
+    * hold a row with no source match — so the pruning scan is skipped
+    * and the whole table rewrites, which is what delta-spark does too. */
   def merge(spark: SparkSession, tablePath: String, source: DataFrame,
-            on: String,
-            matchedUpdate: Option[Map[String, String]] = None,
-            matchedDelete: Option[String] = None,
-            notMatchedInsert: Option[Map[String, String]] = None,
-            matchedUpdateCond: Option[String] = None,
-            notMatchedInsertCond: Option[String] = None,
-            tAlias: String = "t", sAlias: String = "s",
-            bySourceDelete: Option[String] = None,
-            bySourceUpdate: Option[Map[String, String]] = None,
-            bySourceUpdateCond: Option[String] = None): DmlStats = {
-    val anyBySource = bySourceDelete.isDefined || bySourceUpdate.isDefined
-    require(matchedUpdate.isDefined || matchedDelete.isDefined ||
-      notMatchedInsert.isDefined || anyBySource, "MERGE: no clauses")
+            on: String, clauses: MergeClauses,
+            tAlias: String = "t", sAlias: String = "s"): DmlStats = {
     // an INSERT-ONLY merge commits no removes — delta-spark permits it
     // on delta.appendOnly=true tables, and removesRows=true refused it
-    val (schema, files, current, tableConf) = dmlState(spark, tablePath,
-      removesRows = matchedUpdate.isDefined || matchedDelete.isDefined ||
-        anyBySource)
-    val cdfOn = cdfEnabled(spark, tableConf)
-    (matchedUpdate.toSeq ++ bySourceUpdate.toSeq).foreach { m =>
-      val bad = m.keySet.filterNot(schema.fieldNames.contains)
-      require(bad.isEmpty,
-        s"MERGE UPDATE: unknown column(s) ${bad.mkString(", ")}")
-    }
-    notMatchedInsert.foreach { m =>
-      val bad = m.keySet.filterNot(schema.fieldNames.contains)
-      require(bad.isEmpty,
-        s"MERGE INSERT: unknown column(s) ${bad.mkString(", ")}")
-    }
-    val onExpr = expr(on)
-    val anyMatched = matchedUpdate.isDefined || matchedDelete.isDefined
+    val (schema, files, current, tableConf) =
+      dmlState(spark, tablePath, removesRows = clauses.rewrites)
+    val m = MergePlan(clauses, schema, source, on, tAlias, sAlias)
+    try {
+      def empty: DataFrame = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      val tgtAll =
+        if (files.isEmpty) empty
+        else spark.read.schema(schema).parquet(files.map(_._2): _*)
 
-    val tgtAll =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(files.map(_._2): _*)
+      // pruning join: which live files hold a matched row (a by-source
+      // clause reaches every file; an insert-only merge rewrites none)
+      val affected =
+        if (files.isEmpty || !clauses.rewrites) Seq.empty[String]
+        else if (clauses.anyBySource) files.map(_._1)
+        else affectedOf(tgtAll.withColumn("__g_file", fileCol).as(tAlias)
+          .join(m.src.as(sAlias), m.on, "inner").select(col("__g_file")), files)
+      def affScan: DataFrame =
+        if (affected.isEmpty) empty
+        else spark.read.schema(schema).parquet(affected.map(absolute(tablePath, _)): _*)
 
-    // pruning join: which live files hold a matched row (a by-source
-    // clause reaches every file, so pruning is moot)
-    val affected =
-      if (files.isEmpty) Seq.empty[String]
-      else if (anyBySource) files.map(_._1)
-      // insert-only MERGE: nothing rewrites and the insert anti-join
-      // runs against the WHOLE table — the pruning scan+join's result
-      // was computed and thrown away (a second full-table pass at scale)
-      else if (!anyMatched) Seq.empty[String]
-      else affectedOf(
-        tgtAll.withColumn("__g_file", fileCol).as(tAlias)
-          .join(source.as(sAlias), onExpr, "inner")
-          .select(col("__g_file")), files)
-
-    val affAbs = affected.map(absolute(tablePath, _))
-    def affScan: DataFrame = spark.read.schema(schema).parquet(affAbs: _*)
-    var persisted: Option[DataFrame] = None
-
-    // ambiguity check (only when a matched clause will rewrite rows):
-    // (file, row_index) is the stable row identity
-    if (anyMatched && affected.nonEmpty) {
-      val multi = affScan
-        .withColumn("__g_fp", col("_metadata.file_path"))
-        .withColumn("__g_pos", col("_metadata.row_index"))
-        .as(tAlias)
-        .join(source.as(sAlias), onExpr, "inner")
-        .groupBy(col("__g_fp"), col("__g_pos")).count()
-        .filter(col("count") > 1).limit(1).count()
-      require(multi == 0,
-        "MERGE: a target row matched multiple source rows — the update " +
-          "is nondeterministic (same check as delta-spark)")
-    }
-
-    val version = current + 1
-    var updated = 0L
-    var deleted = 0L
-    var cdcParts: Seq[DataFrame] = Nil
-
-    // rewrite affected files (matched + by-source clauses applied,
-    // untouched rows carried through)
-    val rewritten: Option[DataFrame] =
-      if (!(anyMatched || anyBySource) || affected.isEmpty) None
-      else {
-        val srcM = source.withColumn("__g_match", lit(true))
-        val joined0 = affScan
+      // the affected rows joined to the source, (file, row_index) as the
+      // row identity; it feeds the ambiguity check, the counts, the
+      // rewrite and the cdc write, so it is persisted
+      val joined = Option.when(affected.nonEmpty) {
+        val j = m.joined(affScan
           .withColumn("__g_fp", col("_metadata.file_path"))
-          .withColumn("__g_pos", col("_metadata.row_index"))
-          .as(tAlias).join(srcM.as(sAlias), onExpr, "left_outer")
+          .withColumn("__g_pos", col("_metadata.row_index")))
         // with only BY SOURCE clauses the join exists solely to flag
         // matched target rows — a multi-match fan-out is legal there but
-        // must collapse back to one copy per target row (all copies carry
-        // identical target columns and __g_match=true), else the rewrite
+        // must collapse back to one copy per target row, else the rewrite
         // duplicates rows; with a matched clause the ambiguity check
-        // below rejects multi-matches instead
-        val joined =
-          (if (anyMatched) joined0
-           else joined0.dropDuplicates("__g_fp", "__g_pos"))
-            // the target-source join feeds the ambiguity check, the
-            // counts agg, the rewrite, and the cdc write — persist it
-            // once (dvDml does the same) instead of re-running the
-            // dominant scan+join up to five times
-            .persist()
-        persisted = Some(joined)
-        val isMatch = coalesce(col("__g_match"), lit(false))
-        def condOr(c: Option[String], default: Column): Column =
-          c.map(s => coalesce(expr(s).cast(BooleanType), lit(false)))
-            .getOrElse(default)
-        val delCondM = matchedDelete.map(c =>
-          isMatch && condOr(Some(c), lit(true))).getOrElse(lit(false))
-        val updCondM =
-          if (matchedUpdate.isDefined)
-            isMatch && !delCondM && condOr(matchedUpdateCond, lit(true))
-          else lit(false)
-        // NOT MATCHED BY SOURCE: source columns are null here, so the
-        // conditions sensibly reference only target columns
-        val delCondBS = bySourceDelete.map(c =>
-          !isMatch && condOr(Some(c), lit(true))).getOrElse(lit(false))
-        val updCondBS =
-          if (bySourceUpdate.isDefined)
-            !isMatch && !delCondBS && condOr(bySourceUpdateCond, lit(true))
-          else lit(false)
-        val delCond = delCondM || delCondBS
-        val counts = joined.agg(
-          sum(when(updCondM || updCondBS, 1L).otherwise(0L)),
-          sum(when(delCond, 1L).otherwise(0L))).collect()(0)
-        updated = if (counts.isNullAt(0)) 0L else counts.getLong(0)
-        deleted = if (counts.isNullAt(1)) 0L else counts.getLong(1)
-        if (cdfOn) {
-          val tCols = schema.fields.toSeq.map(f =>
-            col(s"$tAlias.${f.name}").as(f.name))
-          def post(set: Map[String, String], rows: DataFrame): DataFrame =
-            rows.select(schema.fields.toSeq.map { f =>
-              set.get(f.name) match {
-                case Some(e) => expr(e).cast(f.dataType).as(f.name)
-                case None    => col(s"$tAlias.${f.name}").as(f.name)
-              }
-            }: _*)
-          cdcParts = Seq(
-            typed(joined.filter(delCond).select(tCols: _*), "delete")) ++
-            matchedUpdate.toSeq.flatMap { m =>
-              val rows = joined.filter(updCondM)
-              Seq(typed(rows.select(tCols: _*), "update_preimage"),
-                typed(post(m, rows), "update_postimage"))
-            } ++
-            bySourceUpdate.toSeq.flatMap { m =>
-              val rows = joined.filter(updCondBS)
-              Seq(typed(rows.select(tCols: _*), "update_preimage"),
-                typed(post(m, rows), "update_postimage"))
-            }
-        }
-        Some(joined.filter(!delCond).select(schema.fields.toSeq.map { f =>
-          val base = col(s"$tAlias.${f.name}")
-          val withM = matchedUpdate.flatMap(_.get(f.name)) match {
-            case Some(e) => when(updCondM, expr(e).cast(f.dataType))
-            case None    => when(lit(false), base)
-          }
-          val withBS = bySourceUpdate.flatMap(_.get(f.name)) match {
-            case Some(e) => withM.when(updCondBS, expr(e).cast(f.dataType))
-            case None    => withM
-          }
-          withBS.otherwise(base).as(f.name)
-        }: _*))
+        // rejects multi-matches instead
+        m.cache(if (clauses.anyMatched) j else j.dropDuplicates("__g_fp", "__g_pos"))
       }
-
-    // NOT MATCHED inserts: anti-join against the rows a match could be
-    // in — affected files when known, the whole table for insert-only
-    // persisted: the anti-join feeds the count, the staged write, and
-    // the cdc union — three executions of source-vs-table otherwise
-    val inserts: Option[DataFrame] = notMatchedInsert.map { m =>
-      val against = if (anyMatched) {
-        if (affected.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        else affScan
-      } else tgtAll
-      val anti = source.as(sAlias).join(against.as(tAlias), onExpr, "left_anti")
-      notMatchedInsertCond
-        .map(c => anti.filter(coalesce(expr(c).cast(BooleanType), lit(false))))
-        .getOrElse(anti)
-        .select(schema.fields.toSeq.map { f =>
-          m.get(f.name) match {
-            case Some(e) => expr(e).cast(f.dataType).as(f.name)
-            case None    => lit(null).cast(f.dataType).as(f.name)
-          }
-        }: _*)
-        .persist()
-    }
-
-    val out = (rewritten, inserts) match {
-      case (Some(r), Some(i)) => Some(r.unionByName(i))
-      case (Some(r), None)    => Some(r)
-      case (None, Some(i))    => Some(i)
-      case (None, None)       => None
-    }
-    try out match {
-      case None => DmlStats(current, 0L, 0L, 0L)
-      case Some(df) =>
-        val inserted = inserts.map(_.count()).getOrElse(0L)
-        if (updated == 0L && deleted == 0L && inserted == 0L)
-          return DmlStats(current, 0L, 0L, 0L) // pure no-op: nothing to commit
-        val adds = stageAdds(df, tablePath, version, dataChange = true)
-        val removes = if (rewritten.isDefined) removeActions(affected)
-                      else Seq.empty
-        val cdc =
-          if (cdfOn) {
-            val all = cdcParts ++
-              inserts.toSeq.map(i => typed(i, "insert"))
-            all.reduceOption(_ unionByName _)
-              .map(stageCdc(_, tablePath, version)).getOrElse(Nil)
-          } else Nil
-        DeltaLogReader.writeCommit(spark, tablePath, version,
-          ci("MERGE") +: (removes ++ adds ++ cdc))
-        DmlStats(version, updated, deleted, inserted)
-    } finally { persisted.foreach(_.unpersist()); inserts.foreach(_.unpersist()) }
+      joined.foreach(m.requireSingleMatch(_, Seq(col("__g_fp"), col("__g_pos"))))
+      val (updated, deleted) = joined.map(m.counts).getOrElse((0L, 0L))
+      // persisted: the anti-join feeds the count, the staged write and
+      // the cdc union
+      val inserts = m.inserts(if (clauses.anyMatched) affScan else tgtAll).map(m.cache)
+      val inserted = inserts.map(_.count()).getOrElse(0L)
+      if (updated == 0L && deleted == 0L && inserted == 0L)
+        return DmlStats(current, 0L, 0L, 0L) // pure no-op: nothing to commit
+      val version = current + 1
+      val rewritten = joined.map(_.filter(!m.deleted).select(m.newVersion: _*))
+      val adds = stageAdds((rewritten ++ inserts).reduce(_ unionByName _),
+        tablePath, version, dataChange = true)
+      val cdc =
+        if (cdfEnabled(spark, tableConf)) {
+          val changes = joined.toSeq.flatMap { j =>
+            val upd = j.filter(m.updated)
+            Seq(typed(j.filter(m.deleted).select(m.targetRow: _*), "delete"),
+              typed(upd.select(m.targetRow: _*), "update_preimage"),
+              typed(upd.select(m.newVersion: _*), "update_postimage"))
+          } ++ inserts.map(typed(_, "insert"))
+          stageCdc(changes.reduce(_ unionByName _), tablePath, version)
+        } else Nil
+      DeltaLogReader.writeCommit(spark, tablePath, version,
+        ci("MERGE") +: (removeActions(affected) ++ adds ++ cdc))
+      DmlStats(version, updated, deleted, inserted)
+    } finally m.release()
   }
 }

@@ -143,6 +143,14 @@ object DmlSql {
         s"a lakehouse table first")
   }
 
+  /** delta-spark posture: once a table carries deletion vectors (or the
+    * session opts in via graft.delta.dv), DELETE and UPDATE write DVs —
+    * O(touched positions) instead of a file rewrite; the copy-on-write
+    * path refuses DV-bearing tables outright. */
+  private def deltaUsesDv(spark: SparkSession, path: String): Boolean =
+    spark.conf.getOption("graft.delta.dv").exists(_.equalsIgnoreCase("true")) ||
+      DeltaLogReader.activeState(spark, path)._3.exists(_._3)
+
   // ---- commands -------------------------------------------------------
 
   private def delete(target: String, cond: String,
@@ -151,14 +159,7 @@ object DmlSql {
     val path = tablePathOf(spark, target, parseIdent)
     formatOf(spark, path) match {
       case DeltaT =>
-        // delta-spark posture: once a table carries deletion vectors
-        // (or the session opts in via graft.delta.dv), DELETE writes
-        // DVs — O(deleted positions) instead of a file rewrite; the
-        // COW path refuses DV-bearing tables outright
-        val useDv = spark.conf.getOption("graft.delta.dv")
-            .exists(_.equalsIgnoreCase("true")) ||
-          DeltaLogReader.activeState(spark, path)._3.exists(_._3)
-        if (useDv) {
+        if (deltaUsesDv(spark, path)) {
           val (v, n) = DeltaDml.deleteDv(spark, path, expr(cond))
           result(s"$n rows deleted from $path (delta v$v, deletion vectors)")
         } else {
@@ -191,12 +192,7 @@ object DmlSql {
       .map { case (k, e) => k -> expr(e) }
     formatOf(spark, path) match {
       case DeltaT =>
-        // same DV routing as DELETE: DV-bearing tables (where COW
-        // refuses) and graft.delta.dv sessions take merge-on-read
-        val useDv = spark.conf.getOption("graft.delta.dv")
-            .exists(_.equalsIgnoreCase("true")) ||
-          DeltaLogReader.activeState(spark, path)._3.exists(_._3)
-        if (useDv) {
+        if (deltaUsesDv(spark, path)) {
           val (v, n) = DeltaDml.updateDv(spark, path, expr(cond), set)
           result(s"$n rows updated in $path (delta v$v, deletion vectors)")
         } else {
@@ -272,15 +268,6 @@ object DmlSql {
     val onCond = afterOn.substring(0, whenAt).trim
     val clauses = splitClauses(afterOn.substring(whenAt))
 
-    var matchedUpdate: Option[Map[String, String]] = None
-    var matchedUpdateCond: Option[String] = None
-    var matchedDelete: Option[String] = None
-    var notMatchedInsert: Option[Map[String, String]] = None
-    var notMatchedInsertCond: Option[String] = None
-    var bySourceDelete: Option[String] = None
-    var bySourceUpdate: Option[Map[String, String]] = None
-    var bySourceUpdateCond: Option[String] = None
-
     val MatchedUpd =
       """(?is)\s*MATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+UPDATE\s+SET\s+(.+?)\s*""".r
     val MatchedDel =
@@ -329,30 +316,28 @@ object DmlSql {
     def updateAll: Map[String, String] = matchedCols(excludeKeys = true)
     def insertAll: Map[String, String] = matchedCols(excludeKeys = false)
 
-    clauses.foreach {
-      case BySourceDel(cond) =>
-        require(bySourceDelete.isEmpty,
+    def condOf(c: String): Option[String] = Option(c).map(_.trim)
+    val mc = clauses.foldLeft(MergeClauses()) {
+      case (mc, BySourceDel(cond)) =>
+        require(mc.bySourceDelete.isEmpty,
           "MERGE: duplicate NOT MATCHED BY SOURCE DELETE clause")
-        bySourceDelete = Some(Option(cond).map(_.trim).getOrElse("true"))
-      case BySourceUpd(cond, sets) =>
-        require(bySourceUpdate.isEmpty,
+        mc.copy(bySourceDelete = condOf(cond).orElse(Some("true")))
+      case (mc, BySourceUpd(cond, sets)) =>
+        require(mc.bySourceUpdate.isEmpty,
           "MERGE: duplicate NOT MATCHED BY SOURCE UPDATE clause")
-        bySourceUpdateCond = Option(cond).map(_.trim)
-        bySourceUpdate = Some(
-          splitTopLevel(sets, ',').map(parseAssignment).toMap)
-      case MatchedDel(cond) =>
-        require(matchedDelete.isEmpty, "MERGE: duplicate DELETE clause")
-        matchedDelete = Some(Option(cond).map(_.trim).getOrElse("true"))
-      case MatchedUpd(cond, sets) =>
-        require(matchedUpdate.isEmpty, "MERGE: duplicate UPDATE clause")
-        matchedUpdateCond = Option(cond).map(_.trim)
-        matchedUpdate = Some(
+        mc.copy(bySourceUpdateCond = condOf(cond), bySourceUpdate = Some(
+          splitTopLevel(sets, ',').map(parseAssignment).toMap))
+      case (mc, MatchedDel(cond)) =>
+        require(mc.matchedDelete.isEmpty, "MERGE: duplicate DELETE clause")
+        mc.copy(matchedDelete = condOf(cond).orElse(Some("true")))
+      case (mc, MatchedUpd(cond, sets)) =>
+        require(mc.matchedUpdate.isEmpty, "MERGE: duplicate UPDATE clause")
+        mc.copy(matchedUpdateCond = condOf(cond), matchedUpdate = Some(
           if (sets.trim == "*") updateAll
-          else splitTopLevel(sets, ',').map(parseAssignment).toMap)
-      case NotMatchedIns(cond, cols, vals) =>
-        require(notMatchedInsert.isEmpty, "MERGE: duplicate INSERT clause")
-        notMatchedInsertCond = Option(cond).map(_.trim)
-        notMatchedInsert = Some(
+          else splitTopLevel(sets, ',').map(parseAssignment).toMap))
+      case (mc, NotMatchedIns(cond, cols, vals)) =>
+        require(mc.notMatchedInsert.isEmpty, "MERGE: duplicate INSERT clause")
+        mc.copy(notMatchedInsertCond = condOf(cond), notMatchedInsert = Some(
           if (cols == null) insertAll
           else {
             val cs = splitTopLevel(cols, ',').map(
@@ -361,8 +346,8 @@ object DmlSql {
             require(cs.length == vs.length,
               s"MERGE INSERT: ${cs.length} columns but ${vs.length} values")
             cs.zip(vs).toMap
-          })
-      case other => throw new IllegalArgumentException(
+          }))
+      case (_, other) => throw new IllegalArgumentException(
         s"MERGE: unsupported clause: WHEN $other")
     }
 
@@ -371,11 +356,8 @@ object DmlSql {
       case IcebergT => IcebergDml.merge _
       case PaimonT  => PaimonDml.merge _
     }
-    val stats = mergeFn(spark, path, source, onCond,
-      matchedUpdate, matchedDelete, notMatchedInsert,
-      matchedUpdateCond, notMatchedInsertCond,
-      tAlias.getOrElse("t"), srcAlias2,
-      bySourceDelete, bySourceUpdate, bySourceUpdateCond)
+    val stats = mergeFn(spark, path, source, onCond, mc,
+      tAlias.getOrElse("t"), srcAlias2)
     val fmtName = fmt match {
       case DeltaT => "delta v"; case IcebergT => "iceberg snapshot "
       case PaimonT => "paimon snapshot "
@@ -542,14 +524,9 @@ object DmlSql {
     // SQL, but name-based col(src) threw AMBIGUOUS_REFERENCE
     val tmpNames = df.columns.indices.map(i => s"__ins_src_$i")
     val dfT = df.toDF(tmpNames: _*)
-    val srcByTarget = cols.map(c => byLower(c.toLowerCase)).zip(tmpNames).toMap
-    val aligned = dfT.select(schema.fields.toSeq.map { f =>
-      srcByTarget.get(f.name) match {
-        case Some(src) => col(src).cast(f.dataType).as(f.name)
-        case None      => org.apache.spark.sql.functions.lit(null)
-          .cast(f.dataType).as(f.name)
-      }
-    }: _*)
+    val srcByTarget = cols.map(c => byLower(c.toLowerCase)).zip(tmpNames.map(col)).toMap
+    val aligned = dfT.select(DmlClauses.assign(schema, Seq(None -> srcByTarget),
+      f => org.apache.spark.sql.functions.lit(null).cast(f.dataType)): _*)
     // persist: count + write are two jobs over the same (possibly
     // non-deterministic) query — without it the reported count could
     // differ from the rows actually written

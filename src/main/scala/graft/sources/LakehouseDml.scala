@@ -2,9 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BooleanType
 
-import graft.sources.DeltaDml.DmlStats
+import graft.sources.DmlClauses.{assign, nullIsFalse, validateSet}
 
 /** Row-level DML for the OTHER two lakehouse formats, each in its own
   * native mutation shape (reference surface: Drill only reads these
@@ -41,14 +40,12 @@ object IcebergDml {
              set: Map[String, Column]): (Long, Long) = {
     val meta = IcebergTable.loadMeta(spark, table)
     val schema = meta.schema
-    val bad = set.keySet.filterNot(schema.fieldNames.contains)
-    require(bad.isEmpty, s"UPDATE: unknown column(s) ${bad.mkString(", ")}")
-    require(set.nonEmpty, "UPDATE: empty SET clause")
+    validateSet(schema, set)
     // visible rows (existing position/equality deletes applied) — the
     // plan captures the CURRENT file list, so the append below still
     // reads pre-delete state even after the delete snapshot commits
     val visible = IcebergTable.read(spark, table)
-    val hit = coalesce(condition.cast(BooleanType), lit(false))
+    val hit = nullIsFalse(condition)
     // persisted: the count and the append must see the SAME row set —
     // re-executing the filter for each would let a nondeterministic
     // condition count one set and append another. (deleteFrom still
@@ -56,12 +53,7 @@ object IcebergDml {
     // delta-spark, UPDATE requires a deterministic condition.)
     val touched = visible.filter(hit).persist()
     try {
-      val updatedRows = touched.select(schema.fields.toSeq.map { f =>
-        set.get(f.name) match {
-          case Some(e) => e.cast(f.dataType).as(f.name)
-          case None    => col(f.name).as(f.name)
-        }
-      }: _*)
+      val updatedRows = touched.select(assign(schema, Seq(None -> set)): _*)
       val n = touched.count()
       if (n == 0) return (meta.currentSnapshotId.getOrElse(0L), 0L)
       IcebergTable.deleteFrom(spark, table, condition)
@@ -75,188 +67,65 @@ object IcebergDml {
     } finally touched.unpersist()
   }
 
-  /** MERGE INTO an Iceberg table — same clause surface as
-    * [[DeltaDml.merge]], merge-on-read execution: matched rows (under
-    * the update or delete clause) are position-deleted via a join of the
-    * raw data files against the source; updated versions + NOT MATCHED
-    * inserts append as one snapshot. */
+  /** MERGE INTO an Iceberg table ([[MergeClauses]]), merge-on-read:
+    * rows a delete or update clause selects are position-deleted via a
+    * join of the raw data files against the source; updated versions and
+    * NOT MATCHED inserts append as one snapshot. */
   def merge(spark: SparkSession, table: String, source: DataFrame,
-            on: String,
-            matchedUpdate: Option[Map[String, String]] = None,
-            matchedDelete: Option[String] = None,
-            notMatchedInsert: Option[Map[String, String]] = None,
-            matchedUpdateCond: Option[String] = None,
-            notMatchedInsertCond: Option[String] = None,
-            tAlias: String = "t", sAlias: String = "s",
-            bySourceDelete: Option[String] = None,
-            bySourceUpdate: Option[Map[String, String]] = None,
-            bySourceUpdateCond: Option[String] = None): DmlStats = {
-    val anyBySource = bySourceDelete.isDefined || bySourceUpdate.isDefined
-    require(matchedUpdate.isDefined || matchedDelete.isDefined ||
-      notMatchedInsert.isDefined || anyBySource, "MERGE: no clauses")
+            on: String, clauses: MergeClauses,
+            tAlias: String = "t", sAlias: String = "s"): DmlStats = {
     val meta = IcebergTable.loadMeta(spark, table)
-    val schema = meta.schema
-    (matchedUpdate.toSeq ++ bySourceUpdate.toSeq ++ notMatchedInsert.toSeq)
-      .foreach { m =>
-        val bad = m.keySet.filterNot(schema.fieldNames.contains)
-        require(bad.isEmpty, s"MERGE: unknown column(s) ${bad.mkString(", ")}")
-      }
-    val onExpr = expr(on)
-    val anyMatched = matchedUpdate.isDefined || matchedDelete.isDefined
-    val visible = IcebergTable.read(spark, table)
-    val current = meta.currentSnapshotId.getOrElse(0L)
-    // persist the SOURCE once: counts, the updated/insert frames, and
-    // the position-delete scan each re-execute the source plan — a
-    // nondeterministic source (sampling, a changing upstream) could
-    // otherwise position-delete one sample of matched rows and append
-    // versions for a DIFFERENT sample (rows lost or duplicated). The
-    // target side is immutable snapshot files, deterministic by
-    // construction. Released in the finally below.
-    val src = source.persist()
+    val m = MergePlan(clauses, meta.schema, source, on, tAlias, sAlias)
     try {
+      val visible = IcebergTable.read(spark, table)
+      val current = meta.currentSnapshotId.getOrElse(0L)
+      // raw data-file scan with (file, pos) row identity — the _metadata
+      // columns are pinned to THIS scan before any join, so a file-backed
+      // source never makes them ambiguous
+      import spark.implicits._
+      lazy val dataFiles = IcebergTable.liveEntries(spark, table)
+        .filter(_.content == 0)
+      lazy val rawIdent = spark.read.schema(meta.schema)
+        .parquet(dataFiles.map(_.path): _*)
+        .withColumn("__g_fpn", IcebergTable.normPath(col("_metadata.file_path")))
+        .withColumn("__g_pos", col("_metadata.row_index"))
+      // checked on the raw scan — a row an earlier delete masked can
+      // refuse conservatively
+      if (clauses.anyMatched && dataFiles.nonEmpty)
+        m.requireSingleMatch(m.joined(rawIdent), Seq(col("__g_fpn"), col("__g_pos")))
 
-    def cond(c: Option[String], default: Boolean): Column =
-      c.map(s => coalesce(expr(s).cast(BooleanType), lit(false)))
-        .getOrElse(lit(default))
-    val delCond =
-      if (matchedDelete.isDefined) cond(matchedDelete, default = true)
-      else lit(false)
-    val updCond =
-      if (matchedUpdate.isDefined)
-        !delCond && cond(matchedUpdateCond, default = true)
-      else lit(false)
+      val joined = m.joined(visible)
+      val (updated, deleted) = m.counts(joined)
+      val inserts = m.inserts(visible)
+      val inserted = inserts.map(_.count()).getOrElse(0L)
+      if (updated == 0 && deleted == 0 && inserted == 0)
+        return DmlStats(current, 0L, 0L, 0L)
 
-    // raw data-file scan with (file, pos) row identity — the _metadata
-    // columns are pinned to THIS scan before any join, so a file-backed
-    // source never makes them ambiguous
-    import spark.implicits._
-    lazy val dataFiles = IcebergTable.liveEntries(spark, table)
-      .filter(_.content == 0)
-    lazy val rawIdent = spark.read.schema(schema)
-      .parquet(dataFiles.map(_.path): _*)
-      .withColumn("__g_fpn", IcebergTable.normPath(col("_metadata.file_path")))
-      .withColumn("__g_pos", col("_metadata.row_index"))
-
-    // ambiguity: one target row matching >1 source rows would append two
-    // updated versions (same delta-spark refusal). Checked on the raw
-    // scan — a row an earlier delete masked can refuse conservatively.
-    if (anyMatched && dataFiles.nonEmpty) {
-      val multi = rawIdent.as(tAlias)
-        .join(src.as(sAlias), onExpr, "inner")
-        .groupBy(col("__g_fpn"), col("__g_pos")).count()
-        .filter(col("count") > 1).limit(1).count()
-      require(multi == 0,
-        "MERGE: a target row matched multiple source rows — the update " +
-          "is nondeterministic")
-    }
-
-    // NOT MATCHED BY SOURCE conditions see only target columns (the
-    // source side does not exist on an anti-join row)
-    val bsDelCond =
-      if (bySourceDelete.isDefined) cond(bySourceDelete, default = true)
-      else lit(false)
-    val bsUpdCond =
-      if (bySourceUpdate.isDefined)
-        !bsDelCond && cond(bySourceUpdateCond, default = true)
-      else lit(false)
-
-    var updated = 0L
-    var deleted = 0L
-    val joined =
-      if (anyMatched)
-        Some(visible.as(tAlias).join(src.as(sAlias), onExpr, "inner"))
-      else None
-    joined.foreach { j =>
-      val counts = j.agg(
-        sum(when(updCond, 1L).otherwise(0L)),
-        sum(when(delCond, 1L).otherwise(0L))).collect()(0)
-      updated = if (counts.isNullAt(0)) 0L else counts.getLong(0)
-      deleted = if (counts.isNullAt(1)) 0L else counts.getLong(1)
-    }
-    val bySourceRows =
-      if (anyBySource)
-        Some(visible.as(tAlias).join(src.as(sAlias), onExpr, "left_anti"))
-      else None
-    bySourceRows.foreach { b =>
-      val counts = b.agg(
-        sum(when(bsUpdCond, 1L).otherwise(0L)),
-        sum(when(bsDelCond, 1L).otherwise(0L))).collect()(0)
-      updated += (if (counts.isNullAt(0)) 0L else counts.getLong(0))
-      deleted += (if (counts.isNullAt(1)) 0L else counts.getLong(1))
-    }
-
-    def applySet(df: DataFrame, set: Map[String, String]): DataFrame =
-      df.select(schema.fields.toSeq.map { f =>
-        set.get(f.name) match {
-          case Some(e) => expr(e).cast(f.dataType).as(f.name)
-          case None    => col(s"$tAlias.${f.name}").as(f.name)
-        }
-      }: _*)
-    val updatedRows: Option[DataFrame] = joined
-      .filter(_ => matchedUpdate.isDefined)
-      .map(j => applySet(j.filter(updCond), matchedUpdate.get))
-    val bsUpdatedRows: Option[DataFrame] = bySourceRows
-      .filter(_ => bySourceUpdate.isDefined)
-      .map(b => applySet(b.filter(bsUpdCond), bySourceUpdate.get))
-    val inserts: Option[DataFrame] = notMatchedInsert.map { m =>
-      val anti = src.as(sAlias).join(visible.as(tAlias), onExpr, "left_anti")
-      notMatchedInsertCond
-        .map(c => anti.filter(coalesce(expr(c).cast(BooleanType), lit(false))))
-        .getOrElse(anti)
-        .select(schema.fields.toSeq.map { f =>
-          m.get(f.name) match {
-            case Some(e) => expr(e).cast(f.dataType).as(f.name)
-            case None    => lit(null).cast(f.dataType).as(f.name)
-          }
-        }: _*)
-    }
-    val appendDf = (updatedRows.toSeq ++ bsUpdatedRows.toSeq ++ inserts.toSeq)
-      .reduceOption(_ unionByName _)
-    val inserted = inserts.map(_.count()).getOrElse(0L)
-    if (updated == 0 && deleted == 0 && inserted == 0)
-      return DmlStats(current, 0L, 0L, 0L)
-
-    // position-delete every clause-qualified row: raw data-file scan
-    // (with its (file, pos) identity) joined/anti-joined against the
-    // source — rows an earlier delete already masked may over-delete,
-    // harmlessly
-    if ((updated > 0 || deleted > 0) && dataFiles.nonEmpty) {
-      // __g_fp precomputed DRIVER-side with the URI-encoding identity
-      // (manifest strings; _metadata.file_path is URI-encoded)
-      val lookup = broadcast(dataFiles
-        .map(f => (f.path, IcebergTable.normSchemeless(f.path)))
-        .toDF("file_path", "__g_fp"))
-      val matchedPos =
-        if (anyMatched)
-          Some(rawIdent.as(tAlias)
-            .join(src.as(sAlias), onExpr, "inner")
-            .filter(delCond || updCond)
-            .select(col("__g_fpn").as("__g_fp"), col("__g_pos").as("pos")))
-        else None
-      val bySourcePos =
-        if (anyBySource)
-          Some(rawIdent.as(tAlias)
-            .join(src.as(sAlias), onExpr, "left_anti")
-            .filter(bsDelCond || bsUpdCond)
-            .select(col("__g_fpn").as("__g_fp"), col("__g_pos").as("pos")))
-        else None
-      (matchedPos.toSeq ++ bySourcePos.toSeq).reduceOption(_ union _)
-        .foreach { pos =>
-          val matches = pos.join(lookup, "__g_fp")
-            .select(col("file_path"), col("pos"))
-          IcebergTable.commitPositionDeletes(spark, table, meta, matches)
-        }
-    }
-    val version = appendDf match {
-      case Some(df) if updated > 0 || inserted > 0 =>
-        // partition spec rides along (see update(): the position-delete
-        // snapshot is already durable when this append runs)
-        IcebergTable.write(df, table, partitionBy = meta.partCols)
-      case _ => IcebergTable.loadMeta(spark, table)
-        .currentSnapshotId.getOrElse(current)
-    }
-    DmlStats(version, updated, deleted, inserted)
-    } finally src.unpersist()
+      // position-delete every clause-selected row: raw data-file scan
+      // (with its (file, pos) identity) joined against the source — rows
+      // an earlier delete already masked may over-delete, harmlessly
+      if ((updated > 0 || deleted > 0) && dataFiles.nonEmpty) {
+        // __g_fp precomputed DRIVER-side with the URI-encoding identity
+        // (manifest strings; _metadata.file_path is URI-encoded)
+        val lookup = broadcast(dataFiles
+          .map(f => (f.path, IcebergTable.normSchemeless(f.path)))
+          .toDF("file_path", "__g_fp"))
+        val matches = m.joined(rawIdent).filter(m.deleted || m.updated)
+          .select(col("__g_fpn").as("__g_fp"), col("__g_pos").as("pos"))
+          .join(lookup, "__g_fp").select(col("file_path"), col("pos"))
+        IcebergTable.commitPositionDeletes(spark, table, meta, matches)
+      }
+      val appends = Option.when(updated > 0)(
+        joined.filter(m.updated).select(m.newVersion: _*)) ++ inserts
+      val version =
+        if (updated > 0 || inserted > 0)
+          // partition spec rides along (see update(): the position-delete
+          // snapshot is already durable when this append runs)
+          IcebergTable.write(appends.reduce(_ unionByName _), table,
+            partitionBy = meta.partCols)
+        else IcebergTable.loadMeta(spark, table).currentSnapshotId.getOrElse(current)
+      DmlStats(version, updated, deleted, inserted)
+    } finally m.release()
   }
 }
 
@@ -274,10 +143,6 @@ object PaimonDml {
     sch
   }
 
-  /** DELETE FROM a Paimon PK table: write key-only `-D` retraction
-    * frames for the visible rows matching `condition` — nothing is
-    * rewritten; the LSM merge drops the keys at read time. Returns
-    * (snapshot, rowsDeleted). */
   /** Latest snapshot id; 0 on a schema-committed table with no snapshot
     * yet (another engine may create the table before its first write). */
   private def currentSnapshot(spark: SparkSession, table: String): Long = {
@@ -285,10 +150,14 @@ object PaimonDml {
     if (ids.isEmpty) 0L else ids.max
   }
 
+  /** DELETE FROM a Paimon PK table: write key-only `-D` retraction
+    * frames for the visible rows matching `condition` — nothing is
+    * rewritten; the LSM merge drops the keys at read time. Returns
+    * (snapshot, rowsDeleted). */
   def delete(spark: SparkSession, table: String,
              condition: Column): (Long, Long) = {
     val pks = pkState(spark, table, "DELETE").primaryKeys
-    val hit = coalesce(condition.cast(BooleanType), lit(false))
+    val hit = nullIsFalse(condition)
     val keys = PaimonTable.read(spark, table).filter(hit)
       .select(pks.map(col): _*)
     val n = keys.count()
@@ -302,201 +171,83 @@ object PaimonDml {
     * (snapshot, rowsUpdated). */
   def update(spark: SparkSession, table: String, condition: Column,
              set: Map[String, Column]): (Long, Long) = {
-    require(set.nonEmpty, "UPDATE: empty SET clause") // same guard as Delta/Iceberg
     val sch = pkState(spark, table, "UPDATE")
     val pks = sch.primaryKeys
-    val bad = set.keySet.filterNot(sch.schema.fieldNames.contains)
-    require(bad.isEmpty, s"UPDATE: unknown column(s) ${bad.mkString(", ")}")
+    validateSet(sch.schema, set)
     val onPk = set.keySet.intersect(pks.toSet)
     require(onPk.isEmpty,
       s"UPDATE may not SET primary-key column(s) ${onPk.mkString(", ")}")
-    val hit = coalesce(condition.cast(BooleanType), lit(false))
-    val updatedRows = PaimonTable.read(spark, table).filter(hit)
-      .select(sch.schema.fields.toSeq.map { f =>
-        set.get(f.name) match {
-          case Some(e) => e.cast(f.dataType).as(f.name)
-          case None    => col(f.name).as(f.name)
-        }
-      }: _*)
+    val updatedRows = PaimonTable.read(spark, table)
+      .filter(nullIsFalse(condition))
+      .select(assign(sch.schema, Seq(None -> set)): _*)
     val n = updatedRows.count()
     if (n == 0) return (currentSnapshot(spark, table), 0L)
     (PaimonTable.writePk(updatedRows, table, pks, kind = "+U"), n)
   }
 
-  /** MERGE INTO a Paimon PK table: updated versions + NOT MATCHED
-    * inserts upsert as one `+U` commit; a matched DELETE clause retracts
-    * as a second `-D` commit (sequenced after, so the retraction wins
-    * its keys). */
+  /** MERGE INTO a Paimon PK table ([[MergeClauses]]): updated versions
+    * + NOT MATCHED inserts upsert as one `+U` commit; delete clauses
+    * retract as a `-D` commit sequenced BEFORE it (see below). The
+    * primary key is the row identity. */
   def merge(spark: SparkSession, table: String, source: DataFrame,
-            on: String,
-            matchedUpdate: Option[Map[String, String]] = None,
-            matchedDelete: Option[String] = None,
-            notMatchedInsert: Option[Map[String, String]] = None,
-            matchedUpdateCond: Option[String] = None,
-            notMatchedInsertCond: Option[String] = None,
-            tAlias: String = "t", sAlias: String = "s",
-            bySourceDelete: Option[String] = None,
-            bySourceUpdate: Option[Map[String, String]] = None,
-            bySourceUpdateCond: Option[String] = None): DmlStats = {
-    val anyBySource = bySourceDelete.isDefined || bySourceUpdate.isDefined
-    require(matchedUpdate.isDefined || matchedDelete.isDefined ||
-      notMatchedInsert.isDefined || anyBySource, "MERGE: no clauses")
+            on: String, clauses: MergeClauses,
+            tAlias: String = "t", sAlias: String = "s"): DmlStats = {
     val sch = pkState(spark, table, "MERGE")
     val pks = sch.primaryKeys
-    val schema = sch.schema
-    (matchedUpdate.toSeq ++ bySourceUpdate.toSeq ++ notMatchedInsert.toSeq)
-      .foreach { m =>
-        val bad = m.keySet.filterNot(schema.fieldNames.contains)
-        require(bad.isEmpty, s"MERGE: unknown column(s) ${bad.mkString(", ")}")
-      }
-    (matchedUpdate.toSeq ++ bySourceUpdate.toSeq).foreach { m =>
-      val onPk = m.keySet.intersect(pks.toSet)
-      require(onPk.isEmpty,
-        s"MERGE UPDATE may not SET primary-key column(s) ${onPk.mkString(", ")}")
-    }
-    notMatchedInsert.foreach { m =>
-      // an unassigned column null-fills below — acceptable for values,
-      // table corruption for keys: a NULL-keyed +U row lands in a table
-      // whose schema declares the key, and no later merge or retraction
-      // can ever address it
-      val noKey = pks.filterNot(m.contains)
-      require(noKey.isEmpty,
-        s"MERGE INSERT must assign every primary-key column — missing: " +
-          noKey.mkString(", "))
-    }
-    val onExpr = expr(on)
-    val visible = PaimonTable.read(spark, table)
-    val current = currentSnapshot(spark, table)
-    val anyMatched = matchedUpdate.isDefined || matchedDelete.isDefined
-    // persist the SOURCE once — the IcebergDml.merge rationale: counts,
-    // -D keys, +U frames, and the clash probe each re-execute the
-    // source plan, and a nondeterministic source could retract one
-    // sample and upsert another. Released in the finally below.
-    val src = source.persist()
+    val m = MergePlan(clauses, sch.schema, source, on, tAlias, sAlias)
     try {
-
-    def cond(c: Option[String], default: Boolean): Column =
-      c.map(s => coalesce(expr(s).cast(BooleanType), lit(false)))
-        .getOrElse(lit(default))
-    val delCond =
-      if (matchedDelete.isDefined) cond(matchedDelete, default = true)
-      else lit(false)
-    val updCond =
-      if (matchedUpdate.isDefined)
-        !delCond && cond(matchedUpdateCond, default = true)
-      else lit(false)
-
-    if (anyMatched) {
-      val multi = visible.as(tAlias)
-        .join(src.as(sAlias), onExpr, "inner")
-        .groupBy(pks.map(k => col(s"$tAlias.$k")): _*).count()
-        .filter(col("count") > 1).limit(1).count()
-      require(multi == 0,
-        "MERGE: a target row matched multiple source rows — the update " +
-          "is nondeterministic")
-    }
-
-    var updated = 0L
-    var deleted = 0L
-    var deleteKeys: Option[DataFrame] = None
-    val joined =
-      if (anyMatched)
-        Some(visible.as(tAlias).join(src.as(sAlias), onExpr, "inner"))
-      else None
-    joined.foreach { j =>
-      val counts = j.agg(
-        sum(when(updCond, 1L).otherwise(0L)),
-        sum(when(delCond, 1L).otherwise(0L))).collect()(0)
-      updated = if (counts.isNullAt(0)) 0L else counts.getLong(0)
-      deleted = if (counts.isNullAt(1)) 0L else counts.getLong(1)
-      if (deleted > 0)
-        deleteKeys = Some(j.filter(delCond)
-          .select(pks.map(k => col(s"$tAlias.$k").as(k)): _*))
-    }
-    // NOT MATCHED BY SOURCE: target rows with no source match
-    val bsDelCond =
-      if (bySourceDelete.isDefined) cond(bySourceDelete, default = true)
-      else lit(false)
-    val bsUpdCond =
-      if (bySourceUpdate.isDefined)
-        !bsDelCond && cond(bySourceUpdateCond, default = true)
-      else lit(false)
-    val bySourceRows =
-      if (anyBySource)
-        Some(visible.as(tAlias).join(src.as(sAlias), onExpr, "left_anti"))
-      else None
-    bySourceRows.foreach { b =>
-      val counts = b.agg(
-        sum(when(bsUpdCond, 1L).otherwise(0L)),
-        sum(when(bsDelCond, 1L).otherwise(0L))).collect()(0)
-      updated += (if (counts.isNullAt(0)) 0L else counts.getLong(0))
-      val bsDel = if (counts.isNullAt(1)) 0L else counts.getLong(1)
-      deleted += bsDel
-      if (bsDel > 0) {
-        val keys = b.filter(bsDelCond)
-          .select(pks.map(k => col(s"$tAlias.$k").as(k)): _*)
-        deleteKeys = deleteKeys.map(_.unionByName(keys)).orElse(Some(keys))
+      (clauses.matchedUpdate ++ clauses.bySourceUpdate).foreach { set =>
+        val onPk = set.keySet.intersect(pks.toSet)
+        require(onPk.isEmpty,
+          s"MERGE UPDATE may not SET primary-key column(s) ${onPk.mkString(", ")}")
       }
-    }
-
-    def applySet(df: DataFrame, set: Map[String, String]): DataFrame =
-      df.select(schema.fields.toSeq.map { f =>
-        set.get(f.name) match {
-          case Some(e) => expr(e).cast(f.dataType).as(f.name)
-          case None    => col(s"$tAlias.${f.name}").as(f.name)
-        }
-      }: _*)
-    val updatedRows: Option[DataFrame] = joined
-      .filter(_ => matchedUpdate.isDefined)
-      .map(j => applySet(j.filter(updCond), matchedUpdate.get))
-    val bsUpdatedRows: Option[DataFrame] = bySourceRows
-      .filter(_ => bySourceUpdate.isDefined)
-      .map(b => applySet(b.filter(bsUpdCond), bySourceUpdate.get))
-    val inserts: Option[DataFrame] = notMatchedInsert.map { m =>
-      val anti = src.as(sAlias).join(visible.as(tAlias), onExpr, "left_anti")
-      notMatchedInsertCond
-        .map(c => anti.filter(coalesce(expr(c).cast(BooleanType), lit(false))))
-        .getOrElse(anti)
-        .select(schema.fields.toSeq.map { f =>
-          m.get(f.name) match {
-            case Some(e) => expr(e).cast(f.dataType).as(f.name)
-            case None    => lit(null).cast(f.dataType).as(f.name)
-          }
-        }: _*)
-    }
-    val inserted = inserts.map(_.count()).getOrElse(0L)
-    // an updated row and an inserted row sharing a primary key would
-    // land in ONE +U commit with ONE sequence number — the read-side
-    // max_by tie is nondeterministic, so one of the two rows survives
-    // arbitrarily. SQL MERGE has no defined winner either (a real PK
-    // table raises a duplicate-key violation); refuse loudly.
-    if (inserted > 0 && updated > 0) {
-      val updKeys = (updatedRows.toSeq ++ bsUpdatedRows.toSeq)
-        .map(_.select(pks.map(col): _*)).reduce(_ unionByName _)
-      val clash = inserts.get.select(pks.map(col): _*)
-        .join(updKeys, pks, "left_semi").limit(1).count()
-      require(clash == 0L,
-        "MERGE: a NOT MATCHED insert and an update produce the same " +
-          s"primary key (${pks.mkString(", ")}) in one commit — the " +
-          "surviving row would be arbitrary; de-duplicate the source")
-    }
-    val upserts = (updatedRows.toSeq ++ bsUpdatedRows.toSeq ++ inserts.toSeq)
-      .reduceOption(_ unionByName _)
-    if (updated == 0 && deleted == 0 && inserted == 0)
-      return DmlStats(current, 0L, 0L, 0L)
-    var version = current
-    // -D commits FIRST: the deduplicate merge resolves by sequence
-    // number, so a NOT MATCHED insert that shares a primary key with a
-    // matched-deleted row must land in the LATER (+U) commit or the
-    // retraction wins and the fresh row vanishes (SQL MERGE semantics:
-    // delete the old row, keep the new one)
-    deleteKeys.foreach { keys =>
-      version = PaimonTable.writePk(keys, table, pks, kind = "-D")
-    }
-    upserts.filter(_ => updated > 0 || inserted > 0).foreach { df =>
-      version = PaimonTable.writePk(df, table, pks, kind = "+U")
-    }
-    DmlStats(version, updated, deleted, inserted)
-    } finally src.unpersist()
+      clauses.notMatchedInsert.foreach { set =>
+        // an unassigned column null-fills — acceptable for values, table
+        // corruption for keys: a NULL-keyed +U row lands in a table whose
+        // schema declares the key, and no later merge or retraction can
+        // ever address it
+        val noKey = pks.filterNot(set.contains)
+        require(noKey.isEmpty,
+          s"MERGE INSERT must assign every primary-key column — missing: " +
+            noKey.mkString(", "))
+      }
+      val visible = PaimonTable.read(spark, table)
+      val current = currentSnapshot(spark, table)
+      val joined = m.joined(visible)
+      m.requireSingleMatch(joined, pks.map(k => col(s"$tAlias.$k")))
+      val (updated, deleted) = m.counts(joined)
+      val updatedRows = Option.when(updated > 0)(
+        joined.filter(m.updated).select(m.newVersion: _*))
+      val inserts = m.inserts(visible)
+      val inserted = inserts.map(_.count()).getOrElse(0L)
+      // an updated row and an inserted row sharing a primary key would
+      // land in ONE +U commit with ONE sequence number — the read-side
+      // max_by tie is nondeterministic, so one of the two rows survives
+      // arbitrarily. SQL MERGE has no defined winner either (a real PK
+      // table raises a duplicate-key violation); refuse loudly.
+      for (u <- updatedRows; i <- inserts if inserted > 0) {
+        val clash = i.select(pks.map(col): _*)
+          .join(u.select(pks.map(col): _*), pks, "left_semi").limit(1).count()
+        require(clash == 0L,
+          "MERGE: a NOT MATCHED insert and an update produce the same " +
+            s"primary key (${pks.mkString(", ")}) in one commit — the " +
+            "surviving row would be arbitrary; de-duplicate the source")
+      }
+      if (updated == 0 && deleted == 0 && inserted == 0)
+        return DmlStats(current, 0L, 0L, 0L)
+      var version = current
+      // -D commits FIRST: the deduplicate merge resolves by sequence
+      // number, so a NOT MATCHED insert that shares a primary key with a
+      // deleted row must land in the LATER (+U) commit or the retraction
+      // wins and the fresh row vanishes (SQL MERGE semantics: delete the
+      // old row, keep the new one)
+      if (deleted > 0)
+        version = PaimonTable.writePk(joined.filter(m.deleted)
+          .select(pks.map(k => col(s"$tAlias.$k").as(k)): _*), table, pks, kind = "-D")
+      if (updated > 0 || inserted > 0)
+        version = PaimonTable.writePk((updatedRows ++ inserts).reduce(_ unionByName _),
+          table, pks, kind = "+U")
+      DmlStats(version, updated, deleted, inserted)
+    } finally m.release()
   }
 }

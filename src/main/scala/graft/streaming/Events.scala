@@ -407,7 +407,11 @@ object Events {
               // keeps the earliest doc per cluster; the stream matches
               // that KEEP set, at the cost of having already emitted the
               // later copy — inherent at-least-once over-emission)
-              val dup = entries.exists(e => e.id != id &&
+              // an empty token set (blank or NULL text) neither casts
+              // nor receives a vote: the batch op never pairs it, and
+              // jaccard([], []) = 0.0 would pass threshold 0.0
+              val dup = arr.nonEmpty && entries.exists(e => e.id != id &&
+                e.th.nonEmpty &&
                 (e.ts < t.getTime || (e.ts == t.getTime && e.id < id)) &&
                 graft.functions.JaccardKernel
                   .computeLongArrays(e.th.toArray, arr) >= threshold)

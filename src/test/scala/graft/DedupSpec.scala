@@ -149,6 +149,19 @@ class DedupSpec extends AnyFunSuite {
     assert(dropped.filter(col("dropped") <= 0).count() == 0)
   }
 
+  test("minhashBucketStats audits only what minhashNearDups bands: blank, " +
+      "whitespace-only and NULL docs above the cap drop nothing") {
+    import spark.implicits._
+    // no content bucket holds more than 2 docs (1/2 and 4/5 pair up)
+    val blanks = Seq[(Long, String)]((11L, ""), (12L, " "), (13L, "\t \n"),
+      (14L, null), (15L, ""), (16L, null))
+    val withBlanks = docs.filter(col("doc_id") =!= 3L)
+      .union(blanks.toDF("doc_id", "text"))
+    val dropped = Dedup.minhashBucketStats(withBlanks, "doc_id", "text",
+      numHashes = 128, bands = 32, maxBucket = 2)
+    assert(dropped.isEmpty, dropped.collect().mkString(", "))
+  }
+
   test("capped banding path (row_number guard) equals the capless path when no bucket overflows") {
     // the q_dedup_minhash_capped gate config: cap engaged (plans the
     // row_number guard + sort-merge band join) but sized above every

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{DeltaDml, DeltaLogReader, DeltaLogWriter}
+import graft.sources.{DeltaDml, DeltaLogReader, DeltaLogWriter, MergeClauses}
 
 /** Batch DML on Delta tables: copy-on-write DELETE / UPDATE / MERGE
   * (DeltaDml) and the SQL surface (DmlSql: DELETE FROM / UPDATE /
@@ -86,8 +86,8 @@ class DeltaDmlSpec extends AnyFunSuite {
     val src = Seq((2L, "two"), (5L, "five"), (42L, "forty-two"))
       .toDF("mk", "mv")
     val st = DeltaDml.merge(spark, base, src, "t.k = s.mk",
-      matchedUpdate = Some(Map("v" -> "s.mv")),
-      notMatchedInsert = Some(Map("k" -> "s.mk", "v" -> "s.mv")))
+      MergeClauses(matchedUpdate = Some(Map("v" -> "s.mv")),
+      notMatchedInsert = Some(Map("k" -> "s.mk", "v" -> "s.mv"))))
     assert(st.updated == 2L && st.deleted == 0L && st.inserted == 1L)
     assert(rows(base) == ((1L to 9L).map(k => (k,
       if (k == 2L) "two" else if (k == 5L) "five" else s"row$k")) :+
@@ -99,8 +99,8 @@ class DeltaDmlSpec extends AnyFunSuite {
     val base = threeFileTable("mergedel")
     val src = Seq((1L, true), (2L, false), (8L, true)).toDF("mk", "kill")
     val st = DeltaDml.merge(spark, base, src, "t.k = s.mk",
-      matchedUpdate = Some(Map("v" -> "concat(t.v, '*')")),
-      matchedDelete = Some("s.kill"))
+      MergeClauses(matchedUpdate = Some(Map("v" -> "concat(t.v, '*')")),
+      matchedDelete = Some("s.kill")))
     assert(st.deleted == 2L && st.updated == 1L && st.inserted == 0L)
     val got = rows(base)
     assert(!got.exists(r => r._1 == 1L || r._1 == 8L))
@@ -114,7 +114,7 @@ class DeltaDmlSpec extends AnyFunSuite {
     val src = Seq((2L, "x"), (2L, "y")).toDF("mk", "mv")
     val e = intercept[IllegalArgumentException] {
       DeltaDml.merge(spark, base, src, "t.k = s.mk",
-        matchedUpdate = Some(Map("v" -> "s.mv")))
+        MergeClauses(matchedUpdate = Some(Map("v" -> "s.mv"))))
     }
     assert(e.getMessage.contains("multiple source rows"))
   }
@@ -126,7 +126,7 @@ class DeltaDmlSpec extends AnyFunSuite {
       .map(_._1).toSet
     val src = Seq((2L, "dup"), (50L, "new")).toDF("mk", "mv")
     val st = DeltaDml.merge(spark, base, src, "t.k = s.mk",
-      notMatchedInsert = Some(Map("k" -> "s.mk", "v" -> "s.mv")))
+      MergeClauses(notMatchedInsert = Some(Map("k" -> "s.mk", "v" -> "s.mv"))))
     assert(st.inserted == 1L && st.updated == 0L && st.deleted == 0L)
     val after = graft.sources.DeltaLogReader.activeState(spark, base)._3
       .map(_._1).toSet
@@ -141,10 +141,10 @@ class DeltaDmlSpec extends AnyFunSuite {
     // source keeps 1..4 and 9; 5..8 vanished
     val src = (Seq(1L, 2L, 3L, 4L, 9L)).map(k => (k, s"s$k")).toDF("mk", "mv")
     val st = DeltaDml.merge(spark, base, src, "t.k = s.mk",
-      matchedUpdate = Some(Map("v" -> "s.mv")),
+      MergeClauses(matchedUpdate = Some(Map("v" -> "s.mv")),
       bySourceDelete = Some("t.k <= 6"),       // 5, 6 vanish
       bySourceUpdate = Some(Map("v" -> "concat(t.v, '?')")), // 7, 8 flagged
-      bySourceUpdateCond = Some("t.k > 6"))
+      bySourceUpdateCond = Some("t.k > 6")))
     assert(st.updated == 5L + 2L && st.deleted == 2L)
     assert(rows(base) == (Seq(1L, 2L, 3L, 4L, 9L).map(k => (k, s"s$k")) ++
       Seq(7L, 8L).map(k => (k, s"row$k?"))).toSet)
@@ -171,8 +171,8 @@ class DeltaDmlSpec extends AnyFunSuite {
         Map("v" -> lit("five")))                               // v4
       val src = Seq((7L, "seven"), (42L, "new")).toDF("mk", "mv")
       DeltaDml.merge(spark, base, src, "t.k = s.mk",           // v5
-        matchedUpdate = Some(Map("v" -> "s.mv")),
-        notMatchedInsert = Some(Map("k" -> "s.mk", "v" -> "s.mv")))
+        MergeClauses(matchedUpdate = Some(Map("v" -> "s.mv")),
+        notMatchedInsert = Some(Map("k" -> "s.mk", "v" -> "s.mv"))))
       val ch = DeltaLogReader.readChanges(spark, base, 3L)
         .collect().map(r => (r.getLong(0), r.getString(1),
           r.getString(2), r.getLong(3))).toSet

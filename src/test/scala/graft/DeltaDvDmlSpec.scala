@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{DeltaDml, DeltaLogReader, DeltaLogWriter}
+import graft.sources.{DeltaDml, DeltaLogReader, DeltaLogWriter, MergeClauses}
 
 /** DELETE via deletion vectors on Delta tables — the delta-spark default
   * delete shape once the feature is on: affected files re-added with a
@@ -244,7 +244,7 @@ class DeltaDvDmlSpec extends AnyFunSuite {
     // merge deletes unmatched k=2 and must keep exactly ONE copy of k=1
     val source = Seq((1L, "x"), (1L, "y")).toDF("mk", "mv")
     DeltaDml.merge(spark, base, source, on = "t.k = s.mk",
-      bySourceDelete = Some("true"))
+      MergeClauses(bySourceDelete = Some("true")))
     val rows = DeltaLogReader.read(spark, base).select("k").collect()
       .map(_.getLong(0)).toSeq
     assert(rows == Seq(1L), s"expected exactly one k=1 row, got $rows")

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{IcebergDml, IcebergTable, PaimonDml, PaimonTable}
+import graft.sources.{IcebergDml, IcebergTable, MergeClauses, PaimonDml,
+  PaimonTable}
 
 /** Row-level DML in the other two lakehouse formats' native shapes:
   * Iceberg merge-on-read (position-delete + append, LakehouseDml) and
@@ -65,9 +66,9 @@ class LakehouseDmlSpec extends AnyFunSuite {
     // MERGE on the same partitioned table
     val src = Seq((3L, "merged3"), (99L, "new99")).toDF("mk", "mv")
     IcebergDml.merge(spark, base, src, on = "t.k = s.mk",
-      matchedUpdate = Some(Map("v" -> "s.mv")),
+      MergeClauses(matchedUpdate = Some(Map("v" -> "s.mv")),
       notMatchedInsert = Some(Map(
-        "k" -> "s.mk", "p" -> "'p1'", "v" -> "s.mv")))
+        "k" -> "s.mk", "p" -> "'p1'", "v" -> "s.mv"))))
     val rows2 = IcebergTable.read(spark, base)
       .collect().map(r => (r.getLong(0), r.getString(2))).toSet
     assert(rows2.contains((3L, "merged3")) && rows2.contains((99L, "new99")))
@@ -173,9 +174,9 @@ class LakehouseDmlSpec extends AnyFunSuite {
     val src = Seq((2L, "two", false), (5L, "five", false), (8L, "x", true),
       (42L, "forty-two", false)).toDF("mk", "mv", "kill")
     val st = IcebergDml.merge(spark, base, src, "t.k = s.mk",
-      matchedUpdate = Some(Map("v" -> "s.mv")),
+      MergeClauses(matchedUpdate = Some(Map("v" -> "s.mv")),
       matchedDelete = Some("s.kill"),
-      notMatchedInsert = Some(Map("k" -> "s.mk", "v" -> "s.mv")))
+      notMatchedInsert = Some(Map("k" -> "s.mk", "v" -> "s.mv"))))
     assert(st.updated == 2L && st.deleted == 1L && st.inserted == 1L)
     assert(iceRows(base) == ((1L to 9L).filter(_ != 8L).map(k => (k,
       if (k == 2L) "two" else if (k == 5L) "five" else s"row$k")) :+
@@ -191,7 +192,7 @@ class LakehouseDmlSpec extends AnyFunSuite {
     // a merge whose source matches k=2 must not bring it back
     val src = Seq((2L, "zombie"), (3L, "three")).toDF("mk", "mv")
     val st = IcebergDml.merge(spark, base, src, "t.k = s.mk",
-      matchedUpdate = Some(Map("v" -> "s.mv")))
+      MergeClauses(matchedUpdate = Some(Map("v" -> "s.mv"))))
     assert(st.updated == 1L)
     val got = iceRows(base)
     assert(!got.exists(_._1 == 2L), s"masked row resurrected: $got")
@@ -200,7 +201,7 @@ class LakehouseDmlSpec extends AnyFunSuite {
     val dup = Seq((4L, "x"), (4L, "y")).toDF("mk", "mv")
     val e = intercept[IllegalArgumentException] {
       IcebergDml.merge(spark, base, dup, "t.k = s.mk",
-        matchedUpdate = Some(Map("v" -> "s.mv")))
+        MergeClauses(matchedUpdate = Some(Map("v" -> "s.mv"))))
     }
     assert(e.getMessage.contains("multiple source rows"))
   }
@@ -243,9 +244,9 @@ class LakehouseDmlSpec extends AnyFunSuite {
     val src = Seq((2L, "two", false), (6L, "x", true), (9L, "nine", false))
       .toDF("mk", "mv", "kill")
     val st = PaimonDml.merge(spark, base, src, "t.k = s.mk",
-      matchedUpdate = Some(Map("v" -> "s.mv")),
+      MergeClauses(matchedUpdate = Some(Map("v" -> "s.mv")),
       matchedDelete = Some("s.kill"),
-      notMatchedInsert = Some(Map("k" -> "s.mk", "v" -> "s.mv")))
+      notMatchedInsert = Some(Map("k" -> "s.mk", "v" -> "s.mv"))))
     assert(st.updated == 1L && st.deleted == 1L && st.inserted == 1L)
     assert(pkRows(base) == Set(
       1L -> "row1", 2L -> "two", 3L -> "row3", 4L -> "row4",
@@ -258,10 +259,10 @@ class LakehouseDmlSpec extends AnyFunSuite {
     // source keeps 1..4; 5..9 vanished — delete small ones, flag big
     val src = (1L to 4L).map(k => (k, s"s$k")).toDF("mk", "mv")
     val st = IcebergDml.merge(spark, ice, src, "t.k = s.mk",
-      matchedUpdate = Some(Map("v" -> "s.mv")),
+      MergeClauses(matchedUpdate = Some(Map("v" -> "s.mv")),
       bySourceDelete = Some("t.k <= 6"),
       bySourceUpdate = Some(Map("v" -> "concat(t.v, '?')")),
-      bySourceUpdateCond = Some("t.k > 6"))
+      bySourceUpdateCond = Some("t.k > 6")))
     assert(st.updated == 4L + 3L && st.deleted == 2L)
     assert(iceRows(ice) == ((1L to 4L).map(k => (k, s"s$k")) ++
       (7L to 9L).map(k => (k, s"row$k?"))).toSet)
@@ -269,8 +270,8 @@ class LakehouseDmlSpec extends AnyFunSuite {
     val pk = pkTable("bysrc")
     val psrc = Seq((1L, "one"), (2L, "two")).toDF("mk", "mv")
     val pst = PaimonDml.merge(spark, pk, psrc, "t.k = s.mk",
-      matchedUpdate = Some(Map("v" -> "s.mv")),
-      bySourceDelete = Some("true"))
+      MergeClauses(matchedUpdate = Some(Map("v" -> "s.mv")),
+      bySourceDelete = Some("true")))
     assert(pst.updated == 2L && pst.deleted == 4L)
     assert(pkRows(pk) == Set(1L -> "one", 2L -> "two"))
   }

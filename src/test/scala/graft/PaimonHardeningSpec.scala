@@ -89,13 +89,13 @@ class PaimonHardeningSpec extends AnyFunSuite {
     val src = Seq((9L, "z", 90L)).toDF("sid", "sp", "sv")
     val e = intercept[IllegalArgumentException] {
       PaimonDml.merge(spark, base, src, on = "t.id = s.sid",
-        notMatchedInsert = Some(Map("p" -> "s.sp", "v" -> "s.sv")))
+        MergeClauses(notMatchedInsert = Some(Map("p" -> "s.sp", "v" -> "s.sv"))))
     }
     assert(e.getMessage.contains("primary-key"), e.getMessage)
     // assigning the key works
     val st = PaimonDml.merge(spark, base, src, on = "t.id = s.sid",
-      notMatchedInsert = Some(Map("id" -> "s.sid", "p" -> "s.sp",
-        "v" -> "s.sv")))
+      MergeClauses(notMatchedInsert = Some(Map("id" -> "s.sid", "p" -> "s.sp",
+        "v" -> "s.sv"))))
     assert(st.inserted == 1L)
     assert(PaimonTable.read(spark, base).count() == 2L)
   }
@@ -112,9 +112,9 @@ class PaimonHardeningSpec extends AnyFunSuite {
       .toDF("sname", "sid", "sv")
     val e = intercept[IllegalArgumentException] {
       PaimonDml.merge(spark, base, src, on = "t.p = s.sname",
-        matchedUpdate = Some(Map("v" -> "s.sv")),
+        MergeClauses(matchedUpdate = Some(Map("v" -> "s.sv")),
         notMatchedInsert = Some(Map("id" -> "s.sid", "p" -> "s.sname",
-          "v" -> "s.sv")))
+          "v" -> "s.sv"))))
     }
     assert(e.getMessage.contains("same") &&
       e.getMessage.contains("primary key"), e.getMessage)

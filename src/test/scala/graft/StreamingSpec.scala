@@ -303,6 +303,49 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("nearDedupStream keeps what keepCanonical(minhashNearDups) keeps: " +
+      "blank, whitespace-only and NULL docs at thresholds 0.8 and 0.0") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    def t(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+    val corpus: Seq[(Long, java.sql.Timestamp, String)] = Seq(
+      (1L, t(100), "the quick brown fox jumps over the lazy dog"),
+      (2L, t(101), "the quick brown fox jumps over the lazy cat"), // 7/9 of 1
+      (3L, t(102), "the quick brown fox jumps over the lazy dog"), // copy of 1
+      (4L, t(103), "entirely different content about spark engines"),
+      (5L, t(104), ""), (6L, t(105), "  \t "), (7L, t(106), null),
+      (8L, t(107), ""), (9L, t(108), null))
+    val docs = corpus.map { case (id, _, text) => (id, text) }.toDF("doc_id", "text")
+    spark.conf.set(
+      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
+    try for (threshold <- Seq(0.8, 0.0)) {
+      val batchKept = Dedup.keepCanonical(docs,
+          Dedup.minhashNearDups(docs, "doc_id", "text", threshold = threshold),
+          "doc_id")
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      val input = MemoryStream[(Long, java.sql.Timestamp, String)]
+      val name = s"neardedup_blank_${(threshold * 10).toInt}"
+      val q = Events.nearDedupStream(spark,
+          input.toDF().toDF("doc_id", "ts", "text"),
+          threshold = threshold, watermarkDelaySec = 10, voteWindowSec = 5)
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      val streamKept = try {
+        input.addData(corpus: _*)
+        q.processAllAvailable()
+        // push the watermark past the corpus' vote windows
+        input.addData((100L, t(1000), "a watermark pushing row of unique text"))
+        q.processAllAvailable()
+        input.addData((101L, t(1100), "another watermark push unique row here"))
+        q.processAllAvailable()
+        spark.table(name).select("doc_id").collect().map(_.getLong(0))
+          .toSet.filter(_ < 100L)
+      } finally q.stop()
+      assert(streamKept == batchKept, s"threshold $threshold")
+      assert(Set(5L, 6L, 7L, 8L, 9L).subsetOf(streamKept), s"threshold $threshold")
+    } finally spark.conf.set(
+      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
+  }
+
   test("nearDedupStream: watermarked MinHash near-dedup admits uniques, drops near-copies") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
