@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.sources.DeltaLogReader.Snapshot
 import graft.sources.DmlClauses.{assign, nullIsFalse, validateSet}
 
 /** Batch DML on a Delta table — DELETE / UPDATE / MERGE as COPY-ON-WRITE
@@ -47,26 +48,20 @@ object DeltaDml {
   // join key vs _metadata.file_path (URI-encoded) — see DeltaLogReader
   private def encNorm(s: String): String = DeltaLogReader.encNorm(s)
 
-  /** Live state with the DML refusals applied:
-    * (schema, relPath -> absolute path, current version, table conf). */
-  private def dmlState(spark: SparkSession, tablePath: String,
-                       removesRows: Boolean = true)
-      : (StructType, Seq[(String, String)], Long, Map[String, String]) = {
-    val (schema, partCols, files) = DeltaLogReader.activeState(spark, tablePath)
-    require(partCols.isEmpty,
+  /** The copy-on-write DML refusals applied to `snap`; returns its live
+    * files as relPath -> absolute path. */
+  private def dmlFiles(tablePath: String, snap: Snapshot,
+                       removesRows: Boolean = true): Seq[(String, String)] = {
+    require(snap.partCols.isEmpty,
       s"DML on partitioned Delta table not supported: $tablePath " +
         "(partition values live only in the log; a rewrite would drop them)")
-    require(files.forall(!_._3),
+    require(snap.files.forall(_.dv.isEmpty),
       s"DML over deletion vectors not supported: $tablePath " +
         "(the rewrite would need to materialize the DVs first)")
-    require(schema.fields.forall(f => !f.metadata.contains(PhysKey)),
+    require(snap.schema.fields.forall(f => !f.metadata.contains(PhysKey)),
       s"DML on column-mapped Delta table not supported: $tablePath")
-    val conf = writerGate(spark, tablePath, schema,
-      removesRows = removesRows)
-    val version = (DeltaLogReader.tableVersions(spark, tablePath) ++
-      DeltaLogReader.lastCheckpointVersion(spark, tablePath)).max
-    (schema, files.map { case (p, _, _) => p -> absolute(tablePath, p) },
-      version, conf)
+    writerGate(tablePath, snap, removesRows)
+    snap.files.map(f => f.path -> absolute(tablePath, f.path))
   }
 
   /** Distinct live files holding at least one row of `hits` — the
@@ -117,14 +112,12 @@ object DeltaDml {
     * reader's checkProtocol: a writer MUST refuse tables whose protocol
     * or metadata demand capabilities it does not honor, instead of
     * committing changes that violate the table's declared contract
-    * (delta-spark refuses the same way). Returns the table
-    * configuration so callers reuse it (the CDF flag) without another
-    * log replay. `removesRows` = false for pure appends and
-    * dataChange=false maintenance, which append-only tables accept. */
-  private[sources] def writerGate(spark: SparkSession, tablePath: String,
-      schema: StructType, removesRows: Boolean): Map[String, String] = {
-    val (_, pw, _, wf) = DeltaLogReader.protocolInfo(spark, tablePath)
-    val (_, conf) = DeltaLogReader.currentMetaInfo(spark, tablePath)
+    * (delta-spark refuses the same way). `removesRows` = false for pure
+    * appends and dataChange=false maintenance, which append-only tables
+    * accept. */
+  private[sources] def writerGate(tablePath: String, snap: Snapshot,
+                                  removesRows: Boolean): Unit = {
+    val (pw, conf) = (snap.minWriter, snap.configuration)
     require(pw <= 7,
       s"Delta table $tablePath requires minWriterVersion $pw; this " +
         "writer implements protocol versions 1-7")
@@ -138,7 +131,7 @@ object DeltaDml {
       "changeDataFeed", "generatedColumns", "columnMapping",
       "identityColumns", "deletionVectors", "timestampNtz",
       "v2Checkpoint", "vacuumProtocolCheck")
-    val unsupported = wf -- supported
+    val unsupported = snap.writerFeatures -- supported
     require(unsupported.isEmpty,
       s"Delta table $tablePath requires writer features " +
         s"${unsupported.toSeq.sorted.mkString("[", ", ", "]")} this " +
@@ -153,7 +146,7 @@ object DeltaDml {
       s"Delta table $tablePath declares CHECK constraints " +
         s"${constraints.toSeq.sorted.mkString(", ")} this writer does " +
         "not evaluate — an invalid row would commit unchecked")
-    schema.fields.foreach { f =>
+    snap.schema.fields.foreach { f =>
       require(!f.metadata.contains("delta.invariants"),
         s"Delta table $tablePath: column '${f.name}' declares an " +
           "invariant this writer does not evaluate")
@@ -164,7 +157,6 @@ object DeltaDml {
         s"Delta table $tablePath: column '${f.name}' is an identity " +
           "column this writer does not assign")
     }
-    conf
   }
 
   /** The add action's deletionVector descriptor fragment ("" for none). */
@@ -240,8 +232,14 @@ object DeltaDml {
     * match are rewritten; no match is a metadata no-op. Returns
     * (committed version, rows deleted). */
   def delete(spark: SparkSession, tablePath: String,
-             condition: Column): (Long, Long) = {
-    val (schema, files, current, tableConf) = dmlState(spark, tablePath)
+             condition: Column): (Long, Long) =
+    delete(spark, tablePath, DeltaLogReader.snapshot(spark, tablePath), condition)
+
+  /** [[delete]] against the snapshot the caller already read. */
+  private[sources] def delete(spark: SparkSession, tablePath: String,
+                              snap: Snapshot, condition: Column): (Long, Long) = {
+    val files = dmlFiles(tablePath, snap)
+    val (schema, current) = (snap.schema, snap.version)
     if (files.isEmpty) return (current, 0L)
     val scan = spark.read.schema(schema).parquet(files.map(_._2): _*)
     val affected = affectedOf(
@@ -260,7 +258,7 @@ object DeltaDml {
       val adds = stageAdds(aff.filter(!hit), tablePath, version,
         dataChange = true)
       val cdc =
-        if (cdfEnabled(spark, tableConf))
+        if (cdfEnabled(spark, snap.configuration))
           stageCdc(typed(aff.filter(hit), "delete"), tablePath, version)
         else Nil
       DeltaLogReader.writeCommit(spark, tablePath, version,
@@ -294,7 +292,7 @@ object DeltaDml {
     * lists and blob descriptors. Returns (version, rows deleted). */
   def deleteDv(spark: SparkSession, tablePath: String,
                condition: Column): (Long, Long) =
-    dvDml(spark, tablePath, condition, None)
+    dvDml(spark, tablePath, DeltaLogReader.snapshot(spark, tablePath), condition, None)
 
   /** UPDATE ... SET via deletion vectors — delta-spark's merge-on-read
     * update: the matched rows' OLD versions die under a merged
@@ -304,34 +302,32 @@ object DeltaDml {
     * (version, rows updated). */
   def updateDv(spark: SparkSession, tablePath: String, condition: Column,
                set: Map[String, Column]): (Long, Long) =
-    dvDml(spark, tablePath, condition, Some(set))
+    dvDml(spark, tablePath, DeltaLogReader.snapshot(spark, tablePath), condition, Some(set))
 
-  /** The shared DV DML engine: kill the visible matched rows under
-    * merged replacement DVs; with `set`, also append the rewritten
-    * versions (UPDATE), else it is a DELETE. */
-  private def dvDml(spark: SparkSession, tablePath: String,
-                    condition: Column,
-                    set: Option[Map[String, Column]]): (Long, Long) = {
+  /** The shared DV DML engine, against the snapshot the caller already
+    * read: kill the visible matched rows under merged replacement DVs;
+    * with `set`, also append the rewritten versions (UPDATE), else it is
+    * a DELETE. */
+  private[sources] def dvDml(spark: SparkSession, tablePath: String,
+                             snap: Snapshot, condition: Column,
+                             set: Option[Map[String, Column]]): (Long, Long) = {
     import spark.implicits._
-    val (schema, partCols, files) = DeltaLogReader.activeStateDv(spark, tablePath)
+    val (schema, files, current) = (snap.schema, snap.files, snap.version)
     set.foreach(validateSet(schema, _))
-    require(partCols.isEmpty,
+    require(snap.partCols.isEmpty,
       s"DML on partitioned Delta table not supported: $tablePath")
     require(schema.fields.forall(f => !f.metadata.contains(PhysKey)),
       s"DML on column-mapped Delta table not supported: $tablePath")
-    val tableConf = writerGate(spark, tablePath, schema, removesRows = true)
-    val current = (DeltaLogReader.tableVersions(spark, tablePath) ++
-      DeltaLogReader.lastCheckpointVersion(spark, tablePath)).max
+    writerGate(tablePath, snap, removesRows = true)
     if (files.isEmpty) return (current, 0L)
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val relOf: Map[String, String] = files.map { case (rel, _, _) =>
-      encNorm(absolute(tablePath, rel)) -> rel
-    }.toMap
+    val relOf: Map[String, String] = files.map(f =>
+      encNorm(absolute(tablePath, f.path)) -> f.path).toMap
     val confBc = spark.sparkContext.broadcast(
       new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
 
     // existing DV positions, expanded on executors → (normAbsFile, pos)
-    val withDv = files.collect { case (rel, _, Some(d)) => (rel, d) }
+    val withDv = files.flatMap(f => f.dv.map(f.path -> _))
     val tp = tablePath
     def dvRows(restrict: Set[String]): DataFrame =
       spark.createDataset(withDv.filter { case (rel, _) =>
@@ -345,7 +341,7 @@ object DeltaDml {
 
     // visible matched rows: condition TRUE, not already dead under a DV
     val scan = spark.read.schema(schema)
-      .parquet(files.map(f => absolute(tablePath, f._1)): _*)
+      .parquet(files.map(f => absolute(tablePath, f.path)): _*)
     val hit = nullIsFalse(condition)
     val relLookup = broadcast(relOf.toSeq.toDF("__g_file", "__g_rel"))
     var matched = scan.filter(hit)
@@ -403,7 +399,7 @@ object DeltaDml {
         case None    => Nil
       }
       val cdc =
-        if (cdfEnabled(spark, tableConf)) set match {
+        if (cdfEnabled(spark, snap.configuration)) set match {
           case None => stageCdc(
             typed(matched.select(schema.fieldNames.map(col).toSeq: _*),
               "delete"), tablePath, version)
@@ -414,10 +410,12 @@ object DeltaDml {
             tablePath, version)
         }
         else Nil
-      // MERGE the DV feature into the existing protocol — replacing it
-      // wholesale would drop features other writers declared (features are
-      // never removed, versions never lowered)
-      val (pr, pw, rf, wf) = DeltaLogReader.protocolInfo(spark, tablePath)
+      // MERGE the DV feature into the protocol of the snapshot this
+      // commit builds on — replacing it wholesale would drop features
+      // other writers declared (features are never removed, versions
+      // never lowered)
+      val (pr, pw, rf, wf) = (snap.minReader, snap.minWriter,
+        snap.readerFeatures, snap.writerFeatures)
       // PROTOCOL.md: upgrading a LEGACY protocol to table features must
       // ENUMERATE every feature the old versions implied — dropping them
       // made delta-spark stop enforcing invariants and stop emitting CDF
@@ -439,7 +437,7 @@ object DeltaDml {
         s"""{"protocol":{"minReaderVersion":${math.max(pr, 3)},""" +
           s""""minWriterVersion":${math.max(pw, 7)},""" +
           s""""readerFeatures":${fj(rfAll)},"writerFeatures":${fj(wfAll)}}}"""
-      val dvByRel = files.map(f => f._1 -> f._3).toMap
+      val dvByRel = files.map(f => f.path -> f.dv).toMap
       DeltaLogReader.writeCommit(spark, tablePath, version,
         Seq(ci(if (set.isDefined) "UPDATE" else "DELETE"), protocol) ++
           removeActions(affected, dvByRel.getOrElse(_, None)) ++
@@ -453,8 +451,15 @@ object DeltaDml {
     * column's type); other rows in affected files carry through
     * unchanged. Returns (committed version, rows updated). */
   def update(spark: SparkSession, tablePath: String, condition: Column,
-             set: Map[String, Column]): (Long, Long) = {
-    val (schema, files, current, tableConf) = dmlState(spark, tablePath)
+             set: Map[String, Column]): (Long, Long) =
+    update(spark, tablePath, DeltaLogReader.snapshot(spark, tablePath), condition, set)
+
+  /** [[update]] against the snapshot the caller already read. */
+  private[sources] def update(spark: SparkSession, tablePath: String,
+                              snap: Snapshot, condition: Column,
+                              set: Map[String, Column]): (Long, Long) = {
+    val files = dmlFiles(tablePath, snap)
+    val (schema, current) = (snap.schema, snap.version)
     validateSet(schema, set)
     if (files.isEmpty) return (current, 0L)
     val scan = spark.read.schema(schema).parquet(files.map(_._2): _*)
@@ -473,7 +478,7 @@ object DeltaDml {
       val version = current + 1
       val adds = stageAdds(rewritten, tablePath, version, dataChange = true)
       val cdc =
-        if (cdfEnabled(spark, tableConf)) {
+        if (cdfEnabled(spark, snap.configuration)) {
           val pre = typed(aff.filter(hit), "update_preimage")
           val post = typed(aff.filter(hit).select(assign(schema, Seq(None -> set)): _*),
             "update_postimage")
@@ -492,21 +497,20 @@ object DeltaDml {
     * version. */
   def addColumns(spark: SparkSession, tablePath: String,
                  cols: StructType): Long = {
-    val (schema, partCols, _) = DeltaLogReader.activeState(spark, tablePath)
+    val snap = DeltaLogReader.snapshot(spark, tablePath)
+    val schema = snap.schema
     require(schema.fields.forall(f => !f.metadata.contains(PhysKey)),
       s"ADD COLUMNS on column-mapped Delta table not supported: $tablePath")
-    writerGate(spark, tablePath, schema, removesRows = false)
+    writerGate(tablePath, snap, removesRows = false)
     val existing = schema.fieldNames.map(_.toLowerCase).toSet
     cols.fieldNames.foreach(c => require(!existing.contains(c.toLowerCase),
       s"ADD COLUMNS: column '$c' already exists in $tablePath"))
     val newSchema = StructType(
       schema.fields ++ cols.fields.map(_.copy(nullable = true)))
-    val version = (DeltaLogReader.tableVersions(spark, tablePath) ++
-      DeltaLogReader.lastCheckpointVersion(spark, tablePath)).max + 1
-    DeltaLogReader.writeCommit(spark, tablePath, version,
-      { val (metaId, metaConf) = DeltaLogReader.currentMetaInfo(spark, tablePath)
-        Seq(ci("ADD COLUMNS"),
-          DeltaLogReader.metaDataAction(newSchema, partCols, metaId, metaConf)) })
+    val version = snap.version + 1
+    DeltaLogReader.writeCommit(spark, tablePath, version, Seq(ci("ADD COLUMNS"),
+      DeltaLogReader.metaDataAction(newSchema, snap.partCols, snap.metaId,
+        snap.configuration)))
     version
   }
 
@@ -520,16 +524,16 @@ object DeltaDml {
     * sidecars) is never touched. Returns the number of files deleted. */
   def vacuum(spark: SparkSession, tablePath: String,
              retainMs: Long = 7L * 24 * 3600 * 1000): Long = {
-    val (_, _, files) = DeltaLogReader.activeStateDv(spark, tablePath)
+    val files = DeltaLogReader.snapshot(spark, tablePath).files
     // live set = active data files + the DV .bin files their descriptors
     // reference (a DV-heavy table sheds a superseded vector per commit —
     // they reclaim here like data files do)
     // encNorm both sides: the log path decodes to the on-disk name, and
     // the listed FileStatus paths re-encode the same way — a live file
     // whose name percent-encodes must never look dead to vacuum
-    val live = files.flatMap { case (p, _, dv) =>
-      encNorm(absolute(tablePath, p)) +:
-        dv.filter(_.storageType != "i").map(d =>
+    val live = files.flatMap { f =>
+      encNorm(absolute(tablePath, f.path)) +:
+        f.dv.filter(_.storageType != "i").map(d =>
           encNorm(d.filePath(tablePath))).toSeq
     }.toSet
     val root = new Path(tablePath)
@@ -581,22 +585,18 @@ object DeltaDml {
     * Returns (new version, files added back, files removed). */
   def restore(spark: SparkSession, tablePath: String,
               toVersion: Long): (Long, Long, Long) = {
-    val (tSchema, tPartCols, tFilesSized) =
-      DeltaLogReader.snapshotStateDvSized(spark, tablePath, Some(toVersion))
-    val tFiles = tFilesSized.map { case (p0, pv, dv, _, _) => (p0, pv, dv) }
-    val logSize = tFilesSized.map { case (p0, _, _, sz, _) => p0 -> sz }.toMap
-    val (cSchema, _, cFiles) = DeltaLogReader.snapshotStateDv(spark, tablePath, None)
-    writerGate(spark, tablePath, cSchema, removesRows = true)
-    val current = (DeltaLogReader.tableVersions(spark, tablePath) ++
-      DeltaLogReader.lastCheckpointVersion(spark, tablePath)).max
+    val target = DeltaLogReader.snapshot(spark, tablePath, Some(toVersion))
+    val cur = DeltaLogReader.snapshot(spark, tablePath)
+    writerGate(tablePath, cur, removesRows = true)
+    val current = cur.version
     require(toVersion <= current,
       s"RESTORE: version $toVersion is beyond current $current")
     val fs = new Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a path whose DV differs between current and target must RE-ADD
     // with the target's descriptor (replay: last add per path wins)
-    val curState = cFiles.map(f => f._1 -> f._3).toMap
-    val tgt = tFiles.map(_._1).toSet
+    val curState = cur.files.map(f => f.path -> f.dv).toMap
+    val tgt = target.files.map(_.path).toSet
     // full JSON string escaping (backslashes, control chars — the
     // quote-only escape could write an UNPARSEABLE commit and brick the
     // log after a successful RESTORE); null partition values stay null
@@ -607,8 +607,8 @@ object DeltaDml {
         if (v == null) n.putNull(k) else n.put(k, v) }
       m.writeValueAsString(n)
     }
-    val adds = tFiles.filterNot(f => curState.get(f._1).contains(f._3))
-      .map { case (p, pv, dv) =>
+    val adds = target.files.filterNot(f => curState.get(f.path).contains(f.dv))
+      .map { case DeltaLogReader.AddFile(p, pv, dv, logSize, _) =>
         val abs = new Path(absolute(tablePath, p))
         require(fs.exists(abs),
           s"RESTORE: file $p of version $toVersion was vacuumed — " +
@@ -621,11 +621,10 @@ object DeltaDml {
             s"RESTORE: deletion vector of $p (version $toVersion) was " +
               "vacuumed — cannot restore past a vacuum boundary")
         }
-        // size from the LOG (snapshotStateDvSized exists so maintenance
-        // passes need not stat 100k files); -1 = legacy action without
-        // a recorded size, stat that file only
-        val size = logSize.get(p).filter(_ >= 0)
-          .getOrElse(fs.getFileStatus(abs).getLen)
+        // size from the LOG (maintenance passes need not stat 100k
+        // files); -1 = legacy action without a recorded size, stat that
+        // file only
+        val size = if (logSize >= 0) logSize else fs.getFileStatus(abs).getLen
         s"""{"add":{"path":"$p","partitionValues":${pvJson(pv)},"size":$size,"modificationTime":0,"dataChange":true${dvJson(dv)}}}"""
       }
     // a path live in BOTH versions with a DIFFERENT DV re-adds with the
@@ -633,16 +632,15 @@ object DeltaDml {
     // identity the old pair must ALSO be removed or it stays live for a
     // spec-keyed replay (our own path-keyed replay applies the commit's
     // lines in order, so remove-then-re-add lands on the add)
-    val dvChanged =
-      tFiles.filter(f => curState.get(f._1).exists(_ != f._3)).map(_._1)
+    val dvChanged = target.files
+      .filter(f => curState.get(f.path).exists(_ != f.dv)).map(_.path)
     val removes = removeActions(
-      cFiles.map(_._1).filterNot(tgt.contains) ++ dvChanged,
+      cur.files.map(_.path).filterNot(tgt.contains) ++ dvChanged,
       curState.getOrElse(_, None))
     val version = current + 1
-    val (metaId, metaConf) = DeltaLogReader.currentMetaInfo(spark, tablePath)
     DeltaLogReader.writeCommit(spark, tablePath, version,
-      ci("RESTORE") +: DeltaLogReader.metaDataAction(tSchema, tPartCols,
-        metaId, metaConf) +: (removes ++ adds))
+      ci("RESTORE") +: DeltaLogReader.metaDataAction(target.schema,
+        target.partCols, cur.metaId, cur.configuration) +: (removes ++ adds))
     (version, adds.size.toLong, removes.size.toLong)
   }
 
@@ -661,11 +659,18 @@ object DeltaDml {
     * and the whole table rewrites, which is what delta-spark does too. */
   def merge(spark: SparkSession, tablePath: String, source: DataFrame,
             on: String, clauses: MergeClauses,
-            tAlias: String = "t", sAlias: String = "s"): DmlStats = {
+            tAlias: String = "t", sAlias: String = "s"): DmlStats =
+    merge(spark, tablePath, DeltaLogReader.snapshot(spark, tablePath), source,
+      on, clauses, tAlias, sAlias)
+
+  /** [[merge]] against the snapshot the caller already read. */
+  private[sources] def merge(spark: SparkSession, tablePath: String,
+      snap: Snapshot, source: DataFrame, on: String, clauses: MergeClauses,
+      tAlias: String, sAlias: String): DmlStats = {
     // an INSERT-ONLY merge commits no removes — delta-spark permits it
     // on delta.appendOnly=true tables, and removesRows=true refused it
-    val (schema, files, current, tableConf) =
-      dmlState(spark, tablePath, removesRows = clauses.rewrites)
+    val files = dmlFiles(tablePath, snap, removesRows = clauses.rewrites)
+    val (schema, current) = (snap.schema, snap.version)
     val m = MergePlan(clauses, schema, source, on, tAlias, sAlias)
     try {
       def empty: DataFrame = spark.createDataFrame(
@@ -712,7 +717,7 @@ object DeltaDml {
       val adds = stageAdds((rewritten ++ inserts).reduce(_ unionByName _),
         tablePath, version, dataChange = true)
       val cdc =
-        if (cdfEnabled(spark, tableConf)) {
+        if (cdfEnabled(spark, snap.configuration)) {
           val changes = joined.toSeq.flatMap { j =>
             val upd = j.filter(m.updated)
             Seq(typed(j.filter(m.deleted).select(m.targetRow: _*), "delete"),

@@ -25,6 +25,12 @@ import scala.jdk.CollectionConverters._
   * the DATA files are read with the ordinary distributed parquet scan,
   * so column pruning and predicate pushdown still reach the footers.
   *
+  * That one replay ([[snapshot]]) serves readers and writers alike: a
+  * scan, a DML statement, OPTIMIZE, a checkpoint and a stream's guards
+  * each read the log once and pass the resulting [[Snapshot]] (version,
+  * schema, protocol, metaData identity and configuration, live files,
+  * txn versions) through, instead of re-scanning the log per question.
+  *
   * Partition values live in the LOG (`add.partitionValues`), not in the
   * data files (Delta spec): they are attached as literal columns cast to
   * the declared type, one scan per distinct partition tuple — partition
@@ -71,9 +77,27 @@ object DeltaLogReader {
 
   private val mapper = new ObjectMapper()
 
-  private case class AddFile(path: String, partitionValues: Map[String, String],
-                             dv: Option[DeletionVectors.DvDescriptor] = None,
-                             size: Long = -1L, modTime: Long = 0L)
+  /** One live data file: its log path (percent-encoded, relative to the
+    * table root), partition values, deletion vector, and the add
+    * action's size (-1 = a legacy action without one) and modTime. */
+  private[graft] case class AddFile(path: String,
+      partitionValues: Map[String, String],
+      dv: Option[DeletionVectors.DvDescriptor] = None,
+      size: Long = -1L, modTime: Long = 0L)
+
+  /** The resolved table state at one version: the latest metaData
+    * (schema, partition columns, id, configuration), the latest protocol
+    * (an absent minWriterVersion reads as 2), the live files and the max
+    * `txn` version per appId. */
+  private[graft] case class Snapshot(version: Long, schema: StructType,
+      partCols: Seq[String], metaId: String,
+      configuration: Map[String, String], minReader: Int, minWriter: Int,
+      readerFeatures: Set[String], writerFeatures: Set[String],
+      files: Seq[AddFile], txns: Map[String, Long]) {
+    /** Column-mapping mode ("none" when unmapped). */
+    def colMode: String =
+      configuration.getOrElse("delta.columnMapping.mode", "none")
+  }
 
   /** JSON commit versions present in `_delta_log`, ascending (may start
     * past 0 on a vacuumed log — checkpoints carry the earlier state). */
@@ -91,94 +115,6 @@ object DeltaLogReader {
     versions
   }
 
-  /** The table's CURRENT protocol: (minReaderVersion, minWriterVersion,
-    * readerFeatures, writerFeatures). Newest protocol action wins — JSON
-    * commits are scanned newest-first, the checkpoint is the fallback for
-    * vacuumed logs. A writer must MERGE into this (features are never
-    * removed, versions never lowered) rather than replace it. */
-  /** Top-level checkpoint action files at version `cv`: (parquet tops —
-    * classic single, multi-part all parts, v2 UUID-named — and the v2
-    * JSON top if that form was used). Protocol and txn rows live in the
-    * top level, never in sidecars (PROTOCOL.md v2 checkpoint spec). */
-  private[graft] def checkpointTops(fs: org.apache.hadoop.fs.FileSystem,
-                                    logDir: Path, cv: Long): (Seq[Path], Option[Path]) = {
-    val prefix = f"$cv%020d.checkpoint"
-    val files = fs.listStatus(logDir).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith(prefix))
-    (files.filter(_.getName.endsWith(".parquet")),
-      files.find(_.getName.endsWith(".json")))
-  }
-
-  private[graft] def protocolInfo(spark: SparkSession, tablePath: String):
-      (Int, Int, Set[String], Set[String]) = {
-    val logDir = new Path(tablePath, "_delta_log")
-    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def fromNode(p: com.fasterxml.jackson.databind.JsonNode) = {
-      def feats(n: String) = Option(p.get(n)).filterNot(_.isNull)
-        .map(_.elements.asScala.map(_.asText).toSet).getOrElse(Set.empty[String])
-      (p.get("minReaderVersion").asInt,
-        Option(p.get("minWriterVersion")).map(_.asInt).getOrElse(2),
-        feats("readerFeatures"), feats("writerFeatures"))
-    }
-    val fromJson = tableVersions(spark, tablePath).reverse.view.flatMap { v =>
-      val f = new Path(logDir, f"$v%020d.json")
-      val in = fs.open(f)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toSeq finally in.close()
-      lines.reverseIterator.map(mapper.readTree)
-        .collectFirst { case n if n.has("protocol") => fromNode(n.get("protocol")) }
-    }.headOption
-    fromJson.orElse {
-      lastCheckpointVersion(spark, tablePath).flatMap { cv =>
-        // classic, multi-part, or v2 checkpoint — missing this fallback
-        // silently defaulted to (1,2) and let a writer REPLACE the
-        // table's declared protocol features
-        val (pq, jsonTop) = checkpointTops(fs, logDir, cv)
-        val fromJsonTop = jsonTop.flatMap { jt =>
-          val in = fs.open(jt)
-          val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toList finally in.close()
-          lines.filter(_.trim.nonEmpty).map(mapper.readTree)
-            .collectFirst { case n if n.has("protocol") =>
-              fromNode(n.get("protocol")) }
-        }
-        if (fromJsonTop.isDefined) fromJsonTop
-        else if (pq.isEmpty) None
-        else {
-          import org.apache.spark.sql.functions.col
-          val df = graft.GraftSession.readParquet(spark, pq.head.toString, pq.tail.map(_.toString): _*)
-          if (!df.columns.contains("protocol")) None
-          else {
-            val pType = df.schema("protocol").dataType
-              .asInstanceOf[StructType]
-            def opt(n: String) =
-              if (pType.fieldNames.contains(n)) Seq(s"protocol.$n") else Nil
-            val cols = Seq("protocol.minReaderVersion") ++
-              opt("minWriterVersion") ++ opt("readerFeatures") ++ opt("writerFeatures")
-            df.filter(col("protocol").isNotNull)
-              .select(cols.head, cols.tail: _*).collect().headOption.map { r =>
-                var i = 1
-                val minW = if (pType.fieldNames.contains("minWriterVersion")) {
-                  val v = r.getInt(i); i += 1; v
-                } else 2
-                val rf = if (pType.fieldNames.contains("readerFeatures")) {
-                  val v = if (r.isNullAt(i)) Set.empty[String]
-                          else r.getSeq[String](i).toSet
-                  i += 1; v
-                } else Set.empty[String]
-                val wf = if (pType.fieldNames.contains("writerFeatures")) {
-                  val v = if (r.isNullAt(i)) Set.empty[String]
-                          else r.getSeq[String](i).toSet
-                  i += 1; v
-                } else Set.empty[String]
-                (r.getInt(0), minW, rf, wf)
-              }
-          }
-        }
-      }
-    }.getOrElse((1, 2, Set.empty, Set.empty))
-  }
-
   /** Version of the latest checkpoint per `_last_checkpoint`, if any. */
   def lastCheckpointVersion(spark: SparkSession, tablePath: String): Option[Long] = {
     val p = new Path(new Path(tablePath, "_delta_log"), "_last_checkpoint")
@@ -191,12 +127,24 @@ object DeltaLogReader {
     }
   }
 
-  /** (schema, partitionColumns, active files, columnMapping mode) at
-    * `version`: bootstrap from the newest checkpoint at or below it (if
-    * any), then replay the JSON commits after it. */
-  private def snapshot(spark: SparkSession, tablePath: String,
-                       version: Option[Long])
-      : (StructType, Seq[String], Seq[AddFile], String) = {
+  /** The non-blank lines of one JSON log file (a commit or a v2 JSON
+    * checkpoint top), one action each. */
+  private[sources] def jsonLines(fs: org.apache.hadoop.fs.FileSystem,
+                                 p: Path): List[String] = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .filter(_.trim.nonEmpty).toList
+    finally in.close()
+  }
+
+  /** The table state at `version` (default: latest) from ONE replay of
+    * the log: bootstrap from the newest checkpoint at or below it (if
+    * any), then replay the JSON commits after it. This is the only
+    * decoder of `protocol`, `metaData`, `txn`, `add` and `remove`
+    * actions; readers scan it and writers gate, merge and commit
+    * against it. */
+  private[graft] def snapshot(spark: SparkSession, tablePath: String,
+                              version: Option[Long] = None): Snapshot = {
     val jsonVersions = tableVersions(spark, tablePath)
     val cpVersion = lastCheckpointVersion(spark, tablePath)
     val latest = (jsonVersions ++ cpVersion).max
@@ -208,86 +156,84 @@ object DeltaLogReader {
     val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     var schema: StructType = null
     var partCols: Seq[String] = Nil
-    var minReader: Int = 1
-    var readerFeatures: Set[String] = Set.empty
-    var colMappingMode: String = "none"
+    var metaId = "graft-fixture"
+    var configuration = Map.empty[String, String]
+    var minReader = 1
+    var minWriter = 2
+    var readerFeatures = Set.empty[String]
+    var writerFeatures = Set.empty[String]
     val state = scala.collection.mutable.LinkedHashMap[String, AddFile]()
+    val txns = scala.collection.mutable.Map[String, Long]()
 
-    // one parquet batch of checkpoint action rows (top-level file or a
-    // v2 sidecar) folded into the replay state — shared by the classic
-    // and v2 checkpoint shapes
-    def foldCheckpointParquet(actions: org.apache.spark.sql.DataFrame): Unit = {
-        import org.apache.spark.sql.functions.col
-        if (actions.columns.contains("metaData")) {
-          actions.filter(col("metaData").isNotNull)
-            .select("metaData.schemaString", "metaData.partitionColumns")
-            .collect().headOption.foreach { r =>
-              schema = DataType.fromJson(r.getString(0)).asInstanceOf[StructType]
-              partCols = Option(r.getSeq[String](1)).getOrElse(Nil)
-            }
-          val mdType = actions.schema("metaData").dataType.asInstanceOf[StructType]
-          if (mdType.fieldNames.contains("configuration"))
-            actions.filter(col("metaData").isNotNull)
-              .select("metaData.configuration")
-              .collect().headOption.foreach { r =>
-                Option(r.getMap[String, String](0)).foreach(m =>
-                  m.get("delta.columnMapping.mode").foreach(colMappingMode = _))
-              }
-        }
-        if (actions.columns.contains("protocol")) {
-          val pType = actions.schema("protocol").dataType.asInstanceOf[StructType]
-          val pCols = "protocol.minReaderVersion" +:
-            (if (pType.fieldNames.contains("readerFeatures"))
-               Seq("protocol.readerFeatures") else Nil)
-          actions.filter(col("protocol").isNotNull)
-            .select(pCols.head, pCols.tail: _*)
-            .collect().headOption.foreach { r =>
-              minReader = r.getInt(0)
-              if (r.length > 1 && !r.isNullAt(1))
-                readerFeatures = r.getSeq[String](1).toSet
-            }
-        }
-        if (actions.columns.contains("add")) {
-          val addType = actions.schema("add").dataType.asInstanceOf[StructType]
-          val hasDv = addType.fieldNames.contains("deletionVector")
-          val hasSize = addType.fieldNames.contains("size")
-          val hasMt = addType.fieldNames.contains("modificationTime")
-          val addCols = Seq("add.path", "add.partitionValues") ++
-            (if (hasDv) Seq("add.deletionVector") else Nil) ++
-            (if (hasSize) Seq("add.size") else Nil) ++
-            (if (hasMt) Seq("add.modificationTime") else Nil)
-          actions.filter(col("add").isNotNull)
-            .select(addCols.head, addCols.tail: _*)
-            .collect().foreach { r =>
-              val pv = Option(r.getMap[String, String](1))
-                .map(_.toMap).getOrElse(Map.empty[String, String])
-              val dv =
-                if (hasDv && !r.isNullAt(2)) {
-                  val d = r.getStruct(2)
-                  def f(n: String) = d.fieldIndex(n)
-                  Some(DeletionVectors.DvDescriptor(
-                    d.getString(f("storageType")), d.getString(f("pathOrInlineDv")),
-                    if (d.isNullAt(f("offset"))) 0 else d.getInt(f("offset")),
-                    d.getInt(f("sizeInBytes")), d.getLong(f("cardinality"))))
-                } else None
-              var ix = if (hasDv) 3 else 2
-              val size =
-                if (hasSize && !r.isNullAt(ix)) { val v = r.getLong(ix); ix += 1; v }
-                else { if (hasSize) ix += 1; -1L }
-              val mt =
-                if (hasMt && !r.isNullAt(ix)) r.getLong(ix) else 0L
-              state(r.getString(0)) = AddFile(r.getString(0), pv, dv, size, mt)
-            }
-        }
+    def setMeta(id: Option[String], schemaString: String, pc: Seq[String],
+                conf: Map[String, String]): Unit = {
+      schema = DataType.fromJson(schemaString).asInstanceOf[StructType]
+      partCols = pc
+      metaId = id.getOrElse("graft-fixture")
+      configuration = conf
     }
+    // PROTOCOL.md: an absent minWriterVersion reads as 2
+    def setProtocol(r: Int, w: Option[Int], rf: Set[String],
+                    wf: Set[String]): Unit = {
+      minReader = r; minWriter = w.getOrElse(2)
+      readerFeatures = rf; writerFeatures = wf
+    }
+    def noteTxn(appId: String, v: Long): Unit =
+      txns(appId) = math.max(v, txns.getOrElse(appId, Long.MinValue))
 
-    /** Sidecar paths a v2 top-level checkpoint parquet names (empty on
-      * classic checkpoints, whose schema has no sidecarFile column). */
-    def sidecarsOf(actions: org.apache.spark.sql.DataFrame): Seq[String] = {
-      import org.apache.spark.sql.functions.col
-      if (!actions.columns.contains("sidecarFile")) Nil
-      else actions.filter(col("sidecarFile").isNotNull)
-        .select("sidecarFile.path").collect().map(_.getString(0)).toSeq
+    // one parquet batch of checkpoint action rows (classic or multi-part
+    // checkpoint, v2 top-level file or sidecar) folded into the replay
+    // state: ONE collect for the metadata-scale actions, one for the
+    // adds. Returns the sidecar paths a v2 top-level file names.
+    def foldCheckpointParquet(actions: DataFrame): Seq[String] = {
+      import org.apache.spark.sql.Row
+      def opt[T](r: Row, n: String): Option[T] =
+        if (r.schema.fieldNames.contains(n) && !r.isNullAt(r.fieldIndex(n)))
+          Some(r.getAs[T](n))
+        else None
+      def strings(r: Row, n: String): Set[String] =
+        opt[scala.collection.Seq[String]](r, n).map(_.toSet).getOrElse(Set.empty)
+      val sidecars = scala.collection.mutable.ArrayBuffer[String]()
+      val small = Seq("protocol", "metaData", "txn", "sidecarFile")
+        .filter(actions.columns.contains)
+      if (small.nonEmpty)
+        actions.filter(small.map(col(_).isNotNull).reduce(_ || _))
+          .select(small.map(col): _*).collect().foreach { r =>
+            opt[Row](r, "metaData").foreach(m => setMeta(opt[String](m, "id"),
+              m.getAs[String]("schemaString"),
+              opt[scala.collection.Seq[String]](m, "partitionColumns").map(_.toSeq)
+                .getOrElse(Nil),
+              opt[scala.collection.Map[String, String]](m, "configuration")
+                .map(_.toMap).getOrElse(Map.empty)))
+            opt[Row](r, "protocol").foreach(p => setProtocol(
+              p.getAs[Int]("minReaderVersion"), opt[Int](p, "minWriterVersion"),
+              strings(p, "readerFeatures"), strings(p, "writerFeatures")))
+            opt[Row](r, "txn").foreach(t =>
+              noteTxn(t.getAs[String]("appId"), t.getAs[Long]("version")))
+            opt[Row](r, "sidecarFile").foreach(sc => sidecars += sc.getAs[String]("path"))
+          }
+      if (actions.columns.contains("add")) {
+        // project the add fields the state needs (stats stay unread)
+        val addFields = actions.schema("add").dataType.asInstanceOf[StructType]
+          .fieldNames.toSet
+        val keep = Seq("path", "partitionValues", "deletionVector", "size",
+          "modificationTime").filter(addFields)
+        actions.filter(col("add").isNotNull)
+          .select(keep.map(f => col(s"add.$f").as(f)): _*)
+          .collect().foreach { r =>
+            val dv = opt[Row](r, "deletionVector").map(d =>
+              DeletionVectors.DvDescriptor(d.getAs[String]("storageType"),
+                d.getAs[String]("pathOrInlineDv"), opt[Int](d, "offset").getOrElse(0),
+                d.getAs[Int]("sizeInBytes"), d.getAs[Long]("cardinality")))
+            val path = r.getAs[String]("path")
+            state(path) = AddFile(path,
+              opt[scala.collection.Map[String, String]](r, "partitionValues")
+                .map(_.toMap).getOrElse(Map.empty), dv,
+              opt[Long](r, "size").getOrElse(-1L),
+              opt[Long](r, "modificationTime").getOrElse(0L))
+          }
+      }
+      sidecars.toSeq
     }
 
     def sidecarPath(rel: String): String =
@@ -297,19 +243,24 @@ object DeltaLogReader {
     // one JSON action (commit line or v2 json-checkpoint line) folded
     // into the replay state
     def applyJsonAction(n: com.fasterxml.jackson.databind.JsonNode): Unit = {
+      def strings(a: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
+        Option(a).map(_.elements.asScala.map(_.asText).toSeq).getOrElse(Nil)
       if (n.has("metaData")) {
         val md = n.get("metaData")
-        schema = DataType.fromJson(md.get("schemaString").asText).asInstanceOf[StructType]
-        partCols = Option(md.get("partitionColumns"))
-          .map(_.elements.asScala.map(_.asText).toSeq).getOrElse(Nil)
-        Option(md.get("configuration"))
-          .flatMap(c => Option(c.get("delta.columnMapping.mode")))
-          .foreach(m => colMappingMode = m.asText)
+        setMeta(Option(md.get("id")).map(_.asText), md.get("schemaString").asText,
+          strings(md.get("partitionColumns")),
+          Option(md.get("configuration")).filterNot(_.isNull)
+            .map(_.fields.asScala.map(e => e.getKey -> e.getValue.asText).toMap)
+            .getOrElse(Map.empty))
       } else if (n.has("protocol")) {
         val p = n.get("protocol")
-        minReader = p.get("minReaderVersion").asInt
-        readerFeatures = Option(p.get("readerFeatures"))
-          .map(_.elements.asScala.map(_.asText).toSet).getOrElse(Set.empty)
+        setProtocol(p.get("minReaderVersion").asInt,
+          Option(p.get("minWriterVersion")).map(_.asInt),
+          strings(p.get("readerFeatures")).toSet,
+          strings(p.get("writerFeatures")).toSet)
+      } else if (n.has("txn")) {
+        val t = n.get("txn")
+        noteTxn(t.get("appId").asText, t.get("version").asLong)
       } else if (n.has("add")) {
         val a = n.get("add")
         // NullNode.asText() returns the STRING "null" — a null partition
@@ -332,7 +283,7 @@ object DeltaLogReader {
             .map(_.asLong).getOrElse(0L))
       } else if (n.has("remove")) {
         state.remove(n.get("remove").get("path").asText)
-      } // checkpointMetadata/commitInfo/txn actions carry no snapshot state
+      } // checkpointMetadata/commitInfo actions carry no snapshot state
     }
 
     val replayFrom: Long = cpVersion.filter(_ <= upTo) match {
@@ -355,49 +306,34 @@ object DeltaLogReader {
           case MultiPart(_, of) => Some(p -> of.toInt)
           case _ => None
         })
-        if (parts.nonEmpty) {
-          val of = parts.head._2
-          require(parts.size == of,
-            s"multi-part checkpoint at v$cv incomplete: " +
-              s"${parts.size} of $of parts present in $logDir")
-          foldCheckpointParquet(
-            graft.GraftSession.readParquet(spark, parts.head._1.toString, parts.tail.map(_._1.toString): _*))
-        }
-        val top0 = cpFiles.find(_.getName == s"$prefix.parquet")
-          .orElse(cpFiles.filterNot(p =>
-              MultiPart.findFirstIn(p.getName).isDefined)
-            .find(_.getName.endsWith(".parquet")))
-          .orElse(cpFiles.find(_.getName.endsWith(".json")))
-        val top = (if (parts.nonEmpty) None else Some(top0.getOrElse(
-          throw new IllegalArgumentException(
-            s"_last_checkpoint names version $cv but no $prefix* file exists " +
-              s"in $logDir")))).orNull
-        if (top != null) {
         val sidecars: Seq[String] =
-          if (top.getName.endsWith(".json")) {
-            // v2 JSON top-level: line-delimited actions (metaData,
-            // protocol, checkpointMetadata, sidecarFile, inline add)
-            val in = fs.open(top)
-            val lines =
-              try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-              finally in.close()
-            val sc = scala.collection.mutable.ArrayBuffer[String]()
-            lines.filter(_.trim.nonEmpty).foreach { line =>
-              val n = mapper.readTree(line)
-              if (n.has("sidecarFile"))
-                sc += n.get("sidecarFile").get("path").asText
-              else applyJsonAction(n)
-            }
-            sc.toSeq
+          if (parts.nonEmpty) {
+            val of = parts.head._2
+            require(parts.size == of,
+              s"multi-part checkpoint at v$cv incomplete: " +
+                s"${parts.size} of $of parts present in $logDir")
+            foldCheckpointParquet(graft.GraftSession.readParquet(spark,
+              parts.head._1.toString, parts.tail.map(_._1.toString): _*))
           } else {
-            val actions = graft.GraftSession.readParquet(spark, top.toString)
-            foldCheckpointParquet(actions)
-            sidecarsOf(actions)
+            val top = cpFiles.find(_.getName == s"$prefix.parquet")
+              .orElse(cpFiles.find(_.getName.endsWith(".parquet")))
+              .orElse(cpFiles.find(_.getName.endsWith(".json")))
+              .getOrElse(throw new IllegalArgumentException(
+                s"_last_checkpoint names version $cv but no $prefix* file " +
+                  s"exists in $logDir"))
+            if (top.getName.endsWith(".json")) {
+              // v2 JSON top-level: line-delimited actions (metaData,
+              // protocol, txn, checkpointMetadata, sidecarFile, inline add)
+              val nodes = jsonLines(fs, top).map(mapper.readTree)
+              nodes.foreach(applyJsonAction)
+              nodes.filter(_.has("sidecarFile"))
+                .map(_.get("sidecarFile").get("path").asText)
+            } else foldCheckpointParquet(
+              graft.GraftSession.readParquet(spark, top.toString))
           }
         if (sidecars.nonEmpty)
-          foldCheckpointParquet(
-            graft.GraftSession.readParquet(spark, sidecarPath(sidecars.head), sidecars.tail.map(sidecarPath): _*))
-        }
+          foldCheckpointParquet(graft.GraftSession.readParquet(spark,
+            sidecarPath(sidecars.head), sidecars.tail.map(sidecarPath): _*))
         cv + 1
       case None =>
         require(jsonVersions.nonEmpty && jsonVersions.min == 0L,
@@ -424,18 +360,14 @@ object DeltaLogReader {
           s"between $a and $b — refusing a silently-wrong snapshot")
       case _ => ()
     }
-    replaySet.foreach { v =>
-      val p = new Path(logDir, f"$v%020d.json")
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.filter(_.trim.nonEmpty).foreach(line =>
-        applyJsonAction(mapper.readTree(line)))
-    }
+    replaySet.foreach(v => jsonLines(fs, new Path(logDir, f"$v%020d.json"))
+      .foreach(line => applyJsonAction(mapper.readTree(line))))
     require(schema != null, s"no metaData action in log of $tablePath")
-    checkProtocol(tablePath, minReader, readerFeatures, colMappingMode)
-    (schema, partCols, state.values.toSeq, colMappingMode)
+    val snap = Snapshot(upTo, schema, partCols, metaId, configuration,
+      minReader, minWriter, readerFeatures, writerFeatures,
+      state.values.toSeq, txns.toMap)
+    checkProtocol(tablePath, snap)
+    snap
   }
 
   /** Reader features this implementation actually honors when a table
@@ -454,23 +386,22 @@ object DeltaLogReader {
   /** PROTOCOL.md reader-version rules: a reader MUST refuse tables whose
     * protocol demands capabilities it does not implement, instead of
     * degrading to wrong answers (the compressed-SAS refusal posture). */
-  private def checkProtocol(tablePath: String, minReader: Int,
-                            readerFeatures: Set[String],
-                            colMappingMode: String): Unit = {
-    require(minReader <= 3,
-      s"Delta table $tablePath requires minReaderVersion $minReader; " +
+  private def checkProtocol(tablePath: String, snap: Snapshot): Unit = {
+    val colMappingMode = snap.colMode
+    require(snap.minReader <= 3,
+      s"Delta table $tablePath requires minReaderVersion ${snap.minReader}; " +
         "this reader implements protocol versions 1-3")
     // mode `name` resolves via physicalName metadata in read(); mode
     // `id` resolves via parquet FIELD IDS (Spark's fieldId.read path,
-    // enabled per-scan in read()) — any other value is from a future
-    // spec revision and must refuse
+    // which read() enables session-wide — see its scaladoc) — any other
+    // value is from a future spec revision and must refuse
     require(colMappingMode == "none" || colMappingMode == "name" ||
         colMappingMode == "id",
       s"Delta table $tablePath uses column mapping mode '$colMappingMode' " +
         "(only 'none', 'name' and 'id' are supported — an unknown mode " +
         "would silently misread columns)")
-    if (minReader >= 3) {
-      val unsupported = readerFeatures -- supportedReaderFeatures
+    if (snap.minReader >= 3) {
+      val unsupported = snap.readerFeatures -- supportedReaderFeatures
       require(unsupported.isEmpty,
         s"Delta table $tablePath requires reader features " +
           s"${unsupported.toSeq.sorted.mkString("[", ", ", "]")} this reader " +
@@ -480,71 +411,12 @@ object DeltaLogReader {
     }
   }
 
-  /** Relative paths of the data files in the current snapshot (writer
-    * support: an Overwrite commit removes exactly these). */
-  private[graft] def activeFiles(spark: SparkSession, tablePath: String): Seq[String] =
-    snapshot(spark, tablePath, None)._3.map(_.path)
-
-  /** (schema, partitionColumns, columnMapping mode) at the latest
-    * version — metadata-only, for the streaming source's creation-time
-    * guards (mode "none"/"" = unmapped). */
-  private[sources] def tableMeta(spark: SparkSession, tablePath: String)
-      : (StructType, Seq[String], String) = {
-    val (s, pc, _, mode) = snapshot(spark, tablePath, None)
-    (s, pc, mode)
-  }
-
-  /** Live-file state for maintenance ops (OPTIMIZE): (schema,
-    * partitionColumns, (path, partitionValues, hasDeletionVector)). */
+  /** (schema, partitionColumns, (path, partitionValues,
+    * hasDeletionVector)) of the latest snapshot. */
   private[graft] def activeState(spark: SparkSession, tablePath: String)
       : (StructType, Seq[String], Seq[(String, Map[String, String], Boolean)]) = {
-    val (s, pc, files, _) = snapshot(spark, tablePath, None)
-    (s, pc, files.map(f => (f.path, f.partitionValues, f.dv.nonEmpty)))
-  }
-
-  /** [[activeState]] with the full deletion-vector descriptors — the
-    * DV-writing DML path needs them to merge prior vectors. */
-  private[graft] def activeStateDv(spark: SparkSession, tablePath: String)
-      : (StructType, Seq[String],
-         Seq[(String, Map[String, String], Option[DeletionVectors.DvDescriptor])]) = {
-    val (s, pc, files, _) = snapshot(spark, tablePath, None)
-    (s, pc, files.map(f => (f.path, f.partitionValues, f.dv)))
-  }
-
-  /** Resolved snapshot state for DV-unaware writers (RESTORE's file-set
-    * flip-back) — still refuses DV tables, whose vectors the caller
-    * would silently drop. */
-  private[graft] def snapshotState(spark: SparkSession, tablePath: String,
-                                   version: Option[Long])
-      : (StructType, Seq[String], Seq[(String, Map[String, String])]) = {
-    val (s, pc, files, _) = snapshot(spark, tablePath, version)
-    require(files.forall(_.dv.isEmpty),
-      s"this operation on a table with deletion vectors is not " +
-        s"supported: $tablePath (it would drop the vectors)")
-    (s, pc, files.map(f => (f.path, f.partitionValues)))
-  }
-
-  /** Resolved snapshot state WITH deletion-vector descriptors — the
-    * checkpoint writer carries them into the checkpoint rows. */
-  private[graft] def snapshotStateDv(spark: SparkSession, tablePath: String,
-                                     version: Option[Long])
-      : (StructType, Seq[String],
-         Seq[(String, Map[String, String], Option[DeletionVectors.DvDescriptor])]) = {
-    val (s, pc, files, _) = snapshot(spark, tablePath, version)
-    (s, pc, files.map(f => (f.path, f.partitionValues, f.dv)))
-  }
-
-  /** [[snapshotStateDv]] plus each file's log-recorded (size, modTime)
-    * — the log already carries add.size (PROTOCOL.md requires it), so
-    * maintenance passes need not stat 100k files; -1 size = the replay
-    * saw no size (legacy action) and the caller stats that file only. */
-  private[graft] def snapshotStateDvSized(spark: SparkSession,
-      tablePath: String, version: Option[Long])
-      : (StructType, Seq[String],
-         Seq[(String, Map[String, String],
-           Option[DeletionVectors.DvDescriptor], Long, Long)]) = {
-    val (s, pc, files, _) = snapshot(spark, tablePath, version)
-    (s, pc, files.map(f => (f.path, f.partitionValues, f.dv, f.size, f.modTime)))
+    val s = snapshot(spark, tablePath)
+    (s.schema, s.partCols, s.files.map(f => (f.path, f.partitionValues, f.dv.nonEmpty)))
   }
 
   /** Read the table at `version` (default: latest commit).
@@ -576,7 +448,8 @@ object DeltaLogReader {
            version: Option[Long] = None,
            maxLiteralPartitions: Int = 64): DataFrame = {
     import org.apache.spark.sql.functions.{input_file_name, regexp_replace}
-    val (schema, partCols, files, colMode) = snapshot(spark, tablePath, version)
+    val snap = snapshot(spark, tablePath, version)
+    val (schema, partCols, files) = (snap.schema, snap.partCols, snap.files)
     // column mapping: mode `name` scans by the fields' PHYSICAL names
     // (physicalName metadata) and the final select renames back; mode
     // `id` scans by parquet FIELD ID — the requested schema carries
@@ -588,7 +461,7 @@ object DeltaLogReader {
     // mapping metadata on a NESTED field refuses.
     val PhysKey = "delta.columnMapping.physicalName"
     val IdKey = "delta.columnMapping.id"
-    val byFieldId = colMode == "id"
+    val byFieldId = snap.colMode == "id"
     if (byFieldId) {
       require(schema.fields.forall(_.metadata.contains(IdKey)),
         s"Delta table $tablePath declares column mapping mode 'id' but " +
@@ -764,7 +637,8 @@ object DeltaLogReader {
     val logDir = new Path(tablePath, "_delta_log")
     val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // schema + protocol posture from the snapshot at the range end
-    val (schema, partCols, _, _) = snapshot(spark, tablePath, Some(hi))
+    val snap = snapshot(spark, tablePath, Some(hi))
+    val (schema, partCols) = (snap.schema, snap.partCols)
     require(partCols.isEmpty,
       s"readChanges supports unpartitioned tables (got partition " +
         s"columns ${partCols.mkString(", ")})")
@@ -776,12 +650,7 @@ object DeltaLogReader {
       StructField("_change_type", org.apache.spark.sql.types.StringType),
       StructField("_commit_version", org.apache.spark.sql.types.LongType)))
     val parts = versions.filter(v => v >= fromVersion && v <= hi).flatMap { v =>
-      val p = new Path(logDir, f"$v%020d.json")
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      val nodes = lines.filter(_.trim.nonEmpty).map(mapper.readTree)
+      val nodes = jsonLines(fs, new Path(logDir, f"$v%020d.json")).map(mapper.readTree)
       val cdc = nodes.filter(_.has("cdc"))
         .map(n => absolute(n.get("cdc").get("path").asText))
       // a DV commit re-adds a file whose rows did NOT all change, so the
@@ -853,9 +722,10 @@ object DeltaLogReader {
 
   /** metaData action JSON for a schema. `id`/`configuration` default to
     * the fixture values; COMMITS that re-emit metaData (RESTORE, ADD
-    * COLUMNS) must pass the table's CURRENT identity and configuration
-    * through [[currentMetaInfo]] — re-emitting empty configuration
-    * silently erased column-mapping mode / CDF enablement. */
+    * COLUMNS, a schema-changing overwrite) must pass the table's CURRENT
+    * identity and configuration ([[Snapshot]]'s `metaId` and
+    * `configuration`) — re-emitting empty configuration silently erased
+    * column-mapping mode / CDF enablement. */
   private[graft] def metaDataAction(schema: StructType,
                                     partCols: Seq[String],
                                     id: String = "graft-fixture",
@@ -867,52 +737,6 @@ object DeltaLogReader {
     }.mkString("{", ",", "}")
     s"""{"metaData":{"id":${mapper.writeValueAsString(id)},"format":{"provider":"parquet","options":{}},""" +
       s""""schemaString":$schemaStr,"partitionColumns":$parts,"configuration":$conf}}"""
-  }
-
-  /** The table's current metaData identity + configuration (latest
-    * metaData action from the json commits, falling back to the
-    * checkpoint tops). */
-  private[graft] def currentMetaInfo(spark: SparkSession, tablePath: String)
-      : (String, Map[String, String]) = {
-    val logDir = new Path(tablePath, "_delta_log")
-    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def fromNode(m: com.fasterxml.jackson.databind.JsonNode) = {
-      val conf = Option(m.get("configuration")).filterNot(_.isNull)
-        .map(_.fields.asScala.map(e => e.getKey -> e.getValue.asText).toMap)
-        .getOrElse(Map.empty[String, String])
-      (Option(m.get("id")).map(_.asText).getOrElse("graft-fixture"), conf)
-    }
-    val fromJson = tableVersions(spark, tablePath).reverse.view.flatMap { v =>
-      val f = new Path(logDir, f"$v%020d.json")
-      val in = fs.open(f)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toSeq finally in.close()
-      lines.reverseIterator.map(mapper.readTree)
-        .collectFirst { case n if n.has("metaData") => fromNode(n.get("metaData")) }
-    }.headOption
-    fromJson.orElse {
-      lastCheckpointVersion(spark, tablePath).flatMap { cv =>
-        val (pq, jsonTop) = checkpointTops(fs, logDir, cv)
-        val viaJson = jsonTop.flatMap { jt =>
-          val in = fs.open(jt)
-          val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toList finally in.close()
-          lines.filter(_.trim.nonEmpty).map(mapper.readTree)
-            .collectFirst { case n if n.has("metaData") => fromNode(n.get("metaData")) }
-        }
-        viaJson.orElse {
-          if (pq.isEmpty) None
-          else {
-            import org.apache.spark.sql.functions.{col, to_json}
-            val df = graft.GraftSession.readParquet(spark, pq.head.toString, pq.tail.map(_.toString): _*)
-            if (!df.columns.contains("metaData")) None
-            else df.filter(col("metaData").isNotNull)
-              .select(to_json(col("metaData"))).collect().headOption
-              .map(r => fromNode(mapper.readTree(r.getString(0))))
-          }
-        }
-      }
-    }.getOrElse(("graft-fixture", Map.empty))
   }
 
   /** Write `df` as ONE parquet file at tablePath/relName (fixture/spec

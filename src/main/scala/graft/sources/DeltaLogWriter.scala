@@ -50,22 +50,32 @@ object DeltaLogWriter {
   def write(df: DataFrame, tablePath: String,
             mode: SaveMode = SaveMode.Append,
             txn: Option[(String, Long)] = None): Long = {
+    val spark = df.sparkSession
+    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    write(df, tablePath, mode, txn,
+      Option.when(fs.exists(new Path(tablePath, "_delta_log")))(
+        DeltaLogReader.snapshot(spark, tablePath)))
+  }
+
+  /** [[write]] on top of the snapshot the caller already read (None: the
+    * table does not exist yet). */
+  private[sources] def write(df: DataFrame, tablePath: String, mode: SaveMode,
+      txn: Option[(String, Long)],
+      current: Option[DeltaLogReader.Snapshot]): Long = {
     require(mode == SaveMode.Append || mode == SaveMode.Overwrite,
       s"delta write supports Append/Overwrite, got $mode")
     val spark = df.sparkSession
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new Path(tablePath, "_delta_log"))
-    val (version, removeActions, dfOut, newMeta) =
-      if (!exists) (0L, Seq.empty[String], df, None)
-      else {
+    val (version, removeActions, dfOut, newMeta) = current match {
+      case None => (0L, Seq.empty[String], df, None)
+      case Some(snap) =>
         // appends must speak the existing table's dialect: partition
         // values live ONLY in the log (an add with empty partitionValues
         // reads back as null partition columns), and a column-mapped
         // table stores PHYSICAL names in its parquet (a logically-named
         // write reads back all-NULL) — refuse both, like optimize/DML
-        val (schema0, partCols0, files0) =
-          DeltaLogReader.activeStateDv(spark, tablePath)
-        require(partCols0.isEmpty,
+        val schema0 = snap.schema
+        require(snap.partCols.isEmpty,
           s"delta write to PARTITIONED table not supported: $tablePath " +
             "(partition values live only in the log; this writer would " +
             "null them)")
@@ -74,11 +84,8 @@ object DeltaLogWriter {
           s"delta write to column-mapped table not supported: $tablePath " +
             "(parquet stores physical names; a logically-named write " +
             "would read back null)")
-        DeltaDml.writerGate(spark, tablePath, schema0,
+        DeltaDml.writerGate(tablePath, snap,
           removesRows = mode == SaveMode.Overwrite)
-        val versions = DeltaLogReader.tableVersions(spark, tablePath) ++
-          DeltaLogReader.lastCheckpointVersion(spark, tablePath)
-        val next = versions.max + 1
         val sameSchema =
           df.schema.fields.map(f => (f.name.toLowerCase, f.dataType)).toSeq ==
             schema0.fields.map(f => (f.name.toLowerCase, f.dataType)).toSeq
@@ -88,7 +95,8 @@ object DeltaLogWriter {
             // overwriteSchema) — but then the commit must re-emit
             // metaData, or reads project the OLD schema over the new
             // parquet and renamed columns come back all-NULL
-            (df, if (sameSchema) None else Some(df.schema))
+            (df, Option.when(!sameSchema)(DeltaLogReader.metaDataAction(
+              df.schema, Nil, snap.metaId, snap.configuration)))
           else {
             // append: align by name (case-insensitive) and cast to the
             // table's types — a reordered or mistyped DataFrame used to
@@ -109,10 +117,10 @@ object DeltaLogWriter {
         // in a spec-keyed replay is (path, dvUniqueId)
         val toRemove =
           if (mode == SaveMode.Overwrite)
-            DeltaDml.removeActions(files0.map(_._1),
-              files0.map(f => f._1 -> f._3).toMap.getOrElse(_, None))
+            DeltaDml.removeActions(snap.files.map(_.path),
+              snap.files.map(f => f.path -> f.dv).toMap.getOrElse(_, None))
           else Seq.empty
-        (next, toRemove, out, meta)
+        (snap.version + 1, toRemove, out, meta)
       }
 
     // stage the parquet parts, then move each into the table root under
@@ -135,13 +143,10 @@ object DeltaLogWriter {
     fs.delete(staging, true)
 
     val head =
-      if (!exists) Seq(
+      if (current.isEmpty) Seq(
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
         DeltaLogReader.metaDataAction(df.schema, Nil))
-      else newMeta.toSeq.map { s =>
-        val (metaId, metaConf) = DeltaLogReader.currentMetaInfo(spark, tablePath)
-        DeltaLogReader.metaDataAction(s, Nil, metaId, metaConf)
-      }
+      else newMeta.toSeq
     val txnActions = txn.toSeq.map { case (appId, v) =>
       s"""{"txn":{"appId":"$appId","version":$v}}"""
     }
@@ -185,9 +190,9 @@ object DeltaLogWriter {
                zorderBy: Seq[String] = Nil): (Long, Int, Int) = {
     import org.apache.spark.sql.functions.{broadcast, col, regexp_replace}
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schema, partCols, files) =
-      DeltaLogReader.snapshotStateDvSized(spark, tablePath, None)
-    require(partCols.isEmpty,
+    val snap = DeltaLogReader.snapshot(spark, tablePath)
+    val schema = snap.schema
+    require(snap.partCols.isEmpty,
       s"OPTIMIZE on partitioned table not supported: $tablePath " +
         s"(partition values live only in the log; a rewrite would drop them)")
     require(schema.fields.forall(f =>
@@ -197,14 +202,13 @@ object DeltaLogWriter {
         "rewrite the table as NULLs)")
     // a compaction only MOVES rows (dataChange=false), which append-only
     // tables accept — but the other writer obligations still gate
-    DeltaDml.writerGate(spark, tablePath, schema, removesRows = false)
-    val currentVersion = (DeltaLogReader.tableVersions(spark, tablePath) ++
-      DeltaLogReader.lastCheckpointVersion(spark, tablePath)).max
+    DeltaDml.writerGate(tablePath, snap, removesRows = false)
+    val currentVersion = snap.version
 
     // sizes from the log's add actions (stat only legacy actions)
-    val sized = files.map { case (p, _, dv, sz, _) =>
-      val abs = new Path(DeltaLogReader.decodedAbsolute(tablePath, p))
-      (p, abs, if (sz >= 0) sz else fs.getFileStatus(abs).getLen, dv)
+    val sized = snap.files.map { f =>
+      val abs = new Path(DeltaLogReader.decodedAbsolute(tablePath, f.path))
+      (f.path, abs, if (f.size >= 0) f.size else fs.getFileStatus(abs).getLen, f.dv)
     }
     // ZORDER BY is a clustering rewrite: every live file participates
     // (a file's rows scatter across the whole curve), not just small
@@ -284,127 +288,48 @@ object DeltaLogWriter {
   def lastTxnVersion(spark: org.apache.spark.sql.SparkSession,
                      tablePath: String, appId: String): Option[Long] = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(tablePath, "_delta_log"))) return None
+    val logDir = new Path(tablePath, "_delta_log")
+    if (!fs.exists(logDir)) return None
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val versions = DeltaLogReader.tableVersions(spark, tablePath)
     // NEWEST-first with early exit: txn versions for one appId are
     // monotone (each commit carries the latest), so the first hit IS the
     // max — the oldest-first full scan re-parsed every commit file per
     // micro-batch, O(n²) driver I/O over a continuous stream's life
-    val jsonTxns = versions.sorted.reverse.iterator.map { v =>
-      val p = new Path(new Path(tablePath, "_delta_log"), f"$v%020d.json")
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.filter(_.contains("\"txn\"")).flatMap { line =>
-        val n = mapper.readTree(line)
-        Option(n.get("txn"))
-          .filter(_.get("appId").asText == appId)
-          .map(_.get("version").asLong)
-      }
-    }.find(_.nonEmpty).getOrElse(Nil)
-    val cpTxns = DeltaLogReader.lastCheckpointVersion(spark, tablePath).toSeq
-      .flatMap { cv =>
-        import org.apache.spark.sql.functions.col
-        // the checkpoint may be classic, MULTI-PART, or v2 (UUID parquet
-        // or json top-level) — reading the classic name unconditionally
-        // crashed the streaming sink on every micro-batch of such tables
-        val logDir = new Path(tablePath, "_delta_log")
-        val (pq, jsonTop) = DeltaLogReader.checkpointTops(fs, logDir, cv)
-        val fromJsonTop = jsonTop.toSeq.flatMap { jt =>
-          val in = fs.open(jt)
-          val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toList finally in.close()
-          lines.filter(_.contains("\"txn\"")).flatMap { line =>
-            val n = mapper.readTree(line)
-            Option(n.get("txn")).filter(_.get("appId").asText == appId)
+    val fromJson = DeltaLogReader.tableVersions(spark, tablePath).reverseIterator
+      .flatMap { v =>
+        DeltaLogReader.jsonLines(fs, new Path(logDir, f"$v%020d.json"))
+          .filter(_.contains("\"txn\"")).flatMap { line =>
+            Option(mapper.readTree(line).get("txn"))
+              .filter(_.get("appId").asText == appId)
               .map(_.get("version").asLong)
-          }
-        }
-        val fromPq =
-          if (pq.isEmpty) Seq.empty
-          else {
-            val actions = spark.read.parquet(pq.map(_.toString): _*)
-            if (!actions.columns.contains("txn")) Seq.empty
-            else actions.filter(col("txn").isNotNull)
-              .filter(col("txn.appId") === appId)
-              .select("txn.version").collect().map(_.getLong(0)).toSeq
-          }
-        fromJsonTop ++ fromPq
-      }
-    (jsonTxns ++ cpTxns).maxOption
+          }.maxOption
+      }.nextOption()
+    // no hit in the surviving commits: only a checkpoint can still hold
+    // it (without one the scan above saw the whole log)
+    fromJson.orElse(DeltaLogReader.lastCheckpointVersion(spark, tablePath)
+      .flatMap(_ => DeltaLogReader.snapshot(spark, tablePath).txns.get(appId)))
   }
 
   /** Compact the log: write a `%020d.checkpoint.parquet` holding the
-    * RESOLVED snapshot (metaData + one add row per live file + the max
-    * txn row per appId), point `_last_checkpoint` at it, and optionally
-    * vacuum the JSON commits it covers. Readers bootstrap from the
-    * checkpoint and replay only newer commits — the mechanism that
-    * keeps log replay O(live files), not O(history), at 100 TB. */
+    * RESOLVED snapshot (protocol, metaData + one add row per live file +
+    * the max txn row per appId), point `_last_checkpoint` at it, and
+    * optionally vacuum the JSON commits it covers. Readers bootstrap
+    * from the checkpoint and replay only newer commits — the mechanism
+    * that keeps log replay O(live files), not O(history), at 100 TB. */
   def checkpoint(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                  vacuumJson: Boolean = false): Long = {
-    val jsonVersions = DeltaLogReader.tableVersions(spark, tablePath)
-    val cv = (jsonVersions ++ DeltaLogReader.lastCheckpointVersion(spark, tablePath)).max
-    val (schema, partCols, files) =
-      DeltaLogReader.snapshotStateDvSized(spark, tablePath, None)
-    // carry forward idempotence bookkeeping: max txn per appId
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val snap = DeltaLogReader.snapshot(spark, tablePath)
+    val cv = snap.version
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val txns = scala.collection.mutable.Map[String, Long]()
-    DeltaLogReader.lastCheckpointVersion(spark, tablePath).foreach { prev =>
-      import org.apache.spark.sql.functions.col
-      // the prior checkpoint may be classic, MULTI-PART, or v2
-      // (UUID-named parquet or json top-level) — checkpointTops resolves
-      // ALL parquet parts; picking one arbitrary part silently dropped
-      // the txn rows living in the others (a restarted streaming writer
-      // would then re-commit an applied batch)
-      val logDir = new Path(tablePath, "_delta_log")
-      val (pq, jsonTop) = DeltaLogReader.checkpointTops(fs, logDir, prev)
-      jsonTop.foreach { t =>
-        val in = fs.open(t)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        lines.filter(_.contains("\"txn\"")).foreach { line =>
-          Option(mapper.readTree(line).get("txn")).foreach { x =>
-            val app = x.get("appId").asText
-            txns(app) = math.max(x.get("version").asLong,
-              txns.getOrElse(app, Long.MinValue))
-          }
-        }
-      }
-      if (pq.nonEmpty) {
-        val prevCp = spark.read.parquet(pq.map(_.toString): _*)
-        if (prevCp.columns.contains("txn"))
-          prevCp.filter(col("txn").isNotNull).select("txn.appId", "txn.version")
-            .collect().foreach(r => txns(r.getString(0)) =
-              math.max(r.getLong(1), txns.getOrElse(r.getString(0), Long.MinValue)))
-      }
-    }
-    jsonVersions.foreach { v =>
-      val p = new Path(new Path(tablePath, "_delta_log"), f"$v%020d.json")
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.filter(_.contains("\"txn\"")).foreach { line =>
-        val n = mapper.readTree(line)
-        Option(n.get("txn")).foreach { t =>
-          val app = t.get("appId").asText
-          txns(app) = math.max(t.get("version").asLong,
-            txns.getOrElse(app, Long.MinValue))
-        }
-      }
-    }
     import spark.implicits._
     // a DV-bearing snapshot checkpoints with the vectors carried in the
     // add rows; the checkpoint PRESERVES the table's declared protocol
     // (merging in the DV feature when vectors are present) rather than
     // synthesizing one — a replacement would drop features other writers
     // declared
-    val hasDv = files.exists(_._3.nonEmpty)
-    val (pr, pw, rf, wf) = DeltaLogReader.protocolInfo(spark, tablePath)
+    val hasDv = snap.files.exists(_.dv.nonEmpty)
+    val (pr, pw, rf, wf) = (snap.minReader, snap.minWriter,
+      snap.readerFeatures, snap.writerFeatures)
     val protocolRow =
       if (hasDv || rf.nonEmpty || wf.nonEmpty)
         CpProtocol(math.max(pr, if (hasDv) 3 else pr),
@@ -417,14 +342,13 @@ object DeltaLogWriter {
     // silently destroyed delta.appendOnly / CDF / column-mapping settings
     // (and the table's unique id) once vacuumJson removed the JSON
     // commits that held the real metaData
-    val (metaId, metaConf) = DeltaLogReader.currentMetaInfo(spark, tablePath)
     val rows =
       Seq(CpRow(Some(protocolRow), None, None, None),
-        CpRow(None, Some(CpMeta(metaId, schema.json, partCols, metaConf)),
-          None, None)) ++
-      txns.toSeq.sortBy(_._1).map { case (a, v) =>
+        CpRow(None, Some(CpMeta(snap.metaId, snap.schema.json, snap.partCols,
+          snap.configuration)), None, None)) ++
+      snap.txns.toSeq.sortBy(_._1).map { case (a, v) =>
         CpRow(None, None, None, Some(CpTxn(a, v))) } ++
-      files.map { case (p, pv, dv, sz, mt) =>
+      snap.files.map { case DeltaLogReader.AddFile(p, pv, dv, sz, mt) =>
         // real size + mtime (PROTOCOL.md: add.size is the file's size;
         // external engines plan scans from it — zero read as an empty
         // table elsewhere once the checkpoint is the only metadata) and
@@ -450,7 +374,7 @@ object DeltaLogWriter {
     try os.write(s"""{"version":$cv,"size":${rows.size}}""".getBytes("UTF-8"))
     finally os.close()
     if (vacuumJson)
-      jsonVersions.filter(_ <= cv).foreach { v =>
+      DeltaLogReader.tableVersions(spark, tablePath).filter(_ <= cv).foreach { v =>
         fs.delete(new Path(new Path(tablePath, "_delta_log"), f"$v%020d.json"), false)
       }
     cv

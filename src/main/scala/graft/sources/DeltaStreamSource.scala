@@ -147,13 +147,10 @@ private[sources] object DeltaStreamSource {
           org.apache.spark.sql.types.LongType)))
     }
     else
-      // metadata-only: building read()'s full scan plan (checkpoint
-      // parse + add-file reconstruction + partition grouping) twice per
-      // stream start — once for sourceSchema, once for the source's own
-      // schema val — just to answer a schema question is the pathology
-      // the Iceberg twin's loadMeta shape avoids; snapshot() still runs
-      // the protocol guards
-      DeltaLogReader.tableMeta(spark, path)._1
+      // metadata-only: read()'s full scan plan (partition grouping, DV
+      // joins) is not needed to answer a schema question; snapshot()
+      // still runs the protocol guards
+      DeltaLogReader.snapshot(spark, path).schema
   }
 }
 
@@ -174,26 +171,28 @@ class DeltaStreamSource(sqlContext: SQLContext,
   private val cdf = DeltaStreamSource.cdfMode(parameters)
   private val mapper = new ObjectMapper()
 
-  override val schema: StructType =
-    DeltaStreamSource.tableSchema(sqlContext, parameters)
-
   // non-CDF incremental batches read add-file parquet DIRECTLY, so the
   // source needs the partition columns up front (partition values live
   // in the LOG, never in the data files — a bare schema'd scan streamed
   // them as all-NULL) and must refuse column mapping (the files carry
   // PHYSICAL column names; a logical-name scan silently reads all-NULL
-  // data columns). CDF mode delegates both to readChanges' own guards.
-  private val partCols: Seq[String] =
-    if (cdf) Nil
+  // data columns). One log read at start serves the schema and both
+  // guards. CDF mode delegates the guards to readChanges' own.
+  private val (appendSchema, partCols): (Option[StructType], Seq[String]) =
+    if (cdf) (None, Nil)
     else {
-      val (_, pc, mode) = DeltaLogReader.tableMeta(spark, path)
+      val snap = DeltaLogReader.snapshot(spark, path)
+      val mode = snap.colMode
       require(mode == "none" || mode.isEmpty,
         s"graft-delta stream: column-mapping mode '$mode' on $path is " +
           "not supported by the append stream (data files carry " +
           "physical column names — a logical-name scan would stream " +
           "all-NULL rows); read batches via DeltaLogReader.read")
-      pc
+      (Some(snap.schema), snap.partCols)
     }
+
+  override val schema: StructType = appendSchema
+    .getOrElse(DeltaStreamSource.tableSchema(sqlContext, parameters))
 
   private val maxFilesPerTrigger = parameters.get("maxFilesPerTrigger").map(_.toInt)
 

@@ -146,10 +146,12 @@ object DmlSql {
   /** delta-spark posture: once a table carries deletion vectors (or the
     * session opts in via graft.delta.dv), DELETE and UPDATE write DVs —
     * O(touched positions) instead of a file rewrite; the copy-on-write
-    * path refuses DV-bearing tables outright. */
-  private def deltaUsesDv(spark: SparkSession, path: String): Boolean =
+    * path refuses DV-bearing tables outright. `snap` is the snapshot the
+    * statement then runs against, so the log is read once. */
+  private def deltaUsesDv(spark: SparkSession,
+                          snap: DeltaLogReader.Snapshot): Boolean =
     spark.conf.getOption("graft.delta.dv").exists(_.equalsIgnoreCase("true")) ||
-      DeltaLogReader.activeState(spark, path)._3.exists(_._3)
+      snap.files.exists(_.dv.nonEmpty)
 
   // ---- commands -------------------------------------------------------
 
@@ -159,11 +161,12 @@ object DmlSql {
     val path = tablePathOf(spark, target, parseIdent)
     formatOf(spark, path) match {
       case DeltaT =>
-        if (deltaUsesDv(spark, path)) {
-          val (v, n) = DeltaDml.deleteDv(spark, path, expr(cond))
+        val snap = DeltaLogReader.snapshot(spark, path)
+        if (deltaUsesDv(spark, snap)) {
+          val (v, n) = DeltaDml.dvDml(spark, path, snap, expr(cond), None)
           result(s"$n rows deleted from $path (delta v$v, deletion vectors)")
         } else {
-          val (v, n) = DeltaDml.delete(spark, path, expr(cond))
+          val (v, n) = DeltaDml.delete(spark, path, snap, expr(cond))
           result(s"$n rows deleted from $path (delta v$v, copy-on-write)")
         }
       case IcebergT =>
@@ -192,11 +195,12 @@ object DmlSql {
       .map { case (k, e) => k -> expr(e) }
     formatOf(spark, path) match {
       case DeltaT =>
-        if (deltaUsesDv(spark, path)) {
-          val (v, n) = DeltaDml.updateDv(spark, path, expr(cond), set)
+        val snap = DeltaLogReader.snapshot(spark, path)
+        if (deltaUsesDv(spark, snap)) {
+          val (v, n) = DeltaDml.dvDml(spark, path, snap, expr(cond), Some(set))
           result(s"$n rows updated in $path (delta v$v, deletion vectors)")
         } else {
-          val (v, n) = DeltaDml.update(spark, path, expr(cond), set)
+          val (v, n) = DeltaDml.update(spark, path, snap, expr(cond), set)
           result(s"$n rows updated in $path (delta v$v, copy-on-write)")
         }
       case IcebergT =>
@@ -280,13 +284,13 @@ object DmlSql {
     val BySourceUpd =
       """(?is)\s*NOT\s+MATCHED\s+BY\s+SOURCE\s+(?:AND\s+(.+?)\s+)?THEN\s+UPDATE\s+SET\s+(.+?)\s*""".r
 
-    // lazy: only SET * / INSERT * consume it — the common explicit-
-    // assignment MERGE must not pay a Delta log replay for nothing
+    // the one Delta log read the statement makes: SET * / INSERT * take
+    // the schema from it and the merge runs against it (a snapshot, not
+    // read(): the schema needs no scan-plan construction, and read()
+    // carries the fieldId session-conf side effect for id-mode tables)
+    lazy val deltaSnap = DeltaLogReader.snapshot(spark, path)
     lazy val targetSchema = fmt match {
-      // activeState, not read(): the schema needs no scan-plan
-      // construction (and read() carries the fieldId session-conf side
-      // effect for id-mode tables)
-      case DeltaT   => DeltaLogReader.activeState(spark, path)._1
+      case DeltaT   => deltaSnap.schema
       case IcebergT => IcebergTable.loadMeta(spark, path).schema
       case PaimonT  => PaimonTable.loadSchema(spark, path).schema
     }
@@ -351,13 +355,13 @@ object DmlSql {
         s"MERGE: unsupported clause: WHEN $other")
     }
 
-    val mergeFn = fmt match {
-      case DeltaT   => DeltaDml.merge _
-      case IcebergT => IcebergDml.merge _
-      case PaimonT  => PaimonDml.merge _
+    val t = tAlias.getOrElse("t")
+    val stats = fmt match {
+      case DeltaT   =>
+        DeltaDml.merge(spark, path, deltaSnap, source, onCond, mc, t, srcAlias2)
+      case IcebergT => IcebergDml.merge(spark, path, source, onCond, mc, t, srcAlias2)
+      case PaimonT  => PaimonDml.merge(spark, path, source, onCond, mc, t, srcAlias2)
     }
-    val stats = mergeFn(spark, path, source, onCond, mc,
-      tAlias.getOrElse("t"), srcAlias2)
     val fmtName = fmt match {
       case DeltaT => "delta v"; case IcebergT => "iceberg snapshot "
       case PaimonT => "paimon snapshot "
@@ -410,11 +414,14 @@ object DmlSql {
       else org.apache.spark.sql.SaveMode.Append
     val (schema, append): (org.apache.spark.sql.types.StructType,
         DataFrame => String) =
-      if (has("_delta_log"))
-        (DeltaLogReader.read(spark, path).schema, d => {
-          val v = DeltaLogWriter.write(d, path, mode)
+      if (has("_delta_log")) {
+        // one log read: the schema and the commit come from one snapshot
+        val snap = DeltaLogReader.snapshot(spark, path)
+        (snap.schema, d => {
+          val v = DeltaLogWriter.write(d, path, mode, None, Some(snap))
           s"delta v$v"
         })
+      }
       else if (isIcebergDir(fs, p)) {
         val meta = IcebergTable.loadMeta(spark, path)
         (meta.schema, d => {

@@ -77,7 +77,9 @@ object IcebergDml {
     val meta = IcebergTable.loadMeta(spark, table)
     val m = MergePlan(clauses, meta.schema, source, on, tAlias, sAlias)
     try {
-      val visible = IcebergTable.read(spark, table)
+      // persisted: the visible rows feed the counts, the insert anti-join
+      // and the updated versions appended after the delete commit
+      val visible = m.cache(IcebergTable.read(spark, table))
       val current = meta.currentSnapshotId.getOrElse(0L)
       // raw data-file scan with (file, pos) row identity — the _metadata
       // columns are pinned to THIS scan before any join, so a file-backed
@@ -211,7 +213,10 @@ object PaimonDml {
           s"MERGE INSERT must assign every primary-key column — missing: " +
             noKey.mkString(", "))
       }
-      val visible = PaimonTable.read(spark, table)
+      // persisted: the LSM merge-on-read shuffles the whole table, and
+      // its rows feed the ambiguity check, the counts, the -D keys, the
+      // +U rows, the key-clash probe and the insert anti-join
+      val visible = m.cache(PaimonTable.read(spark, table))
       val current = currentSnapshot(spark, table)
       val joined = m.joined(visible)
       m.requireSingleMatch(joined, pks.map(k => col(s"$tAlias.$k")))

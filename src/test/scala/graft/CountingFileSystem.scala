@@ -2,13 +2,15 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.Path
 
 /** Local filesystem under a `countfs://` scheme that RECORDS every
   * open() — planning-I/O assertions (e.g. "the kafka source's
-  * endOffsets opens ONLY the active segment") read the log. Shared
-  * static state is fine: tests run in one JVM (local mode). */
-class CountingFileSystem extends RawLocalFileSystem {
+  * endOffsets opens ONLY the active segment", "a Delta statement opens
+  * each log commit once") read the log. Shared static state is fine:
+  * tests run in one JVM (local mode). Writes set permissions without
+  * forking (see NioRawLocalFileSystem). */
+class CountingFileSystem extends graft.sources.NioRawLocalFileSystem {
   override def getUri: URI = URI.create("countfs:///")
   override def open(f: Path, bufferSize: Int)
       : org.apache.hadoop.fs.FSDataInputStream = {

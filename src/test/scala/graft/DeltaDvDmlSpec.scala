@@ -60,9 +60,9 @@ class DeltaDvDmlSpec extends AnyFunSuite {
     assert(n1 == 20L && n2 == 10L)
     assert(keys(base) == (31L to 100L).toSet)
     // one descriptor per file: the replacement superseded the first DV
-    val (_, _, files) = DeltaLogReader.activeStateDv(spark, base)
-    assert(files.size == 1 && files.head._3.isDefined)
-    assert(files.head._3.get.cardinality == 30L)
+    val files = DeltaLogReader.snapshot(spark, base).files
+    assert(files.size == 1 && files.head.dv.isDefined)
+    assert(files.head.dv.get.cardinality == 30L)
   }
 
   test("updateDv: old versions die under a DV, new versions append; " +
@@ -157,8 +157,8 @@ class DeltaDvDmlSpec extends AnyFunSuite {
     // back to v0: the DV clears entirely
     DeltaDml.restore(spark, base, 0L)                                     // v4
     assert(keys(base) == (1L to 40L).toSet)
-    val (_, _, files) = DeltaLogReader.activeStateDv(spark, base)
-    assert(files.forall(_._3.isEmpty))
+    val files = DeltaLogReader.snapshot(spark, base).files
+    assert(files.forall(_.dv.isEmpty))
   }
 
   test("no-match deleteDv commits nothing; works across multi-file tables") {
@@ -173,8 +173,8 @@ class DeltaDvDmlSpec extends AnyFunSuite {
     assert(keys(base) == (1L to 200L).filterNot(_ % 5 == 2).toSet)
     // only files holding g==2 rows got DVs... every file does here, but
     // each carries exactly its own dead positions
-    val (_, _, files) = DeltaLogReader.activeStateDv(spark, base)
-    assert(files.flatMap(_._3).map(_.cardinality).sum == 40L)
+    val files = DeltaLogReader.snapshot(spark, base).files
+    assert(files.flatMap(_.dv).map(_.cardinality).sum == 40L)
   }
 
   test("remove actions carry the superseded DV descriptor (PROTOCOL.md " +

@@ -190,7 +190,8 @@ class DeltaHardeningSpec extends AnyFunSuite {
     // the ONLY metaData — the regression synthesized id="graft" with an
     // empty configuration, silently dropping appendOnly enforcement
     DeltaLogWriter.checkpoint(spark, base, vacuumJson = true)
-    val (id, conf) = DeltaLogReader.currentMetaInfo(spark, base)
+    val snap = DeltaLogReader.snapshot(spark, base)
+    val (id, conf) = (snap.metaId, snap.configuration)
     assert(id == "my-table-id", id)
     assert(conf.get("delta.appendOnly").contains("true"), conf)
     // the enforcement itself still gates post-vacuum

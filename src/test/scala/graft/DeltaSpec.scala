@@ -404,7 +404,7 @@ class DeltaSpec extends AnyFunSuite {
       df.filter($"k" > 10 && $"k" <= 20), base)
     val live = DeltaLogReader.read(spark, base)
     assert(live.count() == 20)
-    val files = graft.sources.DeltaLogReader.activeFiles(spark, base)
+    val files = graft.sources.DeltaLogReader.snapshot(spark, base).files.map(_.path)
     // hand-build the v2 checkpoint at version 1: parquet SIDECAR with
     // the add actions, UUID-named JSON top-level with protocol/
     // metaData/checkpointMetadata/sidecarFile, _last_checkpoint hint
@@ -519,7 +519,7 @@ class DeltaSpec extends AnyFunSuite {
     DeltaLogWriter.write(df.filter(col("k") > 20), base)
     val before = DeltaLogReader.read(spark, base)
       .orderBy("k").collect().map(_.toSeq)
-    val filesBefore = graft.sources.DeltaLogReader.activeFiles(spark, base).size
+    val filesBefore = graft.sources.DeltaLogReader.snapshot(spark, base).files.map(_.path).size
     assert(filesBefore >= 3)
 
     val (v, compacted, bins) = DeltaLogWriter.optimize(spark, base,
@@ -528,7 +528,7 @@ class DeltaSpec extends AnyFunSuite {
     // identical rows, one live file
     assert(DeltaLogReader.read(spark, base).orderBy("k").collect()
       .map(_.toSeq).toSeq === before.toSeq)
-    assert(DeltaLogReader.activeFiles(spark, base).size === 1)
+    assert(DeltaLogReader.snapshot(spark, base).files.size === 1)
     // time travel to a pre-optimize version resolves the original files
     assert(DeltaLogReader.read(spark, base, version = Some(2L))
       .orderBy("k").collect().map(_.toSeq).toSeq === before.toSeq)
@@ -565,8 +565,8 @@ class DeltaSpec extends AnyFunSuite {
     graft.sources.DeltaDml.deleteDv(spark, base2, col("k") % 5 === 0)
     val (v2, compacted, bins) = DeltaLogWriter.optimize(spark, base2)
     assert(compacted == 1 && bins >= 1)
-    val (_, _, after) = DeltaLogReader.activeStateDv(spark, base2)
-    assert(after.forall(_._3.isEmpty), "OPTIMIZE must purge DVs")
+    val after = DeltaLogReader.snapshot(spark, base2).files
+    assert(after.forall(_.dv.isEmpty), "OPTIMIZE must purge DVs")
     assert(DeltaLogReader.read(spark, base2)
       .select("k").collect().map(_.getLong(0)).toSet ==
       (1L to 50L).filterNot(_ % 5 == 0).toSet)
