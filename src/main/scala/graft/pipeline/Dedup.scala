@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.PlanShim
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
+import graft.sources.StagedFiles
 
 /** Deduplication operators designed for the 100 TB regime.
   *
@@ -473,8 +474,9 @@ object Dedup {
       // repin the family and mix incomparable band rows forever. The
       // loser now validates against the winner's pin and refuses loudly
       // BEFORE its batch commits.
-      if (!publishIfAbsent(fs, paramsPath,
-          s"""{"numHashes":$numHashes,"bands":$bands}""")) validatePin()
+      if (!StagedFiles.publishIfAbsent(fs, paramsPath,
+          s"""{"numHashes":$numHashes,"bands":$bands}""".getBytes("UTF-8")))
+        validatePin()
     }
     // batch-list commit: versioned put-if-absent via [[commitIndexBatch]]
     // (atomic full-content publish — the old read-modify-write over one
@@ -489,61 +491,9 @@ object Dedup {
     pairs
   }
 
-  /** Publish `json` at `dst` iff absent, with the FULL content visible
-    * atomically — never a torn/empty file at the destination:
-    *
-    *  - local filesystems: write a tmp file, then PUBLISH via
-    *    Files.createLink (link(2) is an atomic no-replace — the one
-    *    POSIX primitive that both refuses an existing target and makes
-    *    complete content visible in one step)
-    *  - other filesystems: write a tmp file, then a NO-REPLACE rename
-    *    (atomic full-content publish on HDFS; Hadoop's rename contract
-    *    fails on an existing destination). The old claim-then-write
-    *    (create(dst, false) then write) had an UNBOUNDED torn window: a
-    *    GC-stalled writer's empty claim could be skipped by a reader's
-    *    retry-then-fallback and its batch orphaned forever.
-    *
-    * Returns false when dst already existed (the caller lost the race). */
-  private def publishIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
-                              dst: org.apache.hadoop.fs.Path,
-                              json: String): Boolean = {
-    val tmp = new org.apache.hadoop.fs.Path(dst.getParent,
-      s".${java.util.UUID.randomUUID()}.tmp")
-    val os = fs.create(tmp, true)
-    try os.write(json.getBytes("UTF-8")) finally os.close()
-    val won =
-      if (Option(fs.getScheme).contains("file")) {
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(dst.toUri.getPath),
-            java.nio.file.Paths.get(tmp.toUri.getPath))
-          true
-        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      } else {
-        // non-local: exists+rename is CHECK-THEN-ACT — atomic on HDFS
-        // (rename fails on an existing dst) but NOT on object stores
-        // (copy+delete; two "winners" possible, last PUT survives). A
-        // READBACK verify closes that hole under read-after-write
-        // consistency: only the writer whose bytes actually survived
-        // claims the win; the other retries at the next version, so no
-        // committed batch ever silently drops off the list.
-        val renamed = !fs.exists(dst) && fs.rename(tmp, dst)
-        renamed && {
-          val in = fs.open(dst)
-          val back =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          back == json
-        }
-      }
-    // on a successful rename the tmp is consumed; delete is a no-op then
-    fs.delete(tmp, false)
-    won
-  }
-
   /** Commit `batchId` onto the index's versioned batch list — shared by
     * the minhash and simhash indexes. The list content is published
-    * atomically-if-absent via [[publishIfAbsent]]; a losing writer
+    * atomically-if-absent via [[StagedFiles.publishIfAbsent]]; a losing writer
     * re-reads the winner's list and retries above it. */
   private def commitIndexBatch(fs: org.apache.hadoop.fs.FileSystem,
                                indexDir: String, batchId: String,
@@ -562,7 +512,7 @@ object Dedup {
       val listJson = (cur :+ batchId)
         .map(b => "\"" + b + "\"").mkString("{\"batches\":[", ",", "]}")
       val dst = new org.apache.hadoop.fs.Path(listsDir, f"${ver + 1}%010d.json")
-      val won = publishIfAbsent(fs, dst, listJson)
+      val won = StagedFiles.publishIfAbsent(fs, dst, listJson.getBytes("UTF-8"))
       if (won) done = true
       else {
         val (v2, c2) = readBatchList(fs, indexDir)
@@ -687,8 +637,8 @@ object Dedup {
     if (!exists) {
       // put-if-absent + validate-on-loss, as in minhashIndexAppend: a
       // stale exists flag must never let a racing first appender repin
-      if (!publishIfAbsent(fs, paramsPath,
-          """{"algo":"simhash64","blocks":4}""")) validatePin()
+      if (!StagedFiles.publishIfAbsent(fs, paramsPath,
+          """{"algo":"simhash64","blocks":4}""".getBytes("UTF-8"))) validatePin()
     }
     commitIndexBatch(fs, indexDir, batchId, listVersion, committed, "simhash")
     pairs

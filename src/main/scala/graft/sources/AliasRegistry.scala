@@ -83,12 +83,8 @@ object AliasRegistry {
         n.put("user", a.user); n.put("isPublic", a.isPublic)
       }
     }
-    val tmp = new Path(dir, s".$FileName.tmp")
-    val out = f.create(tmp, true)
-    try out.write(mapper.writeValueAsBytes(root)) finally out.close()
     val target = new Path(dir, FileName)
-    if (f.exists(target)) f.delete(target, false)
-    require(f.rename(tmp, target), s"atomic rename failed for $target")
+    StagedFiles.replace(f, target, mapper.writeValueAsBytes(root))
     // refresh the cache with the data in hand: mtime granularity (ms,
     // or 1s on some filesystems) can miss a same-tick write, and a
     // just-created alias must resolve in the very next query

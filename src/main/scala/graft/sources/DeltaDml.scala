@@ -81,32 +81,14 @@ object DeltaDml {
 
   private def fileCol: Column = absNorm(col("_metadata.file_path"))
 
-  /** Stage `df` as parquet parts and publish them into the table root as
-    * add actions for `version` (the [[DeltaLogWriter.write]] staging
-    * dance, shared by every COW rewrite). */
-  private def stageAdds(df: DataFrame, tablePath: String, version: Long,
-                        dataChange: Boolean): Seq[String] = {
-    val spark = df.sparkSession
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // UUID part names AND staging dir (delta-spark's convention):
-    // DETERMINISTIC names let a concurrent DML clobber the commit-race
-    // winner's data file (or interleave into its staging dir) before
-    // the put-if-absent log write decided the race
-    val runId = java.util.UUID.randomUUID().toString
-    val staging = new Path(tablePath, s"_staging_$runId")
-    df.write.mode("overwrite").parquet(staging.toString)
-    val parts = fs.listStatus(staging).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val adds = parts.zipWithIndex.map { case (part, i) =>
-      val name = f"part-$i%05d-$runId.parquet"
-      val dest = new Path(tablePath, name)
-      require(fs.rename(part, dest), s"rename failed: $part -> $dest")
-      val size = fs.getFileStatus(dest).getLen
-      s"""{"add":{"path":"$name","partitionValues":{},"size":$size,"modificationTime":0,"dataChange":$dataChange}}"""
-    }.toSeq
-    fs.delete(staging, true)
-    adds
-  }
+  /** Stage `df` as parquet parts and move them into the table root as
+    * add actions (UUID-unique names, delta-spark's convention — shared
+    * by [[DeltaLogWriter]] and every COW rewrite). */
+  private[sources] def stageAdds(df: DataFrame, tablePath: String,
+                                 dataChange: Boolean): Seq[String] =
+    StagedFiles.stage(df, tablePath)((_, u) =>
+      Some(new Path(tablePath, s"part-$u.parquet"))).map(f =>
+      s"""{"add":{"path":"${f.path.getName}","partitionValues":{},"size":${f.size},"modificationTime":0,"dataChange":$dataChange}}""")
 
   /** PROTOCOL.md writer-version rules — the write-side twin of the
     * reader's checkProtocol: a writer MUST refuse tables whose protocol
@@ -202,27 +184,10 @@ object DeltaDml {
   /** Stage `df` (schema + `_change_type`) as cdc parquet under
     * `_change_data/` and return the cdc actions (dataChange=false —
     * cdc files never join the live data set). */
-  private def stageCdc(df: DataFrame, tablePath: String,
-                       version: Long): Seq[String] = {
-    val spark = df.sparkSession
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val runId = java.util.UUID.randomUUID().toString // see stageAdds
-    val staging = new Path(tablePath, s"_staging_cdc_$runId")
-    df.write.mode("overwrite").parquet(staging.toString)
-    val parts = fs.listStatus(staging).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val cdcDir = new Path(tablePath, "_change_data")
-    fs.mkdirs(cdcDir)
-    val actions = parts.zipWithIndex.map { case (part, i) =>
-      val name = f"_change_data/cdc-$i%05d-$runId.parquet"
-      val dest = new Path(tablePath, name)
-      require(fs.rename(part, dest), s"rename failed: $part -> $dest")
-      val size = fs.getFileStatus(dest).getLen
-      s"""{"cdc":{"path":"$name","partitionValues":{},"size":$size,"dataChange":false}}"""
-    }.toSeq
-    fs.delete(staging, true)
-    actions
-  }
+  private def stageCdc(df: DataFrame, tablePath: String): Seq[String] =
+    StagedFiles.stage(df, tablePath)((_, u) =>
+      Some(new Path(tablePath, s"_change_data/cdc-$u.parquet"))).map(f =>
+      s"""{"cdc":{"path":"_change_data/${f.path.getName}","partitionValues":{},"size":${f.size},"dataChange":false}}""")
 
   private def typed(df: DataFrame, kind: String): DataFrame =
     df.withColumn("_change_type", lit(kind))
@@ -255,11 +220,11 @@ object DeltaDml {
       val hit = nullIsFalse(condition)
       val deleted = aff.filter(hit).count()
       val version = current + 1
-      val adds = stageAdds(aff.filter(!hit), tablePath, version,
+      val adds = stageAdds(aff.filter(!hit), tablePath,
         dataChange = true)
       val cdc =
         if (cdfEnabled(spark, snap.configuration))
-          stageCdc(typed(aff.filter(hit), "delete"), tablePath, version)
+          stageCdc(typed(aff.filter(hit), "delete"), tablePath)
         else Nil
       DeltaLogReader.writeCommit(spark, tablePath, version,
         ci("DELETE") +: (removeActions(affected) ++ adds ++ cdc))
@@ -395,19 +360,19 @@ object DeltaDml {
       def rewritten(s: Map[String, Column]): DataFrame =
         matched.select(assign(schema, Seq(None -> s)): _*)
       val updAdds = set match {
-        case Some(s) => stageAdds(rewritten(s), tablePath, version, dataChange = true)
+        case Some(s) => stageAdds(rewritten(s), tablePath, dataChange = true)
         case None    => Nil
       }
       val cdc =
         if (cdfEnabled(spark, snap.configuration)) set match {
           case None => stageCdc(
             typed(matched.select(schema.fieldNames.map(col).toSeq: _*),
-              "delete"), tablePath, version)
+              "delete"), tablePath)
           case Some(s) => stageCdc(
             typed(matched.select(schema.fieldNames.map(col).toSeq: _*),
                 "update_preimage")
               .unionByName(typed(rewritten(s), "update_postimage")),
-            tablePath, version)
+            tablePath)
         }
         else Nil
       // MERGE the DV feature into the protocol of the snapshot this
@@ -476,13 +441,13 @@ object DeltaDml {
       val updated = aff.filter(hit).count()
       val rewritten = aff.select(assign(schema, Seq(Some(hit) -> set)): _*)
       val version = current + 1
-      val adds = stageAdds(rewritten, tablePath, version, dataChange = true)
+      val adds = stageAdds(rewritten, tablePath, dataChange = true)
       val cdc =
         if (cdfEnabled(spark, snap.configuration)) {
           val pre = typed(aff.filter(hit), "update_preimage")
           val post = typed(aff.filter(hit).select(assign(schema, Seq(None -> set)): _*),
             "update_postimage")
-          stageCdc(pre.unionByName(post), tablePath, version)
+          stageCdc(pre.unionByName(post), tablePath)
         } else Nil
       DeltaLogReader.writeCommit(spark, tablePath, version,
         ci("UPDATE") +: (removeActions(affected) ++ adds ++ cdc))
@@ -715,7 +680,7 @@ object DeltaDml {
       val version = current + 1
       val rewritten = joined.map(_.filter(!m.deleted).select(m.newVersion: _*))
       val adds = stageAdds((rewritten ++ inserts).reduce(_ unionByName _),
-        tablePath, version, dataChange = true)
+        tablePath, dataChange = true)
       val cdc =
         if (cdfEnabled(spark, snap.configuration)) {
           val changes = joined.toSeq.flatMap { j =>
@@ -724,7 +689,7 @@ object DeltaDml {
               typed(upd.select(m.targetRow: _*), "update_preimage"),
               typed(upd.select(m.newVersion: _*), "update_postimage"))
           } ++ inserts.map(typed(_, "insert"))
-          stageCdc(changes.reduce(_ unionByName _), tablePath, version)
+          stageCdc(changes.reduce(_ unionByName _), tablePath)
         } else Nil
       DeltaLogReader.writeCommit(spark, tablePath, version,
         ci("MERGE") +: (removeActions(affected) ++ adds ++ cdc))

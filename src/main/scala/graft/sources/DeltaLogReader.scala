@@ -101,17 +101,27 @@ object DeltaLogReader {
 
   /** JSON commit versions present in `_delta_log`, ascending (may start
     * past 0 on a vacuumed log — checkpoints carry the earlier state). */
-  def tableVersions(spark: SparkSession, tablePath: String): Seq[Long] = {
+  def tableVersions(spark: SparkSession, tablePath: String): Seq[Long] =
+    jsonVersionsIn(tablePath, logFiles(spark, tablePath),
+      lastCheckpointVersion(spark, tablePath))
+
+  /** The files of `_delta_log`: ONE listing, which a snapshot reads both
+    * its JSON versions and its checkpoint files from. */
+  private def logFiles(spark: SparkSession, tablePath: String): Seq[Path] = {
     val logDir = new Path(tablePath, "_delta_log")
     val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(logDir))
       throw new IllegalArgumentException(s"not a Delta table (no _delta_log): $tablePath")
-    val versions = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-      .filter(_.matches("\\d{20}\\.json"))
+    fs.listStatus(logDir).toSeq.map(_.getPath)
+  }
+
+  private def jsonVersionsIn(tablePath: String, files: Seq[Path],
+                             checkpoint: => Option[Long]): Seq[Long] = {
+    val versions = files.map(_.getName).filter(_.matches("\\d{20}\\.json"))
       .map(_.stripSuffix(".json").toLong).sorted
-    if (versions.isEmpty && lastCheckpointVersion(spark, tablePath).isEmpty)
+    if (versions.isEmpty && checkpoint.isEmpty)
       throw new IllegalArgumentException(
-        s"no JSON commits and no checkpoint in $logDir")
+        s"no JSON commits and no checkpoint in ${new Path(tablePath, "_delta_log")}")
     versions
   }
 
@@ -145,8 +155,11 @@ object DeltaLogReader {
     * against it. */
   private[graft] def snapshot(spark: SparkSession, tablePath: String,
                               version: Option[Long] = None): Snapshot = {
-    val jsonVersions = tableVersions(spark, tablePath)
+    // the checkpoint pointer before the listing: a checkpoint is written
+    // before `_last_checkpoint` names it, so the listing holds its files
     val cpVersion = lastCheckpointVersion(spark, tablePath)
+    val files = logFiles(spark, tablePath)
+    val jsonVersions = jsonVersionsIn(tablePath, files, cpVersion)
     val latest = (jsonVersions ++ cpVersion).max
     val upTo = version.getOrElse(latest)
     require(jsonVersions.contains(upTo) || cpVersion.contains(upTo),
@@ -295,8 +308,7 @@ object DeltaLogReader {
         // `sidecarFile` actions name parquet sidecars under
         // `_delta_log/_sidecars/` carrying the file actions.
         val prefix = f"$cv%020d.checkpoint"
-        val cpFiles = fs.listStatus(logDir).toSeq.map(_.getPath)
-          .filter(_.getName.startsWith(prefix))
+        val cpFiles = files.filter(_.getName.startsWith(prefix))
         // MULTI-PART classic checkpoints (<v>.checkpoint.<part>.<of>.
         // parquet, delta.checkpoint.partSize): ALL parts fold — picking
         // one arbitrary part silently dropped most of the snapshot
@@ -368,6 +380,15 @@ object DeltaLogReader {
       state.values.toSeq, txns.toMap)
     checkProtocol(tablePath, snap)
     snap
+  }
+
+  /** [[snapshot]] at the latest version, None when `tablePath` has no
+    * `_delta_log` yet (a writer creating the table). */
+  private[graft] def snapshotIfExists(spark: SparkSession,
+                                      tablePath: String): Option[Snapshot] = {
+    val logDir = new Path(tablePath, "_delta_log")
+    Option.when(logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(logDir))(snapshot(spark, tablePath))
   }
 
   /** Reader features this implementation actually honors when a table
@@ -704,20 +725,16 @@ object DeltaLogReader {
   private[graft] def writeCommit(spark: SparkSession, tablePath: String,
                                  version: Long, actions: Seq[String]): Unit = {
     val p = new Path(new Path(tablePath, "_delta_log"), f"$version%020d.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // put-if-absent, per the Delta protocol's commit rule: two writers
     // racing to version N must not silently clobber each other (the
     // loser's transaction would vanish from the log and its data files
     // become vacuum-bait). The loser fails with a clear conflict.
-    val os =
-      try fs.create(p, false)
-      catch { case _: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"delta commit conflict: version $version of $tablePath was " +
-            "committed concurrently — re-read the table state and retry")
-      }
-    try os.write((actions.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally os.close()
+    if (!StagedFiles.publishIfAbsent(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+        (actions.mkString("\n") + "\n").getBytes("UTF-8")))
+      throw new java.util.ConcurrentModificationException(
+        s"delta commit conflict: version $version of $tablePath was " +
+          "committed concurrently — re-read the table state and retry")
   }
 
   /** metaData action JSON for a schema. `id`/`configuration` default to
@@ -739,23 +756,18 @@ object DeltaLogReader {
       s""""schemaString":$schemaStr,"partitionColumns":$parts,"configuration":$conf}}"""
   }
 
-  /** Write `df` as ONE parquet file at tablePath/relName (fixture/spec
-    * helper — Delta add actions reference single files, Spark writes
-    * directories; the lone part-file is renamed into place). */
+  /** Write `df` as ONE parquet file at tablePath/relName, replacing any
+    * file there (fixture/spec helper and the checkpoint writer — Delta
+    * add actions reference single files, Spark writes directories).
+    * Returns its size. */
   private[graft] def writeDataFile(df: DataFrame, tablePath: String,
                                    relName: String): Long = {
-    val spark = df.sparkSession
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(tablePath, s"_tmp_${relName.replace('/', '_')}")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = fs.listStatus(tmp).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
     val dest = new Path(tablePath, relName)
-    fs.mkdirs(dest.getParent)
-    fs.delete(dest, false)
-    fs.rename(part, dest)
-    fs.delete(tmp, true)
-    fs.getFileStatus(dest).getLen
+    val fs = dest.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    // cleared right before the move (a re-written checkpoint stays
+    // readable while its replacement is staged)
+    StagedFiles.stage(df.coalesce(1), tablePath) { (_, _) =>
+      fs.delete(dest, false); Some(dest)
+    }.head.size
   }
 }

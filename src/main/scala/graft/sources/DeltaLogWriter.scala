@@ -30,9 +30,10 @@ case class CpRow(protocol: Option[CpProtocol], metaData: Option[CpMeta],
   * commit in `_delta_log/` publishes them atomically (add actions; an
   * overwrite also emits remove actions for the previous snapshot). The
   * commit file IS the transaction: readers replaying the log never see
-  * a half-written version because the rename that publishes the commit
-  * is the last step. Reference surface: Drill writes Delta via the same
-  * log-append protocol (contrib/format-deltalake); protocol per
+  * a half-written version because the commit is published whole, and
+  * only if absent, as the last step ([[StagedFiles.publishIfAbsent]]).
+  * Reference surface: Drill writes Delta via the same log-append
+  * protocol (contrib/format-deltalake); protocol per
   * github.com/delta-io/delta PROTOCOL.md.
   *
   * The parquet write itself is the normal distributed writer (any
@@ -49,23 +50,18 @@ object DeltaLogWriter {
     * [[lastTxnVersion]] before re-committing. */
   def write(df: DataFrame, tablePath: String,
             mode: SaveMode = SaveMode.Append,
-            txn: Option[(String, Long)] = None): Long = {
-    val spark = df.sparkSession
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+            txn: Option[(String, Long)] = None): Long =
     write(df, tablePath, mode, txn,
-      Option.when(fs.exists(new Path(tablePath, "_delta_log")))(
-        DeltaLogReader.snapshot(spark, tablePath)))
-  }
+      DeltaLogReader.snapshotIfExists(df.sparkSession, tablePath))
 
   /** [[write]] on top of the snapshot the caller already read (None: the
     * table does not exist yet). */
-  private[sources] def write(df: DataFrame, tablePath: String, mode: SaveMode,
+  private[graft] def write(df: DataFrame, tablePath: String, mode: SaveMode,
       txn: Option[(String, Long)],
       current: Option[DeltaLogReader.Snapshot]): Long = {
     require(mode == SaveMode.Append || mode == SaveMode.Overwrite,
       s"delta write supports Append/Overwrite, got $mode")
     val spark = df.sparkSession
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (version, removeActions, dfOut, newMeta) = current match {
       case None => (0L, Seq.empty[String], df, None)
       case Some(snap) =>
@@ -123,25 +119,7 @@ object DeltaLogWriter {
         (snap.version + 1, toRemove, out, meta)
       }
 
-    // stage the parquet parts, then move each into the table root under
-    // a UUID-unique name (Delta data files are flat siblings; a
-    // DETERMINISTIC name let a concurrent writer at the same version
-    // clobber the commit-race winner's data before the put-if-absent
-    // log write decided the race)
-    val runId = java.util.UUID.randomUUID().toString
-    val staging = new Path(tablePath, s"_staging_$runId")
-    dfOut.write.mode("overwrite").parquet(staging.toString)
-    val parts = fs.listStatus(staging).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val adds = parts.zipWithIndex.map { case (part, i) =>
-      val name = f"part-$i%05d-$runId.parquet"
-      val dest = new Path(tablePath, name)
-      require(fs.rename(part, dest), s"rename failed: $part -> $dest")
-      val size = fs.getFileStatus(dest).getLen
-      s"""{"add":{"path":"$name","partitionValues":{},"size":$size,"modificationTime":0,"dataChange":true}}"""
-    }.toSeq
-    fs.delete(staging, true)
-
+    val adds = DeltaDml.stageAdds(dfOut, tablePath, dataChange = true)
     val head =
       if (current.isEmpty) Seq(
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
@@ -254,23 +232,10 @@ object DeltaLogWriter {
         .join(dvRows, Seq("__g_rel", "__g_pos"), "left_anti")
         .select(schema.fieldNames.map(col).toSeq: _*)
     }
-    // UUID staging + part names — see write()'s commit-race rationale
-    val runId = java.util.UUID.randomUUID().toString
-    val staging = new Path(tablePath, s"_staging_$runId")
     val rewritten =
       if (zorderBy.nonEmpty) graft.operators.ZOrder.layout(scan, zorderBy, bins)
       else scan.repartition(bins)
-    rewritten.write.mode("overwrite").parquet(staging.toString)
-    val parts = fs.listStatus(staging).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val adds = parts.zipWithIndex.map { case (part, i) =>
-      val name = f"part-$i%05d-$runId.parquet"
-      val dest = new Path(tablePath, name)
-      require(fs.rename(part, dest), s"rename failed: $part -> $dest")
-      val size = fs.getFileStatus(dest).getLen
-      s"""{"add":{"path":"$name","partitionValues":{},"size":$size,"modificationTime":0,"dataChange":false}}"""
-    }.toSeq
-    fs.delete(staging, true)
+    val adds = DeltaDml.stageAdds(rewritten, tablePath, dataChange = false)
     // removes carry each input's DV descriptor — without it a
     // spec-keyed replay keeps the old (path, dv) pair alive and reads
     // its visible rows TWICE (once more from the bins)
@@ -278,37 +243,14 @@ object DeltaLogWriter {
     val removes = DeltaDml.removeActions(small.map(_._1),
       dvOf.getOrElse(_, None), dataChange = false)
     DeltaLogReader.writeCommit(spark, tablePath, version, removes ++ adds)
-    (version, small.size, parts.length)
+    (version, small.size, adds.size)
   }
 
-  /** Highest committed txn version for `appId` (Delta `txn` actions),
-    * from surviving JSON commits AND the latest checkpoint (which
-    * carries txn rows so vacuuming the log never loses idempotence
-    * bookkeeping) — the restart check for streaming writers. */
+  /** Highest committed txn version for `appId` (Delta `txn` actions,
+    * checkpoints included), None when the table does not exist yet. */
   def lastTxnVersion(spark: org.apache.spark.sql.SparkSession,
-                     tablePath: String, appId: String): Option[Long] = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logDir = new Path(tablePath, "_delta_log")
-    if (!fs.exists(logDir)) return None
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    // NEWEST-first with early exit: txn versions for one appId are
-    // monotone (each commit carries the latest), so the first hit IS the
-    // max — the oldest-first full scan re-parsed every commit file per
-    // micro-batch, O(n²) driver I/O over a continuous stream's life
-    val fromJson = DeltaLogReader.tableVersions(spark, tablePath).reverseIterator
-      .flatMap { v =>
-        DeltaLogReader.jsonLines(fs, new Path(logDir, f"$v%020d.json"))
-          .filter(_.contains("\"txn\"")).flatMap { line =>
-            Option(mapper.readTree(line).get("txn"))
-              .filter(_.get("appId").asText == appId)
-              .map(_.get("version").asLong)
-          }.maxOption
-      }.nextOption()
-    // no hit in the surviving commits: only a checkpoint can still hold
-    // it (without one the scan above saw the whole log)
-    fromJson.orElse(DeltaLogReader.lastCheckpointVersion(spark, tablePath)
-      .flatMap(_ => DeltaLogReader.snapshot(spark, tablePath).txns.get(appId)))
-  }
+                     tablePath: String, appId: String): Option[Long] =
+    DeltaLogReader.snapshotIfExists(spark, tablePath).flatMap(_.txns.get(appId))
 
   /** Compact the log: write a `%020d.checkpoint.parquet` holding the
     * RESOLVED snapshot (protocol, metaData + one add row per live file +

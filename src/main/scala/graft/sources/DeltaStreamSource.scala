@@ -103,13 +103,8 @@ private[sources] object DeltaStreamSource {
           finally in.close()
         }
       } catch { case _: java.io.IOException => None }
-    def writeAnchor(v: Long): Unit = {
-      // single-shot create; anchors are immutable so no rename dance
-      if (!fs.exists(a)) {
-        val os = fs.create(a, false)
-        try os.write(v.toString.getBytes("UTF-8")) finally os.close()
-      }
-    }
+    def writeAnchor(v: Long): Unit = // anchors are immutable
+      StagedFiles.publishIfAbsent(fs, a, v.toString.getBytes("UTF-8"))
   }
 
   /** Newest version: JSON commits, or the checkpoint when every commit

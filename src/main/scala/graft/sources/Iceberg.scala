@@ -143,7 +143,13 @@ object IcebergTable {
                        // externally set metadata carried through commits
                        // verbatim (a rebuilt JSON must not wipe them):
                        // properties, sort-orders, default-sort-order-id
-                       carried: Map[String, JsonNode] = Map.empty)
+                       carried: Map[String, JsonNode] = Map.empty) {
+    /** Manifest-list records by path, read once per loaded metadata (a
+      * list file never changes once committed): a statement that plans
+      * from the live entries and then commits reads the list once. */
+    @transient private[IcebergTable] lazy val manifestLists =
+      scala.collection.concurrent.TrieMap.empty[String, Seq[GenericRecord]]
+  }
 
   private def metaDir(table: String) = new Path(table, "metadata")
 
@@ -163,9 +169,12 @@ object IcebergTable {
     finally os.close()
   }
 
-  /** Latest metadata version: `version-hint.text` if present, else the
-    * max `v<N>.metadata.json` on disk (the hint is an optional part of
-    * the spec's file-system catalog). */
+  /** Latest metadata version: `version-hint.text` if present, probed
+    * forward while `v<N+1>.metadata.json` exists (a committer that died
+    * between its metadata publish and its hint write leaves the hint
+    * one behind — iceberg-core's HadoopTableOperations probes the same
+    * way), else the max `v<N>.metadata.json` on disk (the hint is an
+    * optional part of the spec's file-system catalog). */
   def currentMetadataVersion(spark: SparkSession, table: String): Int = {
     val dir = metaDir(table)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -185,7 +194,11 @@ object IcebergTable {
           finally in.close()
         } else None
       } catch { case _: java.io.IOException => None }
-    hinted.getOrElse {
+    hinted.map { h =>
+      var v = h
+      while (fs.exists(new Path(dir, s"v${v + 1}.metadata.json"))) v += 1
+      v
+    }.getOrElse {
       val vs = fs.listStatus(dir).toSeq.map(_.getPath.getName)
         .flatMap { n => "^v(\\d+)\\.metadata\\.json$".r.findFirstMatchIn(n).map(_.group(1).toInt) }
       if (vs.isEmpty) throw new IllegalArgumentException(
@@ -350,16 +363,26 @@ object IcebergTable {
     * data sequence number (0 for v1 lists — the spec's v1→v2 upgrade
     * rule), inherited by ADDED entries that don't carry their own. */
   private def manifestsOf(spark: SparkSession, table: String,
-                          snap: SnapshotInfo): Seq[(String, Int, Long)] = {
+                          snap: SnapshotInfo,
+                          memo: Option[TableMeta]): Seq[(String, Int, Long)] = {
     // the v1 deprecated form: manifests listed directly on the snapshot
     // (all data manifests, sequence number 0 — v1 has no sequencing)
     if (snap.manifestList.isEmpty)
       return snap.directManifests.map(m => (absolute(table, m), 0, 0L))
-    readAvroRecords(spark, absolute(table, snap.manifestList)).map { r =>
+    listRecords(spark, table, snap, memo).map { r =>
       val content = opt(r, "content").map(_.asInstanceOf[Int]).getOrElse(0)
       val seq = opt(r, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)
       (absolute(table, str(r.get("manifest_path"))), content, seq)
     }
+  }
+
+  /** A snapshot's manifest-list records, through `memo`'s cache when
+    * given. */
+  private def listRecords(spark: SparkSession, table: String,
+                          snap: SnapshotInfo,
+                          memo: Option[TableMeta]): Seq[GenericRecord] = {
+    def read = readAvroRecords(spark, absolute(table, snap.manifestList))
+    memo.fold(read)(_.manifestLists.getOrElseUpdate(snap.manifestList, read))
   }
 
   /** All manifest entries of a snapshot (status 0=EXISTING 1=ADDED
@@ -367,8 +390,9 @@ object IcebergTable {
     * Delete-manifest entries come back with their data_file `content`
     * (1 = position deletes, 2 = equality deletes). */
   private def entriesOf(spark: SparkSession, table: String,
-                        snap: SnapshotInfo): Seq[DataFileInfo] =
-    manifestsOf(spark, table, snap).flatMap { case (mf, _, mfSeq) =>
+                        snap: SnapshotInfo,
+                        memo: Option[TableMeta] = None): Seq[DataFileInfo] =
+    manifestsOf(spark, table, snap, memo).flatMap { case (mf, _, mfSeq) =>
       readAvroRecords(spark, mf).map { e =>
         val status = e.get("status").asInstanceOf[Int]
         val snapId = opt(e, "snapshot_id").map(_.asInstanceOf[Long])
@@ -439,13 +463,15 @@ object IcebergTable {
     * data files plus any position/equality delete files (format v2). */
   def liveEntries(spark: SparkSession, table: String,
                   snapshotId: Option[Long] = None,
-                  asOfTimestampMs: Option[Long] = None): Seq[DataFileInfo] = {
-    val meta = loadMeta(spark, table)
-    selectSnapshot(meta, snapshotId, asOfTimestampMs) match {
-      case None => Nil
-      case Some(snap) => entriesOf(spark, table, snap).filter(_.status != 2)
-    }
-  }
+                  asOfTimestampMs: Option[Long] = None): Seq[DataFileInfo] =
+    liveEntries(spark, loadMeta(spark, table), snapshotId, asOfTimestampMs)
+
+  /** [[liveEntries]] from metadata the caller already loaded. */
+  private[sources] def liveEntries(spark: SparkSession, meta: TableMeta,
+                                   snapshotId: Option[Long],
+                                   asOfTimestampMs: Option[Long]): Seq[DataFileInfo] =
+    selectSnapshot(meta, snapshotId, asOfTimestampMs).toSeq.flatMap(snap =>
+      entriesOf(spark, meta.location, snap, Some(meta)).filter(_.status != 2))
 
   /** Live DATA files of a snapshot (delete files excluded). */
   def liveFiles(spark: SparkSession, table: String,
@@ -488,7 +514,7 @@ object IcebergTable {
     if (hash >= 0)
       return metadataTable(spark, table.substring(0, hash), table.substring(hash + 1))
     val meta = loadMeta(spark, table)
-    val entries = liveEntries(spark, table, snapshotId, asOfTimestampMs)
+    val entries = liveEntries(spark, meta, snapshotId, asOfTimestampMs)
     var files = entries.filter(_.content == 0)
     if (partitionFilter != null) files = files.filter(f => partitionFilter(f.partition))
     buildRead(spark, meta, files, entries.filter(_.content == 1),
@@ -521,7 +547,7 @@ object IcebergTable {
     val meta = loadMeta(spark, table)
     require(meta.formatVersion >= 3,
       s"row lineage requires a format-v3 table: $table is v${meta.formatVersion}")
-    val entries = liveEntries(spark, table, snapshotId)
+    val entries = liveEntries(spark, meta, snapshotId, None)
     val files = entries.filter(_.content == 0)
     val firstRowIdOf: Map[Long, Long] = meta.snapshots
       .flatMap(s => s.firstRowId.map(s.snapshotId -> _)).toMap
@@ -1083,19 +1109,6 @@ object IcebergTable {
       |{"name":"deleted_rows_count","type":"long","field-id":514}
       |]}""".stripMargin)
 
-  /** Hive path-segment unescape (%xx only — hive does NOT use '+'). */
-  private def unescapePath(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar); i += 3
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
   private def typedPartitionValue(raw: String, dt: DataType): Any =
     if (raw == null || raw == "__HIVE_DEFAULT_PARTITION__") null
     else dt match {
@@ -1110,8 +1123,23 @@ object IcebergTable {
         s"unsupported partition column type: $other")
     }
 
-  private def parquetRowCount(spark: SparkSession, p: Path): Long =
-    StagedFiles.parquetRowCount(spark, p)
+  /** Stage `df` as `data/<prefix>-<unique>.parquet` files of `table`,
+    * with footer row counts; `nonEmpty` drops row-less parts (Spark
+    * writes one for an empty frame; a delete file without rows deletes
+    * nothing). */
+  private def stageData(df: DataFrame, table: String, prefix: String,
+                        partitionBy: Seq[String] = Nil,
+                        nonEmpty: Boolean = false): Seq[StagedFiles.StagedFile] =
+    StagedFiles.stage(df, table, partitionBy, countRows = true)((f, u) =>
+      Option.when(!nonEmpty || f.rows > 0)(
+        new Path(new Path(table, "data"), s"$prefix-$u.parquet")))
+
+  /** A new manifest or manifest-list file of snapshot `snapshotId`; the
+    * UUID keeps a writer that loses the commit race for that snapshot
+    * id from overwriting the winner's files. */
+  private def metaFile(table: String, snapshotId: Long, kind: String): Path =
+    new Path(metaDir(table),
+      s"snap-$snapshotId-${java.util.UUID.randomUUID()}-$kind.avro")
 
   /** Write `df` as a new Iceberg v1 snapshot at `table`. Append creates
     * the table when absent; Overwrite replaces the current snapshot
@@ -1178,53 +1206,30 @@ object IcebergTable {
     val nowMs = System.currentTimeMillis()
 
     // ---- stage the data files (distributed write), move flat into data/
-    val staging = new Path(table, s"_staging_snap$snapshotId")
-    val writer =
-      if (partitionBy.isEmpty) df.write
-      else partitionBy.foldLeft(df)((d, c) => d.withColumn(s"__p_$c", d(c)))
-        .write.partitionBy(partitionBy.map(c => s"__p_$c"): _*)
-    writer.mode("overwrite").parquet(staging.toString)
-
-    def walk(p: Path): Seq[Path] = StagedFiles.walkParquet(fs, p)
-    val staged = walk(staging).sortBy(_.toString)
-    val dataDir = new Path(table, "data")
-    fs.mkdirs(dataDir)
-    val moved: Seq[(Path, Map[String, Any], Long)] = staged.zipWithIndex.map {
-      case (part, i) =>
-        // partition tuple from the __p_<c>=<v> dir components
-        val comps = part.toString.stripPrefix(staging.toString).split('/')
-          .filter(_.contains('='))
-        val tuple = partFields.map { f =>
-          val raw = comps.collectFirst {
-            case c if c.startsWith(s"__p_${f.name}=") =>
-              unescapePath(c.substring(s"__p_${f.name}=".length))
-          }.getOrElse(throw new IllegalStateException(
-            s"no __p_${f.name}= component in $part"))
-          f.name -> typedPartitionValue(raw, f.dataType)
-        }.toMap[String, Any]
-        val dest = new Path(dataDir, f"part-$i%05d-snap$snapshotId.parquet")
-        fs.delete(dest, false)
-        require(fs.rename(part, dest), s"rename failed: $part -> $dest")
-        (dest, tuple, fs.getFileStatus(dest).getLen)
-    }
-    fs.delete(staging, true)
-
+    val moved = stageData(
+      partitionBy.foldLeft(df)((d, c) => d.withColumn(s"__p_$c", d(c))),
+      table, "part", partitionBy.map(c => s"__p_$c"))
     // ---- manifest (avro) for the added files; v2 tables record content
     val fv = prior.map(_.formatVersion).getOrElse(1)
     val newSeq = if (fv >= 2) prior.map(_.lastSequenceNumber).getOrElse(0L) + 1 else 0L
     val entrySchema = manifestEntrySchema(partFields, withContent = fv >= 2)
     val dfSchema = entrySchema.getField("data_file").schema()
     val partSchema = dfSchema.getField("partition").schema()
-    val entries = moved.map { case (dest, tuple, size) =>
+    val entries = moved.map { f =>
+      // partition tuple from the __p_<c>=<v> staging components
       val pr = new GenericData.Record(partSchema)
-      tuple.foreach { case (k, v) => pr.put(k, v) }
+      partFields.foreach { p =>
+        pr.put(p.name, typedPartitionValue(f.partition.getOrElse(s"__p_${p.name}",
+          throw new IllegalStateException(s"no __p_${p.name}= component for ${f.path}")),
+          p.dataType))
+      }
       val d = new GenericData.Record(dfSchema)
       if (fv >= 2) d.put("content", 0) // DATA
-      d.put("file_path", dest.toString)
+      d.put("file_path", f.path.toString)
       d.put("file_format", "PARQUET")
       d.put("partition", pr)
-      d.put("record_count", parquetRowCount(spark, dest))
-      d.put("file_size_in_bytes", size)
+      d.put("record_count", f.rows)
+      d.put("file_size_in_bytes", f.size)
       d.put("block_size_in_bytes", 67108864L)
       val e = new GenericData.Record(entrySchema)
       e.put("status", 1) // ADDED
@@ -1232,7 +1237,7 @@ object IcebergTable {
       e.put("data_file", d)
       e
     }
-    val manifestPath = new Path(metaDir(table), f"snap$snapshotId%05d-m0.avro")
+    val manifestPath = metaFile(table, snapshotId, "m0")
     val manifestLen = writeAvro(spark, manifestPath, entrySchema, entries, Map(
       "format-version" -> fv.toString,
       "partition-spec-id" -> "0") ++
@@ -1245,7 +1250,7 @@ object IcebergTable {
     val carried: Seq[GenericRecord] =
       if (mode == SaveMode.Overwrite) Nil
       else carriedManifests(spark, table, prior, listSchema)
-    val listPath = new Path(metaDir(table), f"snap-$snapshotId-manifest-list.avro")
+    val listPath = metaFile(table, snapshotId, "manifest-list")
     writeAvro(spark, listPath, listSchema,
       mfRow(listSchema, manifestPath.toString, manifestLen, snapshotId,
         entries.size, addedRows, content = 0, seq = newSeq, minSeq = newSeq)
@@ -1284,7 +1289,7 @@ object IcebergTable {
                        zorderBy: Seq[String] = Nil): Long = {
     val meta = loadMeta(spark, table)
     requireIdentitySpec(meta, "rewriteDataFiles")
-    val entries = liveEntries(spark, table)
+    val entries = liveEntries(spark, meta, None, None)
     val dataFiles = entries.filter(_.content == 0)
     val current = meta.currentSnapshotId.getOrElse(
       throw new IllegalArgumentException(s"no current snapshot in $table"))
@@ -1334,7 +1339,7 @@ object IcebergTable {
     val expired = ordered.dropRight(keepLast)
 
     def filesOf(snaps: Seq[SnapshotInfo]): Set[String] = snaps.flatMap { s =>
-      val mfs = manifestsOf(spark, table, s)
+      val mfs = manifestsOf(spark, table, s, Some(meta))
       val listed = mfs.map(_._1) ++
         mfs.flatMap { case (mf, _, _) =>
           readAvroRecords(spark, mf).map(e =>
@@ -1349,15 +1354,10 @@ object IcebergTable {
       listFile ++ listed
     }.toSet
 
-    val keepSet = filesOf(kept)
-    val dropSet = filesOf(expired) -- keepSet
-    dropSet.toSeq.sorted.foreach(p => fs.delete(new Path(p), false))
-
-    // filtered copy of the current metadata JSON (snapshots +
-    // snapshot-log), committed as the next metadata version
-    val v = currentMetadataVersion(spark, table)
-    val metaPath = new Path(metaDir(table), s"v$v.metadata.json")
-    val in = fs.open(metaPath)
+    // filtered copy of the loaded metadata JSON (snapshots +
+    // snapshot-log), committed as the next metadata version BEFORE any
+    // file goes: a commit that loses the race deletes nothing
+    val in = fs.open(new Path(metaDir(table), s"v${meta.metadataVersion}.metadata.json"))
     val root = try mapper.readTree(in).asInstanceOf[ObjectNode] finally in.close()
     val keptIds = kept.map(_.snapshotId).toSet
     def filterArr(field: String, idField: String): Unit = {
@@ -1370,15 +1370,11 @@ object IcebergTable {
     }
     filterArr("snapshots", "snapshot-id")
     filterArr("snapshot-log", "snapshot-id")
-    val newVersion = v + 1
-    val newPath = new Path(metaDir(table), s"v$newVersion.metadata.json")
-    val tmp = new Path(metaDir(table), s".v$newVersion.metadata.json.tmp")
-    val os = fs.create(tmp, true)
-    try os.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
-    finally os.close()
-    fs.delete(newPath, false)
-    require(fs.rename(tmp, newPath), s"rename failed: $tmp -> $newPath")
-    writeVersionHint(fs, table, newVersion)
+    publishMetadata(fs, table, meta.metadataVersion + 1, root)
+
+    val keepSet = filesOf(kept)
+    val dropSet = filesOf(expired) -- keepSet
+    dropSet.toSeq.sorted.foreach(p => fs.delete(new Path(p), false))
     expired.map(_.snapshotId)
   }
 
@@ -1434,7 +1430,7 @@ object IcebergTable {
           mfRow(schema, abs, len, snap.snapshotId, 0, 0L, 0, 0L, 0L)
         }
       } else
-      readAvroRecords(spark, absolute(table, snap.manifestList)).map { r =>
+      listRecords(spark, table, snap, prior).map { r =>
         mfRow(schema, str(r.get("manifest_path")),
           opt(r, "manifest_length").map(_.asInstanceOf[Long]).getOrElse(0L),
           opt(r, "added_snapshot_id").map(_.asInstanceOf[Long]).getOrElse(-1L),
@@ -1447,7 +1443,7 @@ object IcebergTable {
       }
     }
 
-  /** Write v<N+1>.metadata.json + version-hint atomically. Emits BOTH
+  /** Commit v<N+1>.metadata.json ([[publishMetadata]]). Emits BOTH
     * the v1 (`schema`, `partition-spec`) and v2 (`schemas` +
     * `current-schema-id`) spellings — readers of either version ignore
     * the other's fields; `formatVersion` decides the declared
@@ -1618,15 +1614,23 @@ object IcebergTable {
       n.put("timestamp-ms", allSnaps.map(_.timestampMs).max)
       n.put("snapshot-id", snapshot.snapshotId)
     }
-    val metaPath = new Path(metaDir(table), s"v$newVersion.metadata.json")
-    val tmp = new Path(metaDir(table), s".v$newVersion.metadata.json.tmp")
-    val os = fs.create(tmp, true)
-    try os.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(root))
-    finally os.close()
-    fs.delete(metaPath, false)
-    require(fs.rename(tmp, metaPath), s"rename failed: $tmp -> $metaPath")
-    writeVersionHint(fs, table, newVersion)
+    publishMetadata(fs, table, newVersion, root)
+  }
+
+  /** Publish `root` as `v<version>.metadata.json` only if no concurrent
+    * committer got there first ([[StagedFiles.publishIfAbsent]]), then
+    * point the version hint at it. A commit from stale metadata fails,
+    * worded like the Delta conflict, and leaves the winner's file
+    * alone. */
+  private def publishMetadata(fs: org.apache.hadoop.fs.FileSystem, table: String,
+                              version: Int, root: JsonNode): Unit = {
+    if (!StagedFiles.publishIfAbsent(fs,
+        new Path(metaDir(table), s"v$version.metadata.json"),
+        mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root)))
+      throw new java.util.ConcurrentModificationException(
+        s"iceberg commit conflict: version $version of $table was " +
+          "committed concurrently — re-read the table state and retry")
+    writeVersionHint(fs, table, version)
   }
 
   /** Roll the table back so `snapshotId` (an EXISTING snapshot) is
@@ -1702,7 +1706,7 @@ object IcebergTable {
     import spark.implicits._
     val meta = loadMeta(spark, table)
     requireIdentitySpec(meta, "deleteFrom")
-    val entries = liveEntries(spark, table)
+    val entries = liveEntries(spark, meta, None, None)
     // equality-delete files in the table are fine: the raw-parquet match
     // below may emit position deletes for rows an equality delete already
     // killed, which is harmless (the row is invisible either way), and
@@ -1737,29 +1741,11 @@ object IcebergTable {
     // MERGE) through the DV commit once the table has upgraded
     if (meta.formatVersion >= 3)
       return commitDvDeletes(spark, table, meta, matches,
-        liveEntries(spark, table))
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        liveEntries(spark, meta, None, None))
     val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
-    val staging = new Path(table, s"_staging_del$snapshotId")
-    matches.repartition(col("file_path"))
-      .sortWithinPartitions("file_path", "pos")
-      .write.mode("overwrite").parquet(staging.toString)
-    def walk(p: Path): Seq[Path] = StagedFiles.walkParquet(fs, p)
-    val staged = walk(staging).sortBy(_.toString)
-      .filter(p => parquetRowCount(spark, p) > 0)
-    if (staged.isEmpty) {
-      fs.delete(staging, true)
-      return meta.currentSnapshotId.getOrElse(0L)
-    }
-    val dataDir = new Path(table, "data")
-    fs.mkdirs(dataDir)
-    val moved = staged.zipWithIndex.map { case (part, i) =>
-      val dest = new Path(dataDir, f"delete-$i%05d-snap$snapshotId.parquet")
-      fs.delete(dest, false)
-      require(fs.rename(part, dest), s"rename failed: $part -> $dest")
-      dest
-    }
-    fs.delete(staging, true)
+    val moved = stageData(matches.repartition(col("file_path"))
+      .sortWithinPartitions("file_path", "pos"), table, "delete", nonEmpty = true)
+    if (moved.isEmpty) return meta.currentSnapshotId.getOrElse(0L)
     commitDeleteFiles(spark, table, meta, moved, content = 1,
       snapshotId = snapshotId)
   }
@@ -1786,26 +1772,9 @@ object IcebergTable {
       throw new IllegalArgumentException(
         s"equality column '$c' not in table schema of $table " +
           s"(has: ${idOf.keys.mkString(", ")})")))
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
-    val staging = new Path(table, s"_staging_eqdel$snapshotId")
-    keys.distinct().write.mode("overwrite").parquet(staging.toString)
-    val staged = StagedFiles.walkParquet(fs, staging) // shared filter
-      .sortBy(_.toString)
-      .filter(p => parquetRowCount(spark, p) > 0)
-    if (staged.isEmpty) {
-      fs.delete(staging, true)
-      return meta.currentSnapshotId.getOrElse(0L)
-    }
-    val dataDir = new Path(table, "data")
-    fs.mkdirs(dataDir)
-    val moved = staged.zipWithIndex.map { case (part, i) =>
-      val dest = new Path(dataDir, f"eqdelete-$i%05d-snap$snapshotId.parquet")
-      fs.delete(dest, false)
-      require(fs.rename(part, dest), s"rename failed: $part -> $dest")
-      dest
-    }
-    fs.delete(staging, true)
+    val moved = stageData(keys.distinct(), table, "eqdelete", nonEmpty = true)
+    if (moved.isEmpty) return meta.currentSnapshotId.getOrElse(0L)
     commitDeleteFiles(spark, table, meta, moved, content = 2,
       snapshotId = snapshotId, equalityIds = eqIds)
   }
@@ -1840,52 +1809,34 @@ object IcebergTable {
     val eqIds = keyCols.map(c => idOf.getOrElse(c,
       throw new IllegalArgumentException(
         s"equality column '$c' not in table schema of $table")))
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
     val newSeq = meta.lastSequenceNumber + 1
     val nowMs = System.currentTimeMillis()
-    val dataDir = new Path(table, "data")
-    fs.mkdirs(dataDir)
-
-    def stage(src: DataFrame, tag: String, prefix: String): Seq[Path] = {
-      val staging = new Path(table, s"_staging_$tag$snapshotId")
-      src.write.mode("overwrite").parquet(staging.toString)
-      val staged = StagedFiles.walkParquet(fs, staging).sortBy(_.toString)
-        .filter(p => parquetRowCount(spark, p) > 0)
-      val moved = staged.zipWithIndex.map { case (part, i) =>
-        val dest = new Path(dataDir, f"$prefix-$i%05d-snap$snapshotId.parquet")
-        fs.delete(dest, false)
-        require(fs.rename(part, dest), s"rename failed: $part -> $dest")
-        dest
-      }
-      fs.delete(staging, true)
-      moved
-    }
-    val dataFiles = stage(df, "upsert", "part")
+    val dataFiles = stageData(df, table, "part", nonEmpty = true)
     // the distinct delete keys come from the STAGED files, not from
     // `df` again: re-running the source plan doubled every upsert
     // batch's cost, and a nondeterministic source could stage keys
     // that disagree with the data just written
     val delFiles =
       if (dataFiles.isEmpty) Nil
-      else stage(
-        spark.read.parquet(dataFiles.map(_.toString): _*)
+      else stageData(
+        spark.read.parquet(dataFiles.map(_.path.toString): _*)
           .select(keyCols.map(c =>
             org.apache.spark.sql.functions.col(c)): _*).distinct(),
-        "upserteq", "eqdelete")
+        table, "eqdelete", nonEmpty = true)
 
-    def fileEntries(files: Seq[Path], content: Int,
+    def fileEntries(files: Seq[StagedFiles.StagedFile], content: Int,
                     schema: Schema): Seq[GenericRecord] = {
       val dfSchema = schema.getField("data_file").schema()
       val partSchema = dfSchema.getField("partition").schema()
-      files.map { p =>
+      files.map { f =>
         val d = new GenericData.Record(dfSchema)
         d.put("content", content)
-        d.put("file_path", p.toString)
+        d.put("file_path", f.path.toString)
         d.put("file_format", "PARQUET")
         d.put("partition", new GenericData.Record(partSchema))
-        d.put("record_count", parquetRowCount(spark, p))
-        d.put("file_size_in_bytes", fs.getFileStatus(p).getLen)
+        d.put("record_count", f.rows)
+        d.put("file_size_in_bytes", f.size)
         d.put("block_size_in_bytes", 67108864L)
         if (content == 2) d.put("equality_ids", eqIds.map(Int.box).asJava)
         val e = new GenericData.Record(schema)
@@ -1900,7 +1851,7 @@ object IcebergTable {
     var addedRows = 0L
     if (dataFiles.nonEmpty) {
       val dEntries = fileEntries(dataFiles, 0, entrySchema)
-      val mPath = new Path(metaDir(table), f"snap$snapshotId%05d-m0.avro")
+      val mPath = metaFile(table, snapshotId, "m0")
       val mLen = writeAvro(spark, mPath, entrySchema, dEntries, Map(
         "format-version" -> "2", "partition-spec-id" -> "0",
         "content" -> "data"))
@@ -1911,7 +1862,7 @@ object IcebergTable {
     }
     if (delFiles.nonEmpty) {
       val dEntries = fileEntries(delFiles, 2, entrySchema)
-      val mPath = new Path(metaDir(table), f"snap$snapshotId%05d-d0.avro")
+      val mPath = metaFile(table, snapshotId, "d0")
       val mLen = writeAvro(spark, mPath, entrySchema, dEntries, Map(
         "format-version" -> "2", "partition-spec-id" -> "0",
         "content" -> "deletes"))
@@ -1923,7 +1874,7 @@ object IcebergTable {
     }
     if (mfRows.isEmpty) return meta.currentSnapshotId.getOrElse(0L)
     val carried = carriedManifests(spark, table, Some(meta), manifestFileSchemaV2)
-    val listPath = new Path(metaDir(table), f"snap-$snapshotId-manifest-list.avro")
+    val listPath = metaFile(table, snapshotId, "manifest-list")
     writeAvro(spark, listPath, manifestFileSchemaV2,
       mfRows.toSeq ++ carried, Map("format-version" -> "2"))
     commitMetadata(spark, table, Some(meta), meta.schema, Nil,
@@ -1938,7 +1889,8 @@ object IcebergTable {
     * themselves for content=2 equality deletes, with `equalityIds`
     * naming their schema field ids) as a new v2 snapshot. */
   private[graft] def commitDeleteFiles(spark: SparkSession, table: String,
-                                         meta: TableMeta, files: Seq[Path],
+                                         meta: TableMeta,
+                                         files: Seq[StagedFiles.StagedFile],
                                          content: Int,
                                          snapshotId: Long,
                                          equalityIds: Seq[Int] = Nil): Long = {
@@ -1947,16 +1899,14 @@ object IcebergTable {
     val entrySchema = manifestEntrySchema(Nil, withContent = true)
     val dfSchema = entrySchema.getField("data_file").schema()
     val partSchema = dfSchema.getField("partition").schema()
-    val entries = files.map { p =>
+    val entries = files.map { f =>
       val d = new GenericData.Record(dfSchema)
       d.put("content", content)
-      d.put("file_path", p.toString)
+      d.put("file_path", f.path.toString)
       d.put("file_format", "PARQUET")
       d.put("partition", new GenericData.Record(partSchema))
-      d.put("record_count", parquetRowCount(spark, p))
-      d.put("file_size_in_bytes",
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(p).getLen)
+      d.put("record_count", f.rows)
+      d.put("file_size_in_bytes", f.size)
       d.put("block_size_in_bytes", 67108864L)
       if (equalityIds.nonEmpty)
         d.put("equality_ids", equalityIds.map(Int.box).asJava)
@@ -1966,7 +1916,7 @@ object IcebergTable {
       e.put("data_file", d)
       e
     }
-    val manifestPath = new Path(metaDir(table), f"snap$snapshotId%05d-d0.avro")
+    val manifestPath = metaFile(table, snapshotId, "d0")
     // global delete files carry an EMPTY partition struct — on a
     // partitioned table they reference the UNPARTITIONED spec (id 1,
     // written by commitMetadata), never spec 0's identity fields
@@ -1978,7 +1928,7 @@ object IcebergTable {
     val deletedRows = entries.map(_.get("data_file")
       .asInstanceOf[GenericRecord].get("record_count").asInstanceOf[Long]).sum
     val carried = carriedManifests(spark, table, Some(meta), manifestFileSchemaV2)
-    val listPath = new Path(metaDir(table), f"snap-$snapshotId-manifest-list.avro")
+    val listPath = metaFile(table, snapshotId, "manifest-list")
     writeAvro(spark, listPath, manifestFileSchemaV2,
       mfRow(manifestFileSchemaV2, manifestPath.toString, manifestLen,
         snapshotId, entries.size, deletedRows, content = 1,
@@ -2026,7 +1976,7 @@ object IcebergTable {
     import spark.implicits._
     val meta = loadMeta(spark, table)
     requireIdentitySpec(meta, "deleteFromDv")
-    val entries = liveEntries(spark, table)
+    val entries = liveEntries(spark, meta, None, None)
     val dataFiles = entries.filter(_.content == 0)
     if (dataFiles.isEmpty) return meta.currentSnapshotId.getOrElse(0L)
     val lookup = dataFiles.map(f => (f.path, normSchemeless(f.path)))
@@ -2096,7 +2046,7 @@ object IcebergTable {
     // partition of the affected files (task-attempt-unique names; only
     // the winning attempt's rows reach the driver, orphans vanish with
     // the staging dir)
-    val staging = new Path(table, s"_staging_dv$snapshotId")
+    val staging = new Path(table, s"_staging_${java.util.UUID.randomUUID()}")
     fs.mkdirs(staging)
     val stagingStr = staging.toString
     val blobRows: Seq[(String, String, Long, Long, Long)] =
@@ -2129,9 +2079,7 @@ object IcebergTable {
     val finalPath: Map[String, Path] = blobRows.map(_._1).distinct.sorted
       .map { name =>
         val dest = new Path(dataDir, name)
-        fs.delete(dest, false)
-        require(fs.rename(new Path(staging, name), dest),
-          s"rename failed: $staging/$name -> $dest")
+        StagedFiles.move(fs, new Path(staging, name), dest)
         name -> dest
       }.toMap
     fs.delete(staging, true)
@@ -2160,7 +2108,7 @@ object IcebergTable {
       e.put("data_file", d)
       e
     }
-    val manifestPath = new Path(metaDir(table), f"snap$snapshotId%05d-dv0.avro")
+    val manifestPath = metaFile(table, snapshotId, "dv0")
     // DV entries carry an empty partition struct — on a partitioned
     // table they reference the UNPARTITIONED spec (id 1); see
     // commitDeleteFiles
@@ -2189,7 +2137,7 @@ object IcebergTable {
           if (dropped.isEmpty) Some(r)
           else if (kept.isEmpty) None
           else {
-            val rw = new Path(metaDir(table), f"snap$snapshotId%05d-rw$i.avro")
+            val rw = metaFile(table, snapshotId, s"rw$i")
             // the rewrite preserves the source manifest's spec id
             val rwSpec = r.get("partition_spec_id").asInstanceOf[Int]
             val rwLen = writeAvro(spark, rw, mfSchema, kept, Map(
@@ -2207,7 +2155,7 @@ object IcebergTable {
           }
         }
       }
-    val listPath = new Path(metaDir(table), f"snap-$snapshotId-manifest-list.avro")
+    val listPath = metaFile(table, snapshotId, "manifest-list")
     writeAvro(spark, listPath, manifestFileSchemaV2,
       mfRow(manifestFileSchemaV2, manifestPath.toString, manifestLen,
         snapshotId, entries.size, totalCard, content = 1,

@@ -165,54 +165,6 @@ object PaimonTable {
     try os.write(s.getBytes("UTF-8")) finally os.close()
   }
 
-  /** Publish `s` at `p` ONLY if `p` does not exist — the commit
-    * primitive for snapshot files (paimon's own rule: snapshot-N is
-    * immutable once written; two concurrent committers must not both
-    * think they won). Local filesystems publish full content atomically
-    * via hard link (link(2) refuses an existing target — rename would
-    * silently overwrite); others use create(p, overwrite=false), the
-    * HDFS put-if-absent. Returns false when a concurrent writer won. */
-  private def publishTextIfAbsent(spark: SparkSession, p: Path,
-                                  s: String): Boolean = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    if (Option(fs.getScheme).contains("file")) {
-      val tmp = new Path(p.getParent, s".${java.util.UUID.randomUUID()}.tmp")
-      val os = fs.create(tmp, true)
-      try os.write(s.getBytes("UTF-8")) finally os.close()
-      val ok =
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(p.toUri.getPath),
-            java.nio.file.Paths.get(tmp.toUri.getPath))
-          true
-        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      fs.delete(tmp, false)
-      ok
-    } else {
-      // ONLY already-exists means "lost the race" — a transient IO error
-      // reported as a concurrent commit would make callers retry against
-      // a broken filesystem, and a failure AFTER create() succeeded
-      // would leave a truncated snapshot JSON that wedges every later
-      // snapshots() parse; best-effort unlink it before rethrowing
-      val created =
-        try { val os = fs.create(p, false); Some(os) }
-        catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => None
-          case _: java.nio.file.FileAlreadyExistsException => None
-        }
-      created match {
-        case None => false
-        case Some(os) =>
-          try { try os.write(s.getBytes("UTF-8")) finally os.close(); true }
-          catch { case e: Throwable =>
-            try fs.delete(p, false) catch { case _: Exception => () }
-            throw e
-          }
-      }
-    }
-  }
-
   /** Parse schema/schema-<id> (highest id, or the one a snapshot pins). */
   def loadSchema(spark: SparkSession, table: String,
                  schemaId: Option[Long] = None): PaimonSchema = {
@@ -896,22 +848,9 @@ object PaimonTable {
     // append-table layout; Spark's partitionBy drops its partition
     // columns from the files, which is why the originals can't stage
     // directly).
-    // UUID staging: two concurrent writers both targeting snapshot
-    // N+1 must not share a staging dir — one's mode("overwrite")
-    // would delete the other's staged parts mid-move, and the
-    // put-if-absent snapshot publish decides the race AFTER the
-    // moves (the loser orphans its own files, never the winner's)
-    val staging = new Path(table, s"_staging_${UUID.randomUUID()}")
-    if (partCols.isEmpty)
-      df.write.mode("overwrite").parquet(staging.toString)
-    else {
-      val dup = partCols.foldLeft(df)((d, f) =>
-        d.withColumn(s"__p_${f.name}", org.apache.spark.sql.functions.col(f.name)))
-      dup.write.partitionBy(partCols.map(f => s"__p_${f.name}"): _*)
-        .mode("overwrite").parquet(staging.toString)
-    }
-    val moved = moveStaged(spark, table, staging, bucketOf = _ => 0,
-      partCols = partCols)
+    val moved = stageFiles(partCols.foldLeft(df)((d, f) =>
+      d.withColumn(s"__p_${f.name}", org.apache.spark.sql.functions.col(f.name))),
+      table, partCols)
     commitSnapshot(spark, table, moved, mode, snapId, prevSnaps,
       totalBuckets = 1, commitUser, commitIdentifier, partCols = partCols)
   }
@@ -952,14 +891,7 @@ object PaimonTable {
     val df = spark.read.schema(sch.schema)
       .parquet(files.map(f => s"$table/bucket-${f.bucket}/${f.fileName}"): _*)
       .repartition(bins)
-    // UUID staging: two concurrent writers both targeting snapshot
-    // N+1 must not share a staging dir — one's mode("overwrite")
-    // would delete the other's staged parts mid-move, and the
-    // put-if-absent snapshot publish decides the race AFTER the
-    // moves (the loser orphans its own files, never the winner's)
-    val staging = new Path(table, s"_staging_${UUID.randomUUID()}")
-    df.write.mode("overwrite").parquet(staging.toString)
-    val moved = moveStaged(spark, table, staging, bucketOf = _ => 0)
+    val moved = stageFiles(df, table)
     commitSnapshot(spark, table, moved, SaveMode.Append, snapId, prevSnaps,
       totalBuckets = 1, deletes = files, kindOverride = Some("COMPACT"))
   }
@@ -1083,37 +1015,15 @@ object PaimonTable {
   private case class MovedFile(bucket: Int, name: String, size: Long,
                                rows: Long, partValues: Seq[Any])
 
-  /** Percent-decode one Hive-escaped partition path value (the inverse
-    * of FileUtils.escapePathName, which Spark's partitionBy staging
-    * applies). */
-  private def unescapePathName(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length &&
-          s.substring(i + 1, i + 3).forall(h =>
-            Character.digit(h, 16) >= 0)) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Typed partition values recovered from a staged file's
-    * `__p_<name>=<value>` path components (Spark partitionBy rendering:
-    * Hive-escaped, nulls as __HIVE_DEFAULT_PARTITION__). */
-  private def stagedPartitionValues(p: Path, parts: Seq[StructField]): Seq[Any] = {
-    val comps = p.toString.split('/')
-    parts.map { f =>
-      val pre = s"__p_${f.name}="
-      val raw = comps.find(_.startsWith(pre)).getOrElse(
-        throw new IllegalStateException(s"no $pre component in staged path $p"))
-        .substring(pre.length)
-      val un = unescapePathName(raw)
+  /** Typed partition values of a staged file, from its `__p_<name>`
+    * staging components (nulls stage as __HIVE_DEFAULT_PARTITION__). */
+  private def stagedPartitionValues(f: StagedFiles.StagedFile,
+                                    parts: Seq[StructField]): Seq[Any] =
+    parts.map { p =>
+      val un = f.partition.getOrElse(s"__p_${p.name}", throw new IllegalStateException(
+        s"no __p_${p.name}= component in staged path ${f.path}"))
       if (un == "__HIVE_DEFAULT_PARTITION__") null
-      else f.dataType match {
+      else p.dataType match {
         case StringType => un
         case IntegerType => java.lang.Integer.valueOf(un)
         case LongType => java.lang.Long.valueOf(un)
@@ -1122,36 +1032,29 @@ object PaimonTable {
         case BooleanType => java.lang.Boolean.valueOf(un)
         case DateType => java.time.LocalDate.parse(un)
         case other => throw new IllegalArgumentException(
-          s"unsupported paimon partition column type $other for ${f.name}")
+          s"unsupported paimon partition column type $other for ${p.name}")
       }
     }
-  }
 
-  /** Move staged parquet files into their `[<k>=<v>/]bucket-<b>/` dirs;
-    * `bucketOf` maps a staged file's path to its bucket
-    * (directory-partitioned staging encodes it as a `__bucket=<b>`
-    * component), `partCols` the table's partition fields (staging
-    * encodes their values as `__p_<k>=<v>` components). */
-  private def moveStaged(spark: SparkSession, table: String, staging: Path,
-                         bucketOf: Path => Int,
-                         partCols: Seq[StructField] = Nil): Seq[MovedFile] = {
-    val fs = fsOf(spark, table)
-    def walk(p: Path): Seq[Path] = StagedFiles.walkParquet(fs, p)
-    val moved = walk(staging).sortBy(_.toString).zipWithIndex.map { case (src, i) =>
-      val b = bucketOf(src)
-      val pv = if (partCols.isEmpty) Nil else stagedPartitionValues(src, partCols)
-      val bucketDir =
-        if (partCols.isEmpty) new Path(table, s"bucket-$b")
-        else new Path(new Path(table,
-          BinaryRow.partitionPath(partCols.map(_.name), pv)), s"bucket-$b")
-      fs.mkdirs(bucketDir)
-      val name = s"data-${UUID.randomUUID()}-$i.parquet"
-      fs.rename(src, new Path(bucketDir, name))
-      val p = new Path(bucketDir, name)
-      MovedFile(b, name, fs.getFileStatus(p).getLen, parquetRowCount(spark, p), pv)
-    }
-    fs.delete(staging, true)
-    moved
+  /** Stage `df` into its `[<k>=<v>/]bucket-<b>/` dirs: `partCols` stage
+    * as `__p_<k>` columns, and a `bucketed` frame's `__bucket` column
+    * names the bucket (0 otherwise). */
+  private def stageFiles(df: DataFrame, table: String,
+                         partCols: Seq[StructField] = Nil,
+                         bucketed: Boolean = false): Seq[MovedFile] = {
+    def bucketOf(f: StagedFiles.StagedFile) =
+      f.partition.get("__bucket").fold(0)(_.toInt)
+    StagedFiles.stage(df, table,
+        partCols.map(f => s"__p_${f.name}") ++ Option.when(bucketed)("__bucket"),
+        countRows = true) { (f, u) =>
+      val bucketDir = s"bucket-${bucketOf(f)}"
+      Some(new Path(
+        if (partCols.isEmpty) new Path(table, bucketDir)
+        else new Path(new Path(table, BinaryRow.partitionPath(partCols.map(_.name),
+          stagedPartitionValues(f, partCols))), bucketDir),
+        s"data-$u.parquet"))
+    }.map(f => MovedFile(bucketOf(f), f.path.getName, f.size, f.rows,
+      stagedPartitionValues(f, partCols)))
   }
 
   /** Unsigned-byte comparison of two UTF-8 encodings — paimon orders
@@ -1355,8 +1258,8 @@ object PaimonTable {
          |"logOffsets":{},
          |"totalRecordCount":$total,"deltaRecordCount":$newRows,
          |"changelogRecordCount":0}""".stripMargin
-    if (!publishTextIfAbsent(spark,
-        new Path(snapshotDir(table), s"snapshot-$snapId"), snapJson))
+    if (!StagedFiles.publishIfAbsent(fs,
+        new Path(snapshotDir(table), s"snapshot-$snapId"), snapJson.getBytes("UTF-8")))
       throw new java.util.ConcurrentModificationException(
         s"paimon commit conflict on $table: snapshot-$snapId was committed " +
           "by a concurrent writer — this write did NOT land; retry it " +
@@ -1519,25 +1422,9 @@ object PaimonTable {
         pmod(hash(primaryKeys.map(k => col(s"_KEY_$k")): _*), lit(buckets)))
     val staged = partCols.foldLeft(keyed)((d, f) =>
       d.withColumn(s"__p_${f.name}", col(s"_KEY_${f.name}")))
-    // UUID staging: two concurrent writers both targeting snapshot
-    // N+1 must not share a staging dir — one's mode("overwrite")
-    // would delete the other's staged parts mid-move, and the
-    // put-if-absent snapshot publish decides the race AFTER the
-    // moves (the loser orphans its own files, never the winner's)
-    val staging = new Path(table, s"_staging_${UUID.randomUUID()}")
-    staged.write
-      .partitionBy(partCols.map(f => s"__p_${f.name}") :+ "__bucket": _*)
-      .mode("overwrite").parquet(staging.toString)
-    val moved = moveStaged(spark, table, staging, bucketOf = p => {
-      val comp = p.toString.split('/').find(_.startsWith("__bucket="))
-        .getOrElse(throw new IllegalStateException(s"no __bucket= in $p"))
-      comp.substring("__bucket=".length).toInt
-    }, partCols = partCols)
+    val moved = stageFiles(staged, table, partCols, bucketed = true)
     commitSnapshot(spark, table, moved, mode, snapId, prevSnaps,
       totalBuckets = buckets, commitUser, commitIdentifier,
       partCols = partCols)
   }
-
-  private def parquetRowCount(spark: SparkSession, p: Path): Long =
-    StagedFiles.parquetRowCount(spark, p)
 }

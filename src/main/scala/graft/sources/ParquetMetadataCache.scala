@@ -100,16 +100,10 @@ object ParquetMetadataCache {
         cn.put("t", s.typ); cn.put("min", s.min); cn.put("max", s.max)
       }
     }
-    val out = new Path(dir, ManifestName)
-    val tmp = new Path(dir, ManifestName + ".tmp")
-    val os = fs.create(tmp, true)
-    try os.write(json.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
-    finally os.close()
-    if (fs.exists(out)) fs.delete(out, false)
-    // atomic on a real FS — same recipe as ViewCatalog; HDFS reports
-    // failure via the boolean, and a silently-stale manifest would
-    // prune against old min/max
-    require(fs.rename(tmp, out), s"manifest rename failed: $tmp -> $out")
+    // a failed replace throws: a silently-stale manifest would prune
+    // against old min/max
+    StagedFiles.replace(fs, new Path(dir, ManifestName),
+      json.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
     footersRead.value.toInt
   }
 

@@ -53,11 +53,7 @@ object SchemaProvider {
     node.put("schemaJson", schema.json)
     val d = node.putObject("defaults")
     defaults.foreach { case (k, v) => d.put(k, v) }
-    val tmp = new Path(storePath, s"$FileName.tmp")
-    val out = f.create(tmp, true)
-    try out.write(mapper.writeValueAsBytes(node)) finally out.close()
-    if (f.exists(target)) f.delete(target, false)
-    require(f.rename(tmp, target), s"atomic rename failed for $target")
+    StagedFiles.replace(f, target, mapper.writeValueAsBytes(node))
   }
 
   /** DROP SCHEMA; returns whether one was declared. */

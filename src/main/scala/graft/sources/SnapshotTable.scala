@@ -49,38 +49,14 @@ object SnapshotTable {
     // errorifexists' pre-job existence check is not atomic, so two
     // concurrent writers could interleave part files into one v=N dir
     // that still earned a _SUCCESS. Losers advance to the next id.
-    // put-if-absent that is ATOMIC on the local fs too: hadoop's
-    // RawLocalFileSystem.create(overwrite=false) is exists-then-create
-    // (TOCTOU — two local writers could both claim one version), while
-    // NIO createFile is O_EXCL-atomic on POSIX. Remote filesystems keep
-    // hadoop create(false), which is atomic server-side (HDFS et al).
-    def putIfAbsent(p: Path): Boolean = f match {
-      // RawLocalFileSystem too, not only the checksum wrapper: a session
-      // configured with the RAW local fs (getLocal(conf).getRaw, test
-      // harnesses) fell to the hadoop create(false) branch — on the raw
-      // local fs that IS the non-atomic exists-then-create this NIO
-      // branch exists to avoid
-      case _: org.apache.hadoop.fs.LocalFileSystem |
-           _: org.apache.hadoop.fs.RawLocalFileSystem =>
-        try {
-          java.nio.file.Files.createFile(
-            java.nio.file.Paths.get(p.toUri.getPath)); true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-          case _: java.io.IOException => false
-        }
-      case _ =>
-        try { f.create(p, false).close(); true }
-        catch { case _: java.io.IOException => false }
-    }
-    f.mkdirs(dir) // NIO createFile does not create parents
     var v = (taken :+ 0).max + 1
     var claimed = false
     var attempts = 0
     while (!claimed) {
       attempts += 1
       require(attempts <= 50, s"snapshot claim: gave up after 50 conflicts at $base")
-      if (putIfAbsent(new Path(dir, s".v=$v.claim"))) claimed = true
+      if (StagedFiles.publishIfAbsent(f, new Path(dir, s".v=$v.claim"),
+          Array.emptyByteArray)) claimed = true
       else v = math.max(v + 1, (taken :+ 0).max + 1)
     }
     df.write.mode("errorifexists").parquet(s"$base/v=$v")

@@ -132,15 +132,8 @@ object StatsCatalog {
         c.histogram.foreach(h.add)
       }
     }
-    val target = new Path(base, key + Suffix)
-    // UUID tmp: a FIXED per-table tmp name let two concurrent ANALYZEs
-    // interleave into one stream and install corrupt JSON durably
-    val tmp = new Path(base,
-      s".$key$Suffix.${java.util.UUID.randomUUID()}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(mapper.writeValueAsBytes(node)) finally out.close()
-    if (f.exists(target)) f.delete(target, false)
-    require(f.rename(tmp, target), s"atomic rename failed for $target")
+    StagedFiles.replace(f, new Path(base, key + Suffix),
+      mapper.writeValueAsBytes(node))
     // NO migration delete of `<displayName>.stats.json` here: that file
     // is indistinguishable from the LIVE stats of a different table
     // that legitimately keys by display name (the no-fileKey API) and

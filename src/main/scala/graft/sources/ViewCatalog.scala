@@ -59,15 +59,7 @@ object ViewCatalog {
     val node = mapper.createObjectNode()
     node.put("name", name)
     node.put("sql", sql)
-    // UUID staging: a FIXED tmp name let two concurrent CREATE OR
-    // REPLACE of the same view interleave into one stream and install
-    // torn JSON durably (the StatsCatalog.write hardening, same class)
-    val tmp = new Path(base,
-      s".$name$Suffix.${java.util.UUID.randomUUID()}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(mapper.writeValueAsBytes(node)) finally out.close()
-    if (f.exists(target)) f.delete(target, false)
-    require(f.rename(tmp, target), s"atomic rename failed for $target")
+    StagedFiles.replace(f, target, mapper.writeValueAsBytes(node))
     df.createOrReplaceTempView(name)
   }
 

@@ -188,11 +188,13 @@ object Events {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val committed = graft.sources.DeltaLogWriter
-          .lastTxnVersion(batch.sparkSession, tablePath, appId)
-        if (shouldWrite(committed, batchId, tablePath, appId))
+        // one log read per micro-batch: the txn guard and the commit
+        // come from one snapshot
+        val snap = graft.sources.DeltaLogReader
+          .snapshotIfExists(batch.sparkSession, tablePath)
+        if (shouldWrite(snap.flatMap(_.txns.get(appId)), batchId, tablePath, appId))
           graft.sources.DeltaLogWriter.write(batch.toDF(), tablePath,
-            txn = Some((appId, batchId)))
+            org.apache.spark.sql.SaveMode.Append, Some((appId, batchId)), snap)
         ()
       }
       .start()

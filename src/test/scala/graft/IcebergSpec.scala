@@ -311,7 +311,8 @@ class IcebergSpec extends AnyFunSuite {
     val staged = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/_eqstage"))
       .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
     fs.rename(staged, eqPath)
-    IcebergTable.commitDeleteFiles(spark, base, meta, Seq(eqPath),
+    IcebergTable.commitDeleteFiles(spark, base, meta, Seq(graft.sources.StagedFiles
+      .StagedFile(eqPath, fs.getFileStatus(eqPath).getLen, Map.empty, 2L)),
       content = 2, snapshotId = 2L)
     val e = intercept[IllegalArgumentException](
       IcebergTable.read(spark, base).collect())
