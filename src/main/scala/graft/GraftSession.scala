@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
@@ -89,30 +91,41 @@ object GraftSession {
     else df
   }
 
-  /** Parquet schema memo for [[readParquet]]. SCHEMA METADATA only —
-    * never rows, never results: every query still computes from the
-    * parquet bytes. Plain `spark.read.parquet(p)` re-reads footers for
-    * schema inference on EVERY DataFrame construction (~100 ms per call
-    * vs ~20 ms schema-supplied, measured in OPTIMIZATION_r17.md);
-    * for the bench's sub-second tail that inference IS a visible share
-    * of the wall (guide §1.2 step 3 / VERDICT r16 item 6: fixed
-    * per-query overhead). Because inference
-    * happens under the SAME session confs that shape it (nanosAsLong
-    * etc., pinned by this builder), the memoized schema is exactly what
-    * inference would return. */
+  /** Schema memo for [[readInferred]]. SCHEMA METADATA only — never
+    * rows, never results: every query still computes from the file
+    * bytes. A bare schema-inferring read (`spark.read.parquet(p)`,
+    * `.json`, `.csv` with inferSchema) re-runs inference on EVERY
+    * DataFrame construction: a footer-merge job for parquet (~100 ms per
+    * call vs ~20 ms schema-supplied, measured in OPTIMIZATION_r17.md),
+    * one pass over the whole file for JSON, two for CSV. For the front
+    * door's sub-second statements that inference IS a visible share of
+    * the wall (fixed per-query overhead). The entry's key carries the
+    * format, the reader options and the session's `spark.sql.*` confs
+    * that shape inference (nanosAsLong etc.), so the memoized schema is
+    * exactly what inference would return under the same settings. */
   private val schemaMemo = new SchemaMemo(1024)
 
-  /** Schema-memoized parquet read of a stable table path (the `table()`
-    * entry point and any other fixed-layout read). Multi-path reads key
-    * the memo on the full path list + stamps (the iceberg delete-file
-    * group shape: one schema across the group's files). FLAT layouts
-    * only: the stamp sees a directory's direct children, so a change
-    * inside a nested (e.g. partition) subdirectory would serve the old
-    * schema — read partitioned trees with `spark.read` directly. */
-  def readParquet(spark: SparkSession, path: String, more: String*): DataFrame = {
-    val paths = path +: more
-    val schema = schemaMemo.schema(paths)(spark.read.parquet(paths: _*).schema)
-    spark.read.schema(schema).parquet(paths: _*)
+  /** Schema-memoized parquet read of a table path (the `table()` entry
+    * point, the lakehouse readers' data and delete files). Multi-path
+    * reads key the memo on the full path list (the iceberg delete-file
+    * group shape: one schema across the group's files). */
+  def readParquet(spark: SparkSession, path: String, more: String*): DataFrame =
+    readInferred(spark, "parquet", Map.empty, path +: more)
+
+  /** Read `paths` in a schema-inferring `format`, inferring the schema
+    * once per (format, options, session `spark.sql.*` confs, paths) until
+    * a file under the paths changes (see [[SchemaMemo]]). Directories,
+    * hive-partitioned trees and glob patterns stamp through the Hadoop
+    * FileSystem, so any configured scheme (`file:`, `hdfs:`, `s3a:`)
+    * notices a rewrite. */
+  def readInferred(spark: SparkSession, format: String,
+                   options: Map[String, String], paths: Seq[String]): DataFrame = {
+    val reader = spark.read.format(format).options(options)
+    val scope = format +: options.toSeq.sorted.map { case (k, v) => s"$k=$v" } :+
+      SchemaMemo.sqlConfDigest(spark)
+    val schema = schemaMemo.schema(paths, scope,
+      spark.sparkContext.hadoopConfiguration)(reader.load(paths: _*).schema)
+    reader.schema(schema).load(paths: _*)
   }
 
   /** Rebalance a (possibly few-split) input across the session's shuffle
@@ -126,15 +139,17 @@ object GraftSession {
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
 }
 
-/** Bounded LRU memo of inferred schemas keyed by a path list. Each entry
-  * carries a freshness stamp of its paths — every file's (or every
-  * directory's DIRECT children's) names, mtimes and lengths, in full —
-  * so a regenerated table re-infers. Key and stamps join their parts with
-  * '\u0000', which no path holds, so distinct path lists never alias
-  * (`["/a", "/b"]` vs `["/a/b"]`). The least recently used entry goes
-  * once `max` are held; re-inference costs ~100 ms, so eviction only
-  * costs time. Inference runs outside the lock, so concurrent readers
-  * never wait on each other's footers. */
+/** Bounded LRU memo of inferred schemas keyed by a scope (what shapes
+  * inference: format, reader options, conf digest) and a path list. Each
+  * entry carries a freshness stamp of its paths: the full path, length
+  * and mtime of every file under each path, from one recursive Hadoop
+  * FileSystem walk (glob patterns expand first), so a rewritten file or a
+  * new partition directory re-infers on any filesystem scheme. Keys and
+  * stamps length-prefix their parts, so distinct scopes and path lists
+  * never alias (`["/a", "/b"]` vs `["/a/b"]`). The least recently used
+  * entry goes once `max` are held; re-inference only costs time.
+  * Inference runs outside the lock, so concurrent readers never wait on
+  * each other's inference. */
 private[graft] final class SchemaMemo(max: Int) {
   private val entries =
     new java.util.LinkedHashMap[String, (String, StructType)](16, 0.75f, true) {
@@ -143,9 +158,11 @@ private[graft] final class SchemaMemo(max: Int) {
         size() > max
     }
 
-  def schema(paths: Seq[String])(infer: => StructType): StructType = {
-    val key = SchemaMemo.key(paths)
-    val stamp = paths.map(SchemaMemo.stampOf).mkString("\u0000")
+  def schema(paths: Seq[String], scope: Seq[String] = Nil,
+             hadoopConf: Configuration = SchemaMemo.defaultConf)(
+      infer: => StructType): StructType = {
+    val key = SchemaMemo.key(paths, scope)
+    val stamp = SchemaMemo.join(paths.map(SchemaMemo.stampOf(_, hadoopConf)))
     entries.synchronized(Option(entries.get(key))) match {
       case Some((st, s)) if st == stamp => s
       case _ =>
@@ -161,17 +178,42 @@ private[graft] final class SchemaMemo(max: Int) {
 }
 
 private[graft] object SchemaMemo {
-  def key(paths: Seq[String]): String = paths.mkString("\u0000")
+  private lazy val defaultConf = new Configuration()
 
-  private def stampOf(path: String): String = {
-    val f = new java.io.File(path)
-    val base = s"${f.lastModified}:${f.length}"
-    if (f.isDirectory) {
-      // '/' cannot occur in a file name, so the joined list is unambiguous
-      val kids = Option(f.listFiles()).getOrElse(Array.empty)
-        .map(k => s"${k.getName}:${k.lastModified}:${k.length}")
-        .sorted.mkString("/")
-      s"$base#$kids"
-    } else base
+  /** Length-prefixed concatenation: no part's content can fake a
+    * boundary, whatever characters paths or option values hold. */
+  private def join(parts: Seq[String]): String =
+    parts.map(p => s"${p.length}:$p").mkString
+
+  def key(paths: Seq[String], scope: Seq[String] = Nil): String =
+    join(Seq(join(scope), join(paths)))
+
+  /** Digest of the session's `spark.sql.*` confs: the memo is JVM-wide
+    * and shared by `newSession()` clones, so an entry inferred under one
+    * setting (nanosAsLong, inferTimestampNTZ, case sensitivity, ...)
+    * must never serve a session under another. */
+  def sqlConfDigest(spark: SparkSession): String = {
+    val confs = spark.conf.getAll.toSeq.filter(_._1.startsWith("spark.sql.")).sorted
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    confs.foreach { case (k, v) => md.update(join(Seq(k, v)).getBytes("UTF-8")) }
+    md.digest().map(b => f"$b%02x").mkString
+  }
+
+  /** Every file under `path` (a file, a directory tree or a glob), by
+    * full path, length and mtime. Plain `listStatus` per directory:
+    * `FileSystem.listFiles` builds LocatedFileStatus, which reads each
+    * file's permissions, and without the native Hadoop library the local
+    * filesystem forks `ls` for that. */
+  private def stampOf(path: String, conf: Configuration): String = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    def walk(st: FileStatus): Iterator[String] =
+      if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(walk)
+      else Iterator(join(Seq(st.getPath.toString, st.getLen.toString,
+        st.getModificationTime.toString)))
+    val roots =
+      try Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    join(roots.flatMap(walk).sorted)
   }
 }

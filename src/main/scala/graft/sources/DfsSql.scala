@@ -133,7 +133,7 @@ object DfsSql {
 
   private def readByExt(spark: SparkSession, path: String, ext: String): DataFrame =
     ext match {
-      case "parquet"                   => spark.read.parquet(path)
+      case "parquet"                   => graft.GraftSession.readParquet(spark, path)
       case "csv"                       => SchemaOnRead.csv(spark, path)
       case "tsv"                       => SchemaOnRead.csv(spark, path, "\t")
       // headerless columns[] per Drill's psv/tbl defaults (see glob note)

@@ -513,10 +513,18 @@ object IcebergTable {
     val hash = table.indexOf('#')
     if (hash >= 0)
       return metadataTable(spark, table.substring(0, hash), table.substring(hash + 1))
-    val meta = loadMeta(spark, table)
+    read(spark, loadMeta(spark, table), snapshotId, asOfTimestampMs,
+      Option(partitionFilter))
+  }
+
+  /** [[read]] from metadata the caller already loaded. */
+  private[sources] def read(spark: SparkSession, meta: TableMeta,
+                            snapshotId: Option[Long],
+                            asOfTimestampMs: Option[Long],
+                            partitionFilter: Option[Map[String, Any] => Boolean]): DataFrame = {
     val entries = liveEntries(spark, meta, snapshotId, asOfTimestampMs)
-    var files = entries.filter(_.content == 0)
-    if (partitionFilter != null) files = files.filter(f => partitionFilter(f.partition))
+    val files = entries.filter(f => f.content == 0 &&
+      partitionFilter.forall(_(f.partition)))
     buildRead(spark, meta, files, entries.filter(_.content == 1),
       entries.filter(_.content == 2))
   }
@@ -1701,10 +1709,15 @@ object IcebergTable {
     * requires an exact match). Returns the new snapshot id, or the
     * current one unchanged when nothing matches. */
   def deleteFrom(spark: SparkSession, table: String,
-                 condition: org.apache.spark.sql.Column): Long = {
+                 condition: org.apache.spark.sql.Column): Long =
+    deleteFrom(spark, table, loadMeta(spark, table), condition)
+
+  /** [[deleteFrom]] from metadata the caller already loaded. */
+  private[sources] def deleteFrom(spark: SparkSession, table: String,
+                                  meta: TableMeta,
+                                  condition: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{broadcast, col}
     import spark.implicits._
-    val meta = loadMeta(spark, table)
     requireIdentitySpec(meta, "deleteFrom")
     val entries = liveEntries(spark, meta, None, None)
     // equality-delete files in the table are fine: the raw-parquet match

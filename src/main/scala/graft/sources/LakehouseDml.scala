@@ -44,7 +44,7 @@ object IcebergDml {
     // visible rows (existing position/equality deletes applied) — the
     // plan captures the CURRENT file list, so the append below still
     // reads pre-delete state even after the delete snapshot commits
-    val visible = IcebergTable.read(spark, table)
+    val visible = IcebergTable.read(spark, meta, None, None, None)
     val hit = nullIsFalse(condition)
     // persisted: the count and the append must see the SAME row set —
     // re-executing the filter for each would let a nondeterministic
@@ -56,7 +56,7 @@ object IcebergDml {
       val updatedRows = touched.select(assign(schema, Seq(None -> set)): _*)
       val n = touched.count()
       if (n == 0) return (meta.currentSnapshotId.getOrElse(0L), 0L)
-      IcebergTable.deleteFrom(spark, table, condition)
+      IcebergTable.deleteFrom(spark, table, meta, condition)
       // the table's own partition spec rides along: write() REQUIRES the
       // declared columns, and this append runs AFTER the delete snapshot
       // committed — a partitionBy mismatch here would strand the table
@@ -79,13 +79,13 @@ object IcebergDml {
     try {
       // persisted: the visible rows feed the counts, the insert anti-join
       // and the updated versions appended after the delete commit
-      val visible = m.cache(IcebergTable.read(spark, table))
+      val visible = m.cache(IcebergTable.read(spark, meta, None, None, None))
       val current = meta.currentSnapshotId.getOrElse(0L)
       // raw data-file scan with (file, pos) row identity — the _metadata
       // columns are pinned to THIS scan before any join, so a file-backed
       // source never makes them ambiguous
       import spark.implicits._
-      lazy val dataFiles = IcebergTable.liveEntries(spark, table)
+      lazy val dataFiles = IcebergTable.liveEntries(spark, meta, None, None)
         .filter(_.content == 0)
       lazy val rawIdent = spark.read.schema(meta.schema)
         .parquet(dataFiles.map(_.path): _*)
@@ -106,7 +106,7 @@ object IcebergDml {
       // position-delete every clause-selected row: raw data-file scan
       // (with its (file, pos) identity) joined against the source — rows
       // an earlier delete already masked may over-delete, harmlessly
-      if ((updated > 0 || deleted > 0) && dataFiles.nonEmpty) {
+      val deleteSnap = Option.when((updated > 0 || deleted > 0) && dataFiles.nonEmpty) {
         // __g_fp precomputed DRIVER-side with the URI-encoding identity
         // (manifest strings; _metadata.file_path is URI-encoded)
         val lookup = broadcast(dataFiles
@@ -125,7 +125,7 @@ object IcebergDml {
           // snapshot is already durable when this append runs)
           IcebergTable.write(appends.reduce(_ unionByName _), table,
             partitionBy = meta.partCols)
-        else IcebergTable.loadMeta(spark, table).currentSnapshotId.getOrElse(current)
+        else deleteSnap.getOrElse(current)
       DmlStats(version, updated, deleted, inserted)
     } finally m.release()
   }

@@ -15,7 +15,9 @@ import org.apache.spark.sql.types._
 object SchemaOnRead {
 
   /** JSON-lines with schema inference (Drill's json reader infers per
-    * batch; Spark samples then reads once — same user contract).
+    * batch; Spark samples then reads once — same user contract). The
+    * inferred schema is memoized until the file changes
+    * ([[graft.GraftSession.readInferred]]), like the CSV one below.
     *
     * Honors Drill's `store.json.all_text_mode` session option (ref
     * exec/.../store/json/JsonRecordReader + drill-module.conf): when
@@ -26,14 +28,14 @@ object SchemaOnRead {
   def json(spark: SparkSession, path: String): DataFrame = {
     val allText = spark.conf.getOption("store.json.all_text_mode")
       .exists(_.trim.equalsIgnoreCase("true"))
-    spark.read.option("multiLine", "false")
-      .option("primitivesAsString", allText.toString).json(path)
+    graft.GraftSession.readInferred(spark, "json", Map("multiLine" -> "false",
+      "primitivesAsString" -> allText.toString), Seq(path))
   }
 
   /** CSV with header + type inference (Drill: text reader + extractHeader). */
   def csv(spark: SparkSession, path: String, delimiter: String = ","): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true")
-      .option("delimiter", delimiter).csv(path)
+    graft.GraftSession.readInferred(spark, "csv", Map("header" -> "true",
+      "inferSchema" -> "true", "delimiter" -> delimiter), Seq(path))
 
   /** Drill's headerless-text mode: every line becomes a `columns` string
     * array (`SELECT columns[0] FROM ...` — the default way Drill reads

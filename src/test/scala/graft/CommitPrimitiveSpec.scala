@@ -113,6 +113,26 @@ class CommitPrimitiveSpec extends AnyFunSuite {
       ((1L to 9L).toSet - 2L))
   }
 
+  for ((verb, sql) <- Seq(
+      "UPDATE" -> "UPDATE dfs.`%s` SET v = 'u' WHERE k = 2",
+      "MERGE" -> ("MERGE INTO dfs.`%s` t USING (SELECT 2L AS k, 'm' AS v) s " +
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v " +
+        "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)")))
+    test(s"a SQL $verb on an Iceberg table opens its current metadata once") {
+      import spark.implicits._
+      conf.set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+      val base = s"countfs://${freshDir(s"iceberg_${verb.toLowerCase}_reads")}"
+      IcebergTable.write((1L to 6L).map(i => (i, s"r$i")).toDF("k", "v"), base)
+      IcebergTable.write((7L to 9L).map(i => (i, s"r$i")).toDF("k", "v"), base)
+      CountingFileSystem.reset()
+      spark.sql(sql.format(base)).collect()
+      val meta = CountingFileSystem.openedPaths
+        .filter(_.endsWith("/metadata/v2.metadata.json"))
+      assert(meta.size == 1, s"v2.metadata.json opens: ${meta.size}")
+      val rows = IcebergTable.read(spark, base).as[(Long, String)].collect().toMap
+      assert(rows.size == 9 && rows(2L) == (if (verb == "UPDATE") "u" else "m"))
+    }
+
   // Spark's partitionBy staging Hive-escapes each value; the writers
   // recover it with the matching unescape. A non-ASCII value stays
   // unescaped in its directory name, which Spark's own write cannot

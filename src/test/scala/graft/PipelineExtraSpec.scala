@@ -815,26 +815,8 @@ class PipelineExtraSpec extends AnyFunSuite {
   }
 
   test("classifier iterations cost at most 2 Spark jobs each") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    def jobs(run: => org.apache.spark.sql.DataFrame): Int = {
-      val tag = s"clf-jobs-${System.nanoTime}"
-      val n = new java.util.concurrent.atomic.AtomicInteger()
-      val l = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (e.properties != null &&
-              e.properties.getProperty("spark.jobGroup.id") == tag) n.incrementAndGet()
-      }
-      sc.addSparkListener(l)
-      sc.setJobGroup(tag, "classifier job count")
-      try run.unpersist()
-      finally {
-        sc.clearJobGroup()
-        org.apache.spark.ListenerBusDrain(sc)
-        sc.removeSparkListener(l)
-      }
-      n.get
-    }
+    def jobs(run: => org.apache.spark.sql.DataFrame): Int =
+      TestSpark.jobsOf(run.unpersist())
     def quality(iters: Int) = jobs(Search.qualityClassifier(clfFixture, "doc_id",
       "text", col("lang") === "a", iters = iters))
     def language(iters: Int) = jobs(Search.languageClassifier(clfFixture, "doc_id",

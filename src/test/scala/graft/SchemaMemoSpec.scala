@@ -5,8 +5,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftSession's parquet schema memo: keys that never alias, a stamp
-  * that sees a rewritten directory, and a bounded LRU. */
+/** GraftSession's schema memo: keys that never alias, a stamp that sees
+  * a rewritten file or directory tree on any filesystem scheme, a key
+  * that separates reader options and session confs, and a bounded LRU. */
 class SchemaMemoSpec extends AnyFunSuite {
   private val sa = new StructType().add("a", LongType)
   private val sb = new StructType().add("b", StringType)
@@ -54,5 +55,90 @@ class SchemaMemoSpec extends AnyFunSuite {
     assert(memo.contains(p1) && !memo.contains(p2) && memo.contains(p3))
     memo.schema(p2)(infer(sa)) // evicted: inferred again
     assert(infer.calls == 4)
+  }
+
+  test("a file: URI parquet rewritten with an extra column re-infers") {
+    import TestSpark.spark
+    import spark.implicits._
+    val dir = Files.createTempDirectory("memo").resolve("t").toString
+    Seq(1L, 2L).toDF("a").write.parquet(dir)
+    assert(GraftSession.readParquet(spark, s"file:$dir").columns.toSeq == Seq("a"))
+    Seq((3L, "x")).toDF("a", "b").write.mode("overwrite").parquet(dir)
+    val again = GraftSession.readParquet(spark, s"file:$dir")
+    assert(again.columns.toSeq == Seq("a", "b"))
+    assert(again.as[(Long, String)].collect().toSeq == Seq((3L, "x")))
+  }
+
+  test("a new partition directory re-infers its schema") {
+    val dir = Files.createTempDirectory("memo")
+    Files.createDirectories(dir.resolve("k=1"))
+    Files.writeString(dir.resolve("k=1/part-0.parquet"), "x")
+    val memo = new SchemaMemo(8)
+    val infer = new Infer
+    memo.schema(Seq(dir.toString))(infer(sa))
+    memo.schema(Seq(dir.toString))(infer(sa))
+    assert(infer.calls == 1)
+    Files.createDirectories(dir.resolve("k=2"))
+    Files.writeString(dir.resolve("k=2/part-0.parquet"), "y")
+    assert(memo.schema(Seq(dir.toString))(infer(sb)) == sb)
+    assert(infer.calls == 2)
+  }
+
+  test("a file rewritten in place inside a partition directory re-infers") {
+    val dir = Files.createTempDirectory("memo")
+    val part = dir.resolve("k=1/part-0.parquet")
+    Files.createDirectories(part.getParent)
+    Files.writeString(part, "x")
+    val memo = new SchemaMemo(8)
+    val infer = new Infer
+    memo.schema(Seq(dir.toString))(infer(sa))
+    Files.writeString(part, "yy") // same name: no directory's entries change
+    assert(memo.schema(Seq(dir.toString))(infer(sb)) == sb)
+    assert(infer.calls == 2)
+  }
+
+  test("store.json.all_text_mode set between two reads of one file yields strings") {
+    import TestSpark.spark
+    val f = Files.createTempDirectory("memo").resolve("e.json")
+    Files.writeString(f, "{\"n\": 1, \"x\": 2.5}\n{\"n\": 2, \"x\": 3.5}\n")
+    def types = spark.sql(s"SELECT * FROM dfs.`$f`").schema.map(_.dataType)
+    assert(types == Seq(org.apache.spark.sql.types.LongType,
+      org.apache.spark.sql.types.DoubleType))
+    spark.sql("ALTER SESSION SET store.json.all_text_mode = true")
+    try assert(types == Seq(StringType, StringType))
+    finally spark.sql("ALTER SESSION RESET store.json.all_text_mode")
+    assert(types.head == org.apache.spark.sql.types.LongType)
+  }
+
+  test("the same bytes read as csv and as tsv keep separate entries") {
+    import TestSpark.spark
+    val f = Files.createTempDirectory("memo").resolve("d.csv")
+    Files.writeString(f, "a\tb,c\n1\t2,3\n")
+    def cols(fmt: String) =
+      graft.sources.DfsSql.readAs(spark, f.toString, fmt).columns.toSeq
+    assert(cols("csv") == Seq("a\tb", "c"))
+    assert(cols("tsv") == Seq("a", "b,c"))
+    assert(TestSpark.jobsOf {
+      assert(cols("csv") == Seq("a\tb", "c"))
+      assert(cols("tsv") == Seq("a", "b,c"))
+    } == 0)
+  }
+
+  test("a second resolve of parquet, JSON and CSV runs no Spark job") {
+    import TestSpark.spark
+    import spark.implicits._
+    val dir = Files.createTempDirectory("memo")
+    val pq = dir.resolve("t.parquet").toString
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(pq)
+    val json = dir.resolve("t.json")
+    Files.writeString(json, "{\"k\": 1, \"v\": \"a\"}\n")
+    val csv = dir.resolve("t.csv")
+    Files.writeString(csv, "k,v\n1,a\n")
+    for (p <- Seq(pq, json.toString, csv.toString)) {
+      val first = graft.sources.DfsSql.read(spark, p).schema
+      var again: StructType = null
+      assert(TestSpark.jobsOf { again = graft.sources.DfsSql.read(spark, p).schema } == 0, p)
+      assert(again == first, p)
+    }
   }
 }

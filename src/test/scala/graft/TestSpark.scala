@@ -19,6 +19,30 @@ object TestSpark {
   val SF = "/root/testdata/sf0.001"
   val Fixtures = "/root/repo/testfiles"
 
+  /** Spark jobs that `run` starts on the calling thread: every job of a
+    * one-off job group, counted once the listener bus has delivered its
+    * events. */
+  def jobsOf(run: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"jobs-of-${System.nanoTime}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == tag) n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(tag, "job count")
+    try run
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(l)
+    }
+    n.get
+  }
+
   /** Cause-chain messages joined to one string — the shared helper for
     * refusal-message asserts (Spark wraps task failures several layers
     * deep; raising the depth here raises it for every suite). */
