@@ -27,7 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (Drill's inbound-impersonation/authorization surface; see
     // sources/AccessControl) — no-op without a request principal
     ext.injectResolutionRule(session => graft.sources.AccessControlRule(session))
-    // a scan planned as one split runs with no exchange above it
+    // a dfs scan planned as one split runs with no exchange above it
     // (Drill's planner.slice_target single-fragment plans; OneSplitScans)
     ext.injectQueryPostPlannerStrategyRule(_ => OneSplitScans)
     // (`hive.db.tbl` metastore federation resolves in DfsParser — the
@@ -56,7 +56,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           else graft.sources.DfsSql.readAs(spark, path,
             str(children(1), "format"),
             if (children.length == 3) str(children(2), "delimiter") else ",")
-        df.queryExecution.analyzed
+        graft.sources.DfsSql.resolved(df)
       }))
     ext.injectFunction((
       new FunctionIdentifier("cosine_sim"),

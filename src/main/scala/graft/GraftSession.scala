@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
@@ -114,18 +113,25 @@ object GraftSession {
 
   /** Read `paths` in a schema-inferring `format`, inferring the schema
     * once per (format, options, session `spark.sql.*` confs, paths) until
-    * a file under the paths changes (see [[SchemaMemo]]). Directories,
-    * hive-partitioned trees and glob patterns stamp through the Hadoop
-    * FileSystem, so any configured scheme (`file:`, `hdfs:`, `s3a:`)
-    * notices a rewrite. */
+    * the files Spark lists under the paths change (see [[SchemaMemo]]).
+    * A memo hit lists the files once, in the read itself, on any
+    * filesystem scheme (`file:`, `hdfs:`, `s3a:`); a miss infers, then
+    * reads with the inferred schema, as a hit would. */
   def readInferred(spark: SparkSession, format: String,
                    options: Map[String, String], paths: Seq[String]): DataFrame = {
-    val reader = spark.read.format(format).options(options)
+    // a fresh reader per read: DataFrameReader.schema mutates the reader
+    def reader = spark.read.format(format).options(options)
+    def read(schema: StructType) = reader.schema(schema).load(paths: _*)
     val scope = format +: options.toSeq.sorted.map { case (k, v) => s"$k=$v" } :+
       SchemaMemo.sqlConfDigest(spark)
-    val schema = schemaMemo.schema(paths, scope,
-      spark.sparkContext.hadoopConfiguration)(reader.load(paths: _*).schema)
-    reader.schema(schema).load(paths: _*)
+    schemaMemo.get(paths, scope)
+      .map { case (stamp, schema) => (stamp, read(schema)) }
+      .collect { case (stamp, df) if SchemaMemo.stampOf(df) == stamp => df }
+      .getOrElse {
+        val inferred = reader.load(paths: _*)
+        schemaMemo.put(paths, scope, SchemaMemo.stampOf(inferred), inferred.schema)
+        read(inferred.schema)
+      }
   }
 
   /** Rebalance a (possibly few-split) input across the session's shuffle
@@ -141,15 +147,14 @@ object GraftSession {
 
 /** Bounded LRU memo of inferred schemas keyed by a scope (what shapes
   * inference: format, reader options, conf digest) and a path list. Each
-  * entry carries a freshness stamp of its paths: the full path, length
-  * and mtime of every file under each path, from one recursive Hadoop
-  * FileSystem walk (glob patterns expand first), so a rewritten file or a
-  * new partition directory re-infers on any filesystem scheme. Keys and
-  * stamps length-prefix their parts, so distinct scopes and path lists
-  * never alias (`["/a", "/b"]` vs `["/a/b"]`). The least recently used
-  * entry goes once `max` are held; re-inference only costs time.
-  * Inference runs outside the lock, so concurrent readers never wait on
-  * each other's inference. */
+  * entry carries a freshness stamp: the full path, length and mtime of
+  * every file Spark's file index listed for the read that inferred it
+  * ([[SchemaMemo.stampOf]]), so a rewritten file, a new file or a new
+  * partition directory re-infers. Keys and stamps length-prefix their
+  * parts, so distinct scopes and path lists never alias (`["/a", "/b"]`
+  * vs `["/a/b"]`). The least recently used entry goes once `max` are
+  * held; re-inference only costs time. Inference runs outside the lock,
+  * so concurrent readers never wait on each other's inference. */
 private[graft] final class SchemaMemo(max: Int) {
   private val entries =
     new java.util.LinkedHashMap[String, (String, StructType)](16, 0.75f, true) {
@@ -158,34 +163,23 @@ private[graft] final class SchemaMemo(max: Int) {
         size() > max
     }
 
-  def schema(paths: Seq[String], scope: Seq[String] = Nil,
-             hadoopConf: Configuration = SchemaMemo.defaultConf)(
-      infer: => StructType): StructType = {
-    val key = SchemaMemo.key(paths, scope)
-    val stamp = SchemaMemo.join(paths.map(SchemaMemo.stampOf(_, hadoopConf)))
-    entries.synchronized(Option(entries.get(key))) match {
-      case Some((st, s)) if st == stamp => s
-      case _ =>
-        val s = infer
-        entries.synchronized(entries.put(key, (stamp, s)))
-        s
-    }
-  }
+  /** The held (stamp, schema) of `paths` under `scope`. */
+  def get(paths: Seq[String], scope: Seq[String]): Option[(String, StructType)] =
+    entries.synchronized(Option(entries.get(SchemaMemo.key(paths, scope))))
+
+  def put(paths: Seq[String], scope: Seq[String], stamp: String, schema: StructType): Unit =
+    entries.synchronized(entries.put(SchemaMemo.key(paths, scope), (stamp, schema)))
 
   def size: Int = entries.synchronized(entries.size)
-  def contains(paths: Seq[String]): Boolean =
-    entries.synchronized(entries.containsKey(SchemaMemo.key(paths)))
 }
 
 private[graft] object SchemaMemo {
-  private lazy val defaultConf = new Configuration()
-
   /** Length-prefixed concatenation: no part's content can fake a
     * boundary, whatever characters paths or option values hold. */
   private def join(parts: Seq[String]): String =
     parts.map(p => s"${p.length}:$p").mkString
 
-  def key(paths: Seq[String], scope: Seq[String] = Nil): String =
+  def key(paths: Seq[String], scope: Seq[String]): String =
     join(Seq(join(scope), join(paths)))
 
   /** Digest of the session's `spark.sql.*` confs: the memo is JVM-wide
@@ -199,21 +193,15 @@ private[graft] object SchemaMemo {
     md.digest().map(b => f"$b%02x").mkString
   }
 
-  /** Every file under `path` (a file, a directory tree or a glob), by
-    * full path, length and mtime. Plain `listStatus` per directory:
-    * `FileSystem.listFiles` builds LocatedFileStatus, which reads each
-    * file's permissions, and without the native Hadoop library the local
-    * filesystem forks `ls` for that. */
-  private def stampOf(path: String, conf: Configuration): String = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    def walk(st: FileStatus): Iterator[String] =
-      if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(walk)
-      else Iterator(join(Seq(st.getPath.toString, st.getLen.toString,
-        st.getModificationTime.toString)))
-    val roots =
-      try Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-      catch { case _: java.io.FileNotFoundException => Nil }
-    join(roots.flatMap(walk).sorted)
-  }
+  /** Every file that `df`'s file relations read, by full path, length
+    * and mtime, from the listing Spark's file index made when `df` was
+    * analyzed (globs expanded, partition directories walked); the read
+    * reuses that analysis, so the stamp costs no listing of its own. */
+  def stampOf(df: DataFrame): String =
+    join(df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+      .flatMap(_.listFiles(Nil, Nil).flatMap(_.files))
+      .map(f => join(Seq(f.getPath.toString, f.getLen.toString,
+        f.getModificationTime.toString)))
+      .sorted)
 }

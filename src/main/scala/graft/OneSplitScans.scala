@@ -3,29 +3,34 @@ package graft
 import org.apache.spark.sql.catalyst.expressions.{DynamicPruning, PlanExpression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, FilterExec, GenerateExec, PartitionedFileUtil, ProjectExec, SparkPlan}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, FilterExec, PartitionedFileUtil, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 
-/** Drill's `planner.slice_target` on Spark: a scan that Spark's own split
-  * packing plans as exactly ONE split gets a one-partition
-  * `CoalesceExec` above its Filter/Project chain. The coalesce reports
-  * `SinglePartition`, so EnsureRequirements plans no exchange above it:
-  * the aggregate, sort or window over a small file runs in the scan's
-  * own task instead of one Spark job per exchange. The scan keeps one
-  * partition either way, so no parallelism is taken from it.
+/** Drill's `planner.slice_target` on Spark: a scan of a `dfs` SQL name
+  * that Spark's own split packing plans as exactly ONE split gets a
+  * one-partition `CoalesceExec` above its Filter/Project chain. The
+  * coalesce reports `SinglePartition`, so EnsureRequirements plans no
+  * exchange above it: the aggregate, sort or window over a small file
+  * runs in the scan's own task instead of one Spark job per exchange.
+  * The scan keeps one partition either way, so no parallelism is taken
+  * from it.
   *
   * "One split" is Spark's packing exactly (`FilePartition.maxSplitBytes`
   * and `getFilePartitions` under the session's `spark.sql.files.*` and
   * leaf parallelism), so the threshold comes from the input and there is
-  * no option. Left alone:
+  * no option. Only relations that a SQL statement names through the
+  * `dfs` namespace are candidates: [[markDfs]] tags them where the
+  * namespace resolves (`sources.DfsSql.resolved`). Plans that pipelines
+  * and DataFrame code build over their own reads keep Spark's plan,
+  * whatever their input's size, and so does a relation that an
+  * optimizer rule rebuilds (nested schema pruning copies it untagged).
+  * Also left alone:
   *   - bucketed relations, scans with dynamic partition filters (their
   *     files are known only at run time) and streaming relations;
   *   - a relation the plan reads more than once (self-joins, a stream
-  *     feeding two branches): there the exchange is what Spark reuses;
-  *   - any plan with a Generate (explode): the rows after it are not
-  *     bounded by the one split's bytes, so its exchanges buy parallelism
-  *     (tokenizing text operators keep their shuffles).
+  *     feeding two branches): there the exchange is what Spark reuses.
   *
   * A post-planner physical rule (AQE runs it on every plan and re-plan
   * before EnsureRequirements), not a logical Repartition: the logical
@@ -35,14 +40,22 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
   */
 object OneSplitScans extends Rule[SparkPlan] {
 
+  private val DfsRead = TreeNodeTag[Unit]("graft.dfsRead")
+
+  /** Tags the file relations of `plan` (a `dfs` name's analyzed plan) as
+    * candidates for the rule; returns `plan`. */
+  def markDfs(plan: LogicalPlan): LogicalPlan = {
+    plan.collectWithSubqueries { case r: LogicalRelation => r }
+      .foreach(_.setTagValue(DfsRead, ()))
+    plan
+  }
+
   override def apply(plan: SparkPlan): SparkPlan = {
-    // a Generate (explode) multiplies rows: the work after it is not
-    // bounded by the split's bytes, and its exchange buys parallelism
-    if (plan.exists(_.isInstanceOf[GenerateExec])) return plan
     val reads = fileRelations(plan).groupBy(relationKey).map { case (k, v) => k -> v.size }
     def wrap(p: SparkPlan): SparkPlan = p match {
       case c: CoalesceExec if c.numPartitions == 1 => c
-      case chain if scanUnder(chain).exists(s => reads(relationKey(s.relation)) == 1 && oneSplit(s)) =>
+      case chain if scanUnder(chain).exists(s =>
+          dfsRead(s) && reads(relationKey(s.relation)) == 1 && oneSplit(s)) =>
         CoalesceExec(1, chain)
       case other => other.mapChildren(wrap)
     }
@@ -56,6 +69,15 @@ object OneSplitScans extends Rule[SparkPlan] {
     case FilterExec(_, child) => scanUnder(child)
     case _ => None
   }
+
+  /** Whether `s` scans a relation that [[markDfs]] tagged. The planner
+    * links a scan to the logical Project/Filter chain it was planned
+    * from; the relation at its bottom carries the tag. */
+  private def dfsRead(s: FileSourceScanExec): Boolean =
+    s.logicalLink.exists(_.exists {
+      case r: LogicalRelation => (r.relation eq s.relation) && r.getTagValue(DfsRead).isDefined
+      case _ => false
+    })
 
   /** The file relations of every scan of the plan, its subqueries and
     * planned stages; a subquery still held as a logical plan (a dynamic

@@ -80,10 +80,6 @@ object Training {
     }
     docs.select(col(idCol), col(textCol))
       .withColumn("shard", shardCol.cast("long"))
-      // shards pack independently, one shard per task: at scale this is
-      // the window's own exchange; a one-split corpus plans none of its
-      // own (graft.OneSplitScans) and would pack every shard in one task
-      .repartition(col("shard"))
       .withColumn("n_tokens", toks)
       .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
       .withColumn("bin",

@@ -139,7 +139,7 @@ class DfsParser(delegate: ParserInterface) extends ParserInterface {
     val parts = u.multipartIdentifier
     if (parts.length >= 2 && parts.head.equalsIgnoreCase("dfs") &&
         !spark.catalog.databaseExists("dfs"))
-      Some(DfsSql.load(spark, parts.tail).queryExecution.analyzed)
+      Some(DfsSql.resolved(DfsSql.load(spark, parts.tail)))
     // `hive.db.tbl` / `hive.tbl` — metastore federation. Claimed at
     // PARSE time of necessity: "hive" is a registered datasource
     // provider name, so Spark's ResolveSQLOnFile would claim the head
@@ -165,7 +165,7 @@ class DfsParser(delegate: ParserInterface) extends ParserInterface {
       AliasRegistry.tableAlias(spark, parts.head).map { target =>
         val tparts = delegate.parseMultipartIdentifier(target)
         if (tparts.length >= 2 && tparts.head.equalsIgnoreCase("dfs"))
-          DfsSql.load(spark, tparts.tail).queryExecution.analyzed
+          DfsSql.resolved(DfsSql.load(spark, tparts.tail))
         else spark.table(target).queryExecution.analyzed
       }.orElse {
         // after `USE dfs.ws`, a bare name resolves in that workspace
@@ -189,14 +189,14 @@ class DfsParser(delegate: ParserInterface) extends ParserInterface {
             else None
           }.toOption.flatten
           existing.map(path =>
-            DfsSql.read(spark, path).queryExecution.analyzed)
+            DfsSql.resolved(DfsSql.read(spark, path)))
         }
       }
     else if (parts.length >= 2 && !spark.catalog.databaseExists(parts.head))
       // STORAGE alias on the schema head
       AliasRegistry.storageAlias(spark, parts.head).map { real =>
         if (real.equalsIgnoreCase("dfs"))
-          DfsSql.load(spark, parts.tail).queryExecution.analyzed
+          DfsSql.resolved(DfsSql.load(spark, parts.tail))
         else spark.table((real +: parts.tail).mkString("."))
           .queryExecution.analyzed
       }

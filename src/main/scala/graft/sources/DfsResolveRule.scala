@@ -27,6 +27,6 @@ case class DfsResolveRule(spark: SparkSession) extends Rule[LogicalPlan] {
           // an unknown table must raise TABLE_OR_VIEW_NOT_FOUND, not a
           // graft file-not-found
           !spark.catalog.databaseExists("dfs") =>
-      DfsSql.load(spark, u.multipartIdentifier.tail).queryExecution.analyzed
+      DfsSql.resolved(DfsSql.load(spark, u.multipartIdentifier.tail))
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Drill-identity `dfs` SQL namespace: query a file PATH directly from SQL,
   * format inferred from the extension —
@@ -220,6 +221,12 @@ object DfsSql {
 
   def load(spark: SparkSession, parts: Seq[String]): DataFrame =
     read(spark, resolvePath(spark, parts))
+
+  /** The analyzed plan a SQL statement's `dfs` name substitutes
+    * ([[DfsResolveRule]], [[DfsParser]], `dfs_read`), its file relations
+    * marked as front-door reads for [[graft.OneSplitScans]]. */
+  def resolved(df: DataFrame): LogicalPlan =
+    graft.OneSplitScans.markDfs(df.queryExecution.analyzed)
 
   /** Explicit-format read — the table-function form with the extension
     * registry OVERRIDDEN (Drill: `table(dfs.`x`(type => 'text',

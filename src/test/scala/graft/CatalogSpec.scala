@@ -145,9 +145,7 @@ class CatalogSpec extends AnyFunSuite {
     try {
       // a shuffling query over a real scan: input AND shuffle metrics
       val df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      // one split plans no exchange of its own (OneSplitScans): the
-      // explicit repartition keeps a shuffle in the profiled plan
-      df.repartition(2).groupBy("l_returnflag").count().collect()
+      df.groupBy("l_returnflag").count().collect()
       var tries = 0
       def stages() = QueryProfiles.stageProfiles(spark)
       while (stages().filter("input_records > 0").count() == 0 && tries < 100) {
@@ -171,9 +169,7 @@ class CatalogSpec extends AnyFunSuite {
     QueryProfiles.enable(spark, capacity = 50)
     try {
       val df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      // one split plans no exchange of its own (OneSplitScans): the
-      // explicit repartition keeps a shuffle in the profiled plan
-      df.repartition(2).groupBy("l_returnflag").count().collect()
+      df.groupBy("l_returnflag").count().collect()
       var tries = 0
       def ops() = QueryProfiles.operatorProfiles(spark)
       while (ops().count() == 0 && tries < 100) {

@@ -4,13 +4,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, sum}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[OneSplitScans]] on both sides of the one-split gate: the same rows
   * from one file and from several files give identical answers; the
   * one-split side plans no shuffle exchange and the several-split side
-  * keeps its exchanges. */
+  * keeps its exchanges. Only `dfs` SQL names are candidates: the same
+  * file read as a DataFrame keeps Spark's plan. */
 class OneSplitScansSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import TestSpark._
 
@@ -86,12 +87,15 @@ class OneSplitScansSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(shuffles(p).nonEmpty && coalesces(p).isEmpty, s"self-join plan:\n$p")
   }
 
-  test("an explode over a one-split file keeps its exchange") {
-    val (df, rows) = run("SELECT w, count(*) AS n FROM (SELECT explode(array(g, g + 1)) " +
-      s"AS w FROM ${fact("one")}) GROUP BY w")
-    assert(rows.size == 8)
-    val p = df.queryExecution.executedPlan
-    assert(shuffles(p).nonEmpty && coalesces(p).isEmpty, s"explode plan:\n$p")
+  test("a one-split file read outside the dfs namespace keeps its exchanges") {
+    val sql = spark.sql(queries.head._2(fact("one")))
+    for (df <- Seq(spark.read.parquet(s"$dir/one"), GraftSession.readParquet(spark, s"$dir/one"))) {
+      val agg = df.where(col("k") > 100).groupBy("g")
+        .agg(count("*").as("n"), sum("v").as("s")).orderBy("g")
+      assert(agg.collect().toSeq == sql.collect().toSeq)
+      val p = agg.queryExecution.executedPlan
+      assert(shuffles(p).nonEmpty && coalesces(p).isEmpty, s"direct read plan:\n$p")
+    }
   }
 
   test("PushedFilters and ReadSchema are the plan's without the rule") {

@@ -2,64 +2,65 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftSession's schema memo: keys that never alias, a stamp that sees
-  * a rewritten file or directory tree on any filesystem scheme, a key
-  * that separates reader options and session confs, and a bounded LRU. */
+/** GraftSession's schema memo: keys that never alias, a stamp (Spark's
+  * own listing of the read) that sees a rewritten file, a new file or a
+  * new partition directory on any filesystem scheme, a key that
+  * separates reader options and session confs, and a bounded LRU. */
 class SchemaMemoSpec extends AnyFunSuite {
+  import TestSpark.{jobsOf, spark}
+  import spark.implicits._
+
   private val sa = new StructType().add("a", LongType)
   private val sb = new StructType().add("b", StringType)
+  private val scope = Seq("parquet")
 
-  /** Returns `s`, counting the calls: a memo hit never evaluates it. */
-  private class Infer { var calls = 0; def apply(s: StructType) = { calls += 1; s } }
+  /** Spark jobs that a `readParquet` of `path` runs: schema inference
+    * runs one, a memo hit none. */
+  private def inferJobs(path: String): Int = jobsOf(GraftSession.readParquet(spark, path))
 
   test("path lists that concatenate alike keep separate entries") {
     val base = Files.createTempDirectory("memo").toString
     val two = Seq(s"$base/a", s"$base/b")
     val one = Seq(s"$base/a$base/b") // == two.mkString("")
-    assert(SchemaMemo.key(two) != SchemaMemo.key(one))
+    assert(SchemaMemo.key(two, scope) != SchemaMemo.key(one, scope))
     val memo = new SchemaMemo(8)
-    val infer = new Infer
-    assert(memo.schema(two)(infer(sa)) == sa)
-    assert(memo.schema(one)(infer(sb)) == sb)
+    memo.put(two, scope, "", sa)
+    memo.put(one, scope, "", sb)
     // both entries held: neither caller evicts the other's schema
-    assert(memo.schema(two)(infer(sb)) == sa)
-    assert(memo.schema(one)(infer(sa)) == sb)
-    assert(memo.size == 2 && infer.calls == 2)
+    assert(memo.get(two, scope).map(_._2).contains(sa))
+    assert(memo.get(one, scope).map(_._2).contains(sb))
+    assert(memo.size == 2)
   }
 
   test("a new file in a read directory re-infers its schema") {
-    val dir = Files.createTempDirectory("memo")
-    val memo = new SchemaMemo(8)
-    val infer = new Infer
-    memo.schema(Seq(dir.toString))(infer(sa))
-    memo.schema(Seq(dir.toString))(infer(sa))
-    assert(infer.calls == 1)
-    Files.writeString(dir.resolve("part-1.parquet"), "x")
-    assert(memo.schema(Seq(dir.toString))(infer(sb)) == sb)
-    assert(infer.calls == 2)
+    val dir = Files.createTempDirectory("memo").resolve("t").toString
+    Seq(1L, 2L).toDF("a").write.parquet(dir)
+    assert(inferJobs(dir) > 0)
+    assert(inferJobs(dir) == 0)
+    Seq(3L).toDF("a").write.mode("append").parquet(dir)
+    assert(inferJobs(dir) > 0)
+    assert(GraftSession.readParquet(spark, dir).count() == 3)
   }
 
   test("the memo holds at most its bound, evicting the least recently used") {
     val base = Files.createTempDirectory("memo").toString
     val Seq(p1, p2, p3) = Seq("t1", "t2", "t3").map(n => Seq(s"$base/$n"))
     val memo = new SchemaMemo(2)
-    val infer = new Infer
-    memo.schema(p1)(infer(sa))
-    memo.schema(p2)(infer(sa))
-    memo.schema(p1)(infer(sa)) // hit: p1 is now the most recent
-    memo.schema(p3)(infer(sa))
-    assert(memo.size == 2 && infer.calls == 3)
-    assert(memo.contains(p1) && !memo.contains(p2) && memo.contains(p3))
-    memo.schema(p2)(infer(sa)) // evicted: inferred again
-    assert(infer.calls == 4)
+    memo.put(p1, scope, "", sa)
+    memo.put(p2, scope, "", sa)
+    assert(memo.get(p1, scope).isDefined) // p1 is now the most recent
+    memo.put(p3, scope, "", sa)
+    assert(memo.size == 2)
+    assert(memo.get(p1, scope).isDefined && memo.get(p3, scope).isDefined)
+    assert(memo.get(p2, scope).isEmpty)
   }
 
   test("a file: URI parquet rewritten with an extra column re-infers") {
-    import TestSpark.spark
-    import spark.implicits._
     val dir = Files.createTempDirectory("memo").resolve("t").toString
     Seq(1L, 2L).toDF("a").write.parquet(dir)
     assert(GraftSession.readParquet(spark, s"file:$dir").columns.toSeq == Seq("a"))
@@ -70,35 +71,35 @@ class SchemaMemoSpec extends AnyFunSuite {
   }
 
   test("a new partition directory re-infers its schema") {
-    val dir = Files.createTempDirectory("memo")
-    Files.createDirectories(dir.resolve("k=1"))
-    Files.writeString(dir.resolve("k=1/part-0.parquet"), "x")
-    val memo = new SchemaMemo(8)
-    val infer = new Infer
-    memo.schema(Seq(dir.toString))(infer(sa))
-    memo.schema(Seq(dir.toString))(infer(sa))
-    assert(infer.calls == 1)
-    Files.createDirectories(dir.resolve("k=2"))
-    Files.writeString(dir.resolve("k=2/part-0.parquet"), "y")
-    assert(memo.schema(Seq(dir.toString))(infer(sb)) == sb)
-    assert(infer.calls == 2)
+    val dir = Files.createTempDirectory("memo").resolve("t").toString
+    Seq((1L, 1)).toDF("a", "k").write.partitionBy("k").parquet(dir)
+    assert(inferJobs(dir) > 0)
+    assert(inferJobs(dir) == 0)
+    Seq((2L, 2)).toDF("a", "k").write.mode("append").partitionBy("k").parquet(dir)
+    assert(inferJobs(dir) > 0)
+    assert(GraftSession.readParquet(spark, dir).as[(Long, Int)].collect().sorted.toSeq ==
+      Seq((1L, 1), (2L, 2)))
   }
 
   test("a file rewritten in place inside a partition directory re-infers") {
-    val dir = Files.createTempDirectory("memo")
-    val part = dir.resolve("k=1/part-0.parquet")
-    Files.createDirectories(part.getParent)
-    Files.writeString(part, "x")
-    val memo = new SchemaMemo(8)
-    val infer = new Infer
-    memo.schema(Seq(dir.toString))(infer(sa))
-    Files.writeString(part, "yy") // same name: no directory's entries change
-    assert(memo.schema(Seq(dir.toString))(infer(sb)) == sb)
-    assert(infer.calls == 2)
+    val base = Files.createTempDirectory("memo")
+    val dir = base.resolve("t").toString
+    Seq((1L, 1)).toDF("a", "k").write.partitionBy("k").parquet(dir)
+    def dataFile(d: String) = Files.walk(java.nio.file.Paths.get(d)).iterator()
+      .asScala.filter(_.toString.endsWith(".parquet")).toSeq
+    val Seq(part) = dataFile(dir)
+    assert(GraftSession.readParquet(spark, dir).columns.toSeq == Seq("a", "k"))
+    // same file name, new bytes: no directory's entries change
+    Seq((2L, "x")).toDF("a", "b").coalesce(1).write.parquet(base.resolve("w").toString)
+    Files.copy(dataFile(base.resolve("w").toString).head, part,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.delete(part.resolveSibling(s".${part.getFileName}.crc")) // the old bytes' checksum
+    val again = GraftSession.readParquet(spark, dir)
+    assert(again.columns.toSeq == Seq("a", "b", "k"))
+    assert(again.as[(Long, String, Int)].collect().toSeq == Seq((2L, "x", 1)))
   }
 
   test("store.json.all_text_mode set between two reads of one file yields strings") {
-    import TestSpark.spark
     val f = Files.createTempDirectory("memo").resolve("e.json")
     Files.writeString(f, "{\"n\": 1, \"x\": 2.5}\n{\"n\": 2, \"x\": 3.5}\n")
     def types = spark.sql(s"SELECT * FROM dfs.`$f`").schema.map(_.dataType)
@@ -111,22 +112,19 @@ class SchemaMemoSpec extends AnyFunSuite {
   }
 
   test("the same bytes read as csv and as tsv keep separate entries") {
-    import TestSpark.spark
     val f = Files.createTempDirectory("memo").resolve("d.csv")
     Files.writeString(f, "a\tb,c\n1\t2,3\n")
     def cols(fmt: String) =
       graft.sources.DfsSql.readAs(spark, f.toString, fmt).columns.toSeq
     assert(cols("csv") == Seq("a\tb", "c"))
     assert(cols("tsv") == Seq("a", "b,c"))
-    assert(TestSpark.jobsOf {
+    assert(jobsOf {
       assert(cols("csv") == Seq("a\tb", "c"))
       assert(cols("tsv") == Seq("a", "b,c"))
     } == 0)
   }
 
   test("a second resolve of parquet, JSON and CSV runs no Spark job") {
-    import TestSpark.spark
-    import spark.implicits._
     val dir = Files.createTempDirectory("memo")
     val pq = dir.resolve("t.parquet").toString
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(pq)
@@ -137,7 +135,7 @@ class SchemaMemoSpec extends AnyFunSuite {
     for (p <- Seq(pq, json.toString, csv.toString)) {
       val first = graft.sources.DfsSql.read(spark, p).schema
       var again: StructType = null
-      assert(TestSpark.jobsOf { again = graft.sources.DfsSql.read(spark, p).schema } == 0, p)
+      assert(jobsOf { again = graft.sources.DfsSql.read(spark, p).schema } == 0, p)
       assert(again == first, p)
     }
   }
