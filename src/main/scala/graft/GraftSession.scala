@@ -16,6 +16,31 @@ import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
   */
 object GraftSession {
 
+  /** Entries of Spark's compiled-class cache (Drill's
+    * `drill.exec.compile.cache_max_size`, 1000 by default). Spark's own
+    * default, 100, is below graft's working set, so the LRU cache
+    * thrashed and a statement recompiled its generated classes with
+    * Janino on every run. Working sets, counted as Janino compilations
+    * (`CodegenMetrics.METRIC_COMPILATION_TIME`) in one JVM with this cap
+    * (4 cores, local[2]):
+    *  - the sql_interactive REST deck: 165 classes per pass; a whole
+    *    benchmark run (fixtures plus the deck's first pass) compiles 218
+    *    and then nothing in the timed phase, where Spark's cap compiled
+    *    721 (about 12 per statement);
+    *  - a curate run (warm-up pass plus three timed passes): 203, where
+    *    Spark's cap compiled 682;
+    *  - the tier-1 ScalaTest suite: 6,745 in one JVM, far above any
+    *    cap; there the cap only bounds what is retained.
+    * Worst-case retention: a compiled entry holds 2.15 classes of 2.1 KB
+    * mean bytecode (`METRIC_GENERATED_CLASS_BYTECODE_SIZE`), so 1000
+    * entries hold about 4.5 MB of bytecode, plus their keys, the
+    * generated source (4.6 KB mean). Measured, 218 held entries raised
+    * live heap by 5.3 MB (78.5 -> 83.8 MB), about 24 KB per entry, so a
+    * full cache retains at most about 25 MB. */
+  val CodegenCacheEntries = 1000
+
+  /** A session with the engine's defaults (see the object's doc and
+    * [[CodegenCacheEntries]]). */
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
               shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
@@ -38,6 +63,8 @@ object GraftSession {
       // coercion errors and plans stay identical across testdata writers.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.parquet.aggregatePushdown", "true")
+      // static and JVM-wide: fixed when the JVM first generates code
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // Engine semantic, declared up front: a requested schema that
       // CARRIES parquet.field.id metadata matches file columns by FIELD
       // ID (what Delta column-mapping `id` and Iceberg readers mean by

@@ -346,8 +346,11 @@ object QueryServer {
             val df = cap.map(c => df0.limit(c + 1)).getOrElse(df0)
             // force planning before the first byte: analysis/optimizer/
             // planner failures must still answer 400/403 — once a chunk
-            // is on the wire the status code is frozen
-            df.queryExecution.executedPlan
+            // is on the wire the status code is frozen. `toJSON` has its
+            // own QueryExecution, so forcing `df`'s plan instead would
+            // plan the statement twice.
+            val json = df.toJSON
+            json.queryExecution.executedPlan
             val cols = mapper.createArrayNode()
             df.columns.foreach(cols.add)
             // ONE result partition at a time reaches the driver — the
@@ -358,7 +361,7 @@ object QueryServer {
             // ALL their work — still answer a clean 400/403/cancel
             // status; only failures past the first partition ride the
             // streamed trailer.
-            val it = df.toJSON.toLocalIterator()
+            val it = json.toLocalIterator()
             val hasFirst = it.hasNext
             var peak = 0
             val out = new java.io.BufferedOutputStream(x.getResponseBody, 32768)

@@ -194,6 +194,45 @@ class RestShapefileSpec extends AnyFunSuite {
     } finally server.stop()
   }
 
+  test("POST /query plans a statement once; a planner failure still answers 400") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Range}
+    import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+    // every physical-planner run plans the statement's one Range leaf
+    // once, so calls of a strategy that sees it count the runs
+    val runs = new java.util.concurrent.atomic.AtomicInteger()
+    object CountRanges extends SparkStrategy {
+      def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+        case r: Range if r.end == 13 => throw new IllegalStateException("no plan for range(13)")
+        case _: Range => runs.incrementAndGet(); Nil
+        case _ => Nil
+      }
+    }
+    val s = spark.newSession()
+    s.experimental.extraStrategies = Seq(CountRanges)
+    val server = graft.sources.QueryServer.start(s)
+    def post(sql: String): (Int, String) = {
+      val conn = java.net.URI.create(s"http://127.0.0.1:${server.port}/query").toURL
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      conn.setRequestMethod("POST")
+      conn.setRequestProperty("Content-Type", "application/json")
+      conn.setDoOutput(true)
+      conn.getOutputStream.write(s"""{"query": "$sql"}""".getBytes("UTF-8"))
+      val code = conn.getResponseCode
+      val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
+      try (code, new String(is.readAllBytes(), "UTF-8")) finally conn.disconnect()
+    }
+    try {
+      val (code, body) = post("SELECT id * 2 AS v FROM range(5)")
+      assert(code == 200, body)
+      assert(new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        .get("rowCount").asLong == 5L)
+      assert(runs.get == 1)
+      // planning is forced before the status line goes out
+      val (bad, err) = post("SELECT id FROM range(13)")
+      assert(bad == 400 && err.contains("no plan for range(13)"), err)
+    } finally server.stop()
+  }
+
   test("GET /profiles serves the query-profile ring (web UI profiles role)") {
     import graft.sources.QueryProfiles
     val server = graft.sources.QueryServer.start(spark)
