@@ -40,14 +40,6 @@ object DeltaDml {
   private def absolute(tablePath: String, p: String): String =
     DeltaLogReader.decodedAbsolute(tablePath, p)
 
-  // scheme+AUTHORITY strip, shared with the reader: _metadata.file_path
-  // is always fully qualified while encNorm keys from a relative
-  // tablePath are not — an authority-keeping regex made DV DML a SILENT
-  // NO-OP (relLookup joined nothing) on any non-local filesystem
-  private def absNorm(c: Column): Column = DeltaLogReader.normPathCol(c)
-  // join key vs _metadata.file_path (URI-encoded) — see DeltaLogReader
-  private def encNorm(s: String): String = DeltaLogReader.encNorm(s)
-
   /** The copy-on-write DML refusals applied to `snap`; returns its live
     * files as relPath -> absolute path. */
   private def dmlFiles(tablePath: String, snap: Snapshot,
@@ -72,14 +64,12 @@ object DeltaDml {
     * Returns relative log paths. */
   private def affectedOf(hits: DataFrame,
                          files: Seq[(String, String)]): Seq[String] = {
-    val byNorm = files.map { case (rel, abs) =>
-      encNorm(abs) -> rel
-    }.toMap
+    val byKey = files.map { case (rel, abs) => DeletedRows.key(abs) -> rel }.toMap
     hits.select(col("__g_file"))
-      .distinct().collect().map(r => byNorm(r.getString(0))).toSeq
+      .distinct().collect().map(r => byKey(r.getString(0))).toSeq
   }
 
-  private def fileCol: Column = absNorm(col("_metadata.file_path"))
+  private def fileCol: Column = DeletedRows.keyCol(col("_metadata.file_path"))
 
   /** Stage `df` as parquet parts and move them into the table root as
     * add actions (UUID-unique names, delta-spark's convention — shared
@@ -287,68 +277,52 @@ object DeltaDml {
     if (files.isEmpty) return (current, 0L)
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val relOf: Map[String, String] = files.map(f =>
-      encNorm(absolute(tablePath, f.path)) -> f.path).toMap
+      DeletedRows.key(absolute(tablePath, f.path)) -> f.path).toMap
     val confBc = spark.sparkContext.broadcast(
       new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-
-    // existing DV positions, expanded on executors → (normAbsFile, pos)
-    val withDv = files.flatMap(f => f.dv.map(f.path -> _))
-    val tp = tablePath
-    def dvRows(restrict: Set[String]): DataFrame =
-      spark.createDataset(withDv.filter { case (rel, _) =>
-          restrict.isEmpty || restrict(rel) })
-        .repartition(math.max(1, math.min(withDv.size,
-          spark.sparkContext.defaultParallelism)))
-        .flatMap { case (rel, d) =>
-          DeletionVectors.readPositions(d, tp, confBc.value.value)
-            .map(pos => (rel, pos))
-        }.toDF("__g_rel", "__g_pos")
+    val dead = DeletedRows.delta(spark, tablePath, files)
 
     // visible matched rows: condition TRUE, not already dead under a DV
-    val scan = spark.read.schema(schema)
-      .parquet(files.map(f => absolute(tablePath, f.path)): _*)
     val hit = nullIsFalse(condition)
-    val relLookup = broadcast(relOf.toSeq.toDF("__g_file", "__g_rel"))
-    var matched = scan.filter(hit)
+    var matched = dead.drop(spark.read.schema(schema)
+        .parquet(files.map(f => absolute(tablePath, f.path)): _*))
+      .filter(hit)
       .withColumn("__g_file", fileCol)
       .withColumn("__g_pos", col("_metadata.row_index"))
-      .join(relLookup, Seq("__g_file"))
-    if (withDv.nonEmpty)
-      matched = matched.join(dvRows(Set.empty), Seq("__g_rel", "__g_pos"), "left_anti")
     // up to five downstream jobs consume `matched` (count, affected set,
-    // DV write, UPDATE re-adds, CDC) — persist so the data-file scan and
-    // the existing-DV expansion run once, not per job
+    // DV write, UPDATE re-adds, CDC) — persist so the data-file scan runs
+    // once, not per job
     matched = matched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try { // finally-unpersist: a failure mid-commit must not leak the cache
       val deleted = matched.count()
       if (deleted == 0) return (current, 0L) // finally unpersists
-      val affected = matched.select("__g_rel").distinct()
-        .as[String].collect().toSeq.sorted
+      val affected = matched.select("__g_file").distinct()
+        .as[String].collect().toSeq.map(relOf).sorted
       val version = current + 1
 
-      // new DV per affected file = visible matches ∪ its existing DV
-      var positions = matched.select(col("__g_rel"), col("__g_pos"))
-      val affectedWithDv = withDv.collect {
-        case (rel, _) if affected.contains(rel) => rel }.toSet
-      if (affectedWithDv.nonEmpty)
-        positions = positions.unionByName(dvRows(affectedWithDv))
+      // new DV per affected file = visible matches ∪ its existing DV,
+      // merged in the task that writes the DV file
+      val tp = tablePath
       val dvDescs: Map[String, DeletionVectors.DvDescriptor] =
-        positions.repartition(col("__g_rel"))
-          .sortWithinPartitions("__g_rel", "__g_pos")
+        matched.select(col("__g_file"), col("__g_pos"))
+          .repartition(col("__g_file"))
+          .sortWithinPartitions("__g_file", "__g_pos")
           .as[(String, Long)]
           .mapPartitions { it =>
             if (!it.hasNext) Iterator.empty
             else {
               val groups = scala.collection.mutable.LinkedHashMap
                 .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-              it.foreach { case (rel, pos) =>
-                groups.getOrElseUpdate(rel,
+              it.foreach { case (file, pos) =>
+                groups.getOrElseUpdate(file,
                   scala.collection.mutable.ArrayBuffer[Long]()) += pos
               }
               DeletionVectors.writeDvFileConf(confBc.value.value, tp,
-                groups.toSeq.map { case (rel, ps) => (rel, ps.toSeq) }).iterator
+                groups.toSeq.map { case (file, ps) =>
+                  (file, (ps ++ dead.positions(file)).toSeq) }).iterator
             }
-          }.collect().toMap // metadata-scale: one descriptor per file
+          }.collect().map { case (file, d) => relOf(file) -> d }
+          .toMap // metadata-scale: one descriptor per file
 
       // commit: protocol w/ the DV feature, remove+re-add per affected file
       val readds = affected.map { rel =>
@@ -493,13 +467,13 @@ object DeltaDml {
     // live set = active data files + the DV .bin files their descriptors
     // reference (a DV-heavy table sheds a superseded vector per commit —
     // they reclaim here like data files do)
-    // encNorm both sides: the log path decodes to the on-disk name, and
-    // the listed FileStatus paths re-encode the same way — a live file
-    // whose name percent-encodes must never look dead to vacuum
+    // one key for both sides: the log path decodes to the on-disk name,
+    // and the listed FileStatus paths re-encode the same way — a live
+    // file whose name percent-encodes must never look dead to vacuum
     val live = files.flatMap { f =>
-      encNorm(absolute(tablePath, f.path)) +:
+      DeletedRows.key(absolute(tablePath, f.path)) +:
         f.dv.filter(_.storageType != "i").map(d =>
-          encNorm(d.filePath(tablePath))).toSeq
+          DeletedRows.key(d.filePath(tablePath))).toSeq
     }.toSet
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -517,8 +491,8 @@ object DeltaDml {
         else Nil
       }
     val dead = walk(root).filter { s =>
-      val norm = encNorm(s.getPath.toString)
-      !live.contains(norm) && s.getModificationTime <= cutoff
+      !live.contains(DeletedRows.key(s.getPath.toString)) &&
+        s.getModificationTime <= cutoff
     }
     // a big vacuum (a compacted 100 TB table sheds millions of files)
     // deletes from EXECUTORS — per-file RPCs parallelize; the driver

@@ -468,7 +468,7 @@ object DeltaLogReader {
   def read(spark: SparkSession, tablePath: String,
            version: Option[Long] = None,
            maxLiteralPartitions: Int = 64): DataFrame = {
-    import org.apache.spark.sql.functions.{input_file_name, regexp_replace}
+    import org.apache.spark.sql.functions.input_file_name
     val snap = snapshot(spark, tablePath, version)
     val (schema, partCols, files) = (snap.schema, snap.partCols, snap.files)
     // column mapping: mode `name` scans by the fields' PHYSICAL names
@@ -526,16 +526,10 @@ object DeltaLogReader {
     if (files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val anyDv = files.exists(_.dv.isDefined)
-    // deletion vectors need each row's (file, row index) for the anti-join
-    def baseScan(paths: Seq[String]): DataFrame = {
-      var df = spark.read.schema(dataSchema).parquet(paths: _*)
-      if (anyDv) df = df
-        .withColumn("__g_fp", normPathCol(col("_metadata.file_path")))
-        .withColumn("__g_pos", col("_metadata.row_index"))
-      df
-    }
-    var out: DataFrame =
+    val deleted = DeletedRows.delta(spark, tablePath, files)
+    def baseScan(paths: Seq[String]): DataFrame =
+      deleted.drop(spark.read.schema(dataSchema).parquet(paths: _*))
+    val out: DataFrame =
       if (partCols.isEmpty) baseScan(files.map(f => absolute(f.path)))
       else {
         val byTuple = files.groupBy(_.partitionValues)
@@ -549,55 +543,23 @@ object DeltaLogReader {
             }
           }.reduce(_ unionByName _)
         else {
-          // one scan + broadcast (relative path -> partition values) join;
-          // scheme differences ("file:///x" vs "/x") normalize away
+          // one scan + broadcast (file key -> partition values) join
           import spark.implicits._
-          // encNorm, not absNorm: input_file_name() is URI-encoded, so a
-          // decoded key (path with a space) would silently join nothing
-          val pvRows = files.map(f => (encNorm(absolute(f.path)),
+          val pvRows = files.map(f => (DeletedRows.key(absolute(f.path)),
             partCols.map(c => f.partitionValues.get(phys(c)).orNull)))
           val pvDf = broadcast(pvRows.toDF("__file", "__pv"))
           val scan = baseScan(files.map(f => absolute(f.path)))
-            .withColumn("__file", normPathCol(input_file_name()))
+            .withColumn("__file", DeletedRows.keyCol(input_file_name()))
           partCols.zipWithIndex.foldLeft(scan.join(pvDf, "__file")) {
             case (df, (c, i)) =>
               df.withColumn(c, col("__pv").getItem(i).cast(schema(c).dataType))
           }
         }
       }
-    if (anyDv) {
-      // expand bitmaps → (file, pos) on EXECUTORS, one task per DV-bearing
-      // file; the driver only ships descriptors (metadata-scale). Summed
-      // cardinality is known without touching a bitmap, so the broadcast
-      // decision needs no data read.
-      // encNorm: __g_fp comes from _metadata.file_path (URI-encoded)
-      val dvFiles = files.filter(_.dv.isDefined)
-        .map(f => (encNorm(absolute(f.path)), f.dv.get))
-      val confBc = spark.sparkContext.broadcast(
-        new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-      val table = tablePath
-      val posRdd = spark.sparkContext
-        .parallelize(dvFiles,
-          math.max(1, math.min(dvFiles.size, spark.sparkContext.defaultParallelism)))
-        .flatMap { case (fp, d) =>
-          DeletionVectors.readPositions(d, table, confBc.value.value)
-            .iterator
-            .map(pos => org.apache.spark.sql.Row(fp, pos))
-        }
-      var dels = spark.createDataFrame(posRdd, StructType(Seq(
-        StructField("__g_fp", org.apache.spark.sql.types.StringType, nullable = false),
-        StructField("__g_pos", org.apache.spark.sql.types.LongType, nullable = false))))
-      if (dvFiles.map(_._2.cardinality).sum <= 4000000L) dels = broadcast(dels)
-      out = out.join(dels, Seq("__g_fp", "__g_pos"), "left_anti")
-    }
     // physical -> logical rename; helper/aux columns drop here
     out.select(schema.fieldNames.map(c =>
       if (partCols.contains(c)) col(c) else col(phys(c)).as(c)).toSeq: _*)
   }
-
-  private def absNorm(p: String): String =
-    p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", "")
-      .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
 
   /** PROTOCOL.md: add.path is RFC 2396 percent-ENCODED relative to the
     * table root — decode before touching the filesystem (identity in the
@@ -611,29 +573,6 @@ object DeltaLogReader {
     if (decoded.startsWith("/") || decoded.contains("://")) decoded
     else s"$tablePath/$decoded"
   }
-
-  /** Canonical join key for comparing a DECODED absolute path against
-    * Spark's `input_file_name()` / `_metadata.file_path` values: Spark
-    * builds those via Hadoop `Path.toUri` (URI-encoded), so a decoded
-    * driver-side key (e.g. a path with a space) never equals them.
-    * Encode the same way, then normalize the scheme like [[absNorm]]. */
-  private[sources] def encNorm(abs: String): String =
-    new Path(abs).toUri.toString
-      .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", "")
-      .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-
-  /** Column-side twin of [[encNorm]]'s scheme+AUTHORITY strip. The scan's
-    * `_metadata.file_path` / `input_file_name()` are always FULLY
-    * qualified (`hdfs://nn:8020/x`) while log paths resolved against a
-    * default-FS-relative tablePath are not — keeping the authority made
-    * the two sides never match on any non-local filesystem (deletes
-    * silently un-applied, DML no-ops; invisible on file:// whose
-    * authority is empty). Both sides of every join belong to ONE table,
-    * so authority loss cannot conflate distinct files. */
-  private[sources] def normPathCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(
-      regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", ""),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
 
   /** CHANGE DATA FEED read (PROTOCOL.md §Add CDC File): every row change
     * in versions [fromVersion, toVersion] with `_change_type` and

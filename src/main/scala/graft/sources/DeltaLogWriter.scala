@@ -147,8 +147,8 @@ object DeltaLogWriter {
     * Refuses partitioned tables (partition values are metadata-only in
     * Delta data files — a naive rewrite would drop them). Files carrying
     * DELETION VECTORS are compaction candidates regardless of size: the
-    * rewrite reads their VISIBLE rows (DV applied, expanded on
-    * executors) and the re-written bins carry no DV — OPTIMIZE doubles
+    * rewrite reads their VISIBLE rows (DV applied inside the scan,
+    * [[DeletedRows]]) and the re-written bins carry no DV — OPTIMIZE doubles
     * as delta-spark's PURGE, bounding merge-on-read amplification. The
     * rewrite itself is a distributed read + write; only the KB-scale
     * commit append is driver-side.
@@ -166,7 +166,6 @@ object DeltaLogWriter {
                smallFileBytes: Long = 128L << 20,
                targetFileBytes: Long = 128L << 20,
                zorderBy: Seq[String] = Nil): (Long, Int, Int) = {
-    import org.apache.spark.sql.functions.{broadcast, col, regexp_replace}
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snap = DeltaLogReader.snapshot(spark, tablePath)
     val schema = snap.schema
@@ -204,34 +203,9 @@ object DeltaLogWriter {
     val version = currentVersion + 1
     val bins = math.max(1L,
       (small.map(_._3).sum + targetFileBytes - 1) / targetFileBytes).toInt
-    var scan = spark.read.schema(schema).parquet(small.map(_._2.toString): _*)
-    val withDv = small.collect { case (p, _, _, Some(d)) => (p, d) }
-    if (withDv.nonEmpty) {
-      // purge: drop each candidate's DV'd positions so the bins hold
-      // only visible rows; bitmaps expand on executors
-      import spark.implicits._
-      val tp = tablePath
-      val confBc = spark.sparkContext.broadcast(
-        new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-      val dvRows = spark.createDataset(withDv)
-        .repartition(math.max(1, math.min(withDv.size,
-          spark.sparkContext.defaultParallelism)))
-        .flatMap { case (rel, d) =>
-          DeletionVectors.readPositions(d, tp, confBc.value.value)
-            .map(pos => (rel, pos))
-        }.toDF("__g_rel", "__g_pos")
-      // encNorm: _metadata.file_path is URI-encoded (see DeltaLogReader)
-      val relLookup = broadcast(small.map { case (rel, abs, _, _) =>
-        (DeltaLogReader.encNorm(abs.toString), rel)
-      }.toDF("__g_file", "__g_rel"))
-      scan = scan
-        .withColumn("__g_file",
-          DeltaLogReader.normPathCol(col("_metadata.file_path")))
-        .withColumn("__g_pos", col("_metadata.row_index"))
-        .join(relLookup, Seq("__g_file"))
-        .join(dvRows, Seq("__g_rel", "__g_pos"), "left_anti")
-        .select(schema.fieldNames.map(col).toSeq: _*)
-    }
+    // purge: the bins hold only each candidate's visible rows
+    val scan = DeletedRows.delta(spark, tablePath, snap.files).drop(
+      spark.read.schema(schema).parquet(small.map(_._2.toString): _*))
     val rewritten =
       if (zorderBy.nonEmpty) graft.operators.ZOrder.layout(scan, zorderBy, bins)
       else scan.repartition(bins)

@@ -488,24 +488,6 @@ object IcebergTable {
     * the manifest partition tuples before the scan is planned — the
     * identity-partition analog of Iceberg's filter pushdown; the filter
     * itself still reaches parquet footers through the ordinary scan. */
-  /** URI-scheme normalization so `_metadata.file_path` (always a full
-    * URI, e.g. `file:///a/b`) compares equal to manifest/delete-file
-    * spellings (`/a/b`, `file:/a/b`, `s3://bucket/k` …): any
-    * `scheme:/`, `scheme://`, `scheme:///` prefix collapses to `/` —
-    * INCLUDING the URI authority (`hdfs://nn:8020/x` -> `/x`): the
-    * scan's `_metadata.file_path` is always fully qualified while
-    * manifests may store default-FS-relative paths, and keeping the
-    * authority made those never match (deletes silently un-applied on
-    * any non-local FS; invisible on file:// whose authority is empty).
-    * Both join sides always belong to ONE table, so authority loss
-    * cannot conflate distinct files. Applied identically to BOTH
-    * sides. */
-  private[graft] def normPath(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.regexp_replace(
-      org.apache.spark.sql.functions.regexp_replace(
-        c, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", ""),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-
   def read(spark: SparkSession, table: String,
            snapshotId: Option[Long] = None,
            asOfTimestampMs: Option[Long] = None,
@@ -570,7 +552,7 @@ object IcebergTable {
             // running assignment (spec: inheritance applies only when
             // the field is null)
             val b = f.entryFirstRowId.orElse(start.map(_ + off))
-            (normSchemeless(f.path),
+            (DeletedRows.key(f.path),
               b.map(java.lang.Long.valueOf).orNull, f.seq)
         }
       }
@@ -609,83 +591,17 @@ object IcebergTable {
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], meta.schema)
     else {
-      val base = spark.read.schema(meta.schema).parquet(files.map(_.path): _*)
-      var data = base
-      // lineage helpers must come off `_metadata` BEFORE any join —
-      // metadata columns don't re-resolve through join projections
+      // merge-on-read: position deletes (v2 parquet, v3 DVs) drop rows
+      // inside the scan's task. Matching by explicit (path, pos) makes
+      // sequence-number checks unnecessary: file paths are unique within
+      // a table's lifetime, so a delete can only name rows of its target.
+      var data = DeletedRows.iceberg(spark, files, posDeletes)
+        .drop(spark.read.schema(meta.schema).parquet(files.map(_.path): _*))
+      // lineage helpers come off `_metadata` BEFORE any join — metadata
+      // columns don't re-resolve through join projections
       if (withLineageCols) data = data
-        .withColumn("__g_lineage_fp", normPath(col("_metadata.file_path")))
+        .withColumn("__g_lineage_fp", DeletedRows.keyCol(col("_metadata.file_path")))
         .withColumn("__g_lineage_pos", col("_metadata.row_index"))
-      if (posDeletes.nonEmpty || eqDeletes.nonEmpty)
-        data = data.withColumn("__g_fp", normPath(col("_metadata.file_path")))
-      if (posDeletes.nonEmpty) {
-        // merge-on-read: drop rows named by position deletes via a
-        // distributed LEFT ANTI join on (file_path, row position). The
-        // parquet `_metadata.row_index` column IS the spec's `pos`
-        // (row ordinal within the data file), so no per-file driver work
-        // — deletes stay a DataFrame and nothing row-scale collects.
-        // Matching by explicit (path, pos) makes sequence-number checks
-        // unnecessary here: file paths are unique within a table's
-        // lifetime, so a delete can only name rows of its target file.
-        //
-        // Two carriers feed the join: v2 position-delete PARQUET rows,
-        // and v3 DELETION VECTORS (Puffin-framed roaring bitmaps, one
-        // per data file). DV bitmaps expand to positions on EXECUTORS —
-        // the driver only ships (blob path, offset, size) descriptors —
-        // and per the v3 scan-planning rule a DV REPLACES every older
-        // position delete of its data file, so parquet delete rows for
-        // DV'd files are masked before the join.
-        import spark.implicits._
-        val (dvsAll, pqDels) = posDeletes.partition(_.isDv)
-        // at most one DV per data file is live in a valid v3 snapshot;
-        // resolve defensively to the newest should a writer misbehave
-        val dvs = dvsAll.groupBy(f => normSchemeless(f.referencedDataFile
-            .getOrElse(throw new IllegalArgumentException(
-              s"PUFFIN delete entry without referenced_data_file: ${f.path}"))))
-          .map { case (_, fs) => fs.maxBy(_.seq) }.toSeq
-        var parts = Seq.empty[DataFrame]
-        if (pqDels.nonEmpty) {
-          var pq = graft.GraftSession.readParquet(spark, pqDels.head.path, pqDels.tail.map(_.path): _*)
-            .select(encNormUdf(col("file_path")).as("__g_fp"),
-              col("pos").cast("long").as("__g_pos"))
-          if (dvs.nonEmpty) {
-            import org.apache.spark.sql.functions.broadcast
-            val dvTargets = dvs
-              .map(f => normSchemeless(f.referencedDataFile.get)).toDF("__g_fp")
-            pq = pq.join(broadcast(dvTargets), Seq("__g_fp"), "left_anti")
-          }
-          parts :+= pq
-        }
-        if (dvs.nonEmpty) {
-          val confBc = spark.sparkContext.broadcast(
-            new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-          val descs = dvs.map { f =>
-            (f.path,
-              f.contentOffset.getOrElse(throw new IllegalArgumentException(
-                s"DV entry without content_offset: ${f.path}")),
-              f.contentSize.getOrElse(throw new IllegalArgumentException(
-                s"DV entry without content_size_in_bytes: ${f.path}")),
-              normSchemeless(f.referencedDataFile.get))
-          }
-          parts :+= spark.createDataset(descs)
-            .repartition(math.min(descs.size,
-              spark.sparkContext.defaultParallelism))
-            .flatMap { case (pp, off, sz, ref) =>
-              Puffin.readDvBlob(confBc.value.value, pp, off, sz)
-                .map(pos => (ref, pos))
-            }.toDF("__g_fp", "__g_pos")
-        }
-        var dels = parts.reduce(_ unionByName _)
-        // cardinality is manifest metadata (record_count of each delete
-        // entry), so the broadcast decision costs no data read
-        if (posDeletes.map(_.recordCount).sum <= 4000000L) {
-          import org.apache.spark.sql.functions.broadcast
-          dels = broadcast(dels)
-        }
-        data = data.withColumn("__g_pos", col("_metadata.row_index"))
-          .join(dels, Seq("__g_fp", "__g_pos"), "left_anti")
-          .drop("__g_pos")
-      }
       if (eqDeletes.nonEmpty) {
         // EQUALITY deletes (spec §Scan Planning): a delete row removes
         // every data row whose values match on the delete file's
@@ -705,11 +621,12 @@ object IcebergTable {
           .map(f => f.get("id").asInt -> f.get("name").asText).toMap
         def seqLookup(fs: Seq[DataFileInfo], fpCol: String, seqCol: String) =
           broadcast(spark.createDataFrame(
-            fs.map(f => Row(normSchemeless(f.path), f.seq)).asJava,
+            fs.map(f => Row(DeletedRows.key(f.path), f.seq)).asJava,
             StructType(Seq(StructField(fpCol, StringType, nullable = false),
               StructField(seqCol, LongType, nullable = false)))))
-        data = data.join(seqLookup(files, "__g_fp", "__g_seq"),
-          Seq("__g_fp"), "left")
+        data = data
+          .withColumn("__g_fp", DeletedRows.keyCol(col("_metadata.file_path")))
+          .join(seqLookup(files, "__g_fp", "__g_seq"), Seq("__g_fp"), "left")
         eqDeletes.groupBy(_.equalityIds.sorted).foreach { case (ids, dels) =>
           require(ids.nonEmpty,
             s"equality-delete file without equality_ids: ${dels.head.path}")
@@ -725,7 +642,7 @@ object IcebergTable {
           // q_iceberg_changelog wall per call — OPTIMIZATION_r17.md)
           val delRows = graft.GraftSession.readParquet(spark,
               dels.head.path, dels.tail.map(_.path): _*)
-            .withColumn("__g_dfp", normPath(col("_metadata.file_path")))
+            .withColumn("__g_dfp", DeletedRows.keyCol(col("_metadata.file_path")))
             .join(seqLookup(dels, "__g_dfp", "__g_dseq"), Seq("__g_dfp"))
             .select((cols.map(c => col(c).as(s"__g_eq_$c")) :+
               col("__g_dseq")): _*)
@@ -733,37 +650,11 @@ object IcebergTable {
             .reduce(_ && _) && delRows("__g_dseq") > data("__g_seq")
           data = data.join(delRows, cond, "left_anti")
         }
-        data = data.drop("__g_seq")
+        data = data.drop("__g_fp", "__g_seq")
       }
-      data.drop("__g_fp")
+      data
     }
   }
-
-  /** [[normPath]]'s driver-side twin — and the ENCODING half of the
-    * identity: `_metadata.file_path` is URI-ENCODED (a path with a
-    * space reads as `%20`), while manifest / delete-file spellings are
-    * raw strings. Every raw string is therefore routed through
-    * Path.toUri (percent-encoding exactly like the scan's metadata
-    * column) before the scheme strip, so (file_path, pos) joins match
-    * on tables whose paths carry URI-escapable characters — the same
-    * hardening DeltaLogReader.encNorm got ("path encoding identity").
-    * Raw strings that live in DELETE-FILE ROWS on executors go through
-    * [[encNormUdf]], the row-level twin. */
-  private[graft] def normSchemeless(p: String): String =
-    new Path(p).toUri.toString
-      .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", "")
-      .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-
-  /** Row-level [[normSchemeless]] for raw path strings read OUT OF
-    * delete-file parquet on executors (driver code cannot respell
-    * them). Delete-file row counts are metadata-scale next to the data
-    * scan, so the non-codegen UDF is off the hot path. */
-  private val encNormUdf = org.apache.spark.sql.functions.udf(
-    (p: String) =>
-      if (p == null) null
-      else new org.apache.hadoop.fs.Path(p).toUri.toString
-        .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", "")
-        .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
 
   /** CDC CHANGELOG: every row-level change in snapshots
     * (fromSnapshotId, toSnapshotId], tagged `_change_type`
@@ -848,13 +739,8 @@ object IcebergTable {
       // — no file read at all; parquet position deletes list targets in
       // their metadata-scale file_path column
       val (newDvs, newPosPq) = newPos.partition(_.isDv)
-      changed = changed ++ newDvs.map(f => normSchemeless(f.referencedDataFile.get))
-      if (newPosPq.nonEmpty) {
-        import org.apache.spark.sql.functions.col
-        changed = changed ++ graft.GraftSession.readParquet(spark, newPosPq.head.path, newPosPq.tail.map(_.path): _*)
-          .select(col("file_path")).distinct()
-          .collect().map(r => normSchemeless(r.getString(0)))
-      }
+      changed = changed ++ newDvs.map(f => DeletedRows.key(f.referencedDataFile.get)) ++
+        DeletedRows.namedFiles(spark, newPosPq.map(_.path))
       val newEq = newDels.filter(_.content == 2)
       if (newEq.nonEmpty) {
         val maxSeq = newEq.map(_.seq).max
@@ -863,7 +749,7 @@ object IcebergTable {
           prevData.values.filter(_.seq < maxSeq).map(_.path)
       }
       def hit(p: String) =
-        changed.contains(p) || changed.contains(normSchemeless(p))
+        changed.contains(p) || changed.contains(DeletedRows.key(p))
       val left = buildRead(spark, meta,
         prevData.values.filter(f => hit(f.path)).toSeq,
         prevE.filter(_.content == 1), prevE.filter(_.content == 2))
@@ -1716,29 +1602,35 @@ object IcebergTable {
   private[sources] def deleteFrom(spark: SparkSession, table: String,
                                   meta: TableMeta,
                                   condition: org.apache.spark.sql.Column): Long = {
+    requireIdentitySpec(meta, "deleteFrom")
+    val dataFiles = liveEntries(spark, meta, None, None).filter(_.content == 0)
+    if (dataFiles.isEmpty) return meta.currentSnapshotId.getOrElse(0L)
+    commitPositionDeletes(spark, table, meta,
+      matchedPositions(spark, meta, dataFiles, condition))
+  }
+
+  /** `(file_path, pos)` of the rows of `dataFiles` that `condition`
+    * matches, found on executors over `_metadata`. The raw files are
+    * scanned: a row that an earlier delete (position or equality)
+    * already killed may match again, which is harmless (the row is
+    * invisible either way), and rows appended after an equality delete
+    * match on their real content. A broadcast lookup maps each scanned
+    * file's key to the manifest's exact `file_path` spelling, which the
+    * spec requires delete rows to repeat. */
+  private def matchedPositions(spark: SparkSession, meta: TableMeta,
+                               dataFiles: Seq[DataFileInfo],
+                               condition: org.apache.spark.sql.Column): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
     import spark.implicits._
-    requireIdentitySpec(meta, "deleteFrom")
-    val entries = liveEntries(spark, meta, None, None)
-    // equality-delete files in the table are fine: the raw-parquet match
-    // below may emit position deletes for rows an equality delete already
-    // killed, which is harmless (the row is invisible either way), and
-    // rows appended after the equality delete match on their real content
-    val dataFiles = entries.filter(_.content == 0)
-    if (dataFiles.isEmpty) return meta.currentSnapshotId.getOrElse(0L)
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // __g_fp precomputed DRIVER-side with the encoding identity (these
-    // are manifest strings, not row data)
-    val lookup = dataFiles.map(f => (f.path, normSchemeless(f.path)))
+    val lookup = dataFiles.map(f => (f.path, DeletedRows.key(f.path)))
       .toDF("file_path", "__g_fp")
-    val matches = spark.read.schema(meta.schema)
+    spark.read.schema(meta.schema)
       .parquet(dataFiles.map(_.path): _*)
       .filter(condition)
-      .select(normPath(col("_metadata.file_path")).as("__g_fp"),
+      .select(DeletedRows.keyCol(col("_metadata.file_path")).as("__g_fp"),
         col("_metadata.row_index").as("pos"))
       .join(broadcast(lookup), "__g_fp")
       .select(col("file_path"), col("pos"))
-    commitPositionDeletes(spark, table, meta, matches)
   }
 
   /** Commit a `(file_path, pos)` DataFrame as a position-delete snapshot
@@ -1985,23 +1877,13 @@ object IcebergTable {
     * public table-spec + puffin-spec. */
   def deleteFromDv(spark: SparkSession, table: String,
                    condition: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    import spark.implicits._
     val meta = loadMeta(spark, table)
     requireIdentitySpec(meta, "deleteFromDv")
     val entries = liveEntries(spark, meta, None, None)
     val dataFiles = entries.filter(_.content == 0)
     if (dataFiles.isEmpty) return meta.currentSnapshotId.getOrElse(0L)
-    val lookup = dataFiles.map(f => (f.path, normSchemeless(f.path)))
-      .toDF("file_path", "__g_fp")
-    val matches = spark.read.schema(meta.schema)
-      .parquet(dataFiles.map(_.path): _*)
-      .filter(condition)
-      .select(normPath(col("_metadata.file_path")).as("__g_fp"),
-        col("_metadata.row_index").as("pos"))
-      .join(broadcast(lookup), "__g_fp")
-      .select(col("file_path"), col("pos"))
-    commitDvDeletes(spark, table, meta, matches, entries)
+    commitDvDeletes(spark, table, meta,
+      matchedPositions(spark, meta, dataFiles, condition), entries)
   }
 
   /** Commit a `(file_path, pos)` DataFrame as a deletion-vector
@@ -2010,50 +1892,25 @@ object IcebergTable {
   private[graft] def commitDvDeletes(spark: SparkSession, table: String,
                                      meta: TableMeta, matches: DataFrame,
                                      live: Seq[DataFileInfo]): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // affected data files: metadata-scale (distinct file paths) — drives
-    // the merge set, the supersede bookkeeping and the manifest entries
+    // the supersede bookkeeping and the manifest entries
     val affected = matches.select("file_path").distinct()
       .as[String].collect().toSeq.sorted
     if (affected.isEmpty) return meta.currentSnapshotId.getOrElse(0L)
-    val affectedNorm = affected.map(normSchemeless).toSet
+    val affectedKeys = affected.map(DeletedRows.key).toSet
     val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
     val newSeq = meta.lastSequenceNumber + 1
     val nowMs = System.currentTimeMillis()
     val confBc = spark.sparkContext.broadcast(
       new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-
-    // ---- merge set: new matches ∪ prior DV positions ∪ prior parquet
-    // position-delete rows, restricted to the affected files — all
-    // distributed, keyed by the files' exact manifest spelling
-    val oldPos = live.filter(e => e.status != 2 && e.content == 1)
-    val (oldDvs, oldPq) = oldPos.partition(_.isDv)
-    val normToExactBc = spark.sparkContext.broadcast(
-      affected.map(p => normSchemeless(p) -> p).toMap)
-    var all = matches.select(col("file_path"), col("pos").cast("long").as("pos"))
-    val mergeDvs = oldDvs.filter(f =>
-      affectedNorm(normSchemeless(f.referencedDataFile.get)))
-    if (mergeDvs.nonEmpty) {
-      val descs = mergeDvs.map(f => (f.path, f.contentOffset.get,
-        f.contentSize.get, normSchemeless(f.referencedDataFile.get)))
-      all = all.unionByName(spark.createDataset(descs)
-        .repartition(math.min(descs.size, spark.sparkContext.defaultParallelism))
-        .flatMap { case (pp, off, sz, ref) =>
-          Puffin.readDvBlob(confBc.value.value, pp, off, sz)
-            .map(pos => (normToExactBc.value(ref), pos))
-        }.toDF("file_path", "pos"))
-    }
-    if (oldPq.nonEmpty) {
-      val affDf = broadcast(affected.map(p => (normSchemeless(p), p))
-        .toDF("__g_nfp", "file_path"))
-      all = all.unionByName(graft.GraftSession.readParquet(spark, oldPq.head.path, oldPq.tail.map(_.path): _*)
-        .select(encNormUdf(col("file_path")).as("__g_nfp"),
-          col("pos").cast("long").as("pos"))
-        .join(affDf, Seq("__g_nfp"))
-        .select("file_path", "pos"))
-    }
+    // a file's new DV carries its new matches and every position already
+    // deleted (its older DV, else its v2 position deletes), merged in the
+    // task that writes the Puffin file
+    val old = DeletedRows.iceberg(spark, live.filter(_.content == 0),
+      live.filter(_.content == 1))
 
     // ---- write the Puffin files from EXECUTORS: one file per shuffle
     // partition of the affected files (task-attempt-unique names; only
@@ -2063,7 +1920,7 @@ object IcebergTable {
     fs.mkdirs(staging)
     val stagingStr = staging.toString
     val blobRows: Seq[(String, String, Long, Long, Long)] =
-      all.distinct()
+      matches.select(col("file_path"), col("pos").cast("long").as("pos")).distinct()
         .repartition(col("file_path")).sortWithinPartitions("file_path", "pos")
         .as[(String, Long)]
         .mapPartitions { it =>
@@ -2079,7 +1936,8 @@ object IcebergTable {
               java.util.UUID.randomUUID().toString + ".puffin"
             val blobs = Puffin.writeDvFile(confBc.value.value,
               new Path(stagingStr, name),
-              groups.toSeq.map { case (fp, ps) => (fp, ps.toSeq) },
+              groups.toSeq.map { case (fp, ps) =>
+                (fp, (ps ++ old.positions(DeletedRows.key(fp))).toSeq) },
               snapshotId, newSeq)
             blobs.iterator.map(b =>
               (name, b.referencedDataFile, b.offset, b.length, b.cardinality))
@@ -2145,7 +2003,7 @@ object IcebergTable {
           val (dropped, kept) = recs.partition { e =>
             val df = e.get("data_file").asInstanceOf[GenericRecord]
             opt(df, "referenced_data_file").map(str).exists(ref =>
-              affectedNorm(normSchemeless(absolute(table, ref))))
+              affectedKeys(DeletedRows.key(absolute(table, ref))))
           }
           if (dropped.isEmpty) Some(r)
           else if (kept.isEmpty) None

@@ -89,7 +89,7 @@ object IcebergDml {
         .filter(_.content == 0)
       lazy val rawIdent = spark.read.schema(meta.schema)
         .parquet(dataFiles.map(_.path): _*)
-        .withColumn("__g_fpn", IcebergTable.normPath(col("_metadata.file_path")))
+        .withColumn("__g_fpn", DeletedRows.keyCol(col("_metadata.file_path")))
         .withColumn("__g_pos", col("_metadata.row_index"))
       // checked on the raw scan — a row an earlier delete masked can
       // refuse conservatively
@@ -110,7 +110,7 @@ object IcebergDml {
         // __g_fp precomputed DRIVER-side with the URI-encoding identity
         // (manifest strings; _metadata.file_path is URI-encoded)
         val lookup = broadcast(dataFiles
-          .map(f => (f.path, IcebergTable.normSchemeless(f.path)))
+          .map(f => (f.path, DeletedRows.key(f.path)))
           .toDF("file_path", "__g_fp"))
         val matches = m.joined(rawIdent).filter(m.deleted || m.updated)
           .select(col("__g_fpn").as("__g_fp"), col("__g_pos").as("pos"))

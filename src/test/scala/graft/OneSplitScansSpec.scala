@@ -79,6 +79,37 @@ class OneSplitScansSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(jobsOf(spark.sql(queries.head._2(fact("many"))).collect()) > 1)
   }
 
+  /** A one-file lake table of `rows` with a few rows deleted through
+    * the format's merge-on-read writer, and the keys left. */
+  private def lake(fmt: String): (String, Set[Long]) = {
+    val path = s"$dir/lake_$fmt"
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    val rows = spark.range(1, 2001).select(col("id").as("k"), (col("id") % 7).as("g"))
+      .coalesce(1)
+    val gone = col("k") % 10 === 3
+    fmt match {
+      case "delta" =>
+        sources.DeltaLogWriter.write(rows, path)
+        sources.DeltaDml.deleteDv(spark, path, gone)
+      case "iceberg" =>
+        sources.IcebergTable.write(rows, path)
+        sources.IcebergTable.deleteFrom(spark, path, gone)
+    }
+    (path, (1L to 2000L).filter(_ % 10 != 3).toSet)
+  }
+
+  for (fmt <- Seq("delta", "iceberg"))
+    test(s"a dfs GROUP BY over a one-split $fmt table with deletes runs as one Spark job") {
+      val (path, keys) = lake(fmt)
+      val sql = s"SELECT g, count(*) AS n, sum(k) AS s FROM dfs.`$path` GROUP BY g ORDER BY g"
+      spark.sql(sql).collect() // resolve the schema once
+      var got = Array.empty[org.apache.spark.sql.Row]
+      assert(jobsOf { got = spark.sql(sql).collect() } == 1)
+      assert(got.map(_.getLong(1)).sum == keys.size)
+      assert(got.map(_.getLong(2)).sum == keys.sum)
+    }
+
   test("a self-join of one file keeps its exchange") {
     val (df, rows) = run(s"SELECT a.g, count(*) AS n FROM ${fact("one")} a " +
       s"JOIN ${fact("one")} b ON a.k = b.k + 1 GROUP BY a.g")

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * asserted on the EXECUTED plan, not just implied — pushdown reaching
   * the parquet scan, projection pruning in ReadSchema, dimension
   * broadcast, two-phase aggregation, whole-stage codegen. */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import TestSpark._
 
   /** Materialize first: AQE finalizes (and codegen-annotates) the plan
@@ -261,31 +264,35 @@ class PlanAuditSpec extends AnyFunSuite {
       s"equi-join on (bin, key) expected:\n$p")
   }
 
-  test("q_iceberg_v2: position deletes apply as a BROADCAST anti-join") {
-    val df = SparkEntry.queries("q_iceberg_v2")(spark, SF)
+  /** Position deletes (v2 parquet, v3 DVs) apply as a predicate inside
+    * the scan's task: no join, no broadcast of a delete set, and no
+    * exchange between the file scan and the delete filter, so data rows
+    * never shuffle to apply deletes. */
+  private def assertDeletesInScan(q: String): Unit = {
+    val df = SparkEntry.queries(q)(spark, SF)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    // merge-on-read = LEFT ANTI against the delete set; a small delete
-    // parquet must broadcast (its footer gives Catalyst real size stats),
-    // so the data side never shuffles for the merge
-    assert(p.contains("LeftAnti"), s"anti-join for position deletes:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"small delete set should broadcast:\n$p")
-    assert(!p.contains("SortMergeJoin"),
-      s"data rows must not shuffle to apply deletes:\n$p")
+    val plan = df.queryExecution.executedPlan
+    val p = plan.toString
+    assert(!p.contains("LeftAnti"), s"no anti-join for position deletes:\n$p")
+    assert(!p.contains("BroadcastHashJoin"), s"no delete set is broadcast:\n$p")
+    assert(!p.contains("SortMergeJoin"), s"data rows must not shuffle to apply deletes:\n$p")
+    val filters = collect(plan) {
+      case f: FilterExec if f.condition.toString.contains("deleted_row") => f
+    }
+    assert(filters.nonEmpty, s"no scan-side delete filter:\n$p")
+    filters.foreach { f =>
+      assert(f.exists(_.isInstanceOf[FileSourceScanExec]), s"delete filter over no scan:\n$f")
+      assert(!f.exists(n => n.isInstanceOf[Exchange] || n.isInstanceOf[QueryStageExec]),
+        s"an exchange sits between the scan and its delete filter:\n$f")
+    }
   }
 
-  test("q_iceberg_v3_dv: deletion vectors apply as a BROADCAST anti-join") {
-    val p = plan("q_iceberg_v3_dv")
-    // v3 merge-on-read: the Puffin bitmaps expand on executors and feed
-    // the same LEFT ANTI join as v2 position deletes; the cardinality is
-    // manifest metadata, so a small delete set broadcasts and the data
-    // side never shuffles for the merge
-    assert(p.contains("LeftAnti"), s"anti-join for deletion vectors:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"small DV set should broadcast:\n$p")
-    assert(!p.contains("SortMergeJoin"),
-      s"data rows must not shuffle to apply DVs:\n$p")
+  test("q_iceberg_v2: position deletes apply inside the scan, no join") {
+    assertDeletesInScan("q_iceberg_v2")
+  }
+
+  test("q_iceberg_v3_dv: deletion vectors apply inside the scan, no join") {
+    assertDeletesInScan("q_iceberg_v3_dv")
   }
 
   test("q_iceberg_eq_delete: equality deletes apply as broadcast anti-joins") {
