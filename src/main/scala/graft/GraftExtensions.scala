@@ -27,9 +27,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (Drill's inbound-impersonation/authorization surface; see
     // sources/AccessControl) — no-op without a request principal
     ext.injectResolutionRule(session => graft.sources.AccessControlRule(session))
-    // a dfs scan planned as one split runs with no exchange above it
-    // (Drill's planner.slice_target single-fragment plans; OneSplitScans)
-    ext.injectQueryPostPlannerStrategyRule(_ => OneSplitScans)
+    // a small dfs scan runs in one task with no exchange above it
+    // (Drill's planner.slice_target single-fragment plans; OneTaskScans)
+    ext.injectQueryPostPlannerStrategyRule(_ => OneTaskScans)
     // (`hive.db.tbl` metastore federation resolves in DfsParser — the
     // "hive" head must be claimed BEFORE ResolveSQLOnFile sees it)
     ext.injectParser((_, parser) => new graft.sources.DfsParser(parser))

@@ -4,29 +4,34 @@ import org.apache.spark.sql.catalyst.expressions.{DynamicPruning, PlanExpression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, FilterExec, PartitionedFileUtil, ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Drill's `planner.slice_target` on Spark: a scan of a `dfs` SQL name
-  * that Spark's own split packing plans as exactly ONE split gets a
-  * one-partition `CoalesceExec` above its Filter/Project chain. The
-  * coalesce reports `SinglePartition`, so EnsureRequirements plans no
-  * exchange above it: the aggregate, sort or window over a small file
-  * runs in the scan's own task instead of one Spark job per exchange.
-  * The scan keeps one partition either way, so no parallelism is taken
-  * from it.
+  * small enough to read in ONE task gets a one-partition `CoalesceExec`
+  * above its Filter/Project chain. The coalesce reports
+  * `SinglePartition`, so EnsureRequirements plans no exchange above it:
+  * the aggregate, sort, window or merge over a small input runs in the
+  * scan's own task instead of one Spark job per exchange.
   *
-  * "One split" is Spark's packing exactly (`FilePartition.maxSplitBytes`
-  * and `getFilePartitions` under the session's `spark.sql.files.*` and
-  * leaf parallelism), so the threshold comes from the input and there is
-  * no option. Only relations that a SQL statement names through the
-  * `dfs` namespace are candidates: [[markDfs]] tags them where the
-  * namespace resolves (`sources.DfsSql.resolved`). Plans that pipelines
-  * and DataFrame code build over their own reads keep Spark's plan,
-  * whatever their input's size, and so does a relation that an
-  * optimizer rule rebuilds (nested schema pruning copies it untagged).
-  * Also left alone:
+  * "Small" is decided from the scan's file listing with Spark's own two
+  * numbers, so there is no option:
+  *   - the files hold at most `spark.sql.files.openCostInBytes` bytes in
+  *     total (for one splittable file this is exactly Spark's one-split
+  *     packing at any leaf parallelism of 2 or more), and
+  *   - Spark's packing cost, each file's length plus the open cost,
+  *     totals at most `spark.sql.files.maxPartitionBytes`, so a set of
+  *     many tiny files (32 or more at the defaults) keeps Spark's splits.
+  * A lone file that Spark cannot split qualifies at any size: it is one
+  * task either way.
+  *
+  * Only relations that a SQL statement names through the `dfs` namespace
+  * are candidates: [[markDfs]] tags them where the namespace resolves
+  * (`sources.DfsSql.resolved`). Plans that pipelines and DataFrame code
+  * build over their own reads keep Spark's plan, whatever their input's
+  * size, and so does a relation that an optimizer rule rebuilds (nested
+  * schema pruning copies it untagged). Also left alone:
   *   - bucketed relations, scans with dynamic partition filters (their
   *     files are known only at run time) and streaming relations;
   *   - a relation the plan reads more than once (self-joins, a stream
@@ -38,7 +43,7 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
   * (runtime bloom filters, dynamic partition pruning) see the same shape,
   * and `PushedFilters`, `PartitionFilters` and `ReadSchema` do not move.
   */
-object OneSplitScans extends Rule[SparkPlan] {
+object OneTaskScans extends Rule[SparkPlan] {
 
   private val DfsRead = TreeNodeTag[Unit]("graft.dfsRead")
 
@@ -55,7 +60,7 @@ object OneSplitScans extends Rule[SparkPlan] {
     def wrap(p: SparkPlan): SparkPlan = p match {
       case c: CoalesceExec if c.numPartitions == 1 => c
       case chain if scanUnder(chain).exists(s =>
-          dfsRead(s) && reads(relationKey(s.relation)) == 1 && oneSplit(s)) =>
+          dfsRead(s) && reads(relationKey(s.relation)) == 1 && oneTask(s)) =>
         CoalesceExec(1, chain)
       case other => other.mapChildren(wrap)
     }
@@ -100,23 +105,20 @@ object OneSplitScans extends Rule[SparkPlan] {
   private def relationKey(r: HadoopFsRelation): (Seq[String], String) =
     (r.location.rootPaths.map(_.toString).sorted, r.fileFormat.getClass.getName)
 
-  /** Whether Spark will read `s` as exactly one file partition: the
-    * split arithmetic of FileSourceScanExec's non-bucketed read. */
-  private def oneSplit(s: FileSourceScanExec): Boolean = {
+  /** Whether the files `s` lists are small enough to read in one task. */
+  private def oneTask(s: FileSourceScanExec): Boolean = {
     val rel = s.relation
     if (s.bucketedScan || rel.bucketSpec.nonEmpty ||
         s.logicalLink.exists(_.isStreaming) ||
         s.partitionFilters.exists(_.exists(_.isInstanceOf[DynamicPruning]))) return false
     val listing = s.selectedPartitions
-    if (listing.totalNumberOfFiles == 0) return false
-    val maxSplit = FilePartition.maxSplitBytes(rel.sparkSession, listing)
-    val splits = listing.filePartitionIterator.flatMap { part =>
-      part.files.flatMap { f =>
-        PartitionedFileUtil.splitFiles(f, f.getPath,
-          rel.fileFormat.isSplitable(rel.sparkSession, rel.options, f.getPath),
-          maxSplit, part.values)
-      }
-    }.toSeq.sortBy(-_.length)
-    FilePartition.getFilePartitions(rel.sparkSession, splits, maxSplit).size == 1
+    val conf = rel.sparkSession.sessionState.conf
+    listing.totalNumberOfFiles match {
+      case 0 => false
+      case 1 if !rel.fileFormat.isSplitable(rel.sparkSession, rel.options,
+          listing.filePartitionIterator.flatMap(_.files).next().getPath) => true
+      case _ => listing.totalFileSize <= conf.filesOpenCostInBytes &&
+        listing.calculateTotalPartitionBytes <= conf.filesMaxPartitionBytes
+    }
   }
 }

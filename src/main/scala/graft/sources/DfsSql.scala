@@ -224,9 +224,9 @@ object DfsSql {
 
   /** The analyzed plan a SQL statement's `dfs` name substitutes
     * ([[DfsResolveRule]], [[DfsParser]], `dfs_read`), its file relations
-    * marked as front-door reads for [[graft.OneSplitScans]]. */
+    * marked as front-door reads for [[graft.OneTaskScans]]. */
   def resolved(df: DataFrame): LogicalPlan =
-    graft.OneSplitScans.markDfs(df.queryExecution.analyzed)
+    graft.OneTaskScans.markDfs(df.queryExecution.analyzed)
 
   /** Explicit-format read — the table-function form with the extension
     * registry OVERRIDDEN (Drill: `table(dfs.`x`(type => 'text',

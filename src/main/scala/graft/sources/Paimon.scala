@@ -404,7 +404,8 @@ object PaimonTable {
 
   /** Read an unpartitioned Paimon table (optionally time traveled).
     * Append-only tables scan directly; PRIMARY-KEY tables apply LSM
-    * merge-on-read: one hash shuffle on the key columns, per-key
+    * merge-on-read: one hash shuffle on the key columns (none when a
+    * small `dfs` read runs as one task, [[graft.OneTaskScans]]), per-key
     * `max_by` over (sequence number, value kind) — a partial-aggregating
     * plan, no window — then RowKind retractions (-U/-D) drop the key.
     * Partitioned tables and non-deduplicate merge engines refuse. */
@@ -481,7 +482,7 @@ object PaimonTable {
     else if (sch.primaryKeys.isEmpty)
       readAppendFiles(spark, table, sch, files)
     else {
-      import org.apache.spark.sql.functions.{col, input_file_name, max_by, regexp_replace, struct}
+      import org.apache.spark.sql.functions.{col, max_by, regexp_replace, struct}
       // PK data files carry the spec's KeyValue layout: trimmed key
       // columns as _KEY_<name>, then _SEQUENCE_NUMBER (BIGINT) +
       // _VALUE_KIND (TINYINT RowKind: 0 +I, 1 -U, 2 +U, 3 -D), then the
@@ -522,16 +523,22 @@ object PaimonTable {
       // old-partition retract can carry a HIGHER counter than the new
       // partition's insert; a global max_by would resurrect or drop the
       // wrong row). The parent directory of each data file IS the
-      // (partition, bucket) identity, attached at scan time.
+      // (partition, bucket) identity, attached at scan time from the
+      // deterministic `_metadata.file_path`, so filters still push through.
+      // Each primary-key column comes out of the grouping key: a filter on
+      // a key column then pushes below the merge into the scan, which is
+      // exact because every version of a key carries that key.
       val raw = spark.read.schema(pkSchema).parquet(files: _*)
-        .withColumn("__grp", regexp_replace(input_file_name(), "/[^/]*$", ""))
+        .withColumn("__grp", regexp_replace(col("_metadata.file_path"), "/[^/]*$", ""))
       val valueCols = sch.schema.fields.map(f => col(f.name)).toSeq
       raw.groupBy(col("__grp") +: sch.primaryKeys.map(k => col(s"_KEY_$k")): _*)
         .agg(max_by(struct(col("_VALUE_KIND") +: valueCols: _*),
           struct(col("_SEQUENCE_NUMBER"), col("_VALUE_KIND"))).as("__g_top"))
         .filter(col("__g_top._VALUE_KIND") === 0 ||
           col("__g_top._VALUE_KIND") === 2)
-        .select(sch.schema.fields.map(f => col(s"__g_top.${f.name}")).toSeq: _*)
+        .select(sch.schema.fieldNames.map(f =>
+          if (sch.primaryKeys.contains(f)) col(s"_KEY_$f").as(f)
+          else col(s"__g_top.$f")).toSeq: _*)
     }
   }
 

@@ -399,6 +399,63 @@ class PaimonSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("dynamic"), e2.getMessage)
   }
 
+  test("GOLDEN: key predicates push below the PK merge into the scan, rows unchanged") {
+    import spark.implicits._
+    // a bucketed PK table: inserts, upserts and key-only deletes
+    val bucketed = freshDir("pk_pushdown")
+    PaimonTable.writePk((1L to 40L).map(i => (i, s"v$i", i * 10L)).toDF("k", "name", "amt"),
+      bucketed, Seq("k"), numBuckets = 3)
+    PaimonTable.writePk((5L to 12L).map(i => (i, s"upd$i", i * 100L)).toDF("k", "name", "amt"),
+      bucketed, Seq("k"), kind = "+U")
+    PaimonTable.writePk((1L to 40L).filter(_ % 4 == 0).toDF("k"), bucketed, Seq("k"), kind = "-D")
+    // a partitioned dynamic-bucket table whose key 3 moves from p=a to
+    // p=b: inserted, retracted, re-inserted (the retract at a lower
+    // sequence number than the move's insert), then declared partitioned
+    // by p with bucket = -1 and its bucket dirs moved under p=a
+    val dynamic = freshDir("pk_pushdown_dynamic")
+    PaimonTable.writePk((1L to 10L).map(i => (i, "a", i * 10L)).toDF("k", "p", "amt"),
+      dynamic, Seq("k"), numBuckets = 2)
+    PaimonTable.writePk(Seq(3L).toDF("k"), dynamic, Seq("k"), kind = "-D")
+    PaimonTable.writePk(Seq((3L, "b", 999L)).toDF("k", "p", "amt"), dynamic, Seq("k"))
+    val fs = new org.apache.hadoop.fs.Path(dynamic)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val schemaPath = new org.apache.hadoop.fs.Path(s"$dynamic/schema/schema-0")
+    val in = fs.open(schemaPath)
+    val orig = new String(in.readAllBytes(), "UTF-8"); in.close()
+    val os = fs.create(schemaPath, true)
+    os.write(orig.replace("\"partitionKeys\":[]", "\"partitionKeys\":[\"p\"]")
+      .replace("\"bucket\":\"2\"", "\"bucket\":\"-1\"").getBytes("UTF-8"))
+    os.close()
+    Seq(0, 1).foreach { b =>
+      val from = new org.apache.hadoop.fs.Path(s"$dynamic/bucket-$b")
+      if (fs.exists(from)) {
+        val to = new org.apache.hadoop.fs.Path(s"$dynamic/p=a/bucket-$b")
+        fs.mkdirs(to.getParent)
+        require(fs.rename(from, to))
+      }
+    }
+    assert(PaimonTable.read(spark, dynamic).where(col("k") === 3).collect()
+      .map(r => (r.getAs[Long]("k"), r.getAs[String]("p"), r.getAs[Long]("amt"))).toSeq ==
+      Seq((3L, "b", 999L)))
+
+    val predicates: Seq[(String, Long => Boolean)] = Seq(
+      "k BETWEEN 5 AND 20" -> (k => k >= 5 && k <= 20),
+      "k BETWEEN 2 AND 4" -> (k => k >= 2 && k <= 4),
+      "k = 3" -> (_ == 3),
+      "k = 8" -> (_ == 8),
+      "k = 7" -> (_ == 7))
+    for (table <- Seq(bucketed, dynamic); (sql, keep) <- predicates) {
+      val all = PaimonTable.read(spark, table).collect()
+      val df = PaimonTable.read(spark, table).where(sql)
+      assert(df.collect().map(_.toString).sorted.toSeq ==
+        all.filter(r => keep(r.getAs[Long]("k"))).map(_.toString).sorted.toSeq, s"$table: $sql")
+      val pushed = df.queryExecution.sparkPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metadata("PushedFilters")
+      }
+      assert(pushed.nonEmpty && pushed.forall(_.contains("_KEY_k")), s"$table: $sql: $pushed")
+    }
+  }
+
   test("NATIVE partitioned PK writes: partition dirs, manifest tuples, merge") {
     import spark.implicits._
     val base = freshDir("pk_part_native")
